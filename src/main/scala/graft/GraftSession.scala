@@ -11,30 +11,9 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Drop every session-cached structure derived from the corpus at
-    * `sfDir` — signature/pair/band tables, dead-band sets, trained
-    * centroids and PQ codebooks, unigram and bm25 model state, BPE
-    * merges, session store paths, cached query vectors.
-    *
-    * The keyed caches assume a corpus path is IMMUTABLE for the session's
-    * lifetime (the right trade for a bench driver or an immutable data
-    * lake); any caller that mutates a corpus directory in place —
-    * regenerating parquet under the same path, appending files — must
-    * call this with the same `sfDir` string its queries use, or
-    * subsequent calls serve results derived from the old corpus. Stores
-    * built FROM the corpus (`ensureStore` and friends) rebuild at fresh
-    * paths on next use; explicit store paths mutated through the CRUD
-    * surface (`appendStore`/`compactStore`/`recoverStore`) refresh their
-    * own serving caches and are unaffected. */
-  def invalidateCorpus(sfDir: String): Unit = {
-    Tables.invalidateCorpus(sfDir)
-    operators.Analytics.invalidateCorpus(sfDir)
-    operators.Dedup.invalidateCorpus(sfDir)
-    operators.CorpusOps.invalidateCorpus(sfDir)
-    operators.TextAnalysis.invalidateCorpus(sfDir)
-    operators.KnnSearch.invalidateCorpus(sfDir)
-    operators.VectorIndex.invalidateCorpus(sfDir)
-    operators.TextStore.invalidateCorpus(sfDir)
-  }
+    * `sfDir` (with or without a trailing `/`) — see [[SessionState]] for
+    * the immutable-corpus contract this call is the escape hatch from. */
+  def invalidateCorpus(sfDir: String): Unit = SessionState.invalidatePath(sfDir)
 
   def local(cores: Int): SparkSession = {
     // Shuffle sizing is adaptive-first: every shuffle STARTS at 3× cores

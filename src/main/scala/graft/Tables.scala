@@ -9,28 +9,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * viable at 100 TB: a kNN query reads only (id, embedding[, filter cols]).
   */
 object Tables {
-  /** Parquet schema cache, keyed by path (r19). A schema-less
+  /** Cached-schema parquet read — the one reader every non-streaming
+    * parquet consumer in the engine goes through (r19). A schema-less
     * `spark.read.parquet` runs a one-task footer-inference JOB at frame
     * CONSTRUCTION time — measured ~70-250 ms through an action on this
     * host — and the engine constructs each base table and session-temp
-    * signature table many times per query. The landed schema of a path
-    * is immutable for the session (same contract as every keyed cache
-    * here: corpus paths are immutable, store mutations append files of
-    * the identical schema), so infer once and pass the schema
-    * explicitly ever after; `seedSchema` lets writers register what
-    * they just wrote so even the first read skips inference. On a real
-    * cluster the same call skips a footer read against remote storage
-    * per query — strictly less I/O at any scale. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
-
-  /** Cached-schema parquet read — the one reader every non-streaming
-    * parquet consumer in the engine goes through. */
+    * signature table many times per query. So infer once per path (a
+    * [[SessionState]] entry; store mutations append files of the
+    * identical schema) and pass the schema explicitly ever after;
+    * [[seedSchema]] lets writers register what they just wrote so even
+    * the first read skips inference. On a real cluster the same call
+    * skips a footer read against remote storage per query. */
   private[graft] def readCached(
       spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val sch = SessionState.getOrBuild(SessionState.key("schema", path))(
+      spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 
@@ -38,9 +31,8 @@ object Tables {
     * written FROM this exact schema by this session, so its nullability
     * claims hold for the rows on disk and it is safe to read back with. */
   private[graft] def seedSchema(
-      path: String, schema: org.apache.spark.sql.types.StructType): Unit = {
-    schemaCache.put(path, schema); ()
-  }
+      path: String, schema: org.apache.spark.sql.types.StructType): Unit =
+    SessionState.put(SessionState.key("schema", path), schema)
 
   /** (total on-disk bytes, file count) of a parquet path (file or dir),
     * cached — the driver-side input probe [[spreadSmall]] keys on.
@@ -53,12 +45,10 @@ object Tables {
     * reaped temp dir, an unregistered scheme) degrades to the
     * "large input" sentinel, i.e. no spread — the behavior-preserving
     * default — instead of an NPE killing the query. */
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
   private def pathStats(spark: SparkSession, path: String): (Long, Int) =
-    sizeCache.computeIfAbsent(path, { p =>
+    SessionState.getOrBuild(SessionState.key("pathstats", path)) {
       try {
-        val hp = new org.apache.hadoop.fs.Path(p)
+        val hp = new org.apache.hadoop.fs.Path(path)
         val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val st = fs.getFileStatus(hp)
         val files =
@@ -70,7 +60,7 @@ object Tables {
       } catch {
         case scala.util.control.NonFatal(_) => (Long.MaxValue, Int.MaxValue)
       }
-    })
+    }
 
   /** Spread a SMALL dense scan across the cluster before CPU-heavy
     * per-row work (r19). The dup-heavy corpora compress ~100:1, so a
@@ -100,24 +90,6 @@ object Tables {
     if (bytes < maxBytes && files < p / 2)
       df.repartition(p)
     else df
-  }
-
-  /** Drop the cached schema for one path — store mutation hooks call
-    * this defensively (their appends keep the schema, but the cache must
-    * never be able to serve a stale one after a layout-changing
-    * rebuild). */
-  private[graft] def invalidatePath(path: String): Unit = {
-    schemaCache.remove(path)
-    sizeCache.remove(path); ()
-  }
-
-  /** Drop every cached schema under the corpus dir — part of
-    * [[GraftSession.invalidateCorpus]]. Trailing separator so
-    * `/data/sf1` never matches `/data/sf10` paths. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit = {
-    val prefix = sfDir.stripSuffix("/") + "/"
-    schemaCache.keySet.removeIf(_.startsWith(prefix))
-    sizeCache.keySet.removeIf(_.startsWith(prefix)); ()
   }
 
   /** Opt-in storage-aligned layout redirect (r16, VERDICT r15 item 3):

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,17 +28,11 @@ object Analytics {
   // key, and the bucket count tracks 2-3× total cores like the shuffle
   // start. Keyed by (session, corpus): bucket METADATA lives in the
   // session catalog, so a fresh session rebuilds rather than dangle.
-  private val userEventsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val userEventsSeq = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** See [[graft.GraftSession.invalidateCorpus]]. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit =
-    userEventsCache.keySet.removeIf(_.endsWith(s"|$sfDir"))
-
   private def userEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${System.identityHashCode(spark)}|$sfDir"
-    val tbl = userEventsCache.computeIfAbsent(key, { _ =>
+    val key = SessionState.key("userevents", sfDir).inSession(spark)
+    val tbl = SessionState.getOrBuild(key) {
       val name = s"graft_events_user_${userEventsSeq.incrementAndGet()}"
       val dir = java.nio.file.Files
         .createTempDirectory("graft_events_user_").toString
@@ -52,7 +46,7 @@ object Analytics {
         .bucketBy(buckets, "user_id")
         .saveAsTable(name)
       name
-    })
+    }
     spark.table(tbl)
   }
 

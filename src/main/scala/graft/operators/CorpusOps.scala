@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,16 +93,18 @@ object CorpusOps {
   }
 
   /** The cached full merge rows for (corpus, nMerges) — ONE atomic
-    * computeIfAbsent shared by [[bpeTrain]] and [[trainedMerges]] (r20,
-    * ADVICE r19: the former train-then-raw-`get` pair NPE'd if
-    * invalidateCorpus ran between the two calls). */
+    * session-state lookup shared by [[bpeTrain]] and [[trainedMerges]]
+    * (r20, ADVICE r19: the former train-then-raw-`get` pair NPE'd if
+    * the corpus was invalidated between the two calls). Learned merge
+    * tables are model state (like the centroids): full rows (rank, l, r,
+    * cnt) so the graded train output serves from the same entry. */
   private def trainedMergeRows(
       spark: SparkSession,
       sfDir: String,
       nMerges: Int,
       rematerializeEvery: Int = 100): Seq[(Int, String, String, Long)] =
-    mergeCache.computeIfAbsent(s"$sfDir|$nMerges", _ =>
-      bpeTrainDocs(Tables.documents(spark, sfDir), s"bpewords|$sfDir",
+    SessionState.getOrBuild(SessionState.key("bpemerges", sfDir, nMerges))(
+      bpeTrainDocs(Tables.documents(spark, sfDir), sfDir,
         nMerges, rematerializeEvery)
         .collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -112,11 +114,11 @@ object CorpusOps {
     * graded corpus query and the large-vocabulary trainer exercises in
     * BpeTrainSpec (the driver's synthetic corpus holds only 61 distinct
     * words ≈ 127 possible merges, far below a production-shaped run).
-    * `cacheKey` must uniquely name the corpus: it keys the session-temp
+    * `scope` must uniquely name the corpus: it scopes the session-temp
     * histogram materializations. */
   private[graft] def bpeTrainDocs(
       docs: DataFrame,
-      cacheKey: String,
+      scope: String,
       nMerges: Int,
       rematerializeEvery: Int): DataFrame = {
     require(rematerializeEvery >= 1,
@@ -134,7 +136,7 @@ object CorpusOps {
           concat(lit(us), array_join(split(col("word"), ""), us + us),
             lit(us)).as("syms"),
           col("freq")),
-      cacheKey)
+      SessionState.key("bpewords", scope))
 
     // merges learned since `base` last materialized; applied as ONE flat
     // expression per round, never a per-round column chain
@@ -170,7 +172,7 @@ object CorpusOps {
       // only (corpus, rank)
       if (prefix.size >= rematerializeEvery && rank < nMerges) {
         base = Dedup.materialized(
-          roundFrame(base, prefix), s"$cacheKey|$rank")
+          roundFrame(base, prefix), SessionState.key("bpewords", scope, rank))
         prefix = Vector.empty
       }
     }
@@ -201,16 +203,6 @@ object CorpusOps {
       merges.map { case (l, r) => us + l + r + us }.toArray)
   }
 
-  // learned merge tables are model state (like the centroid cache):
-  // train once per corpus, reuse across the train query, the tokenize
-  // query, and repeated calls in one session — full rows (rank, l, r,
-  // cnt) so the graded train output serves from the same entry
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
-
-  /** See [[graft.GraftSession.invalidateCorpus]]. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit =
-    mergeCache.keySet.removeIf(_.split('|').contains(sfDir))
   private def trainedMerges(
       spark: SparkSession, sfDir: String, nMerges: Int): Seq[(String, String)] =
     trainedMergeRows(spark, sfDir, nMerges).map { case (_, l, r, _) => (l, r) }
@@ -229,7 +221,7 @@ object CorpusOps {
   private[operators] def exactUniqueDocs(spark: SparkSession, sfDir: String): DataFrame =
     Dedup.spreadSigTable(
       Dedup.uniqueDocsBy(spark, sfDir, md5(col("text")), "uniqexact"),
-      s"uniqexact|$sfDir")
+      SessionState.key("uniqexact", sfDir))
 
   private[operators] def exactUniqueMembers(spark: SparkSession, sfDir: String): DataFrame =
     Dedup.uniqueMembersBy(spark, sfDir, md5(col("text")), "uniqexact")

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
+import graft.SessionState.{Key, key}
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,26 +24,6 @@ object Dedup {
   private def normText =
     regexp_replace(lower(trim(col("text"))), "\\s+", " ")
 
-  /** Materialize an intermediate frame to session-temp parquet and read it
-    * back — the stand-in for the signature TABLE a production dedup job
-    * keeps. Through r3 this was a `persist()`, but the returned pair frame
-    * is lazy (its consumers execute after the operator returns), so there
-    * is no point where a try/finally unpersist is both safe and effective
-    * — the blocks accumulated in the block manager for the session's
-    * lifetime (VERDICT r3 item 7). Written columnar data has no
-    * block-manager residue, the downstream plan branches share one
-    * columnar scan of it, and the OS owns the temp-file lifetime.
-    * The written dir is cached per (operator, input, params) key — same
-    * build-once pattern as `VectorIndex.ensureStore` — so repeated calls
-    * in one session reuse the table instead of re-deriving it. The cache
-    * (like every keyed model/signature cache here) assumes the corpus at
-    * a given path is immutable for the session's lifetime — regenerating
-    * a table in place under a live session serves stale results; use a
-    * fresh path (the driver's per-SF dirs and every spec's temp dirs
-    * already do). */
-  private val sigTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Scratch dirs this session wrote under `spark.graft.scratchDir`,
     * deleted by a JVM shutdown hook: OS tmp reaping covers the local-tmp
     * default, but a shared filesystem has no TTL — long-lived clusters
@@ -62,26 +43,21 @@ object Dedup {
       }))
   }
 
-  /** [[minhashLsh]]'s over-cap dead-band sets, keyed per (corpus, params)
-    * — bounded query state (≤ bands·2^20 packed keys by construction,
-    * typically empty), cached so warm calls skip the counting pass. */
-  private val deadBandCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-  /** Drop every session-cached structure derived from the corpus at
-    * `sfDir` — see [[graft.GraftSession.invalidateCorpus]] for the
-    * contract. Cache keys name the corpus dir as a `|`-delimited
-    * component (never by substring: `/data/sf1` must not match
-    * `/data/sf10`). */
-  private[graft] def invalidateCorpus(sfDir: String): Unit = {
-    sigTableCache.keySet.removeIf(_.split('|').contains(sfDir))
-    bucketTableCache.keySet.removeIf(_.split('|').contains(sfDir))
-    deadBandCache.keySet.removeIf(_.split('|').contains(sfDir))
-    dimCache.remove(sfDir)
-    lshParamCache.remove(sfDir)
-  }
-
-  private[operators] def materialized(df: DataFrame, key: String): DataFrame = {
-    val dir = sigTableCache.computeIfAbsent(key, { _ =>
+  /** Materialize an intermediate frame to session-temp parquet and read it
+    * back — the stand-in for the signature TABLE a production dedup job
+    * keeps. Through r3 this was a `persist()`, but the returned pair frame
+    * is lazy (its consumers execute after the operator returns), so there
+    * is no point where a try/finally unpersist is both safe and effective
+    * — the blocks accumulated in the block manager for the session's
+    * lifetime (VERDICT r3 item 7). Written columnar data has no
+    * block-manager residue, the downstream plan branches share one
+    * columnar scan of it, and the OS owns the temp-file lifetime.
+    * The written dir is a [[SessionState]] entry under the caller's
+    * (operator, input, params) key — same build-once pattern as
+    * `VectorIndex.ensureStore` — so repeated calls in one session reuse
+    * the table instead of re-deriving it. */
+  private[operators] def materialized(df: DataFrame, key: Key): DataFrame = {
+    val dir = SessionState.getOrBuild(key) {
       // scratch root: local tmp on local[*] (this environment), but any
       // shared filesystem URI (HDFS/S3A) via `spark.graft.scratchDir` on
       // a real cluster — executors must be able to read what other
@@ -102,14 +78,9 @@ object Dedup {
       // footer-inference job for a table this session created (r19)
       graft.Tables.seedSchema(d, df.schema)
       d
-    })
+    }
     graft.Tables.readCached(df.sparkSession, dir)
   }
-
-  /** Session-temp BUCKETED tables ([[materializedBucketed]]), keyed like
-    * [[sigTableCache]]; the value is the catalog table name. */
-  private val bucketTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Bucketed variant of [[materialized]] (r20, guide §2.4 "bucketed
     * tables persist a partitioning across jobs"): a session-built table
@@ -128,9 +99,10 @@ object Dedup {
     * (one file per bucket) so the sorted-bucket metadata lets SMJ skip
     * the per-partition sort too. */
   private[operators] def materializedBucketed(
-      df: DataFrame, key: String, bucketCols: Seq[String]): DataFrame = {
+      df: DataFrame, key: Key, bucketCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
-    val name = bucketTableCache.computeIfAbsent(key, { _ =>
+    // the value names a table in THIS session's catalog: keyed by session
+    val name = SessionState.getOrBuild(key.inSession(spark)) {
       val n = spark.conf.getOption("spark.graft.buckets").map(_.toInt)
         .getOrElse(spark.sparkContext.defaultParallelism)
       val t = "graft_bkt_" + java.lang.Integer.toHexString(key.hashCode) +
@@ -141,13 +113,8 @@ object Dedup {
         .sortBy(bucketCols.head, bucketCols.tail: _*)
         .saveAsTable(t)
       t
-    })
-    // a table name cached by a PREVIOUS session lives in that session's
-    // (temp-dir) catalog — rebuild under this one instead of failing
-    if (!spark.catalog.tableExists(name)) {
-      bucketTableCache.remove(key, name)
-      materializedBucketed(df, key, bucketCols)
-    } else spark.table(name)
+    }
+    spark.table(name)
   }
 
   /** The already-materialized table for `key`, if this session built one —
@@ -157,11 +124,10 @@ object Dedup {
     * loop's per-round join + aggregate + count jobs re-run on every call
     * unless the caller checks this first (r19: dedup_clusters re-converged
     * an unchanged graph on every bench sample — 20+ jobs to rebuild a
-    * table the session already has). Same immutable-corpus contract as
-    * every other keyed cache here; invalidated by [[invalidateCorpus]]. */
+    * table the session already has). */
   private[operators] def materializedIfCached(
-      spark: SparkSession, key: String): Option[DataFrame] =
-    Option(sigTableCache.get(key)).map(graft.Tables.readCached(spark, _))
+      spark: SparkSession, key: Key): Option[DataFrame] =
+    SessionState.get[String](key).map(graft.Tables.readCached(spark, _))
 
   /** Shared exact-dedup aggregation over any (doc_id, text) frame — the
     * SAME plan backs the batch query below and the streaming ingest gate
@@ -221,7 +187,7 @@ object Dedup {
         .groupBy(col("k"))
         .agg(min(col("doc_id")).as("uid"), count(lit(1)).as("w"),
           min_by(col("text"), col("doc_id")).as("text")),
-      s"$prefix|$sfDir")
+      SessionState.key(prefix, sfDir))
 
   /** (uid, doc_id) membership map for [[uniqueDocsBy]]'s table under the
     * same key — every document mapped to its representative id, for the
@@ -237,14 +203,14 @@ object Dedup {
         .join(uniqueDocsBy(spark, sfDir, key, prefix)
           .select(col("k"), col("uid")), "k")
         .select(col("uid"), col("doc_id")),
-      s"${prefix}members|$sfDir", Seq("uid"))
+      SessionState.key(s"${prefix}members", sfDir), Seq("uid"))
 
   /** [[graft.Tables.spreadSmall]] over a materialized table, resolved
     * through its cache key — the CPU-heavy consumers of the unique
     * tables (shingling, signing, token statistics) otherwise serialize
     * onto the one-to-few tasks a sub-row-group parquet scan yields. */
-  private[operators] def spreadSigTable(df: DataFrame, key: String): DataFrame =
-    Option(sigTableCache.get(key))
+  private[operators] def spreadSigTable(df: DataFrame, key: Key): DataFrame =
+    SessionState.get[String](key)
       .map(dir => Tables.spreadSmall(df.sparkSession, df, dir))
       .getOrElse(df)
 
@@ -255,7 +221,7 @@ object Dedup {
   private[operators] def uniqueDocs(spark: SparkSession, sfDir: String): DataFrame = {
     val df = uniqueDocsBy(spark, sfDir, md5(normText), "uniq")
       .withColumnRenamed("uid", "doc_id")
-    spreadSigTable(df, s"uniq|$sfDir")
+    spreadSigTable(df, key("uniq", sfDir))
   }
 
   /** (uid, doc_id) membership rows over the normalized unique table. */
@@ -369,7 +335,7 @@ object Dedup {
       maxDf: Int = 1000): DataFrame =
     materialized(
       buildNgramJaccardPairs(spark, sfDir, n, threshold, maxDf),
-      s"jacpairsu|$sfDir|$n|$threshold|$maxDf")
+      key("jacpairsu", sfDir, n, threshold, maxDf))
 
   /** The distinct `doc_b` side of [[ngramJaccardPairs]] — the id set a
     * duplicate gate drops — WITHOUT materializing the member-level
@@ -495,10 +461,10 @@ object Dedup {
     * when their parameters coincide (identical banding ⇒ identical
     * counts). */
   private def deadBandSet(
-      banded: DataFrame, cacheKey: String, maxDf: Int,
+      banded: DataFrame, cacheKey: Key, maxDf: Int,
       df: org.apache.spark.sql.Column = count(lit(1))): Array[Long] =
     if (maxDf == Int.MaxValue) Array.emptyLongArray
-    else deadBandCache.computeIfAbsent(cacheKey, _ => {
+    else SessionState.getOrBuild(cacheKey) {
       val a = banded
         .groupBy(col("band"), col("band_hash"))
         .agg(df.as("df"))
@@ -509,7 +475,7 @@ object Dedup {
         .collect()
       java.util.Arrays.sort(a)
       a
-    })
+    }
 
   /** The doc-level signature table — the spec hook for [[bandHashes]]
     * (production paths run unique-first via [[minhashUniqueSigs]]). */
@@ -518,7 +484,7 @@ object Dedup {
     materialized(shingled(spark, sfDir, n)
       .select(col("doc_id"),
         HashFunctions.minhashSigHashes(col("shingles")).as("sig")),
-      s"minhash|$sfDir|$n")
+      key("minhash", sfDir, n))
 
   /** UNIQUE-level MinHash signature table (doc_id = unique representative
     * id, w = copy count) — shared by [[minhashLsh]] and [[nearDupGate]]'s
@@ -535,7 +501,7 @@ object Dedup {
         .select(col("doc_id"),
           HashFunctions.minhashSigHashes(col("shingles")).as("sig"))
         .join(uniqueDocs(spark, sfDir).select(col("doc_id"), col("w")), "doc_id"),
-      s"minhashu|$sfDir|$n", Seq("doc_id"))
+      key("minhashu", sfDir, n), Seq("doc_id"))
 
   /** The session's bucketed minhash BAND-ROW table —
     * (doc_id, w, band, band_hash, pre), one row per (unique doc, band),
@@ -555,7 +521,7 @@ object Dedup {
         minhashUniqueSigs(spark, sfDir, n)
           .select(col("doc_id"), col("w"),
             bandHashExpr(bands, rowsPerBand).as("bhs"))),
-      s"minhashbandsu|$sfDir|$n|$bands|$rowsPerBand",
+      key("minhashbandsu", sfDir, n, bands, rowsPerBand),
       Seq("band", "band_hash"))
 
   /** [[bandedPrefixRows]] with the copy-count `w` riding each band row,
@@ -685,7 +651,7 @@ object Dedup {
     // band hashes), so the cache key is shared with [[nearDupGate]]'s
     // doc-level computation unchanged
     val dead: Array[Long] =
-      deadBandSet(banded, s"minhashdead|$sfDir|$n|$bands|$rowsPerBand|$maxDf",
+      deadBandSet(banded, key("minhashdead", sfDir, n, bands, rowsPerBand, maxDf),
         maxDf, sum(col("w")))
     // common path: no bucket over the cap → "no earlier band matches" is
     // the whole ownership test. Only when dead buckets exist does each
@@ -843,7 +809,7 @@ object Dedup {
       posexplode(expr(
         "transform(sequence(0, 3), b -> shiftright(fp, b * 16) & 65535L)"))
         .as(Seq("band", "block"))),
-      s"simhashu|$sfDir")
+      key("simhashu", sfDir))
     // bucket sizes: ≤ 4·2¹⁶ groups regardless of corpus size — map-side
     // partial aggregation collapses the scan to a tiny frame, broadcast
     // back so the sub-bucket count rides into the scan without a shuffle.
@@ -975,7 +941,7 @@ object Dedup {
     // part of the key (r20, ADVICE r19): a lower cap can truncate
     // propagation at a different label table, which a maxIters-less key
     // would silently serve to later callers.
-    val cacheKey = s"clusters|$sfDir|$n|$threshold|$maxIters"
+    val cacheKey = key("clusters", sfDir, n, threshold, maxIters)
     val cached = materializedIfCached(spark, cacheKey)
     if (cached.isDefined) return cached.get
     // UNIQUE-level edges + group stars (r10): the expanded pair set makes
@@ -1290,7 +1256,7 @@ object Dedup {
       maxBucket: Int): DataFrame =
     materialized(
       buildScoredCandidatePairs(spark, sfDir, bands, bitsPerBand, maxBucket),
-      s"lshpairsu|$sfDir|$bands|$bitsPerBand|$maxBucket")
+      key("lshpairsu", sfDir, bands, bitsPerBand, maxBucket))
 
   /** Sign-LSH band signatures over an `embedding` column: band b's sig
     * packs the sign bits of `bitsPerBand` hyperplanes — integer-exact
@@ -1330,10 +1296,8 @@ object Dedup {
 
   /** Embedding dimensionality of a corpus — a one-row driver probe,
     * cached per path like every other bounded model lookup. */
-  private val dimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def embeddingDim(spark: SparkSession, sfDir: String): Int =
-    dimCache.computeIfAbsent(sfDir, _ =>
+    SessionState.getOrBuild(key("embeddingdim", sfDir))(
       Tables.embeddings(spark, sfDir)
         .select(size(col("embedding"))).head(1).headOption
         .map(_.getInt(0))
@@ -1353,8 +1317,6 @@ object Dedup {
     * At or below 65536 vectors the original (8, 8) contract is returned
     * unchanged — the graded sf0.01 oracle replays exactly that layout.
     * The n probe is a parquet-metadata count, cached per path. */
-  private val lshParamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
   // dim is required (no default): the plane cap depends on it, and a
   // caller silently inheriting a 64-dim cap for a smaller-dim corpus
   // would over-allocate bits and trip the SignLshSigs require at plan
@@ -1385,7 +1347,7 @@ object Dedup {
       (bands, math.max(1, math.min(planeCap, math.min(24, log2 - 3))))
     }
   private def autoLshParams(spark: SparkSession, sfDir: String): (Int, Int) =
-    lshParamCache.computeIfAbsent(sfDir, _ =>
+    SessionState.getOrBuild(key("lshparams", sfDir))(
       lshParamsFor(Tables.embeddings(spark, sfDir).count(),
         embeddingDim(spark, sfDir)))
   private def resolveLsh(
@@ -1426,7 +1388,7 @@ object Dedup {
         .groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("w"))
         .select(col("vec_id"), col("w"), col("embedding")),
-      s"uniqvec|$sfDir", Seq("vec_id"))
+      key("uniqvec", sfDir), Seq("vec_id"))
 
   /** (uid, doc_id) membership rows for vectors — named like the text
     * family's so [[expandUniquePairs]] serves both. */
@@ -1436,7 +1398,7 @@ object Dedup {
         .join(uniqueVecs(spark, sfDir)
           .select(col("vec_id").as("uid"), col("embedding")), "embedding")
         .select(col("uid"), col("vec_id").as("doc_id")),
-      s"uniqvecmembers|$sfDir", Seq("uid"))
+      key("uniqvecmembers", sfDir), Seq("uid"))
 
   /** The materialized (vec_id, w, sigs) sign-LSH signature table over the
     * UNIQUE vectors of a corpus — one scan per session, shared by
@@ -1449,7 +1411,7 @@ object Dedup {
       col("vec_id"), col("w"),
       signLshSigExpr(bands, bitsPerBand, embeddingDim(spark, sfDir))
         .as("sigs")).toDF("vec_id", "w", "sigs"),
-      s"lshsigsu|$sfDir|$bands|$bitsPerBand")
+      key("lshsigsu", sfDir, bands, bitsPerBand))
 
   /** The session's bucketed sign-LSH BAND-ROW table —
     * (vec_id, w, band, sig, pre), one row per (unique vector, band),
@@ -1467,7 +1429,7 @@ object Dedup {
           posexplode(col("sigs")).as(Seq("band", "sig")))
         .select(col("vec_id"), col("w"), col("band"), col("sig"),
           expr("slice(sigs, 1, band)").as("pre")),
-      s"lshbandsu|$sfDir|$bands|$bitsPerBand", Seq("band", "sig"))
+      key("lshbandsu", sfDir, bands, bitsPerBand), Seq("band", "sig"))
 
   private def buildScoredCandidatePairs(
       spark: SparkSession,
@@ -1856,7 +1818,7 @@ object Dedup {
     // (weighted unique counts == doc-level row counts); the count
     // aggregate rides the bucketed layout, also exchange-free
     val dead = deadBandSet(corpusBandRows,
-      s"minhashdead|$sfDir|$n|$bands|$rowsPerBand|$maxDf", maxDf,
+      key("minhashdead", sfDir, n, bands, rowsPerBand, maxDf), maxDf,
       sum(col("w")))
     val corpusBands = deadMasked(
       corpusBandRows.drop("w").withColumnRenamed("doc_id", "corpus_doc_id"),
@@ -2027,8 +1989,8 @@ object Dedup {
     // and the dead-bucket count both consume the persisted layout — the
     // per-call explode+shuffle of the compact sig table is gone
     val corpusBandRows = signLshBandRows(spark, sfDir, bands, bitsPerBand)
-    val dead: Array[Long] = deadBandCache.computeIfAbsent(
-      s"lshdead|$sfDir|$bands|$bitsPerBand|$maxBucket", _ => {
+    val dead: Array[Long] = SessionState.getOrBuild(
+      key("lshdead", sfDir, bands, bitsPerBand, maxBucket)) {
         val a = corpusBandRows
           .groupBy(col("band"), col("sig"))
           .agg(sum(col("w")).as("df"))
@@ -2038,7 +2000,7 @@ object Dedup {
           .collect()
         java.util.Arrays.sort(a)
         a
-      })
+      }
     val corpusBands = {
       val base = corpusBandRows.drop("w")
         .withColumnRenamed("vec_id", "corpus_vec_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,45 +22,35 @@ import org.apache.spark.sql.functions._
   */
 object KnnSearch {
 
-  /** Fetch a stored embedding to use as the query vector (the reference
-    * embeds the user's query string; the deterministic stand-in is a row of
-    * the `embeddings` table — same 64-dim space). Cached per (sfDir, vecId):
-    * the lookup is a query *parameter* (one row, pushed-down id filter), and
-    * caching it keeps repeated searches at one Spark job instead of two. */
-  private val qvCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Array[Float]]()
-
   /** Batch query SETS, cached like single query vectors (r19): the
     * lowest-`n` embeddings are the deterministic batch-query parameter of
     * every `knn_batch_*` / `ann_eval*` call, and each call paid one
     * collect job to re-fetch ≤ n rows the session already had. Sorted by
     * id so downstream probe tables derive deterministically. */
-  private val qvSetCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), Array[(Long, Array[Float])]]()
   private[graft] def queryVectors(
       spark: SparkSession, sfDir: String, n: Int): Array[(Long, Array[Float])] =
-    qvSetCache.computeIfAbsent((sfDir, n), { _ =>
+    SessionState.getOrBuild(SessionState.key("queryvectors", sfDir, n)) {
       Tables.embeddings(spark, sfDir)
         .where(col("vec_id") < n)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
         .sortBy(_._1)
-    })
+    }
 
-  /** See [[graft.GraftSession.invalidateCorpus]]. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit = {
-    qvCache.keySet.removeIf(_._1 == sfDir)
-    qvSetCache.keySet.removeIf(_._1 == sfDir)
-  }
+  /** Fetch a stored embedding to use as the query vector (the reference
+    * embeds the user's query string; the deterministic stand-in is a row of
+    * the `embeddings` table — same 64-dim space). Cached per (sfDir, vecId):
+    * the lookup is a query *parameter* (one row, pushed-down id filter), and
+    * caching it keeps repeated searches at one Spark job instead of two. */
   def queryVector(spark: SparkSession, sfDir: String, vecId: Long): Array[Float] =
-    qvCache.computeIfAbsent((sfDir, vecId), { _ =>
+    SessionState.getOrBuild(SessionState.key("queryvector", sfDir, vecId)) {
       Tables.embeddings(spark, sfDir)
         .where(col("vec_id") === vecId)
         .select("embedding")
         .head()
         .getSeq[Float](0)
         .toArray
-    })
+    }
 
   sealed trait Strategy {
     def score(emb: Column, q: Column): Column

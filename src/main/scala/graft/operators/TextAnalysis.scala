@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
+import graft.SessionState.key
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,19 +16,6 @@ import org.apache.spark.sql.functions._
   * reproducible 1:1 in the DuckDB oracle.
   */
 object TextAnalysis {
-
-  /** [[bm25]]'s corpus stats, keyed per (corpus, terms) — a handful of
-    * driver-side longs (n, sumdl, df per term), session-lifetime like
-    * every model cache here (the corpus at a path is immutable for the
-    * session). */
-  private val bm25StatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
-  /** See [[graft.GraftSession.invalidateCorpus]]. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit = {
-    bm25StatsCache.keySet.removeIf(_.split('|').contains(sfDir))
-    qwCache.keySet.removeIf(_._1 == sfDir)
-  }
 
   /** Token counts: whitespace tokens, punctuation-aware alnum tokens,
     * distinct alnum tokens. */
@@ -258,16 +246,14 @@ object TextAnalysis {
     // (r20): the vector is a query PARAMETER — one dim-length array —
     // and every text_search / chunk_search / search_metrics / rag_* call
     // re-paid a one-row Spark job to re-derive it
-    qwCache.computeIfAbsent((sfDir, queryDocId, dim), { _ =>
+    SessionState.getOrBuild(key("queryweights", sfDir, queryDocId, dim)) {
       val qDense: Array[Long] = denseWeights(spark, sfDir, dim)
         .where(col("doc_id") === queryDocId)
         .select(expr("transform(ws, x -> x.w)")).head()
         .getSeq[Long](0).toArray
       (qDense, qDense.map(v => v * v).sum)
-    })
+    }
   }
-  private val qwCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int), (Array[Long], Long)]()
 
   /** [[textSearch]] from an already-built query vector — the reference's
     * `similarity_search_by_vector_with_score` boundary (app.py:124): the
@@ -350,7 +336,7 @@ object TextAnalysis {
     // by id before the top-k; (chunk_id, score) are per-unique, the
     // ordering and the query-doc exclusion apply at member level exactly
     // as the doc-level scan had them.
-    val featsKey = s"chunkfeats|$size|$overlap|$dim|$sfDir"
+    val featsKey = key("chunkfeats", sfDir, size, overlap, dim)
     val chunkFeats = Dedup.materialized(
       TextAnalysis.chunkDocs(
         CorpusOps.exactUniqueDocs(spark, sfDir)
@@ -444,7 +430,7 @@ object TextAnalysis {
         .select(col("token"),
           floor(log(col("n") / col("n_total")) * 10000 + lit(0.5))
             .cast("long").as("logq")),
-      s"unigram|$sfDir")
+      key("unigram", sfDir))
     utoks.join(vocab, "token")
       .groupBy(col("uid"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("logq")).as("sum_logq"))
@@ -571,14 +557,15 @@ object TextAnalysis {
       terms.indices.map(i =>
         sum(when(col(s"tf$i") > 0, col("w")).otherwise(0L)).as(s"df$i"))
     // corpus stats are per-(corpus, terms) model state — one driver-side
-    // row of longs, cached like the trained centroids so warm calls pay
-    // only the scoring scan, not a second corpus aggregate (r9)
-    val stats = bm25StatsCache.computeIfAbsent(
-      s"bm25|$sfDir|${terms.mkString(" ")}",
-      _ => {
+    // row of longs (n, sumdl, df per term), cached like the trained
+    // centroids so warm calls pay only the scoring scan, not a second
+    // corpus aggregate (r9). The term LIST is the key parameter: a joined
+    // string made Seq("a b") and Seq("a", "b") share one entry.
+    val stats: Array[Long] =
+      SessionState.getOrBuild(key("bm25stats", sfDir, terms.toList)) {
         val r = toks.agg(aggs.head, aggs.tail: _*).head()
         Array.tabulate(2 + terms.size)(r.getLong)
-      })
+      }
     val n = stats(0)
     val sumdl = stats(1)
     // the one transcendental, pinned to 4dp (parity note at [[round4]])

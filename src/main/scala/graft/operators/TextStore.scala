@@ -201,19 +201,13 @@ object TextStore {
     VectorIndex.writeLshVectorStore(spark,
       corpusChunkVectors(spark, sfDir), path, nPlanes, Dim)
 
-  private val chunkStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** See [[graft.GraftSession.invalidateCorpus]]. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit =
-    chunkStoreCache.remove(sfDir)
   def ensureChunkStore(spark: SparkSession, sfDir: String): String =
-    chunkStoreCache.computeIfAbsent(sfDir, { _ =>
+    graft.SessionState.getOrBuild(graft.SessionState.key("chunkstore", sfDir)) {
       val path = java.nio.file.Files.createTempDirectory("graft_chunk_store_")
         .toString
       writeChunkStore(spark, sfDir, path)
       path
-    })
+    }
 
   /** Search the chunk store with a RAW TEXT query — the reference's
     * /search contract (text in, ranked hits out) through the pruned

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionState, Tables}
+import graft.SessionState.key
 import graft.functions.{IndexFunctions, IndexOps, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,26 +64,10 @@ object VectorIndex {
     if (keepMod == 1L) emb else emb.where(samplePredicate(keepMod))
   }
 
-  // trained centroids are model state: cache per store so build+search in
-  // one session train once
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-
-  /** See [[graft.GraftSession.invalidateCorpus]]. Drops the corpus-keyed
-    * model state and session store paths; store-PATH-keyed serving caches
-    * refresh through their own write/compact/recover hooks, and a store
-    * rebuilt after invalidation lands at a fresh path. */
-  private[graft] def invalidateCorpus(sfDir: String): Unit = {
-    centroidCache.remove(sfDir)
-    pqCache.remove(sfDir)
-    storeCache.remove(sfDir)
-    lshStoreCache.remove(sfDir)
-  }
-
   /** Deterministic k-means: init = embeddings of the k smallest vec_ids,
     * then `Iters` Lloyd iterations. Returns driver-side centroid matrix. */
   def trainCentroids(spark: SparkSession, sfDir: String): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(sfDir, _ =>
+    SessionState.getOrBuild(key("centroids", sfDir))(
       trainLloyd(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"))))
 
@@ -229,23 +214,23 @@ object VectorIndex {
     } finally emb.unpersist()
   }
 
-  /** Warm BOTH corpus model caches through the fused trainer when neither
-    * is populated — the store-build path trains centroids AND codebooks,
-    * and paying two separate job towers for one build is the measured
-    * `ivf_build` floor. Falls through to the cached getters either way;
+  /** Build BOTH corpus model entries from one fused trainer run when
+    * neither is built — the store-build path trains centroids AND
+    * codebooks, and paying two separate job towers for one build is the
+    * measured `ivf_build` floor. Otherwise the cached getters serve;
     * with exactly ONE model already cached the separate tower for the
     * other is cost-neutral vs re-running the fused trainer (one tower of
     * jobs either way), so no special case is needed. */
   private def trainedCorpusModels(
       spark: SparkSession, sfDir: String)
       : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    if (!centroidCache.containsKey(sfDir) && !pqCache.containsKey(sfDir)) {
-      val (c, cb) = trainLloydPqFused(Tables.embeddings(spark, sfDir)
+    val (ck, pk) = (key("centroids", sfDir), key("pqcodebooks", sfDir))
+    if (SessionState.get(ck).isEmpty && SessionState.get(pk).isEmpty) {
+      lazy val fused = trainLloydPqFused(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding")))
-      centroidCache.putIfAbsent(sfDir, c)
-      pqCache.putIfAbsent(sfDir, cb)
-    }
-    (trainCentroids(spark, sfDir), trainPqCodebooks(spark, sfDir))
+      (SessionState.getOrBuild(ck)(fused._1),
+        SessionState.getOrBuild(pk)(fused._2))
+    } else (trainCentroids(spark, sfDir), trainPqCodebooks(spark, sfDir))
   }
 
   /** MLlib trainer for the same IVF geometry — "MLlib for batch indexing":
@@ -830,14 +815,15 @@ object VectorIndex {
   // Serving model state (centroids / planes) cached per store path: probe
   // selection must not pay a parquet-read Spark job per query. Writers and
   // the compaction swap refresh the entry; [[recoverStore]] invalidates.
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
+  private def modelKey(dir: String) = key("storemodel", dir)
   private def readModel(
-      spark: SparkSession, path: String, layout: StoreLayout): Array[Array[Float]] =
-    modelCache.computeIfAbsent(s"$path/${layout.modelDir}", dir =>
+      spark: SparkSession, path: String, layout: StoreLayout): Array[Array[Float]] = {
+    val dir = s"$path/${layout.modelDir}"
+    SessionState.getOrBuild(modelKey(dir))(
       spark.read.parquet(dir)
         .orderBy(layout.modelIdCol).collect()
         .map(_.getSeq[Float](1).toArray))
+  }
   private def writeModelTable(
       spark: SparkSession, dir: String, layout: StoreLayout,
       model: Array[Array[Float]]): Unit = {
@@ -852,17 +838,16 @@ object VectorIndex {
   // IVF-PQ pairing: coarse centroids prune IO, per-subspace codes
   // compress the payload the ADC scan reads). Cached per store path like
   // the centroids/planes.
-  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Float]]]]()
+  private def pqModelKey(path: String) = key("storepq", s"$path/pq")
   private def readPqModel(
       spark: SparkSession, path: String): Array[Array[Array[Float]]] =
-    pqModelCache.computeIfAbsent(s"$path/pq", dir => {
-      val rows = spark.read.parquet(dir)
+    SessionState.getOrBuild(pqModelKey(path)) {
+      val rows = spark.read.parquet(s"$path/pq")
         .orderBy(col("sub"), col("cid")).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
       val m = rows.map(_._1).max + 1
       Array.tabulate(m)(s => rows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    })
+    }
   private def writePqModelTableAt(
       spark: SparkSession, dir: String,
       cb: Array[Array[Array[Float]]]): Unit = {
@@ -876,10 +861,10 @@ object VectorIndex {
       spark: SparkSession, path: String,
       cb: Array[Array[Array[Float]]]): Unit = {
     writePqModelTableAt(spark, s"$path/pq", cb)
-    pqModelCache.put(s"$path/pq", cb)
+    SessionState.put(pqModelKey(path), cb)
   }
   private def hasPqModel(spark: SparkSession, path: String): Boolean =
-    pqModelCache.containsKey(s"$path/pq") ||
+    SessionState.get(pqModelKey(path)).isDefined ||
       fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/pq"))
 
   /** Shared initial build: vectors written `partitionBy(layout.partCol)`
@@ -920,8 +905,8 @@ object VectorIndex {
       pqCb.fold(base)(cb => base.withColumn("codes", pqCodesCol(cb))),
       layout, s"$path/vectors")
     writeModelTable(spark, s"$path/${layout.modelDir}", layout, model)
-    graft.Tables.invalidatePath(s"$path/vectors")
-    modelCache.put(s"$path/${layout.modelDir}", model)
+    SessionState.invalidatePath(s"$path/vectors")
+    SessionState.put(modelKey(s"$path/${layout.modelDir}"), model)
     pqCb.foreach(cb => writePqModelTable(spark, path, cb))
     setSingleGen(spark, path, v = true)
   }
@@ -1272,7 +1257,7 @@ object VectorIndex {
     // PQ retrain adds a `codes` column readBase frames would silently
     // lack until recoverStore. The second invalidation at the end of the
     // happy path is harmless.
-    graft.Tables.invalidatePath(s"$path/vectors")
+    SessionState.invalidatePath(s"$path/vectors")
     // the delta was folded into the staged layout (liveRows reads
     // base + delta), so it is dead once the new layout is live. This
     // delete only happens HERE, in the single in-process mutator that
@@ -1288,7 +1273,7 @@ object VectorIndex {
       renameOrFail(layout.modelDir, s"${layout.modelDir}_old")
       renameOrFail(s"${layout.modelDir}_retrain", layout.modelDir)
       deleteOrFail(s"${layout.modelDir}_old")
-      modelCache.put(s"$path/${layout.modelDir}", model)
+      SessionState.put(modelKey(s"$path/${layout.modelDir}"), model)
     }
     stagedPq.foreach { cb =>
       // the PQ codebook swap mirrors the centroid swap: the new layout's
@@ -1298,10 +1283,10 @@ object VectorIndex {
       renameOrFail("pq", "pq_old")
       renameOrFail("pq_retrain", "pq")
       deleteOrFail("pq_old")
-      pqModelCache.put(s"$path/pq", cb)
+      SessionState.put(pqModelKey(path), cb)
     }
     deleteOrFail("vectors_old")
-    graft.Tables.invalidatePath(s"$path/vectors")
+    SessionState.invalidatePath(s"$path/vectors")
     setSingleGen(spark, path, v = true)
   }
 
@@ -1345,7 +1330,7 @@ object VectorIndex {
           renameOrFail(s"${m}_retrain", m)
         }
         if (ex(s"${m}_old")) f.delete(P(s"${m}_old"), true)
-        modelCache.remove(s"$path/$m")
+        SessionState.invalidatePath(s"$path/$m")
       }
       // the PQ codebook swap recovers exactly like the centroid swap:
       // the now-live layout's codes were computed from the staged
@@ -1355,7 +1340,7 @@ object VectorIndex {
         renameOrFail("pq_retrain", "pq")
       }
       if (ex("pq_old")) f.delete(P("pq_old"), true)
-      pqModelCache.remove(s"$path/pq")
+      SessionState.invalidatePath(s"$path/pq")
       // the delta is deliberately NOT touched: the store is readable the
       // moment the new `vectors` layout is in place, so a writer may have
       // appended fresh delta rows between the crash and this recovery —
@@ -1364,7 +1349,7 @@ object VectorIndex {
       // leftovers (they resolve to content identical to their folded
       // gen-0 copies) and the next compaction folds them away.
       f.delete(P("vectors_old"), true)
-      graft.Tables.invalidatePath(s"$path/vectors")
+      SessionState.invalidatePath(s"$path/vectors")
     } else {
       // compaction never switched the store: discard staging output
       if (ex("vectors_compact")) f.delete(P("vectors_compact"), true)
@@ -1378,24 +1363,20 @@ object VectorIndex {
     * search through the real partitioned layout without paying a rebuild
     * per call (the store is persistent state in production; the cache is
     * its stand-in for a fresh JVM). */
-  private val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def ensureStore(spark: SparkSession, sfDir: String): String =
-    storeCache.computeIfAbsent(sfDir, { _ =>
+    SessionState.getOrBuild(key("ivfstore", sfDir)) {
       val path = java.nio.file.Files.createTempDirectory("graft_ivf_store_")
         .toString
       writeStore(spark, sfDir, path)
       path
-    })
-  private val lshStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
   def ensureLshStore(spark: SparkSession, sfDir: String): String =
-    lshStoreCache.computeIfAbsent(sfDir, { _ =>
+    SessionState.getOrBuild(key("lshstore", sfDir)) {
       val path = java.nio.file.Files.createTempDirectory("graft_lsh_store_")
         .toString
       writeLshStore(spark, sfDir, path)
       path
-    })
+    }
 
   /** The pruned + version-resolved probe frame every store search shares:
     * partition-pruned scan of the probed directories, then — ONLY when the
@@ -2313,13 +2294,10 @@ object VectorIndex {
   final val PqM = 8 // subspaces
   final val PqSubDim = 8 // dims per subspace (embedding dim 64 / PqM)
 
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Float]]]]()
-
   /** Per-subspace codebooks `[sub][cid][dim]`, trained once per sfDir. */
   def trainPqCodebooks(
       spark: SparkSession, sfDir: String): Array[Array[Array[Float]]] =
-    pqCache.computeIfAbsent(sfDir, _ =>
+    SessionState.getOrBuild(key("pqcodebooks", sfDir))(
       trainPq(Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"))))
 

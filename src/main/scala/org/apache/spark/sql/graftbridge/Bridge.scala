@@ -29,4 +29,8 @@ object Bridge {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
   }
+
+  /** The session's unique id (package-private in Spark 4). */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }

@@ -359,34 +359,84 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("invalidateCorpus serves fresh results after an in-place corpus mutation") {
-    import spark.implicits._
-    // corpus v1: one duplicated text → exactly pair (0,1). Mutate the SAME
-    // path to corpus v2: a different text duplicated under ids (10,11,12).
-    // The session caches legitimately serve v1 until invalidated; after
-    // GraftSession.invalidateCorpus, minhash and the ingest gate must
-    // answer from v2.
+    import org.apache.spark.sql.functions.{lit, reverse}
+    import graft.operators.{Analytics, CorpusOps, KnnSearch, TextStore, VectorIndex}
+    // v1 is the sf0.001 corpus; v2 changes every table the cache
+    // families read: half the documents plus a new column, reversed
+    // embeddings, half the users' events
+    def install(dir: String, v2: Boolean): Unit = {
+      def raw(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
+      val tables =
+        if (!v2) Seq("documents" -> raw("documents"),
+          "embeddings" -> raw("embeddings"), "events" -> raw("events"))
+        else Seq(
+          "documents" -> raw("documents").where(col("doc_id") % 2 === 0)
+            .withColumn("extra", lit(1)),
+          "embeddings" -> raw("embeddings")
+            .withColumn("embedding", reverse(col("embedding"))),
+          "events" -> raw("events").where(col("user_id") % 2 === 0))
+      tables.foreach { case (t, df) =>
+        df.write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
+    }
+    val q = Array.tabulate(64)(i => ((i * 7) % 13 - 6).toFloat)
+    val incoming = spark.read.parquet(s"$sfDir/documents.parquet")
+      .where(col("doc_id") < 6)
+      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
+    // one operator per cache family; the families whose whole answer is
+    // the cached value must keep serving v1 until invalidated
+    val pureCached = Set("bpe merges", "query vector", "query vectors",
+      "ivf centroids", "pq codebooks", "ivf store path", "chunk store path",
+      "schema")
+    def answers(dir: String): Map[String, Any] = Map(
+      "signature+bucketed tables" ->
+        Dedup.minhashLsh(spark, dir).collect().toSet,
+      "ingest gate" -> Dedup.nearDupGate(incoming, spark, dir).collect().toSet,
+      "bm25 stats" -> TextAnalysis.bm25(spark, dir).collect().toSeq,
+      "bpe merges" -> CorpusOps.bpeTrain(spark, dir, 5).collect().toSeq,
+      "query vector" -> KnnSearch.queryVector(spark, dir, 1L).toSeq,
+      "query vectors" -> KnnSearch.queryVectors(spark, dir, 8)
+        .map { case (id, v) => (id, v.toSeq) }.toSeq,
+      "ivf centroids" ->
+        VectorIndex.trainCentroids(spark, dir).map(_.toSeq).toSeq,
+      "pq codebooks" -> VectorIndex.trainPqCodebooks(spark, dir)
+        .map(_.map(_.toSeq).toSeq).toSeq,
+      "ivf store path" -> VectorIndex.ensureStore(spark, dir),
+      "ivf store" -> VectorIndex.searchStore(spark,
+        VectorIndex.ensureStore(spark, dir), q, 10, 4).collect().toSeq,
+      "chunk store path" -> TextStore.ensureChunkStore(spark, dir),
+      "chunk store" -> TextStore.searchByText(spark,
+        TextStore.ensureChunkStore(spark, dir), "spark vector merge", 10)
+        .collect().toSeq,
+      "user events" -> Analytics.eventsRetention(spark, dir).collect().toSeq,
+      "schema" -> Tables.documents(spark, dir).columns.toSeq)
+    def scoped(dir: String) = SessionState.entries.filter(e =>
+      e.scope == dir || e.scope.startsWith(dir + "/"))
+
     val dir = java.nio.file.Files.createTempDirectory("graft_inval_").toString
-    val t1 = (0 until 40).map(i => s"alpha$i bravo$i").mkString(" ")
-    val t2 = (0 until 40).map(i => s"zulu$i yankee$i").mkString(" ")
-    Seq((0L, t1), (1L, t1), (2L, "solo " + t2))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def pairs() = Dedup.minhashLsh(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs() == Set((0L, 1L)))
-    Seq((10L, t2), (11L, t2), (12L, t2))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // still the v1 answer: the cached tables are keyed by path, not content
-    assert(pairs() == Set((0L, 1L)), "cache unexpectedly refreshed itself")
+    install(dir, v2 = false)
+    val v1 = answers(dir)
+    val fresh = java.nio.file.Files.createTempDirectory("graft_fresh_").toString
+    install(fresh, v2 = true)
+    val v2 = answers(fresh)
+    v1.keys.foreach(f => assert(v1(f) != v2(f), s"$f: v2 does not change it"))
+
+    install(dir, v2 = true)
+    val stale = answers(dir)
+    pureCached.foreach(f =>
+      assert(stale(f) == v1(f), s"$f: cache unexpectedly refreshed itself"))
     GraftSession.invalidateCorpus(dir)
-    assert(pairs() == Set((10L, 11L), (10L, 12L), (11L, 12L)),
-      s"stale minhash after invalidation: ${pairs()}")
-    val flags = Dedup.nearDupGate(
-      Seq((900L, t2)).toDF("doc_id", "text"), spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(flags == Set((900L, 10L), (900L, 11L), (900L, 12L)),
-      s"stale gate after invalidation: $flags")
+    assert(scoped(dir).isEmpty, s"entries survived: ${scoped(dir)}")
+    val after = answers(dir)
+    v2.keys.filterNot(_.endsWith("path")).foreach(f =>
+      assert(after(f) == v2(f), s"$f: stale after invalidation"))
+
+    install(dir, v2 = false)
+    GraftSession.invalidateCorpus(dir + "/")
+    assert(scoped(dir).isEmpty, s"entries survived: ${scoped(dir)}")
+    val back = answers(dir)
+    v1.keys.filterNot(_.endsWith("path")).foreach(f =>
+      assert(back(f) == v1(f), s"$f: stale after invalidating $dir/"))
   }
 
   test("gate corpus band table is narrow: (corpus_doc_id, band, band_hash, pre)") {
