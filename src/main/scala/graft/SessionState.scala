@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The one registry of session-derived state: trained centroids and PQ
   * codebooks, signature and band tables, BPE merges, bm25 stats, query
   * vectors, store paths, parquet schemas — every structure the engine
@@ -19,14 +17,14 @@ import org.apache.spark.sql.SparkSession
   * next use; stores mutated through the CRUD surface (`appendStore`,
   * `compactStore`, `recoverStore`) refresh their own entries.
   *
-  * '''Keys.''' A [[Key]] is (family, scope, params, session). The scope
+  * '''Keys.''' A [[Key]] is (family, scope, params). The scope
   * is the directory the entry was derived from, with a trailing `/`
   * stripped once; `invalidatePath(p)` drops every entry whose scope is
   * `p` or lies under `p/` — the one scope rule, so `/data/sf1` never
-  * touches `/data/sf10`. The session component is set only for
-  * catalog-backed entries (their value names a table in one session's
-  * catalog, see [[Key.inSession]]); every other family shares its state
-  * across sessions.
+  * touches `/data/sf10`. Catalog-backed entries (their value names a
+  * table in one session's catalog) carry the session id as their last
+  * param, so another session rebuilds instead of serving a name it
+  * cannot resolve; every other family shares its state across sessions.
   *
   * '''Builds.''' Each entry holds a once-only cell built OUTSIDE the
   * map's lock, so a build may itself look up or build other entries; two
@@ -38,18 +36,11 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionState {
 
-  final case class Key(
-      family: String, scope: String, params: Seq[Any], session: String) {
-    /** This key bound to `spark`'s session — for entries whose value
-      * names a table in that session's catalog, so another session
-      * rebuilds instead of serving a name it cannot resolve. */
-    def inSession(spark: SparkSession): Key =
-      copy(session = org.apache.spark.sql.graftbridge.Bridge.sessionId(spark))
-  }
+  final case class Key(family: String, scope: String, params: Seq[Any])
 
   /** A key for `family`'s entry derived from `scope` under `params`. */
   def key(family: String, scope: String, params: Any*): Key =
-    Key(family, scope.stripSuffix("/"), params.toList, "")
+    Key(family, scope.stripSuffix("/"), params.toList)
 
   /** One listed entry: what it is, what it was derived from, what its
     * build cost (0 for entries a writer registered through [[put]]). */

@@ -4,6 +4,7 @@ import graft.{SessionState, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Relational analytics substrate: the scan/filter/aggregate/join/window
   * machinery the vector store sits on. Declarative DataFrame plans only —
@@ -31,8 +32,8 @@ object Analytics {
   private val userEventsSeq = new java.util.concurrent.atomic.AtomicInteger()
 
   private def userEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = SessionState.key("userevents", sfDir).inSession(spark)
-    val tbl = SessionState.getOrBuild(key) {
+    val tbl = SessionState.getOrBuild(SessionState.key(
+        "userevents", sfDir, Bridge.sessionId(spark))) {
       val name = s"graft_events_user_${userEventsSeq.incrementAndGet()}"
       val dir = java.nio.file.Files
         .createTempDirectory("graft_events_user_").toString

@@ -5,6 +5,7 @@ import graft.SessionState.{Key, key}
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Deduplication suite for the training-data pipeline (the corpus feeding
   * the reference's vector store; see SURVEY §2/§6).
@@ -102,7 +103,8 @@ object Dedup {
       df: DataFrame, key: Key, bucketCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     // the value names a table in THIS session's catalog: keyed by session
-    val name = SessionState.getOrBuild(key.inSession(spark)) {
+    val name = SessionState.getOrBuild(
+        key.copy(params = key.params :+ Bridge.sessionId(spark))) {
       val n = spark.conf.getOption("spark.graft.buckets").map(_.toInt)
         .getOrElse(spark.sparkContext.defaultParallelism)
       val t = "graft_bkt_" + java.lang.Integer.toHexString(key.hashCode) +

@@ -57,11 +57,11 @@ class SessionStateSpec extends SparkSpec {
   }
 
   test("a catalog-backed entry from another session is rebuilt, not served") {
-    val k = key("spec.catalog", "/spec/registry/catalog")
     val other = spark.newSession()
     val builds = new java.util.concurrent.atomic.AtomicInteger()
     def lookup(s: org.apache.spark.sql.SparkSession) =
-      SessionState.getOrBuild(k.inSession(s)) {
+      SessionState.getOrBuild(key("spec.catalog", "/spec/registry/catalog",
+          org.apache.spark.sql.graftbridge.Bridge.sessionId(s))) {
         s"table_${builds.incrementAndGet()}"
       }
     assert(lookup(spark) == "table_1")
