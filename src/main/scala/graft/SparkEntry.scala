@@ -145,37 +145,43 @@ object SparkEntry {
     "knn_graph" -> ((s, d) => Dedup.knnGraph(s, d)),
     // --- ANN index structures (rows-only oracles) ---
     "ivf_build" -> ((s, d) => VectorIndex.ivfBuild(s, d)),
-    "ivf_search" -> ((s, d) => VectorIndex.ivfSearchStore(s, d)),
+    "ivf_search" -> ((s, d) => VectorIndex.corpusSearch(s, d)),
     "knn_filtered_ivf" -> ((s, d) =>
-      VectorIndex.ivfSearchStore(s, d,
+      VectorIndex.corpusSearch(s, d,
         filter = Some(org.apache.spark.sql.functions.col("label") === 3))),
     "knn_filtered_ivf_json" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, get_json_object}
-      VectorIndex.ivfSearchStore(s, d,
+      VectorIndex.corpusSearch(s, d,
         filter = Some(get_json_object(col("metadata"), "$.lang") === "en"))
     }),
-    "knn_threshold_ivf" -> ((s, d) => VectorIndex.ivfThresholdStore(s, d)),
-    "knn_threshold_lsh" -> ((s, d) => VectorIndex.lshThresholdStore(s, d)),
+    "knn_threshold_ivf" -> ((s, d) => VectorIndex.corpusThreshold(s, d)),
+    "knn_threshold_lsh" -> ((s, d) => VectorIndex.corpusThreshold(s, d,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)),
     "pq_build" -> ((s, d) => VectorIndex.pqBuild(s, d)),
     "knn_pq" -> ((s, d) => VectorIndex.pqSearch(s, d)),
     "knn_ivf_pq" -> ((s, d) => VectorIndex.ivfPqSearchStore(s, d)),
-    "knn_mmr_ivf" -> ((s, d) => VectorIndex.ivfMmrStore(s, d)),
-    "knn_mmr_lsh" -> ((s, d) => VectorIndex.lshMmrStore(s, d)),
-    "knn_batch_ivf" -> ((s, d) => VectorIndex.batchIvfSearchStore(s, d)),
-    "knn_batch_lsh" -> ((s, d) => VectorIndex.batchLshSearchStore(s, d)),
+    "knn_mmr_ivf" -> ((s, d) => VectorIndex.corpusMmr(s, d)),
+    "knn_mmr_lsh" -> ((s, d) => VectorIndex.corpusMmr(s, d,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)),
+    "knn_batch_ivf" -> ((s, d) => VectorIndex.corpusBatchSearch(s, d)),
+    "knn_batch_lsh" -> ((s, d) => VectorIndex.corpusBatchSearch(s, d,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)),
     "knn_batch_pq" -> ((s, d) => VectorIndex.batchPqSearch(s, d)),
     "knn_batch_ivf_pq" -> ((s, d) => VectorIndex.batchIvfPqSearchStore(s, d)),
     "store_get" -> ((s, d) => VectorIndex.storeGet(s, d)),
     "ann_eval" -> ((s, d) => VectorIndex.annEval(s, d)),
     "store_health" -> ((s, d) => VectorIndex.storeHealthReport(s, d)),
-    "ann_eval_lsh" -> ((s, d) => VectorIndex.annEvalLsh(s, d)),
+    "ann_eval_lsh" -> ((s, d) => VectorIndex.annEval(s, d,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)),
     "ann_eval_pq" -> ((s, d) => VectorIndex.annEvalPq(s, d)),
     "ann_eval_ivf_pq" -> ((s, d) => VectorIndex.annEvalIvfPq(s, d)),
     "lsh_bucket" -> ((s, d) => VectorIndex.lshBuckets(s, d)),
-    "lsh_search" -> ((s, d) => VectorIndex.lshSearchStore(s, d)),
+    "lsh_search" -> ((s, d) => VectorIndex.corpusSearch(s, d,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)),
     "lsh_filtered_json" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, get_json_object}
-      VectorIndex.lshSearchStore(s, d,
+      VectorIndex.corpusSearch(s, d, VectorIndex.LshLayout,
+        nprobe = VectorIndex.LshProbes,
         filter = Some(get_json_object(col("metadata"), "$.lang") === "en"))
     }),
     // --- multimodal (stubbed decode, real plumbing) ---

@@ -92,7 +92,7 @@ object RagContext {
     // `vecFromStore` runs the vector side through the materialized IVF
     // probe (hybrid with index_enabled) — same contract, pruned IO
     val vecBase =
-      if (vecFromStore) VectorIndex.ivfSearchStore(spark, sfDir, k = fetchK)
+      if (vecFromStore) VectorIndex.corpusSearch(spark, sfDir, k = fetchK)
       else KnnSearch.topK(spark, sfDir, KnnSearch.Cosine, k = fetchK)
     val vec = vecBase
       .withColumn("r_vec", row_number().over(

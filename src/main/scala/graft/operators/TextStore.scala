@@ -187,19 +187,17 @@ object TextStore {
           .as("metadata"))
   }
 
-  /** Build the materialized IVF chunk store: every document chunked,
-    * featurized, and written partitioned by nearest centroid — the build
-    * that makes [[chunkSearchIvf]] a partition-pruned read instead of
-    * the inline [[TextAnalysis.chunkSearch]] full scan. */
-  def writeChunkStore(spark: SparkSession, sfDir: String, path: String): Unit =
+  /** Build the materialized chunk store: every document chunked,
+    * featurized, and written partitioned under `layout` (by nearest
+    * centroid by default, or by hyperplane-sign bucket) — the build that
+    * makes [[chunkSearchIvf]] a partition-pruned read instead of the
+    * inline [[TextAnalysis.chunkSearch]] full scan. Every later call on
+    * the store reads the layout back from it. */
+  def writeChunkStore(
+      spark: SparkSession, sfDir: String, path: String,
+      layout: VectorIndex.StoreLayout = VectorIndex.IvfLayout): Unit =
     VectorIndex.writeVectorStore(spark,
-      corpusChunkVectors(spark, sfDir), path)
-
-  /** LSH-layout twin (bucket-partitioned, data-independent hyperplanes). */
-  def writeLshChunkStore(
-      spark: SparkSession, sfDir: String, path: String, nPlanes: Int = 8): Unit =
-    VectorIndex.writeLshVectorStore(spark,
-      corpusChunkVectors(spark, sfDir), path, nPlanes, Dim)
+      corpusChunkVectors(spark, sfDir), path, layout)
 
   def ensureChunkStore(spark: SparkSession, sfDir: String): String =
     graft.SessionState.getOrBuild(graft.SessionState.key("chunkstore", sfDir)) {
@@ -211,9 +209,9 @@ object TextStore {
 
   /** Search the chunk store with a RAW TEXT query — the reference's
     * /search contract (text in, ranked hits out) through the pruned
-    * index: featurize the query with the shared expressions, probe the
-    * nprobe nearest centroid partitions, exact cosine top-k over the
-    * pruned rows. */
+    * index: featurize the query with the shared expressions, probe
+    * `nprobe` partitions of the store's layout, exact cosine top-k over
+    * the pruned rows. */
   def searchByText(
       spark: SparkSession,
       path: String,
@@ -223,22 +221,6 @@ object TextStore {
       filter: Option[Column] = None): DataFrame =
     VectorIndex.searchStore(spark, path,
         featurizeText(spark, queryText), k, nprobe, filter)
-      .select(
-        expr(s"vec_id div $ChunkMod").as("doc_id"),
-        expr(s"vec_id % $ChunkMod").as("chunk_id"),
-        col("score"))
-
-  /** [[searchByText]] against the LSH-layout chunk store: same raw-text
-    * contract, multi-probe bucket pruning instead of centroid pruning. */
-  def searchByTextLsh(
-      spark: SparkSession,
-      path: String,
-      queryText: String,
-      k: Int = 10,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None): DataFrame =
-    VectorIndex.searchLshStore(spark, path,
-        featurizeText(spark, queryText), k, probeHamming, filter)
       .select(
         expr(s"vec_id div $ChunkMod").as("doc_id"),
         expr(s"vec_id % $ChunkMod").as("chunk_id"),
@@ -273,9 +255,9 @@ object TextStore {
     * call: raw (doc_id, text, lang) rows are chunked + featurized by the
     * shared transform and upserted as ONE delta generation through the
     * layout-shared CRUD surface. Nothing already written moves; a
-    * [[searchByText]] issued after this call sees the new chunks (spec:
-    * TextStoreSpec pins top-rank retrieval of freshly added texts on
-    * both layouts). */
+    * [[searchByText]] issued after this call sees the new chunks, on
+    * either layout (spec: TextStoreSpec pins top-rank retrieval of
+    * freshly added texts on both). */
   def addTexts(
       spark: SparkSession, path: String, texts: DataFrame, gen: Long): Unit =
     VectorIndex.appendStore(spark, path, chunkVectors(texts), gen)
@@ -287,12 +269,6 @@ object TextStore {
       spark: SparkSession, path: String, texts: DataFrame, gen: Long,
       owner: String): Unit =
     VectorIndex.appendStoreAs(spark, path, chunkVectors(texts), gen, owner)
-
-  /** LSH-layout twin of [[addTexts]] — same transform, same delta
-    * contract, bucket-partitioned store. */
-  def addTextsLsh(
-      spark: SparkSession, path: String, texts: DataFrame, gen: Long): Unit =
-    VectorIndex.appendLshStore(spark, path, chunkVectors(texts), gen)
 
   // ---- the pluggable external-embedder seam ---------------------------
 

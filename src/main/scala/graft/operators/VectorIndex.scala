@@ -25,12 +25,22 @@ import org.apache.spark.sql.functions._
   * is implemented ONCE over a [[StoreLayout]] — the IVF store partitions
   * by nearest centroid, the LSH store by hyperplane-sign bucket, and both
   * share metadata-in-layout, generational upsert, tombstone delete, the
-  * single-gen manifest, and staged crash-safe compaction.
+  * single-gen manifest, and staged crash-safe compaction. As in the
+  * reference, the index is chosen once, when the store is written; every
+  * later call on the store's path reads the layout back from the store.
   */
 object VectorIndex {
   final val K = 16
   final val Iters = 5
   final val NPlanes = 16
+
+  /** Hyperplanes of an LSH-layout store: 2^8 = 256 sign buckets. */
+  final val StorePlanes = 8
+
+  /** The graded probe count of an LSH-layout store: the size of the
+    * hamming-≤2 ball around the query's bucket (37 of 256), probed in
+    * flip-cost order. */
+  final val LshProbes = hammingBall(StorePlanes, 2)
 
   /** Training-sample cap for the Lloyd/PQ trainers: centroid quality does
     * not need every row, and caching a 100 TB corpus for 5 iterations is
@@ -325,7 +335,7 @@ object VectorIndex {
   // ---- single-generation manifest -----------------------------------
   // A marker file records whether the store is known to hold exactly one
   // live version per id (fresh build or just-compacted). When set,
-  // [[searchStore]] skips the max_by generation resolution entirely — the
+  // [[resolvedRead]] skips the max_by generation resolution entirely — the
   // probe becomes a pruned scan + TakeOrdered with NO exchange. Appends
   // and deletes clear the flag; compaction restores it. The check is one
   // driver-side file-existence call per query.
@@ -688,8 +698,8 @@ object VectorIndex {
     * pushed-down `gen = ?` probe over the delta's parquet row-group
     * stats (the delta is small by contract); a delta-less store answers
     * false. Tombstone rows (`deleted = true`, written by
-    * [[deleteFromStore]]/[[deleteFromLshStore]] at a caller-chosen gen
-    * into the same delta) are EXCLUDED from the receipt: a delete that
+    * [[deleteFromStore]] at a caller-chosen gen into the same delta) are
+    * EXCLUDED from the receipt: a delete that
     * happened to reuse a stream's gen value must not make the stream
     * silently drop a batch that never committed. Gen collisions with
     * OTHER append writers are the caller's responsibility — derive the
@@ -763,19 +773,26 @@ object VectorIndex {
   }
 
   // ---- layout-parameterized store machinery --------------------------
-  // One CRUD implementation, two physical layouts. `partCol` is the
-  // partition column of the written store; `modelDir` holds the model
-  // side-table (centroids / hyperplanes) that drives both assignment at
-  // write time and probe selection at query time.
-  private final case class StoreLayout(
-      partCol: String,
-      modelDir: String,
-      modelIdCol: String,
-      modelVecCol: String,
-      assign: (Array[Array[Float]], Column) => Column,
+  // One CRUD implementation, two physical layouts.
+
+  /** A store's physical layout, chosen once when the store is written
+    * ([[writeStore]], [[writeVectorStore]], `TextStore.writeChunkStore`;
+    * IVF by default) and read back from the store by every later call on
+    * its path. `partCol` is the partition column of the written store;
+    * `modelDir` holds the model side-table (centroids / hyperplanes) that
+    * drives both assignment at write time and [[probe]] selection at
+    * query time. */
+  final class StoreLayout private[VectorIndex] (
+      private[VectorIndex] val name: String,
+      private[VectorIndex] val partCol: String,
+      private[VectorIndex] val modelDir: String,
+      private[VectorIndex] val modelIdCol: String,
+      private[VectorIndex] val modelVecCol: String,
+      private[VectorIndex] val assign: (Array[Array[Float]], Column) => Column,
+      probeIds: (Array[Array[Float]], Array[Float], Int) => Seq[Int],
       // Directory granularity: 2^grpShift logical partitions share one
       // physical directory (0 = one dir per partition id). The LSH layout
-      // has 2^nPlanes = 256 buckets — one dir each costs ~256 parquet
+      // has 2^StorePlanes = 256 buckets — one dir each costs ~256 parquet
       // writer open/close cycles plus per-dir commit work on EVERY
       // rewrite (measured 3.5× the 16-dir IVF compaction,
       // BENCH_lifecycle_r6, ~18 ms/dir), and at 100 TB it multiplies the
@@ -785,45 +802,63 @@ object VectorIndex {
       // bucket stats — the standard coarse-partition + clustered-sort
       // lakehouse shape.
       grpShift: Int = 0) {
-    val grouped: Boolean = grpShift > 0
-    val grpCol: String = s"${partCol}_grp"
+    private val grouped: Boolean = grpShift > 0
+    private val grpCol: String = s"${partCol}_grp"
     /** The physical partition column of the written layout. */
-    def dirCol: String = if (grouped) grpCol else partCol
+    private[VectorIndex] def dirCol: String = if (grouped) grpCol else partCol
     /** Add the derived dir column ahead of a partitioned write. */
-    def withDir(df: DataFrame): DataFrame =
+    private[VectorIndex] def withDir(df: DataFrame): DataFrame =
       if (grouped) df.withColumn(grpCol, shiftright(col(partCol), grpShift))
       else df
-    /** The base-scan prune predicate for a probe set: dir-level partition
-      * pruning plus the partition-id filter (pushed to row-group/page
-      * stats when grouped — the write sorts by partCol within dirs). */
-    def prunePred(parts: Seq[Int]): Column = {
-      val byPart = col(partCol).isin(parts: _*)
-      if (grouped)
-        col(grpCol).isin(parts.map(_ >> grpShift).distinct: _*) && byPart
-      else byPart
-    }
+    /** The `nprobe` partitions a query probes: IVF the nearest-`nprobe`
+      * centroids, LSH the first `nprobe` buckets in flip-cost order. */
+    private[VectorIndex] def probe(
+        model: Array[Array[Float]], qv: Array[Float], nprobe: Int): Seq[Int] =
+      probeIds(model, qv, nprobe)
+    /** The base-only directory prune for a probe set, on grouped layouts
+      * (the partition-id filter itself then prunes row-groups/pages — the
+      * write sorts by partCol within dirs). Delta rows carry no dir
+      * column, so this never applies to them. */
+    private[VectorIndex] def dirPred(parts: Seq[Int]): Option[Column] =
+      if (grouped) Some(col(grpCol).isin(parts.map(_ >> grpShift).distinct: _*))
+      else None
   }
 
-  private val IvfLayout = StoreLayout(
-    "centroid_id", "centroids", "centroid_id", "centroid",
-    (c, e) => IndexFunctions.nearestCentroid(e, c).getField("centroid_id"))
-  private val LshLayout = StoreLayout(
-    "bucket", "planes", "plane_id", "plane",
+  /** Partition by nearest trained centroid (the default). */
+  val IvfLayout: StoreLayout = new StoreLayout(
+    "ivf", "centroid_id", "centroids", "centroid_id", "centroid",
+    (c, e) => IndexFunctions.nearestCentroid(e, c).getField("centroid_id"),
+    nearestCentroidIds)
+  /** Partition by hyperplane-sign bucket over [[StorePlanes]]
+    * data-independent planes. */
+  val LshLayout: StoreLayout = new StoreLayout(
+    "lsh", "bucket", "planes", "plane_id", "plane",
     (p, e) => IndexFunctions.hyperplaneLsh(e, p),
+    multiProbeBuckets,
     grpShift = 4)
+  private val Layouts = Seq(IvfLayout, LshLayout)
 
-  // Serving model state (centroids / planes) cached per store path: probe
-  // selection must not pay a parquet-read Spark job per query. Writers and
-  // the compaction swap refresh the entry; [[recoverStore]] invalidates.
-  private def modelKey(dir: String) = key("storemodel", dir)
-  private def readModel(
-      spark: SparkSession, path: String, layout: StoreLayout): Array[Array[Float]] = {
-    val dir = s"$path/${layout.modelDir}"
-    SessionState.getOrBuild(modelKey(dir))(
-      spark.read.parquet(dir)
+  // Serving model state (centroids / planes) cached per store path, with
+  // the layout the store was written under: probe selection must not pay
+  // a parquet-read Spark job per query, and no call after the first asks
+  // the filesystem which layout the store has. Writers and the
+  // compaction swap refresh the entry; [[recoverStore]] invalidates.
+  private final case class StoreModel(
+      layout: StoreLayout, model: Array[Array[Float]])
+  private def modelKey(path: String) = key("storemodel", path)
+  private def storeModel(spark: SparkSession, path: String): StoreModel =
+    SessionState.getOrBuild(modelKey(path)) {
+      val found = Layouts.filter(l =>
+        fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/${l.modelDir}")))
+      require(found.size == 1,
+        s"$path is not a vector store: it needs exactly one of the model " +
+          s"directories ${Layouts.map(_.modelDir).mkString(", ")}, found " +
+          s"${found.map(_.modelDir).mkString("[", ", ", "]")}")
+      val layout = found.head
+      StoreModel(layout, spark.read.parquet(s"$path/${layout.modelDir}")
         .orderBy(layout.modelIdCol).collect()
         .map(_.getSeq[Float](1).toArray))
-  }
+    }
   private def writeModelTable(
       spark: SparkSession, dir: String, layout: StoreLayout,
       model: Array[Array[Float]]): Unit = {
@@ -867,30 +902,8 @@ object VectorIndex {
     SessionState.get(pqModelKey(path)).isDefined ||
       fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/pq"))
 
-  /** Shared initial build: vectors written `partitionBy(layout.partCol)`
-    * plus the model side-table. Rows carry a `gen` (generation) column —
-    * the base build is gen 0, appends add higher generations — and the
-    * document's JSON `metadata` (the reference stores a metadata dict per
-    * vector, app.py:131): the doc join is paid ONCE here at build time,
-    * so a metadata-filtered probe stays a single-table pruned scan. */
-  private def writeStoreAt(
-      spark: SparkSession, sfDir: String, path: String,
-      layout: StoreLayout, model: Array[Array[Float]]): Unit = {
-    val metadata = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), KnnSearch.metadataJson.as("metadata"))
-    // the IVF layout also persists PQ codes per vector (IVF-PQ): trained
-    // once per corpus, assigned in the same codegen'd write pass, so the
-    // ADC search can scan the 8-byte code column instead of the embedding
-    val pqCb =
-      if (layout == IvfLayout) Some(trainPqCodebooks(spark, sfDir)) else None
-    val vectors = Tables.embeddings(spark, sfDir)
-      .join(metadata, col("vec_id") === col("doc_id"), "left")
-      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"))
-    writeVectorsAt(spark, vectors, path, layout, model, pqCb)
-  }
-
   /** The layout write over ANY store-ready (vec_id, label, embedding,
-    * metadata) frame — shared by the embeddings-table build above and the
+    * metadata) frame — shared by the corpus build ([[writeStore]]) and the
     * text-ingestion store ([[TextStore]]), so every store on disk has the
     * one physical contract whatever produced its vectors. */
   private def writeVectorsAt(
@@ -906,7 +919,7 @@ object VectorIndex {
       layout, s"$path/vectors")
     writeModelTable(spark, s"$path/${layout.modelDir}", layout, model)
     SessionState.invalidatePath(s"$path/vectors")
-    SessionState.put(modelKey(s"$path/${layout.modelDir}"), model)
+    SessionState.put(modelKey(path), StoreModel(layout, model))
     pqCb.foreach(cb => writePqModelTable(spark, path, cb))
     setSingleGen(spark, path, v = true)
   }
@@ -934,49 +947,66 @@ object VectorIndex {
       .partitionBy(layout.dirCol)
       .parquet(dir)
 
-  /** Materialize an IVF store from any store-ready vectors frame (no PQ
-    * side-model): trains the deterministic Lloyd centroids on the frame
-    * itself unless a model is supplied. The text-ingestion path
-    * ([[TextStore]]) builds its chunk store through this. */
+  /** Materialize a store from any store-ready vectors frame (no PQ
+    * side-model) under `layout`: the IVF layout trains the deterministic
+    * Lloyd centroids on the frame itself, the LSH layout draws
+    * [[StorePlanes]] hyperplanes of the frame's embedding dim. The
+    * text-ingestion path ([[TextStore]]) builds its chunk store through
+    * this. */
   def writeVectorStore(
       spark: SparkSession, vectors: DataFrame, path: String,
-      trained: Option[Array[Array[Float]]] = None): Unit =
-    writeVectorsAt(spark, vectors, path, IvfLayout,
-      trained.getOrElse(trainLloyd(vectors.select(col("vec_id"),
-        col("embedding")))), pqCb = None)
-
-  /** LSH-layout twin of [[writeVectorStore]]. */
-  def writeLshVectorStore(
-      spark: SparkSession, vectors: DataFrame, path: String,
-      nPlanes: Int = 8, dim: Int = 64): Unit =
-    writeVectorsAt(spark, vectors, path, LshLayout,
-      IndexOps.hyperplanes(nPlanes, dim), pqCb = None)
-
-  /** Materialize the IVF store: vectors written `partitionBy(centroid_id)`
-    * plus a centroids side-table — the layout that turns an `nprobe`-probe
-    * search into a partition-pruned read of nprobe/k of the corpus. */
-  def writeStore(
-      spark: SparkSession, sfDir: String, path: String,
-      trained: Option[Array[Array[Float]]] = None): Unit = {
-    // the IVF build needs centroids AND PQ codebooks (writeStoreAt
-    // persists codes): warm both caches through the fused single-tower
-    // trainer instead of paying two sequential job towers
-    if (trained.isEmpty) trainedCorpusModels(spark, sfDir): Unit
-    writeStoreAt(spark, sfDir, path, IvfLayout,
-      trained.getOrElse(trainCentroids(spark, sfDir)))
+      layout: StoreLayout = IvfLayout): Unit = {
+    val model =
+      if (layout == IvfLayout)
+        trainLloyd(vectors.select(col("vec_id"), col("embedding")))
+      else lshPlanes(vectors)
+    writeVectorsAt(spark, vectors, path, layout, model, pqCb = None)
   }
 
-  /** Materialize the LSH store: vectors written `partitionBy(bucket)` (the
-    * hyperplane-sign bucket) plus the plane matrix as a side-table, so a
-    * multi-probe search reads only the probed bucket directories. Same
-    * layout columns (metadata / deleted / gen) and lifecycle surface as
-    * the IVF store — the CRUD contract is index-type-independent. */
-  def writeLshStore(
+  /** The LSH layout's data-independent model: [[StorePlanes]] hyperplanes
+    * of the embedding dim (one single-row job reads it). */
+  private def lshPlanes(vectors: DataFrame): Array[Array[Float]] =
+    IndexOps.hyperplanes(StorePlanes,
+      vectors.select(size(col("embedding"))).head().getInt(0))
+
+  /** Materialize the corpus store under `layout` — vectors written
+    * partitioned by the layout's partition id (nearest centroid for IVF,
+    * hyperplane-sign bucket for LSH) plus the model side-table, the layout
+    * that turns an `nprobe`-probe search into a partition-pruned read.
+    * Rows carry a `gen` (generation) column — the base build is gen 0,
+    * appends add higher generations — and the document's JSON `metadata`
+    * (the reference stores a metadata dict per vector, app.py:131): the
+    * doc join is paid ONCE here at build time, so a metadata-filtered
+    * probe stays a single-table pruned scan. `trained` supplies IVF
+    * centroids in place of the deterministic corpus trainer's. */
+  def writeStore(
       spark: SparkSession, sfDir: String, path: String,
-      nPlanes: Int = 8): Unit = {
-    val dim = Tables.embeddings(spark, sfDir)
-      .select(size(col("embedding"))).head().getInt(0)
-    writeStoreAt(spark, sfDir, path, LshLayout, IndexOps.hyperplanes(nPlanes, dim))
+      trained: Option[Array[Array[Float]]] = None,
+      layout: StoreLayout = IvfLayout): Unit = {
+    val model =
+      if (layout == IvfLayout) {
+        // the IVF build needs centroids AND PQ codebooks (the write
+        // persists codes): warm both caches through the fused single-tower
+        // trainer instead of paying two sequential job towers
+        if (trained.isEmpty) trainedCorpusModels(spark, sfDir): Unit
+        trained.getOrElse(trainCentroids(spark, sfDir))
+      } else {
+        require(trained.isEmpty,
+          "writeStore: `trained` centroids apply to the IVF layout only — " +
+            "the LSH layout's hyperplanes are data-independent")
+        lshPlanes(Tables.embeddings(spark, sfDir))
+      }
+    val metadata = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), KnnSearch.metadataJson.as("metadata"))
+    // the IVF layout also persists PQ codes per vector (IVF-PQ): trained
+    // once per corpus, assigned in the same codegen'd write pass, so the
+    // ADC search can scan the 8-byte code column instead of the embedding
+    val pqCb =
+      if (layout == IvfLayout) Some(trainPqCodebooks(spark, sfDir)) else None
+    val vectors = Tables.embeddings(spark, sfDir)
+      .join(metadata, col("vec_id") === col("doc_id"), "left")
+      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"))
+    writeVectorsAt(spark, vectors, path, layout, model, pqCb)
   }
 
   /** Shared incremental upsert (the reference's `add_texts` growth path):
@@ -986,9 +1016,8 @@ object VectorIndex {
     * id to its highest generation across base + delta; compaction folds
     * everything back to a read-optimal single-gen partitioned layout. */
   private def appendAt(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      batch: DataFrame, gen: Long): Unit = {
-    val model = readModel(spark, path, layout)
+      spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit = {
+    val StoreModel(layout, model) = storeModel(spark, path)
     // STICKY placement for existing ids: an update lands in the partition
     // its previous versions live in, so a pruned read that sees any copy
     // of an id sees its newest copy — re-assigning a moved embedding to a
@@ -1032,9 +1061,9 @@ object VectorIndex {
       .write.mode("append").parquet(deltaPath(path))
   }
 
-  /** Incremental upsert into the IVF store. `batch` must have columns
-    * (vec_id, label, embedding) and optionally metadata. Takes the
-    * writer lease for the call. */
+  /** Incremental upsert into the store, whatever its layout. `batch`
+    * must have columns (vec_id, label, embedding) and optionally
+    * metadata. Takes the writer lease for the call. */
   def appendStore(
       spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit =
     appendStoreAs(spark, path, batch, gen, newWriterOwner("append"))
@@ -1046,19 +1075,7 @@ object VectorIndex {
       spark: SparkSession, path: String, batch: DataFrame, gen: Long,
       owner: String): Unit =
     withWriterLease(spark, path, owner) {
-      appendAt(spark, path, IvfLayout, batch, gen)
-    }
-
-  /** Incremental upsert into the LSH store — same contract. */
-  def appendLshStore(
-      spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit =
-    appendLshStoreAs(spark, path, batch, gen, newWriterOwner("append"))
-
-  private[graft] def appendLshStoreAs(
-      spark: SparkSession, path: String, batch: DataFrame, gen: Long,
-      owner: String): Unit =
-    withWriterLease(spark, path, owner) {
-      appendAt(spark, path, LshLayout, batch, gen)
+      appendAt(spark, path, batch, gen)
     }
 
   /** Shared tombstone delete (the reference store's `delete(ids)`
@@ -1070,8 +1087,8 @@ object VectorIndex {
     * found with a pushed-down `vec_id IN (...)` scan; nothing is
     * rewritten until compaction. */
   private def deleteAt(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      ids: Seq[Long], gen: Long): Unit = {
+      spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit = {
+    val layout = storeModel(spark, path).layout
     // flag cleared before the write commits — same crash-safety order as
     // appendAt
     setSingleGen(spark, path, v = false)
@@ -1092,32 +1109,14 @@ object VectorIndex {
   def deleteFromStore(
       spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit =
     withWriterLease(spark, path, newWriterOwner("delete")) {
-      deleteAt(spark, path, IvfLayout, ids, gen)
+      deleteAt(spark, path, ids, gen)
     }
-
-  def deleteFromLshStore(
-      spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit =
-    withWriterLease(spark, path, newWriterOwner("delete")) {
-      deleteAt(spark, path, LshLayout, ids, gen)
-    }
-
-  /** The generation fold shared by compaction: latest version of every id,
-    * tombstoned ids dropped. One shuffle keyed by vec_id (the same work a
-    * read-side dedup pays, paid once instead of per query). */
-  private def liveRows(
-      spark: SparkSession, path: String, layout: StoreLayout): DataFrame =
-    storeVectors(spark, path)
-      .groupBy(col("vec_id"))
-      .agg(max_by(
-        struct(col("label"), col("embedding"), col("metadata"),
-          col(layout.partCol), col("deleted")),
-        // tie-break: same generation prefers the live row over a tombstone
-        struct(col("gen"), !col("deleted"))).as("v"))
-      .where(!col("v.deleted"))
 
   /** Fold all generations down to the latest version of every id and
-    * rewrite the IVF store as gen 0 — the maintenance pass that restores
-    * dedup-free reads after a run of appends/deletes.
+    * rewrite the store as gen 0 — the maintenance pass that restores
+    * dedup-free reads after a run of appends/deletes. Updated embeddings
+    * move to their current partition (nearest centroid, or sign bucket);
+    * the model itself is kept.
     *
     * With `retrain = true` the centroid matrix itself is re-trained
     * (k-means|| over the surviving live vectors) before the rewrite — the
@@ -1131,7 +1130,8 @@ object VectorIndex {
     * them: codebook fit is the second drift-decay mechanism — frozen
     * codebooks on a turned-over corpus degrade ADC ranking silently —
     * and the re-fit stages (`pq_retrain`) and swaps through the same
-    * crash-safe machinery. */
+    * crash-safe machinery. Retrain applies to the IVF layout only: LSH
+    * hyperplanes are data-independent, so there is nothing to re-fit. */
   def compactStore(
       spark: SparkSession, path: String, retrain: Boolean = false): Unit =
     withWriterLease(spark, path, newWriterOwner("compact")) {
@@ -1141,7 +1141,15 @@ object VectorIndex {
   private def compactBody(
       spark: SparkSession, path: String, retrain: Boolean): Unit = {
     recoverBody(spark, path) // clear any debris from an interrupted swap
-    val live = liveRows(spark, path, IvfLayout)
+    val StoreModel(layout, model) = storeModel(spark, path)
+    require(!retrain || layout == IvfLayout,
+      s"compactStore(retrain = true): $path has the LSH layout, whose " +
+        "hyperplanes are data-independent — there is no trained model to " +
+        "re-fit; compact without retrain")
+    // latest version of every id, tombstoned ids dropped: one shuffle
+    // keyed by vec_id (the same work a read-side resolution pays, paid
+    // once instead of per query)
+    val live = resolvedRead(spark, path, Seq("label", "embedding", "metadata"))
     if (retrain) {
       // the resolved frame feeds both the trainer and the rewrite: cache
       // it so the k-means iterations don't re-fold the generations per
@@ -1159,7 +1167,7 @@ object VectorIndex {
       // deterministic candidate). Cost: two bounded trainer towers on a
       // rare maintenance op.
       live.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val emb = live.select(col("vec_id"), col("v.embedding").as("embedding"))
+      val emb = live.select(col("vec_id"), col("embedding"))
       val sample = trainingSample(emb, MaxTrain)
       val candDet = trainLloyd(sample)
       val candMl = lloydIterate(sample,
@@ -1186,23 +1194,11 @@ object VectorIndex {
         if (hasPqModel(spark, path)) Some(trainPq(emb)) else None
       pqRetrained.foreach(cb =>
         writePqModelTableAt(spark, s"$path/pq_retrain", cb))
-      rewriteAndSwap(spark, path, IvfLayout, live, c, stagedModel = true,
+      rewriteAndSwap(spark, path, layout, live, c, stagedModel = true,
         stagedPq = pqRetrained)
     } else
-      rewriteAndSwap(spark, path, IvfLayout, live,
-        readModel(spark, path, IvfLayout), stagedModel = false)
+      rewriteAndSwap(spark, path, layout, live, model, stagedModel = false)
   }
-
-  /** Compaction for the LSH store: fold generations, re-assign updated
-    * embeddings to their current sign bucket, keep the plane matrix (the
-    * hyperplanes are data-independent, so there is nothing to retrain). */
-  def compactLshStore(spark: SparkSession, path: String): Unit =
-    withWriterLease(spark, path, newWriterOwner("compact")) {
-      recoverBody(spark, path)
-      val live = liveRows(spark, path, LshLayout)
-      rewriteAndSwap(spark, path, LshLayout, live,
-        readModel(spark, path, LshLayout), stagedModel = false)
-    }
 
   /** The compaction rewrite + crash-safe swap (VERDICT r3 item 5): the old
     * layout is renamed aside (`vectors_old`), never deleted before the new
@@ -1218,10 +1214,9 @@ object VectorIndex {
     // compaction is where placement catches up with the embedding (the
     // old copies are folded away here, so moving is safe)
     val folded = live
-      .select(col("vec_id"), col("v.label").as("label"),
-        col("v.embedding").as("embedding"), col("v.metadata").as("metadata"),
+      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"),
         lit(false).as("deleted"), lit(0L).as("gen"),
-        layout.assign(model, col("v.embedding")).as(layout.partCol))
+        layout.assign(model, col("embedding")).as(layout.partCol))
     // PQ codes recompute from the surviving embeddings — against the
     // STAGED retrained codebooks when the caller re-fit them (retrain
     // covers the quantization half of drift decay since r19), else the
@@ -1258,8 +1253,8 @@ object VectorIndex {
     // lack until recoverStore. The second invalidation at the end of the
     // happy path is harmless.
     SessionState.invalidatePath(s"$path/vectors")
-    // the delta was folded into the staged layout (liveRows reads
-    // base + delta), so it is dead once the new layout is live. This
+    // the delta was folded into the staged layout (the resolved read
+    // covers base + delta), so it is dead once the new layout is live. This
     // delete only happens HERE, in the single in-process mutator that
     // knows its snapshot covered the delta — recovery never deletes a
     // delta, because post-crash writers may have refilled it. A crash
@@ -1273,7 +1268,7 @@ object VectorIndex {
       renameOrFail(layout.modelDir, s"${layout.modelDir}_old")
       renameOrFail(s"${layout.modelDir}_retrain", layout.modelDir)
       deleteOrFail(s"${layout.modelDir}_old")
-      SessionState.put(modelKey(s"$path/${layout.modelDir}"), model)
+      SessionState.put(modelKey(path), StoreModel(layout, model))
     }
     stagedPq.foreach { cb =>
       // the PQ codebook swap mirrors the centroid swap: the new layout's
@@ -1317,7 +1312,7 @@ object VectorIndex {
       if (!f.rename(P(src), P(dst)))
         throw new java.io.IOException(
           s"store recovery: rename $path/$src -> $path/$dst failed")
-    val modelDirs = Seq(IvfLayout.modelDir, LshLayout.modelDir)
+    val modelDirs = Layouts.map(_.modelDir)
     if (ex("vectors_old")) {
       if (!ex("vectors") && ex("vectors_compact"))
         renameOrFail("vectors_compact", "vectors")
@@ -1330,7 +1325,6 @@ object VectorIndex {
           renameOrFail(s"${m}_retrain", m)
         }
         if (ex(s"${m}_old")) f.delete(P(s"${m}_old"), true)
-        SessionState.invalidatePath(s"$path/$m")
       }
       // the PQ codebook swap recovers exactly like the centroid swap:
       // the now-live layout's codes were computed from the staged
@@ -1340,7 +1334,6 @@ object VectorIndex {
         renameOrFail("pq_retrain", "pq")
       }
       if (ex("pq_old")) f.delete(P("pq_old"), true)
-      SessionState.invalidatePath(s"$path/pq")
       // the delta is deliberately NOT touched: the store is readable the
       // moment the new `vectors` layout is in place, so a writer may have
       // appended fresh delta rows between the crash and this recovery —
@@ -1349,7 +1342,9 @@ object VectorIndex {
       // leftovers (they resolve to content identical to their folded
       // gen-0 copies) and the next compaction folds them away.
       f.delete(P("vectors_old"), true)
-      SessionState.invalidatePath(s"$path/vectors")
+      // the store model, PQ codebooks and base schema may all have
+      // changed under the finished swap: drop every entry of the store
+      SessionState.invalidatePath(path)
     } else {
       // compaction never switched the store: discard staging output
       if (ex("vectors_compact")) f.delete(P("vectors_compact"), true)
@@ -1363,80 +1358,76 @@ object VectorIndex {
     * search through the real partitioned layout without paying a rebuild
     * per call (the store is persistent state in production; the cache is
     * its stand-in for a fresh JVM). */
-  def ensureStore(spark: SparkSession, sfDir: String): String =
-    SessionState.getOrBuild(key("ivfstore", sfDir)) {
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_store_")
-        .toString
-      writeStore(spark, sfDir, path)
-      path
-    }
-  def ensureLshStore(spark: SparkSession, sfDir: String): String =
-    SessionState.getOrBuild(key("lshstore", sfDir)) {
-      val path = java.nio.file.Files.createTempDirectory("graft_lsh_store_")
-        .toString
-      writeLshStore(spark, sfDir, path)
+  def ensureStore(
+      spark: SparkSession, sfDir: String,
+      layout: StoreLayout = IvfLayout): String =
+    SessionState.getOrBuild(key(s"${layout.name}store", sfDir)) {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft_${layout.name}_store_").toString
+      writeStore(spark, sfDir, path, layout = layout)
       path
     }
 
+  /** The ONE generation-resolution read of a store: base scan pruned by
+    * `dirPred` (partition directories, base only — delta rows carry no
+    * dir column) and `rowPred`, the delta filtered by the same `rowPred`
+    * (the partition id and every other column ride as data columns
+    * there, so a read sees exactly the delta rows it would have seen in
+    * the fan-out layout), the optional `asOfGen` snapshot cut, then the
+    * newest version of each id with tombstoned ids dropped, as
+    * (vec_id +: cols).
+    *
+    * Snapshot reads drop every generation newer than the requested one
+    * BEFORE resolution — the generational layout already is a full
+    * version history until compaction folds it, so time travel is a
+    * row-group-prunable filter, not a different storage format (after
+    * compaction everything is gen 0: compaction is the declared horizon).
+    * On a fresh or compacted store (single-gen manifest, no snapshot) the
+    * resolution and its Exchange are skipped entirely — a probe plan is
+    * scan → filter → TakeOrdered. Otherwise one max_by fold keyed by
+    * vec_id over just `cols` resolves the versions. */
+  private def resolvedRead(
+      spark: SparkSession, path: String, cols: Seq[String],
+      rowPred: Option[Column] = None, dirPred: Option[Column] = None,
+      asOfGen: Option[Long] = None): DataFrame = {
+    def rows(df: DataFrame) = rowPred.fold(df)(df.where)
+    val baseAll = readBase(spark, path)
+    val base = rows(dirPred.fold(baseAll)(baseAll.where))
+    val all =
+      if (hasDelta(spark, path))
+        base.unionByName(rows(deltaFrame(spark, path, baseAll.schema)))
+      else base
+    val cut = asOfGen.fold(all)(g => all.where(col("gen") <= g))
+    if (asOfGen.isEmpty && isSingleGen(spark, path))
+      cut.where(!col("deleted")).select(("vec_id" +: cols).map(col): _*)
+    else
+      cut
+        .groupBy(col("vec_id"))
+        .agg(max_by(struct((cols :+ "deleted").map(col): _*),
+          // tie-break: same generation prefers the live row to a tombstone
+          struct(col("gen"), !col("deleted"))).as("v"))
+        .where(!col("v.deleted"))
+        .select(col("vec_id") +: cols.map(c => col(s"v.$c").as(c)): _*)
+  }
+
   /** The pruned + version-resolved probe frame every store search shares:
-    * partition-pruned scan of the probed directories, then — ONLY when the
-    * single-gen manifest flag is off — the max_by generation resolution.
-    * On a fresh or compacted store the resolution (and its Exchange) is
-    * skipped entirely: the probe plan is scan → filter → TakeOrdered.
-    * The metadata `filter` applies AFTER resolution so a superseded
-    * generation can never satisfy the predicate on stale attributes; on
-    * the single-gen path there is nothing stale and Catalyst pushes it
-    * into the pruned scan. */
+    * the [[resolvedRead]] of the probed partitions `parts`. The metadata
+    * `filter` applies AFTER resolution so a superseded generation can
+    * never satisfy the predicate on stale attributes; on the single-gen
+    * path there is nothing stale and Catalyst pushes it into the pruned
+    * scan. */
   private def resolvedPartitions(
       spark: SparkSession, path: String, layout: StoreLayout,
       parts: Seq[Int], filter: Option[Column],
-      asOfGen: Option[Long] = None): DataFrame = {
-    // base: directory-pruned scan. Delta: the same predicate as a row
-    // filter over the (small-by-contract) delta files — the partition id
-    // rides as a data column there, so a probe sees exactly the delta
-    // rows it would have seen in the fan-out layout.
-    val baseAll = readBase(spark, path)
-    val prunedBase = baseAll.where(layout.prunePred(parts))
-    // delta rows carry the partition id as a data column but no dir
-    // column (deltaFrame fills it as null under the base schema), so the
-    // delta side prunes on the partition id alone — a row filter over the
-    // small-by-contract delta files.
-    val prunedAll =
-      if (hasDelta(spark, path))
-        prunedBase.unionByName(
-          deltaFrame(spark, path, baseAll.schema)
-            .where(col(layout.partCol).isin(parts: _*)))
-      else prunedBase
-    // snapshot read: drop every generation newer than the requested one
-    // BEFORE resolution — the generational layout already is a full
-    // version history until compaction folds it, so time travel is a
-    // row-group-prunable filter, not a different storage format. (After
-    // compaction everything is gen 0: compaction is the declared horizon.)
-    val pruned = asOfGen.fold(prunedAll)(g => prunedAll.where(col("gen") <= g))
-    val resolved =
-      if (asOfGen.isEmpty && isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("label"), col("metadata"),
-            col(layout.partCol), col("embedding"))
-      else
-        pruned
-          .groupBy(col("vec_id"))
-          .agg(max_by(
-            struct(col("label"), col("embedding"), col("metadata"),
-              col(layout.partCol), col("deleted")),
-            // tie-break: same generation prefers the live row to a tombstone
-            struct(col("gen"), !col("deleted"))).as("v"))
-          .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.label").as("label"),
-            col("v.metadata").as("metadata"),
-            col(s"v.${layout.partCol}").as(layout.partCol),
-            col("v.embedding").as("embedding"))
-    resolved.where(filter.getOrElse(lit(true)))
-  }
+      asOfGen: Option[Long] = None): DataFrame =
+    resolvedRead(spark, path,
+      Seq("label", "metadata", layout.partCol, "embedding"),
+      Some(col(layout.partCol).isin(parts: _*)), layout.dirPred(parts),
+      asOfGen).where(filter.getOrElse(lit(true)))
 
-  /** The IVF probe frame: nearest-`nprobe`-centroid partition pruning
-    * (probe ids computed on the driver from the cached model state) +
-    * shared generation resolution. */
+  /** The probe frame of one query: the store's own layout picks the
+    * `nprobe` partitions from its cached model state (driver-side), then
+    * the shared generation resolution. */
   private def resolvedProbe(
       spark: SparkSession,
       path: String,
@@ -1444,24 +1435,28 @@ object VectorIndex {
       nprobe: Int,
       filter: Option[Column],
       asOfGen: Option[Long] = None): DataFrame = {
-    val centroids = readModel(spark, path, IvfLayout)
-    resolvedPartitions(spark, path, IvfLayout,
-      nearestCentroidIds(centroids, queryVec, nprobe), filter, asOfGen)
+    val StoreModel(layout, model) = storeModel(spark, path)
+    resolvedPartitions(spark, path, layout,
+      layout.probe(model, queryVec, nprobe), filter, asOfGen)
   }
 
-  /** Search a materialized IVF store. The `centroid_id IN (...)` predicate
-    * is a partition filter on the written layout: Spark's file index prunes
-    * the non-probed directories before any IO — the scan reads nprobe/k of
-    * the data, which is the point of the index. Ids touched by
-    * [[appendStore]] resolve to their highest generation before scoring —
-    * a shuffle of only the pruned subset, skipped outright on a fresh or
-    * compacted store (single-gen manifest) and eliminated again by
-    * [[compactStore]]. `scoreThreshold` switches the tail from top-k to
-    * the reference's score-threshold search mode — similarity keeps ≥,
-    * distance keeps ≤, and `k` is DELIBERATELY ignored: the contract
-    * matches [[KnnSearch.aboveThreshold]] (all qualifying hits, caller
-    * bounds the result via the threshold). Compose a limit on the
-    * returned frame if both bounds are wanted. */
+  /** Search a materialized store, whatever its layout. The probed
+    * partition ids (`centroid_id` / `bucket`) are a partition filter on
+    * the written layout: Spark's file index prunes the non-probed
+    * directories before any IO — the scan reads nprobe partitions' worth
+    * of the data, which is the point of the index. `nprobe` counts the
+    * partitions probed: the nearest centroids on an IVF store, the
+    * cheapest buckets in flip-cost order on an LSH store ([[LshProbes]]
+    * is the graded count there). Ids touched by [[appendStore]] resolve
+    * to their highest generation before scoring — a shuffle of only the
+    * pruned subset, skipped outright on a fresh or compacted store
+    * (single-gen manifest) and eliminated again by [[compactStore]].
+    * `scoreThreshold` switches the tail from top-k to the reference's
+    * score-threshold search mode — similarity keeps ≥, distance keeps ≤,
+    * and `k` is DELIBERATELY ignored: the contract matches
+    * [[KnnSearch.aboveThreshold]] (all qualifying hits, caller bounds the
+    * result via the threshold). Compose a limit on the returned frame if
+    * both bounds are wanted. Rows: (vec_id, label, partition id, score). */
   def searchStore(
       spark: SparkSession,
       path: String,
@@ -1473,7 +1468,8 @@ object VectorIndex {
       scoreThreshold: Option[Double] = None,
       asOfGen: Option[Long] = None): DataFrame = {
     val scored = resolvedProbe(spark, path, queryVec, nprobe, filter, asOfGen)
-      .select(col("vec_id"), col("label"), col("centroid_id"),
+      .select(col("vec_id"), col("label"),
+        col(storeModel(spark, path).layout.partCol),
         round(strategy.score(col("embedding"), typedLit(queryVec)), 4)
           .as("score"))
     val thresholded = scoreThreshold.fold(scored) { t =>
@@ -1506,29 +1502,8 @@ object VectorIndex {
       ids: Seq[Long],
       asOfGen: Option[Long] = None): DataFrame = {
     require(ids.nonEmpty, "getByIds needs at least one id")
-    val baseAll = readBase(spark, path)
-    val hit = col("vec_id").isin(ids: _*)
-    val all =
-      if (hasDelta(spark, path))
-        baseAll.where(hit).unionByName(
-          deltaFrame(spark, path, baseAll.schema).where(hit))
-      else baseAll.where(hit)
-    val pruned = asOfGen.fold(all)(g => all.where(col("gen") <= g))
-    if (asOfGen.isEmpty && isSingleGen(spark, path))
-      pruned.where(!col("deleted"))
-        .select(col("vec_id"), col("label"), col("metadata"),
-          col("embedding"))
-    else
-      pruned
-        .groupBy(col("vec_id"))
-        .agg(max_by(
-          struct(col("label"), col("embedding"), col("metadata"),
-            col("deleted")),
-          struct(col("gen"), !col("deleted"))).as("v"))
-        .where(!col("v.deleted"))
-        .select(col("vec_id"), col("v.label").as("label"),
-          col("v.metadata").as("metadata"),
-          col("v.embedding").as("embedding"))
+    resolvedRead(spark, path, Seq("label", "metadata", "embedding"),
+      rowPred = Some(col("vec_id").isin(ids: _*)), asOfGen = asOfGen)
   }
 
   /** The graded `store_get` query: a fixed deterministic id set fetched
@@ -1576,83 +1551,110 @@ object VectorIndex {
     KnnSearch.mmrRerank(spark, cand, k, lambdaMult)
   }
 
-  /** The graded IVF search path: build (or reuse) the materialized
-    * partitioned store and search through it, so the executed plan prunes
-    * IO at the file index instead of scoring the centroid assignment over
-    * the full corpus. Same contract as the inline [[ivfSearch]] (query row
-    * excluded). */
-  def ivfSearchStore(
+  /** The graded store search path: build (or reuse) the session's
+    * materialized corpus store under `layout` and search through it, so
+    * the executed plan prunes IO at the file index instead of assigning
+    * partitions over the full corpus. Same contract as the inline
+    * [[ivfSearch]] / [[lshSearch]] (query row excluded); pass
+    * `nprobe = LshProbes` for the graded LSH probe. */
+  def corpusSearch(
       spark: SparkSession,
       sfDir: String,
+      layout: StoreLayout = IvfLayout,
       k: Int = 10,
       nprobe: Int = 4,
       queryVecId: Long = 0L,
       filter: Option[Column] = None): DataFrame = {
-    val path = ensureStore(spark, sfDir)
+    val path = ensureStore(spark, sfDir, layout)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     val excl = col("vec_id") =!= queryVecId
     searchStore(spark, path, qv, k, nprobe,
       Some(filter.fold(excl)(_ && excl)))
   }
 
-  /** Score-threshold search through the materialized store (the reference's
-    * `score_threshold` mode composed with `index_enabled`): pruned probe,
-    * all hits ≥ threshold, no k. */
-  def ivfThresholdStore(
+  /** Score-threshold search through the materialized corpus store (the
+    * reference's `score_threshold` mode composed with `index_enabled`):
+    * pruned probe, all hits ≥ threshold, no k. The recall contract is
+    * the probe's: a hit outside the probed partitions is not returned. */
+  def corpusThreshold(
       spark: SparkSession,
       sfDir: String,
+      layout: StoreLayout = IvfLayout,
       threshold: Double = 0.2,
       nprobe: Int = 4,
       queryVecId: Long = 0L): DataFrame = {
-    val path = ensureStore(spark, sfDir)
+    val path = ensureStore(spark, sfDir, layout)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     searchStore(spark, path, qv, nprobe = nprobe,
       filter = Some(col("vec_id") =!= queryVecId),
       scoreThreshold = Some(threshold))
   }
 
-  /** Batch kNN THROUGH the index — `knn_batch` composed with
-    * `index_enabled`: every query's nprobe partitions prune in ONE shared
-    * scan (the partition filter is the union of all probe sets — still
-    * file-index pruning), each pruned row joins only the queries that
-    * probe its partition via a broadcast (query_id, centroid, query_vec)
-    * probe table (nQueries·nprobe rows — query parameters, not data),
-    * and the per-query top-k is the TopKAgg partial aggregate. At 100 TB:
-    * queries ≪ corpus ride the task closure, the corpus is scanned once
-    * at union-probe IO, and the post-scoring shuffle carries k rows per
-    * query. */
-  def batchIvfSearchStore(
+  /** MMR search through the materialized corpus store (the reference's
+    * `max_marginal_relevance_search` retriever mode composed with
+    * `index_enabled`): pruned fetchK probe + shared greedy re-rank. */
+  def corpusMmr(
       spark: SparkSession,
       sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
+      layout: StoreLayout = IvfLayout,
+      k: Int = 10,
+      fetchK: Int = 50,
+      lambdaMult: Double = 0.5,
+      nprobe: Int = 4,
+      queryVecId: Long = 0L): DataFrame = {
+    val path = ensureStore(spark, sfDir, layout)
+    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
+    mmrSearchStore(spark, path, qv, k, fetchK, lambdaMult, nprobe,
+      filter = Some(col("vec_id") =!= queryVecId))
+  }
+
+  /** The scored union probe every batch store read shares: each query's
+    * `nprobe` partitions (from the store's own layout and cached model)
+    * prune ONE shared scan at the union of all probe sets — still
+    * file-index pruning — and each pruned row joins only the queries that
+    * probe its partition via a broadcast (query_id, partition, query_vec)
+    * probe table (nQueries·nprobe rows — query parameters, not data).
+    * Rows: (query_id, vec_id, score). */
+  private def batchProbe(
+      spark: SparkSession,
+      path: String,
+      queries: Seq[(Long, Array[Float])],
+      nprobe: Int,
+      filter: Option[Column]): DataFrame = {
     import spark.implicits._
-    val path = ensureStore(spark, sfDir)
-    val centroids = readModel(spark, path, IvfLayout)
-    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries)
+    val StoreModel(layout, model) = storeModel(spark, path)
     val probePairs = queries.flatMap { case (qid, qv) =>
-      nearestCentroidIds(centroids, qv, nprobe)
-        .map(cid => (qid, cid, qv.toSeq))
-    }.toSeq
-    val allProbes = probePairs.map(_._2).distinct
-    val probeDf = probePairs.toDF("query_id", "p_cid", "query_vec")
-    val scored = resolvedPartitions(spark, path, IvfLayout, allProbes,
-      Some(col("vec_id") >= nQueries))
-      .join(broadcast(probeDf), col("centroid_id") === col("p_cid"))
+      layout.probe(model, qv, nprobe).map(p => (qid, p, qv.toSeq))
+    }
+    val probeDf = probePairs.toDF("query_id", "p_part", "query_vec")
+    resolvedPartitions(spark, path, layout, probePairs.map(_._2).distinct,
+      filter)
+      .join(broadcast(probeDf), col(layout.partCol) === col("p_part"))
       .select(col("query_id"), col("vec_id"),
         round(graft.functions.VectorFunctions.cosineSim(
           col("embedding"), col("query_vec")), 4).as("score"))
-    KnnSearch.perQueryTopK(scored, k)
-      .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Retrieval-quality evaluation as a first-class query: recall@k of the
-    * pruned batch probe ([[batchIvfSearchStore]]) against the exact batch
-    * scan over the same query set — the measurement loop a production
-    * store runs continuously (is the index still good enough?), expressed
-    * as one summary row. Everything downstream of the two k·nQueries-row
-    * results is bounded arithmetic. */
+  /** Batch kNN THROUGH the index — `knn_batch` composed with
+    * `index_enabled`, on either layout: the [[batchProbe]] of the first
+    * `nQueries` corpus vectors, then the per-query top-k as the TopKAgg
+    * partial aggregate. At 100 TB: queries ≪ corpus ride the task
+    * closure, the corpus is scanned once at union-probe IO, and the
+    * post-scoring shuffle carries k rows per query. */
+  def corpusBatchSearch(
+      spark: SparkSession,
+      sfDir: String,
+      layout: StoreLayout = IvfLayout,
+      nQueries: Int = 5,
+      k: Int = 5,
+      nprobe: Int = 4): DataFrame = {
+    val path = ensureStore(spark, sfDir, layout)
+    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries).toSeq
+    KnnSearch.perQueryTopK(
+      batchProbe(spark, path, queries, nprobe, Some(col("vec_id") >= nQueries)),
+      k).orderBy(col("query_id"), col("rank"))
+  }
+
   /** The recall@k summary shared by every index family's eval query:
     * per-query overlap of the approximate top-k with the exact top-k
     * (a query with ZERO overlap still contributes 0 to the mean — the
@@ -1682,70 +1684,25 @@ object VectorIndex {
       TextAnalysis.round4(min(col("recall"))).as("min_recall"))
   }
 
+  /** Retrieval-quality evaluation as a first-class query: recall@k of the
+    * pruned batch probe ([[corpusBatchSearch]]) against the exact batch
+    * scan over the same query set — the measurement loop a production
+    * store runs continuously (is the index still good enough?), expressed
+    * as one summary row. The LSH probe is approximate by design (the
+    * probe-budget/recall trade-off AnnRecallSpec documents), so on that
+    * layout the check matters MORE: a drifting corpus degrades bucket
+    * balance silently, and this query is what catches it. */
   def annEval(
       spark: SparkSession,
       sfDir: String,
+      layout: StoreLayout = IvfLayout,
       nQueries: Int = 5,
       k: Int = 5,
       nprobe: Int = 4): DataFrame =
     recallSummary(
       KnnSearch.batchTopK(spark, sfDir, nQueries, k)
         .select(col("query_id"), col("vec_id")),
-      batchIvfSearchStore(spark, sfDir, nQueries, k, nprobe)
-        .select(col("query_id"), col("vec_id")),
-      k)
-
-  /** Batch kNN THROUGH the LSH index — [[batchIvfSearchStore]]'s contract
-    * on the bucket-partitioned layout: each query's margin-aware
-    * multi-probe set is computed driver-side from the cached plane
-    * matrix, the store is scanned ONCE pruned at the union of all probe
-    * sets, each pruned row joins only the queries probing its bucket via
-    * a broadcast (query_id, bucket, query_vec) probe table, and the
-    * per-query top-k is the TopKAgg partial aggregate — k rows per query
-    * cross the wire, the corpus never shuffles. */
-  def batchLshSearchStore(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      probeHamming: Int = 2): DataFrame = {
-    import spark.implicits._
-    val path = ensureLshStore(spark, sfDir)
-    val planes = readModel(spark, path, LshLayout)
-    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries)
-    val probePairs = queries.flatMap { case (qid, qv) =>
-      multiProbeBuckets(planes, qv, probeHamming)
-        .map(b => (qid, b, qv.toSeq))
-    }.toSeq
-    val allProbes = probePairs.map(_._2).distinct
-    val probeDf = probePairs.toDF("query_id", "p_b", "query_vec")
-    val scored = resolvedPartitions(spark, path, LshLayout, allProbes,
-      Some(col("vec_id") >= nQueries))
-      .join(broadcast(probeDf), col("bucket") === col("p_b"))
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosineSim(
-          col("embedding"), col("query_vec")), 4).as("score"))
-    KnnSearch.perQueryTopK(scored, k)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Index-health eval for the LSH family — [[annEval]]'s measurement on
-    * the bucket-partitioned store: recall@k of the multi-probe batch
-    * probe vs the exact batch scan, one summary row. The LSH probe is
-    * approximate by design (the hamming-budget/recall trade-off
-    * AnnRecallSpec documents), so the continuous health check matters
-    * MORE here than for IVF: a drifting corpus degrades bucket balance
-    * silently, and this query is what catches it. */
-  def annEvalLsh(
-      spark: SparkSession,
-      sfDir: String,
-      nQueries: Int = 5,
-      k: Int = 5,
-      probeHamming: Int = 2): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchLshSearchStore(spark, sfDir, nQueries, k, probeHamming)
+      corpusBatchSearch(spark, sfDir, layout, nQueries, k, nprobe)
         .select(col("query_id"), col("vec_id")),
       k)
 
@@ -1792,6 +1749,46 @@ object VectorIndex {
         .select(col("query_id"), col("vec_id")),
       k)
 
+  /** Lowest `n` live vec_ids of the store's FRESHEST surviving
+    * generation — the default drift probes for [[storeHealth]] callers
+    * (the freshest appends are the rows whose retrieval degrades under
+    * drift; see the report doc). On a compacted (single-gen) store this
+    * is simply the lowest-id live rows.
+    *
+    * Ids resolve through the same newest-version-wins fold the serving
+    * reads use (r19, ADVICE r18): a raw `gen === max(gen)` pick returned
+    * EMPTY when the newest generation was tombstone-only (a delete was
+    * the last operation) — precisely the churn/delete state whose fresh
+    * rows the drift probes exist to sample — silently degrading callers
+    * to baseline probes. Resolved, the probe set is the highest-gen LIVE
+    * survivors; empty now means the store holds no live rows at all
+    * (logged loudly — a health probe over a fully-tombstoned store has
+    * nothing to measure). */
+  private[graft] def newestGenIds(
+      spark: SparkSession, path: String, n: Int): Seq[Long] = {
+    val resolved = resolvedRead(spark, path, Seq("gen"))
+    val maxLive = resolved.agg(max(col("gen"))).collect().head
+    if (maxLive.isNullAt(0)) {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"newestGenIds: store $path has no live rows (every id resolves " +
+          "to a tombstone) — no drift probes exist")
+      Seq.empty
+    } else
+      resolved.where(col("gen") === maxLive.getLong(0))
+        .select(col("vec_id")).orderBy(col("vec_id")).limit(n)
+        .collect().map(_.getLong(0)).toSeq
+  }
+
+  /** Graded corpus entry point for [[storeHealth]] — the health report
+    * over the session's materialized corpus store with the default
+    * probes (lowest-id live rows, k = 5, nprobe = 4, floor 0.8). The
+    * oracle replays the centroid training, the per-query probe sets,
+    * the pruned-scan recall against the exact top-k (self-inclusive —
+    * unlike ann_eval, the health probe queries ARE store rows), and the
+    * floor verdict with the remedy literal. */
+  def storeHealthReport(spark: SparkSession, sfDir: String): DataFrame =
+    storeHealth(spark, ensureStore(spark, sfDir))
+
   /** Store-health report (r18, VERDICT r17 item 6) — the consumer the
     * four `ann_eval*` measurements were missing: recall@k of the pruned
     * IVF probe vs the exact scan over the SAME live store rows, judged
@@ -1826,59 +1823,12 @@ object VectorIndex {
     * cross the wire, never the corpus), plus the pruned probe scan. A
     * health check is a periodic maintenance read, not a serving-path
     * query; at 100 TB run it at the cadence of compaction, not of
-    * traffic. */
-  /** Lowest `n` live vec_ids of the store's FRESHEST surviving
-    * generation — the default drift probes for [[storeHealth]] callers
-    * (the freshest appends are the rows whose retrieval degrades under
-    * drift; see the report doc). On a compacted (single-gen) store this
-    * is simply the lowest-id live rows.
+    * traffic.
     *
-    * Ids resolve through the same newest-version-wins fold the serving
-    * reads use (r19, ADVICE r18): a raw `gen === max(gen)` pick returned
-    * EMPTY when the newest generation was tombstone-only (a delete was
-    * the last operation) — precisely the churn/delete state whose fresh
-    * rows the drift probes exist to sample — silently degrading callers
-    * to baseline probes. Resolved, the probe set is the highest-gen LIVE
-    * survivors; empty now means the store holds no live rows at all
-    * (logged loudly — a health probe over a fully-tombstoned store has
-    * nothing to measure). */
-  private[graft] def newestGenIds(
-      spark: SparkSession, path: String, n: Int): Seq[Long] = {
-    val baseAll = readBase(spark, path)
-    val all =
-      if (hasDelta(spark, path))
-        baseAll.unionByName(deltaFrame(spark, path, baseAll.schema))
-      else baseAll
-    val resolved = all
-      .groupBy(col("vec_id"))
-      .agg(max_by(
-        struct(col("gen"), col("deleted")),
-        // tie-break: same generation prefers the live row to a tombstone
-        struct(col("gen"), !col("deleted"))).as("v"))
-      .where(!col("v.deleted"))
-      .select(col("vec_id"), col("v.gen").as("gen"))
-    val maxLive = resolved.agg(max(col("gen"))).collect().head
-    if (maxLive.isNullAt(0)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"newestGenIds: store $path has no live rows (every id resolves " +
-          "to a tombstone) — no drift probes exist")
-      Seq.empty
-    } else
-      resolved.where(col("gen") === maxLive.getLong(0))
-        .select(col("vec_id")).orderBy(col("vec_id")).limit(n)
-        .collect().map(_.getLong(0)).toSeq
-  }
-
-  /** Graded corpus entry point for [[storeHealth]] — the health report
-    * over the session's materialized corpus store with the default
-    * probes (lowest-id live rows, k = 5, nprobe = 4, floor 0.8). The
-    * oracle replays the centroid training, the per-query probe sets,
-    * the pruned-scan recall against the exact top-k (self-inclusive —
-    * unlike ann_eval, the health probe queries ARE store rows), and the
-    * floor verdict with the remedy literal. */
-  def storeHealthReport(spark: SparkSession, sfDir: String): DataFrame =
-    storeHealth(spark, ensureStore(spark, sfDir))
-
+    * IVF stores only: an LSH store's hyperplanes are data-independent, so
+    * there is no trained model to drift and the remedy does not apply —
+    * the report rejects such a store rather than misjudge it (use
+    * [[annEval]] for its probe recall). */
   def storeHealth(
       spark: SparkSession,
       path: String,
@@ -1888,8 +1838,13 @@ object VectorIndex {
       nprobe: Int = 4,
       recallFloor: Double = 0.8): DataFrame = {
     import spark.implicits._
-    val centroids = readModel(spark, path, IvfLayout)
-    val live = resolvedPartitions(spark, path, IvfLayout,
+    val StoreModel(layout, centroids) = storeModel(spark, path)
+    require(layout == IvfLayout,
+      s"storeHealth: $path has the LSH layout, whose hyperplanes are " +
+        "data-independent — there is no trained model to drift and " +
+        "compactStore(retrain = true) does not apply; use annEval for " +
+        "the probe's recall")
+    val live = resolvedPartitions(spark, path, layout,
       centroids.indices, None).persist()
     try {
       val qSrc =
@@ -1930,18 +1885,9 @@ object VectorIndex {
         (qids.length.toLong, round4(recalls.sum / recalls.length),
           round4(recalls.min))
       }
-      val probePairs = queries.toSeq.flatMap { case (qid, qv) =>
-        nearestCentroidIds(centroids, qv, nprobe).map(p => (qid, p, qv.toSeq))
-      }
-      val probeDf = probePairs.toDF("query_id", "p_c", "query_vec")
       val approx = KnnSearch.perQueryTopK(
-        resolvedPartitions(spark, path, IvfLayout,
-          probePairs.map(_._2).distinct, None)
-          .join(broadcast(probeDf), col("centroid_id") === col("p_c"))
-          .select(col("query_id"), col("vec_id"),
-            round(graft.functions.VectorFunctions.cosineSim(
-              col("embedding"), col("query_vec")), 4).as("score")),
-        k).select(col("query_id"), col("vec_id"))
+        batchProbe(spark, path, queries.toSeq, nprobe, None), k)
+        .select(col("query_id"), col("vec_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val (nQ, meanRecall, minRecall) = summarize(approx)
       // the quantized serving config is judged too (r19, VERDICT r18
@@ -1949,7 +1895,7 @@ object VectorIndex {
       // ranking decays under corpus turnover through a SECOND mechanism
       // (codebook fit), invisible to the plain-IVF probe, and since r19
       // the recommended remedy re-fits the codebooks as well. Stores
-      // without a PQ side-model (LSH-origin, text-chunk) report null.
+      // without a PQ side-model (text-chunk stores) report null.
       val pq: Option[(Double, Double)] =
         if (hasPqModel(spark, path)) {
           val approxPq = batchIvfPqSearchStoreAt(spark, path,
@@ -1994,6 +1940,11 @@ object VectorIndex {
     ivfPqSearchStoreAt(spark, path, qv, k, nprobe, fetchK, Some(queryVecId))
   }
 
+  private def noPqCodes(path: String): String =
+    s"store at $path has no PQ codes (built before PQ support, or written " +
+      "with the LSH layout) — rebuild it with writeStore under the IVF " +
+      "layout, or search it with searchStore"
+
   /** Path-based IVF-PQ search core (see [[ivfPqSearchStore]]). */
   def ivfPqSearchStoreAt(
       spark: SparkSession,
@@ -2003,34 +1954,15 @@ object VectorIndex {
       nprobe: Int = 4,
       fetchK: Int = 50,
       excludeId: Option[Long] = None): DataFrame = {
-    require(hasPqModel(spark, path),
-      s"store at $path has no PQ codes (built before PQ support, or an " +
-        "LSH store) — rebuild with writeStore or use searchStore")
+    require(hasPqModel(spark, path), noPqCodes(path))
     val cb = readPqModel(spark, path)
     val adc = adcColumn(cb, qv)
-    val centroids = readModel(spark, path, IvfLayout)
-    val probes = nearestCentroidIds(centroids, qv, nprobe)
-    val baseAll = readBase(spark, path)
-    val prunedBase = baseAll.where(col("centroid_id").isin(probes: _*))
-    val pruned =
-      if (hasDelta(spark, path))
-        prunedBase.unionByName(
-          deltaFrame(spark, path, baseAll.schema)
-            .where(col("centroid_id").isin(probes: _*)))
-      else prunedBase
+    val StoreModel(layout, centroids) = storeModel(spark, path)
+    val probes = layout.probe(centroids, qv, nprobe)
     // phase 1 over the codes projection only — the embedding column is
     // never read here (spec-pinned via ReadSchema)
-    val phase1 =
-      if (isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("codes"))
-      else
-        pruned
-          .groupBy(col("vec_id"))
-          .agg(max_by(struct(col("codes"), col("deleted")),
-            struct(col("gen"), !col("deleted"))).as("v"))
-          .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.codes").as("codes"))
+    val phase1 = resolvedRead(spark, path, Seq("codes"),
+      Some(col("centroid_id").isin(probes: _*)))
     val excl = excludeId.map(id => col("vec_id") =!= id)
     val cand = phase1
       .where(excl.getOrElse(lit(true)))
@@ -2046,39 +1978,22 @@ object VectorIndex {
       .limit(k)
   }
 
-  /** MMR search through the materialized store (the reference's
-    * `max_marginal_relevance_search` retriever mode composed with
-    * `index_enabled`): pruned fetchK probe + shared greedy re-rank. */
-  def ivfMmrStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      fetchK: Int = 50,
-      nprobe: Int = 4,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    mmrSearchStore(spark, path, qv, k, fetchK,
-      filter = Some(col("vec_id") =!= queryVecId), nprobe = nprobe)
-  }
-
   /** Margin-aware multi-probe bucket selection (multi-probe LSH, Lv et
     * al., VLDB 2007): a bucket's flip cost is the total |dot(q, plane)|
     * margin of the planes whose sign it disagrees with the query on —
     * flipping a plane the query barely cleared is cheap (a true neighbor
     * plausibly lands on the other side), flipping a high-margin plane is
-    * expensive. Probing in increasing flip cost concentrates the probe
-    * budget on the buckets most likely to hold true neighbors; measured
-    * on the test corpus it lifts recall@10 from 0.4 to 0.7 at the SAME
-    * probed-bucket count as the blind hamming ball (AnnRecallSpec, which
-    * pins the floor and documents the budget/recall curve). The
-    * budget is sized to the hamming-≤`probeHamming` ball, so the
-    * parameter keeps its IO meaning — probeHamming = nPlanes still
-    * probes every bucket (the exact-scan full probe of the specs). */
+    * expensive. Probing the first `nprobe` buckets in increasing flip
+    * cost concentrates the probe budget on the buckets most likely to
+    * hold true neighbors; measured on the test corpus it lifts recall@10
+    * from 0.4 to 0.7 at the SAME probed-bucket count as the blind
+    * hamming-≤2 ball (AnnRecallSpec, which pins the floor and documents
+    * the budget/recall curve). `nprobe` ≥ 2^planes probes every bucket
+    * (the exact-scan full probe of the specs). */
   private def multiProbeBuckets(
       planes: Array[Array[Float]],
       queryVec: Array[Float],
-      probeHamming: Int): Seq[Int] = {
+      nprobe: Int): Seq[Int] = {
     val p = planes.length
     val qSig = IndexOps.hyperplaneSig(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(queryVec), planes)
@@ -2088,10 +2003,6 @@ object VectorIndex {
       while (d < queryVec.length) { s += queryVec(d).toDouble * pl(d); d += 1 }
       math.abs(s)
     }
-    // budget = |hamming ball| = sum of C(p, h) for h <= probeHamming
-    val budget = (0 to math.min(probeHamming, p))
-      .map(h => (0 until h).map(i => (p - i).toDouble / (i + 1)).product.round.toInt)
-      .sum
     (0 until (1 << p))
       .map { b =>
         var c = 0.0
@@ -2101,117 +2012,26 @@ object VectorIndex {
         (b, c)
       }
       .sortBy { case (b, c) => (c, b) }
-      .take(budget)
+      .take(nprobe)
       .map(_._1)
   }
 
-  /** Search a materialized LSH store: the probe set — the flip-cost-
-    * ordered multi-probe neighborhood of the query signature, budgeted to
-    * the ≤`probeHamming` hamming ball — is computed driver-side from the
-    * cached plane matrix, and `bucket IN (...)` prunes at the file index —
-    * only the probed directories are read. Shares the generation
-    * resolution and metadata filtering of the IVF store probe. */
-  def searchLshStore(
-      spark: SparkSession,
-      path: String,
-      queryVec: Array[Float],
-      k: Int = 10,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None,
-      scoreThreshold: Option[Double] = None): DataFrame = {
-    val planes = readModel(spark, path, LshLayout)
-    val probed = multiProbeBuckets(planes, queryVec, probeHamming)
-    val scored = resolvedPartitions(spark, path, LshLayout, probed, filter)
-      .select(col("vec_id"), col("label"), col("bucket"),
-        round(VectorFunctions.cosineSim(col("embedding"), typedLit(queryVec)), 4)
-          .as("score"))
-    // threshold mode (the reference's score_threshold composed with the
-    // LSH layout): all probed hits ≥ threshold, no k — same contract
-    // switch as [[searchStore]]'s
-    val thresholded = scoreThreshold.fold(scored)(t =>
-      scored.where(col("score") >= t))
-    val ordered = thresholded.orderBy(col("score").desc, col("vec_id"))
-    if (scoreThreshold.isDefined) ordered else ordered.limit(k)
-  }
+  /** |hamming ball| of radius `h` over `p` planes: the sum of C(p, i)
+    * for i ≤ h — the probe budget that gives a flip-cost probe the IO of
+    * a hamming-radius probe. */
+  private def hammingBall(p: Int, h: Int): Int =
+    (0 to math.min(h, p))
+      .map(r => (0 until r).map(i => (p - i).toDouble / (i + 1)).product.round.toInt)
+      .sum
 
-  /** Score-threshold search through the materialized LSH store — the
-    * bucket-layout twin of [[ivfThresholdStore]] (r14, layout symmetry):
-    * flip-cost multi-probe pruned read, all hits ≥ threshold, no k. The
-    * recall contract is the probe's, exactly like `knn_threshold_ivf`'s
-    * is its probed partitions': a hit outside the probed buckets is not
-    * returned — the spec pins full-probe equality with the exact
-    * threshold scan. */
-  def lshThresholdStore(
-      spark: SparkSession,
-      sfDir: String,
-      threshold: Double = 0.2,
-      probeHamming: Int = 2,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    searchLshStore(spark, path, qv, probeHamming = probeHamming,
-      filter = Some(col("vec_id") =!= queryVecId),
-      scoreThreshold = Some(threshold))
-  }
-
-  /** The graded LSH search path: multi-probe search through the
-    * materialized bucket-partitioned store (same probes and contract as
-    * the inline [[lshSearch]], query row excluded — the plan prunes IO
-    * instead of bucketing the full corpus per query). `filter` composes
-    * metadata predicates into the pruned probe, same as the IVF path. */
-  def lshSearchStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      queryVecId: Long = 0L,
-      probeHamming: Int = 2,
-      filter: Option[Column] = None): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val excl = col("vec_id") =!= queryVecId
-    searchLshStore(spark, path, qv, k, probeHamming,
-      Some(filter.fold(excl)(_ && excl)))
-  }
-
-  /** MMR search through the materialized LSH store — the retriever's
-    * `max_marginal_relevance_search` mode on the bucket layout, closing
-    * the IVF/LSH symmetry gap ([[ivfMmrStore]] is the centroid-layout
-    * twin): the fetchK candidate fetch is the flip-cost multi-probe
-    * pruned store read (same probe set as [[searchLshStore]], embeddings
-    * retained), the greedy λ-diversity re-rank is the shared driver-side
-    * [[KnnSearch.mmrRerank]] — by then candidates are query parameters,
-    * not data, so the collect is bounded by fetchK by construction. */
-  def lshMmrStore(
-      spark: SparkSession,
-      sfDir: String,
-      k: Int = 10,
-      fetchK: Int = 50,
-      lambdaMult: Double = 0.5,
-      probeHamming: Int = 2,
-      queryVecId: Long = 0L): DataFrame = {
-    val path = ensureLshStore(spark, sfDir)
-    val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val planes = readModel(spark, path, LshLayout)
-    val probed = multiProbeBuckets(planes, qv, probeHamming)
-    val cand = resolvedPartitions(spark, path, LshLayout, probed,
-      Some(col("vec_id") =!= queryVecId))
-      .select(col("vec_id"), col("label"), col("embedding"),
-        round(VectorFunctions.cosineSim(col("embedding"), typedLit(qv)), 4)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(fetchK)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1),
-        r.getSeq[Float](2).toArray.map(_.toDouble), r.getDouble(3)))
-    KnnSearch.mmrRerank(spark, cand, k, lambdaMult)
-  }
-
-  /** LSH-probed ANN search: compute the query's 16-bit signature on the
-    * driver, multi-probe the query bucket plus all hamming-1 neighbor
-    * buckets (17 of 65536 → ~0.03 % of a bucket-partitioned store), and
-    * run the exact top-k only over those candidates. The complement of
-    * `ivfSearch` for cosine geometry: recall comes from multi-probing
-    * rather than centroid proximity. */
+  /** LSH-probed ANN search, inline over the embeddings table: compute the
+    * query's `nPlanes`-bit signature on the driver, probe the flip-cost
+    * cheapest buckets up to the size of the hamming-≤`probeHamming` ball
+    * (37 of 256 at the defaults → ~14 % of a bucket-partitioned store),
+    * and run the exact top-k only over those candidates. The complement
+    * of `ivfSearch` for cosine geometry: recall comes from multi-probing
+    * rather than centroid proximity. The store-backed path
+    * ([[corpusSearch]] under [[LshLayout]]) must match it. */
   def lshSearch(
       spark: SparkSession,
       sfDir: String,
@@ -2221,10 +2041,9 @@ object VectorIndex {
       probeHamming: Int = 2): DataFrame = {
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     val planes = IndexOps.hyperplanes(nPlanes, qv.length)
-    // flip-cost-ordered multi-probe, budgeted to the ≤probeHamming ball
-    // (37 of 256 buckets at the defaults — tuned for the test corpus size;
-    // production stores use more planes and proportionally fewer probes)
-    val probed = multiProbeBuckets(planes, qv, probeHamming)
+    // tuned for the test corpus size; production stores use more planes
+    // and proportionally fewer probes
+    val probed = multiProbeBuckets(planes, qv, hammingBall(nPlanes, probeHamming))
     val q = typedLit(qv)
     Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), col("embedding"),
@@ -2439,7 +2258,7 @@ object VectorIndex {
       .limit(k)
   }
 
-  /** Batch kNN through the PQ codes — [[batchIvfSearchStore]]'s contract
+  /** Batch kNN through the PQ codes — [[corpusBatchSearch]]'s contract
     * for the third index family, completing the batch surface (IVF and
     * LSH have it; a production reranker sends queries in batches to every
     * index kind). ONE codes scan serves every query: each query's integer
@@ -2514,7 +2333,7 @@ object VectorIndex {
     * answers queries, not the raw table; langchain_ydb's indexed search
     * path). Phase 1 scans ONLY the probed partitions — file-index pruning
     * at the union of every query's nprobe set, like
-    * [[batchIvfSearchStore]] — and ONLY the (vec_id, centroid_id, codes)
+    * [[corpusBatchSearch]] — and ONLY the (vec_id, centroid_id, codes)
     * projection: the 8-byte code column written at build time and
     * maintained by every CRUD path, never the 256-byte embedding
     * (spec-pinned via ReadSchema). At 100 TB that is the partition cut ×
@@ -2553,11 +2372,9 @@ object VectorIndex {
       excludeBelow: Option[Long]): DataFrame = {
     import spark.implicits._
     import graft.functions.TopKAgg.topkAgg
-    require(hasPqModel(spark, path),
-      s"store at $path has no PQ codes (built before PQ support, or an " +
-        "LSH store) — rebuild with writeStore or use batchIvfSearchStore")
+    require(hasPqModel(spark, path), noPqCodes(path))
     val cb = readPqModel(spark, path)
-    val centroids = readModel(spark, path, IvfLayout)
+    val StoreModel(layout, centroids) = storeModel(spark, path)
     // flat per-query LUT (lut[sub * width + code]), same shape as
     // batchPqSearch: 8 element_at lookups per row regardless of query
     // count; integer fixed-point, so ADC ranking is engine-independent
@@ -2575,34 +2392,14 @@ object VectorIndex {
     }
     val probePairs = queries.flatMap { case (qid, qv) =>
       val lutF = flatLut(qv)
-      nearestCentroidIds(centroids, qv, nprobe).map(cid => (qid, cid, lutF))
+      layout.probe(centroids, qv, nprobe).map(cid => (qid, cid, lutF))
     }.toSeq
     val allProbes = probePairs.map(_._2).distinct
     val probeDf = probePairs.toDF("query_id", "p_cid", "lut")
     // phase 1: pruned scan of the codes projection — the embedding column
-    // is never read here (ReadSchema pin in PqSpec). Delta rows prune on
-    // the partition id as a data column, same as resolvedPartitions.
-    val baseAll = readBase(spark, path)
-    val prunedBase = baseAll.where(IvfLayout.prunePred(allProbes))
-    val pruned =
-      if (hasDelta(spark, path))
-        prunedBase.unionByName(
-          deltaFrame(spark, path, baseAll.schema)
-            .where(col("centroid_id").isin(allProbes: _*)))
-      else prunedBase
-    val phase1 =
-      if (isSingleGen(spark, path))
-        pruned.where(!col("deleted"))
-          .select(col("vec_id"), col("centroid_id"), col("codes"))
-      else
-        pruned
-          .groupBy(col("vec_id"))
-          .agg(max_by(
-            struct(col("codes"), col("centroid_id"), col("deleted")),
-            struct(col("gen"), !col("deleted"))).as("v"))
-          .where(!col("v.deleted"))
-          .select(col("vec_id"), col("v.centroid_id").as("centroid_id"),
-            col("v.codes").as("codes"))
+    // is never read here (ReadSchema pin in PqSpec)
+    val phase1 = resolvedRead(spark, path, Seq("centroid_id", "codes"),
+      Some(col("centroid_id").isin(allProbes: _*)))
     val adc = (0 until PqM).map(s =>
       element_at(col("lut"),
         lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))
@@ -2620,7 +2417,7 @@ object VectorIndex {
     // — of the pruned subset, joined down to fetchK rows per query)
     val qvDf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
       .toSeq.toDF("query_id", "query_vec")
-    val scored = resolvedPartitions(spark, path, IvfLayout, allProbes,
+    val scored = resolvedPartitions(spark, path, layout, allProbes,
       excludeBelow.map(b => col("vec_id") >= b))
       .join(broadcast(cand), "vec_id")
       .join(broadcast(qvDf), "query_id")

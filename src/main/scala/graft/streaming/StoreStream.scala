@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-/** Streaming ingest into the materialized IVF store — the live
+/** Streaming ingest into a materialized store (either layout) — the live
   * `add_texts` path: each micro-batch of new/updated vectors is upserted
   * through [[VectorIndex.appendStore]] as its own generation.
   *
@@ -66,7 +66,7 @@ object StoreStream {
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** The shared stream-start protocol for every leased ingest path
-    * (StoreStream.ingest/ingestLsh/ingestTexts, CorpusStream
+    * (StoreStream.ingest/ingestTexts, CorpusStream
     * .ingestPipeline): atomically reserve the owner slot (two concurrent
     * same-session starts on one checkpoint must not BOTH pass the
     * duplicate check — the loser would re-stamp the live winner's lease
@@ -292,22 +292,25 @@ object StoreStream {
     * foreachBatch body, extracted so the replay spec can drive the exact
     * crash-window path. The batch is persisted across the emptiness
     * probe and the append (foreachBatch sources re-scan per action
-    * otherwise); an empty batch appends nothing and stays replayable. */
-  private[graft] def ingestVecBatch(
-      spark: SparkSession, storePath: String, batch: DataFrame, gen: Long,
-      append: (SparkSession, DataFrame, Long) => Unit): Unit =
-    if (!VectorIndex.genExists(spark, storePath, gen)) {
-      val src = batch.persist()
-      try { if (!src.isEmpty) append(spark, src, gen) }
-      finally src.unpersist()
-    }
-
-  /** Texts twin of [[ingestVecBatch]] — same receipt, append through
-    * [[graft.operators.TextStore.addTexts]] (chunk + featurize + upsert).
+    * otherwise); an empty batch appends nothing and stays replayable.
     * `owner` is the writer-lease identity the append runs under: the
     * stream passes its own (reentrant under the stream lease); direct
     * callers default to a fresh per-call owner, i.e. plain batch
     * semantics. */
+  private[graft] def ingestVecBatch(
+      spark: SparkSession, storePath: String, batch: DataFrame, gen: Long,
+      owner: String = VectorIndex.newWriterOwner("append")): Unit =
+    if (!VectorIndex.genExists(spark, storePath, gen)) {
+      val src = batch.persist()
+      try {
+        if (!src.isEmpty)
+          VectorIndex.appendStoreAs(spark, storePath, src, gen, owner)
+      } finally src.unpersist()
+    }
+
+  /** Texts twin of [[ingestVecBatch]] — same receipt and `owner`, append
+    * through [[graft.operators.TextStore.addTexts]] (chunk + featurize +
+    * upsert). */
   private[graft] def ingestTextBatch(
       spark: SparkSession, storePath: String, batch: DataFrame,
       gen: Long,
@@ -325,27 +328,27 @@ object StoreStream {
     * a durable checkpoint a restarted stream re-lists the source from
     * scratch, re-ingesting old data (the receipt only dedups gens the
     * SAME incarnation wrote — with AutoGen a fresh incarnation starts
-    * above them). */
+    * above them). The store's own layout (IVF or LSH) places the rows. */
   def ingest(
       spark: SparkSession,
       dir: String,
       storePath: String,
       checkpointDir: String,
-      startGen: Long = AutoGen): StreamingQuery =
-    ingestWith(spark, dir, storePath, startGen, checkpointDir,
-      owner => VectorIndex.appendStoreAs(_, storePath, _, _, owner))
-
-  /** Same live `add_texts` path into the bucket-partitioned LSH store —
-    * the store CRUD surface is layout-independent (one shared append
-    * implementation), so the streaming ingest is too. */
-  def ingestLsh(
-      spark: SparkSession,
-      dir: String,
-      storePath: String,
-      checkpointDir: String,
-      startGen: Long = AutoGen): StreamingQuery =
-    ingestWith(spark, dir, storePath, startGen, checkpointDir,
-      owner => VectorIndex.appendLshStoreAs(_, storePath, _, _, owner))
+      startGen: Long = AutoGen): StreamingQuery = {
+    val owner = streamOwner(checkpointDir)
+    startLeasedIngest(spark, storePath, checkpointDir, startGen) { base =>
+      spark.readStream
+        .schema(vecSchema)
+        .json(dir)
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          ingestVecBatch(batch.sparkSession, storePath, batch,
+            base + batchId, owner)
+        }
+        .start()
+    }
+  }
 
   val textSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -375,29 +378,6 @@ object StoreStream {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           ingestTextBatch(batch.sparkSession, storePath, batch,
             base + batchId, owner)
-        }
-        .start()
-    }
-  }
-
-  private def ingestWith(
-      spark: SparkSession,
-      dir: String,
-      storePath: String,
-      startGen: Long,
-      checkpointDir: String,
-      appendAs: String => (SparkSession, DataFrame, Long) => Unit)
-      : StreamingQuery = {
-    val append = appendAs(streamOwner(checkpointDir))
-    startLeasedIngest(spark, storePath, checkpointDir, startGen) { base =>
-      spark.readStream
-        .schema(vecSchema)
-        .json(dir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ingestVecBatch(batch.sparkSession, storePath, batch,
-            base + batchId, append)
         }
         .start()
     }

@@ -81,8 +81,7 @@ object BranchVerify {
   private def churnChunk: Int =
     sys.env.getOrElse("SPARK_GRAFT_CHURN_CHUNK", "2000").toInt
 
-  private[graft] def churn(
-      spark: SparkSession, path: String, isLsh: Boolean): Long = {
+  private[graft] def churn(spark: SparkSession, path: String): Long = {
     val chunk = churnChunk
     val live = spark.read.parquet(s"$path/vectors")
       .where(!col("deleted"))
@@ -92,11 +91,9 @@ object BranchVerify {
     var gen = 0L
     ids.grouped(chunk).foreach { part =>
       val idSet = part.toSeq
-      if (isLsh) VectorIndex.deleteFromLshStore(spark, path, idSet, gen + 1)
-      else VectorIndex.deleteFromStore(spark, path, idSet, gen + 1)
-      val batch = live.where(col("vec_id").isin(idSet: _*))
-      if (isLsh) VectorIndex.appendLshStore(spark, path, batch, gen + 2)
-      else VectorIndex.appendStore(spark, path, batch, gen + 2)
+      VectorIndex.deleteFromStore(spark, path, idSet, gen + 1)
+      VectorIndex.appendStore(spark, path,
+        live.where(col("vec_id").isin(idSet: _*)), gen + 2)
       gen += 2
     }
     gen
@@ -178,11 +175,11 @@ object BranchVerify {
     // fresh stores (the graded configuration), then content-preserving
     // churn into the never-graded physical state
     val ivfPath = VectorIndex.ensureStore(spark, sfDir)
-    val lshPath = VectorIndex.ensureLshStore(spark, sfDir)
+    val lshPath = VectorIndex.ensureStore(spark, sfDir, VectorIndex.LshLayout)
     val chunkPath = TextStore.ensureChunkStore(spark, sfDir)
-    val gensIvf = churn(spark, ivfPath, isLsh = false)
-    val gensLsh = churn(spark, lshPath, isLsh = true)
-    val gensChunk = churn(spark, chunkPath, isLsh = false)
+    val gensIvf = churn(spark, ivfPath)
+    val gensLsh = churn(spark, lshPath)
+    val gensChunk = churn(spark, chunkPath)
     val evDelta = Seq("ivf" -> ivfPath, "lsh" -> lshPath,
       "chunk" -> chunkPath)
       .map { case (n, p) => s""""$n":${evidence(spark, p)}""" }
@@ -223,9 +220,7 @@ object BranchVerify {
     dump(spark, sfDir, s"$outDir/recover_fwd", ivfQueries ++ lshQueries)
 
     // real compaction folds the churn away: single-gen fast path again
-    VectorIndex.compactStore(spark, ivfPath)
-    VectorIndex.compactLshStore(spark, lshPath)
-    VectorIndex.compactStore(spark, chunkPath)
+    Seq(ivfPath, lshPath, chunkPath).foreach(VectorIndex.compactStore(spark, _))
     val evCompact = Seq("ivf" -> ivfPath, "lsh" -> lshPath,
       "chunk" -> chunkPath)
       .map { case (n, p) => s""""$n":${evidence(spark, p)}""" }

@@ -53,34 +53,31 @@ object LifecycleBench {
         r
       }
 
-      def run(
-          tag: String,
-          write: String => Unit,
-          append: (String, DataFrame, Long) => Unit,
-          delete: (String, Seq[Long], Long) => Unit,
-          compact: String => Unit,
-          search: String => Unit): String = {
+      def search(path: String, nprobe: Int): Unit =
+        noop(VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = nprobe))
+
+      /** The lifecycle on a fresh store of `layout`, searched at the
+        * layout's graded probe count. */
+      def run(tag: String, layout: VectorIndex.StoreLayout, nprobe: Int): String = {
         val path = java.nio.file.Files
           .createTempDirectory(s"graft_lc_${tag}_").toString
-        timed(s"${tag}_build")(write(path))
-        timed(s"${tag}_search_fresh")(search(path))
+        timed(s"${tag}_build")(
+          VectorIndex.writeStore(spark, sfDir, path, layout = layout))
+        timed(s"${tag}_search_fresh")(search(path, nprobe))
         for (g <- 1 to 3)
-          timed(s"${tag}_append_g$g")(append(path, batch(1000000L * g), g.toLong))
-        timed(s"${tag}_search_merged")(search(path))
-        timed(s"${tag}_delete")(delete(path, (1000001L to 1000050L).toSeq, 4L))
-        timed(s"${tag}_search_tombstoned")(search(path))
-        timed(s"${tag}_compact")(compact(path))
-        timed(s"${tag}_search_compacted")(search(path))
+          timed(s"${tag}_append_g$g")(
+            VectorIndex.appendStore(spark, path, batch(1000000L * g), g.toLong))
+        timed(s"${tag}_search_merged")(search(path, nprobe))
+        timed(s"${tag}_delete")(VectorIndex.deleteFromStore(spark, path,
+          (1000001L to 1000050L).toSeq, 4L))
+        timed(s"${tag}_search_tombstoned")(search(path, nprobe))
+        timed(s"${tag}_compact")(VectorIndex.compactStore(spark, path))
+        timed(s"${tag}_search_compacted")(search(path, nprobe))
         path
       }
 
       def ivfBlock(): Unit = {
-        val ivfPath = run("ivf",
-          p => VectorIndex.writeStore(spark, sfDir, p),
-          (p, b, g) => VectorIndex.appendStore(spark, p, b, g),
-          (p, ids, g) => VectorIndex.deleteFromStore(spark, p, ids, g),
-          p => VectorIndex.compactStore(spark, p),
-          p => noop(VectorIndex.searchStore(spark, p, qv, k = 10, nprobe = 4)))
+        val ivfPath = run("ivf", VectorIndex.IvfLayout, nprobe = 4)
         // the ADC path against the same compacted store (codes column
         // maintained through the append/delete/compact cycle above)
         timed("ivf_pq_search_compacted")(
@@ -95,19 +92,11 @@ object LifecycleBench {
           gen = 5L)
         timed("ivf_compact_retrain")(
           VectorIndex.compactStore(spark, ivfPath, retrain = true))
-        timed("ivf_search_retrained")(
-          noop(VectorIndex.searchStore(spark, ivfPath, qv, k = 10, nprobe = 4)))
+        timed("ivf_search_retrained")(search(ivfPath, nprobe = 4))
       }
 
       def lshBlock(): Unit = {
-        run("lsh",
-          p => VectorIndex.writeLshStore(spark, sfDir, p),
-          (p, b, g) => VectorIndex.appendLshStore(spark, p, b, g),
-          (p, ids, g) => VectorIndex.deleteFromLshStore(spark, p, ids, g),
-          p => VectorIndex.compactLshStore(spark, p),
-          p => noop(VectorIndex.searchLshStore(spark, p, qv, k = 10,
-            probeHamming = 2)))
-        ()
+        run("lsh", VectorIndex.LshLayout, VectorIndex.LshProbes): Unit
       }
 
       if (reverseLayouts) { lshBlock(); ivfBlock() }

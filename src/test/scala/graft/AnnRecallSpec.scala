@@ -10,13 +10,14 @@ import graft.operators.{KnnSearch, VectorIndex}
   * queries are thereby backed by a failing-regression check.
   *
   * Measured on sf0.001 (this suite's corpus, deterministic end to end):
-  * ivf nprobe=4/16 → recall 0.9; lsh probeHamming=2 (37 of 256 buckets)
-  * → recall 0.7 with flip-cost multi-probe — the blind hamming-ball probe
-  * this round replaced measured 0.4 at the SAME probed-bucket count.
-  * The residual 0.3 is the approximation contract at a 14% IO budget on
-  * near-isotropic embeddings (top-10 sims sit ~0.3, so expected sign
-  * disagreement is ~3.2 of 8 planes); probeHamming=3 recovers it at 36%
-  * IO. The floors below are the exact measured values — everything in
+  * ivf nprobe=4/16 → recall 0.9; lsh nprobe=LshProbes (37 of 256
+  * buckets, the hamming-≤2 ball's size) → recall 0.7 with flip-cost
+  * multi-probe — the blind hamming-ball probe this round replaced
+  * measured 0.4 at the SAME probed-bucket count. The residual 0.3 is the
+  * approximation contract at a 14% IO budget on near-isotropic
+  * embeddings (top-10 sims sit ~0.3, so expected sign disagreement is
+  * ~3.2 of 8 planes); the hamming-≤3 budget (93 buckets) recovers it at
+  * 36% IO. The floors below are the exact measured values — everything in
   * the pipeline is deterministic, so any drop is a code regression.
   */
 class AnnRecallSpec extends SparkSpec {
@@ -31,14 +32,15 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("ivf store probe at graded nprobe=4 holds recall@10 >= 0.9") {
-    val r = recallAt10(VectorIndex.ivfSearchStore(spark, sfDir)
+    val r = recallAt10(VectorIndex.corpusSearch(spark, sfDir)
       .collect().map(_.getLong(0)).toSeq)
     info(f"ivf_search recall@10 = $r%.2f (nprobe=4 of ${VectorIndex.K})")
     assert(r >= 0.9, s"ivf recall regressed: $r")
   }
 
   test("lsh store probe at graded probeHamming=2 holds recall@10 >= 0.7") {
-    val r = recallAt10(VectorIndex.lshSearchStore(spark, sfDir)
+    val r = recallAt10(VectorIndex.corpusSearch(spark, sfDir,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)
       .collect().map(_.getLong(0)).toSeq)
     info(f"lsh_search recall@10 = $r%.2f (multi-probe, budget of hamming<=2 of 8 planes)")
     assert(r >= 0.7, s"lsh recall regressed: $r")

@@ -34,8 +34,8 @@ class ChurnParitySpec extends SparkSpec {
   private def lshReads(path: String): Seq[Any] = {
     val qv = KnnSearch.queryVector(spark, sfDir, 0L)
     Seq(
-      VectorIndex.searchLshStore(spark, path, qv, k = 10,
-        filter = Some(col("vec_id") =!= 0L))
+      VectorIndex.searchStore(spark, path, qv, k = 10,
+        nprobe = VectorIndex.LshProbes, filter = Some(col("vec_id") =!= 0L))
         .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq,
       VectorIndex.getByIds(spark, path, Seq(3L, 7L, 11L))
         .collect().map(r => (r.getLong(0), r.get(1), r.get(2)))
@@ -46,7 +46,7 @@ class ChurnParitySpec extends SparkSpec {
     val path = Files.createTempDirectory("churn_ivf").toString
     VectorIndex.writeStore(spark, sfDir, path)
     val before = ivfReads(path)
-    val gens = BranchVerify.churn(spark, path, isLsh = false)
+    val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2, "churn must write at least one generation pair")
     assert(!VectorIndex.isSingleGen(spark, path),
       "churn must force the multi-gen resolution branch")
@@ -60,14 +60,14 @@ class ChurnParitySpec extends SparkSpec {
 
   test("content-preserving churn leaves every LSH store read identical") {
     val path = Files.createTempDirectory("churn_lsh").toString
-    VectorIndex.writeLshStore(spark, sfDir, path)
+    VectorIndex.writeStore(spark, sfDir, path, layout = VectorIndex.LshLayout)
     val before = lshReads(path)
-    val gens = BranchVerify.churn(spark, path, isLsh = true)
+    val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2)
     assert(!VectorIndex.isSingleGen(spark, path))
     assert(lshReads(path) == before,
       "churned LSH store reads diverged from the un-churned store")
-    VectorIndex.compactLshStore(spark, path)
+    VectorIndex.compactStore(spark, path)
     assert(VectorIndex.isSingleGen(spark, path))
     assert(lshReads(path) == before)
   }

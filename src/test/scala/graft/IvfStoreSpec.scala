@@ -134,7 +134,8 @@ class IvfStoreSpec extends SparkSpec {
   }
 
   test("lsh store search prunes bucket partitions and matches the inline probe") {
-    val stored = VectorIndex.lshSearchStore(spark, sfDir)
+    val stored = VectorIndex.corpusSearch(spark, sfDir,
+      VectorIndex.LshLayout, nprobe = VectorIndex.LshProbes)
     val plan = stored.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [bucket_grp"),
       s"bucket partition filter not pushed:\n$plan")

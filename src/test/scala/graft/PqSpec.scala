@@ -61,7 +61,7 @@ class PqSpec extends SparkSpec {
       "the ADC scan must not read the embedding column")
     // and it agrees with the full-replay contract: top-10 ids are a
     // subset of the probed exact ranking at the same nprobe
-    val ivf = VectorIndex.ivfSearchStore(spark, sfDir, k = 50)
+    val ivf = VectorIndex.corpusSearch(spark, sfDir, k = 50)
       .collect().map(_.getLong(0)).toSet
     assert(res.collect().map(_.getLong(0)).forall(ivf.contains))
   }

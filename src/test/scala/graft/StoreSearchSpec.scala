@@ -256,7 +256,7 @@ class StoreSearchSpec extends SparkSpec {
 
   test("batch store probe equals per-query store probes; one scan, broadcast probe table") {
     import org.apache.spark.sql.functions.col
-    val batch = VectorIndex.batchIvfSearchStore(spark, sfDir)
+    val batch = VectorIndex.corpusBatchSearch(spark, sfDir)
     val plan = batch.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [centroid_id"),
       "the shared scan must prune at the union of all probe sets")
@@ -301,7 +301,7 @@ class StoreSearchSpec extends SparkSpec {
   test("annEval's summary equals the hand-joined recall of its two inputs") {
     val exact = graft.operators.KnnSearch.batchTopK(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-    val approx = VectorIndex.batchIvfSearchStore(spark, sfDir)
+    val approx = VectorIndex.corpusBatchSearch(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val recalls = exact.map { case (q, es) =>
       val a = approx.getOrElse(q, Array.empty).map(_._2).toSet

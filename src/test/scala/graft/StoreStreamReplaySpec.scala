@@ -31,28 +31,24 @@ class StoreStreamReplaySpec extends SparkSpec {
     val store = Files.createTempDirectory("replay_ivf").toString
     VectorIndex.writeStore(spark, sfDir, store)
     val batch = vecBatch(4100000L)
-    StoreStream.ingestVecBatch(spark, store, batch, gen = 3L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, batch, gen = 3L)
     val afterFirst = deltaRows(store)
     assert(afterFirst.nonEmpty && afterFirst.forall(_._2 == 3L))
     // the crash window: append committed, checkpoint lost, same batchId
     // replays
-    StoreStream.ingestVecBatch(spark, store, batch, gen = 3L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, batch, gen = 3L)
     assert(deltaRows(store) == afterFirst,
       "replayed vec micro-batch duplicated delta rows")
   }
 
   test("ingestVecBatch replay is a byte-level no-op on the LSH store") {
     val store = Files.createTempDirectory("replay_lsh").toString
-    VectorIndex.writeLshStore(spark, sfDir, store)
+    VectorIndex.writeStore(spark, sfDir, store, layout = VectorIndex.LshLayout)
     val batch = vecBatch(4200000L)
-    StoreStream.ingestVecBatch(spark, store, batch, gen = 5L,
-      VectorIndex.appendLshStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, batch, gen = 5L)
     val afterFirst = deltaRows(store)
     assert(afterFirst.nonEmpty && afterFirst.forall(_._2 == 5L))
-    StoreStream.ingestVecBatch(spark, store, batch, gen = 5L,
-      VectorIndex.appendLshStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, batch, gen = 5L)
     assert(deltaRows(store) == afterFirst,
       "replayed LSH vec micro-batch duplicated delta rows")
   }
@@ -81,8 +77,7 @@ class StoreStreamReplaySpec extends SparkSpec {
     assert(!VectorIndex.genExists(spark, store, 4L),
       "tombstone rows counted as an append receipt")
     // the stream's batch at the same gen must still land
-    StoreStream.ingestVecBatch(spark, store, vecBatch(4400000L), gen = 4L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, vecBatch(4400000L), gen = 4L)
     val appended = deltaRows(store).filter(r => r._2 == 4L && !r._3)
     assert(appended.nonEmpty, "ingest silently dropped after gen collision")
     assert(VectorIndex.genExists(spark, store, 4L))
@@ -92,8 +87,7 @@ class StoreStreamReplaySpec extends SparkSpec {
     val store = Files.createTempDirectory("replay_nextgen").toString
     VectorIndex.writeStore(spark, sfDir, store)
     assert(VectorIndex.nextGen(spark, store) == 1L) // base is gen 0
-    StoreStream.ingestVecBatch(spark, store, vecBatch(4500000L), gen = 5L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, vecBatch(4500000L), gen = 5L)
     assert(VectorIndex.nextGen(spark, store) == 6L)
     VectorIndex.deleteFromStore(spark, store, Seq(0L), gen = 9L)
     assert(VectorIndex.nextGen(spark, store) == 10L,
@@ -105,14 +99,12 @@ class StoreStreamReplaySpec extends SparkSpec {
     VectorIndex.writeStore(spark, sfDir, store)
     // seed the delta so the dir exists, then plant a stale _temporary as
     // a crashed job (task committed, job commit lost) would leave it
-    StoreStream.ingestVecBatch(spark, store, vecBatch(4600000L), gen = 1L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, vecBatch(4600000L), gen = 1L)
     val stale = java.nio.file.Paths.get(
       s"$store/vectors_delta/_temporary/0/task_000/")
     java.nio.file.Files.createDirectories(stale)
     java.nio.file.Files.writeString(stale.resolve("part-stale.parquet"), "x")
-    StoreStream.ingestVecBatch(spark, store, vecBatch(4700000L), gen = 2L,
-      VectorIndex.appendStore(_, store, _, _))
+    StoreStream.ingestVecBatch(spark, store, vecBatch(4700000L), gen = 2L)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$store/vectors_delta/_temporary/0/task_000")),
       "stale committed task dir survived into the new append's job")
@@ -135,7 +127,7 @@ class StoreStreamReplaySpec extends SparkSpec {
     // replayed batchId 1 to a fresh gen — the receipt would see nothing
     // there and the rows would double-append.
     StoreStream.ingestVecBatch(spark, store, vecBatch(4800000L),
-      gen = base + 1, VectorIndex.appendStore(_, store, _, _))
+      gen = base + 1)
     val afterCrashWindow = deltaRows(store)
     val base2 = StoreStream.durableStartGen(
       spark, store, ckpt, StoreStream.AutoGen)
@@ -144,7 +136,7 @@ class StoreStreamReplaySpec extends SparkSpec {
         "double-append at a fresh gen")
     // and the replayed batchId 1 is a byte-level no-op under that base
     StoreStream.ingestVecBatch(spark, store, vecBatch(4800000L),
-      gen = base2 + 1, VectorIndex.appendStore(_, store, _, _))
+      gen = base2 + 1)
     assert(deltaRows(store) == afterCrashWindow)
     // an explicit startGen cannot shift an existing checkpoint's mapping:
     // a MATCHING one is accepted, a CONFLICTING one throws (r17, VERDICT

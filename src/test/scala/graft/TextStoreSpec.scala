@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{TextAnalysis, TextStore}
+import graft.operators.{TextAnalysis, TextStore, VectorIndex}
 import graft.streaming.StoreStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -120,9 +120,10 @@ class TextStoreSpec extends SparkSpec {
 
   test("addTexts: same contract on the LSH layout") {
     val path = Files.createTempDirectory("text_store_lsh").toString
-    TextStore.writeLshChunkStore(spark, sfDir, path)
-    TextStore.addTextsLsh(spark, path, newTexts, gen = 1L)
-    val hits = TextStore.searchByTextLsh(spark, path, queryText, k = 5)
+    TextStore.writeChunkStore(spark, sfDir, path, VectorIndex.LshLayout)
+    TextStore.addTexts(spark, path, newTexts, gen = 1L)
+    val hits = TextStore.searchByText(spark, path, queryText, k = 5,
+      nprobe = VectorIndex.LshProbes)
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
     assert(hits.nonEmpty)
     assert(hits.forall { case (doc, _) => doc == 900001L || doc == 900002L },

@@ -301,8 +301,7 @@ class WriterLeaseSpec extends SparkSpec {
         .writeStream.option("checkpointLocation", ckpt)
         .foreachBatch { (b: DataFrame, id: Long) =>
           StoreStream.ingestVecBatch(b.sparkSession, store, b, base + id,
-            (s, df, g) => VectorIndex.appendStoreAs(s, store, df, g,
-              StoreStream.streamOwner(ckpt)))
+            StoreStream.streamOwner(ckpt))
         }
         .start()
     }
