@@ -588,8 +588,9 @@ object SparkEntry {
     * assignment (and query-side lookups) keep reading the full `eq`. */
   /** Bounded-training-sample replay over whatever `eq` the host chain
     * defined (embeddings-table vectors or computed chunk vectors) — the
-    * modulus sizes off the distinct vec_id count, exactly the Spark
-    * trainer's `trainingSample` over its input frame. */
+    * modulus sizes off the distinct vec_id count, exactly the
+    * `VectorIndex.trainingSample` the driver-side trainers collect from
+    * their input frame. */
   private val sampleCtes: String =
     """km AS (
       |  SELECT greatest(1, (count(DISTINCT vec_id) + 65535) // 65536) AS m

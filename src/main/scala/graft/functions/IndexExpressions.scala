@@ -32,27 +32,52 @@ object IndexOps {
   def quantize(v: Double): Long = math.floor(v * QScale + 0.5).toLong
   def quantizeMatrix(m: Array[Array[Float]]): Array[Array[Long]] =
     m.map(_.map(f => quantize(f.toDouble)))
-
-  /** index of the L2-nearest centroid over the quantized grid; result
-    * packs (idx, dist) with dist de-scaled back to embedding units.
-    * Ties break toward the smaller centroid id (strict `<`). */
-  def nearestCentroid(v: ArrayData, centroidsQ: Array[Array[Long]]): InternalRow = {
-    val x = v.toFloatArray()
+  def quantizeVec(x: Array[Float]): Array[Long] = {
     val q = new Array[Long](x.length)
     var i = 0
     while (i < x.length) { q(i) = quantize(x(i).toDouble); i += 1 }
+    q
+  }
+
+  /** Squared quantized L2 distance from `q[off, off + len)` to `ctr`. */
+  def sqDist(q: Array[Long], off: Int, len: Int, ctr: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < len) { val d = q(off + i) - ctr(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** The one assignment kernel: index of the L2-nearest centroid to
+    * `q[off, off + len)` over the quantized grid, -1 when there are none.
+    * Ties break toward the smaller centroid id (strict `<`). Serves the
+    * Spark-side assignment expression and the driver-side trainers alike,
+    * so build-time and training-time assignment cannot drift apart. */
+  def argmin(q: Array[Long], off: Int, len: Int,
+      centroidsQ: Array[Array[Long]]): Int = {
     var best = -1
     var bestD = Long.MaxValue
     var c = 0
     while (c < centroidsQ.length) {
-      val ctr = centroidsQ(c)
-      var s = 0L
-      i = 0
-      while (i < x.length) { val d = q(i) - ctr(i); s += d * d; i += 1 }
+      val s = sqDist(q, off, len, centroidsQ(c))
       if (s < bestD) { bestD = s; best = c }
       c += 1
     }
-    InternalRow(best, math.sqrt(bestD.toDouble) / QScale)
+    best
+  }
+
+  /** [[argmin]] over a whole quantized vector, as (idx, dist) with dist
+    * de-scaled back to embedding units. */
+  def nearest(q: Array[Long], centroidsQ: Array[Array[Long]]): (Int, Double) = {
+    val best = argmin(q, 0, q.length, centroidsQ)
+    val d2 =
+      if (best < 0) Long.MaxValue else sqDist(q, 0, q.length, centroidsQ(best))
+    (best, math.sqrt(d2.toDouble) / QScale)
+  }
+
+  /** The assignment expression's body: [[nearest]] over the row's vector. */
+  def nearestCentroid(v: ArrayData, centroidsQ: Array[Array[Long]]): InternalRow = {
+    val (best, dist) = nearest(quantizeVec(v.toFloatArray()), centroidsQ)
+    InternalRow(best, dist)
   }
 
   /** sign-bit signature over random hyperplanes (bit i = dot(v, plane_i) > 0). */

@@ -5,6 +5,7 @@ import graft.SessionState.key
 import graft.functions.{IndexFunctions, IndexOps, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** ANN index structures — the `index_enabled=True` path of the reference's
   * vector store (langchain_ydb builds a coarse quantized index offline; the
@@ -12,13 +13,13 @@ import org.apache.spark.sql.functions._
   * to the exact scan in KnnSearch).
   *
   * IVF here is Lloyd's k-means with deterministic seeding. The centroid set
-  * is model state, not data: k·dim floats live on the driver and broadcast
-  * into a native assignment expression, so each iteration is one map-only
-  * scan plus a (cluster, dim)-keyed partial aggregation — at 100 TB the
-  * per-iteration shuffle traffic is k·dim·partitions numbers, independent
-  * of corpus size. The built store, written partitioned by centroid_id,
-  * turns `nprobe`-cluster search into partition-pruned reads of nprobe/k
-  * of the data.
+  * is model state, not data: it trains on the driver over a bounded,
+  * deterministic sample of the vectors ([[MaxTrain]] rows, collected by
+  * one count and one collect whatever the corpus size), and the trained
+  * k·dim floats broadcast into a native assignment expression that places
+  * every vector in one map-only scan. The built store, written partitioned
+  * by centroid_id, turns `nprobe`-cluster search into partition-pruned
+  * reads of nprobe/k of the data.
   *
   * The store CRUD contract (the reference's `add_texts` / `delete` /
   * search surface, langchain_ydb 0.0.8) is index-type-independent, so it
@@ -43,11 +44,13 @@ object VectorIndex {
   final val LshProbes = hammingBall(StorePlanes, 2)
 
   /** Training-sample cap for the Lloyd/PQ trainers: centroid quality does
-    * not need every row, and caching a 100 TB corpus for 5 iterations is
-    * petabyte-class cache pressure — so training runs on a deterministic
-    * vec_id-hash slice of at most ~MaxTrain rows (~16 MB at dim 64). At
-    * every test SF the corpus is under the cap, so the sample is the whole
-    * table and the trained model is unchanged. */
+    * not need every row, so training runs on a deterministic vec_id-hash
+    * slice of about MaxTrain rows, collected to the driver. That bounds the
+    * trainers' driver memory at any corpus size: about MaxTrain × dim
+    * values (the slice overshoots the cap only by its sampling noise), held
+    * as quantized Longs — ~32 MB at dim 64. At every test SF the corpus is
+    * under the cap, so the sample is the whole table and the trained model
+    * is unchanged. */
   final val MaxTrain = 65536
 
   /** The sample modulus: keep a row iff hash(vec_id) % keepMod == 0. */
@@ -66,24 +69,63 @@ object VectorIndex {
         lit(2305843009213693951L)),
       lit(keepMod)) === 0
 
+  /** A training sample held on the driver. `points` are the sampled
+    * vectors on the [[IndexOps.QScale]] grid in vec_id order; `seeds` are
+    * the raw vectors of the K smallest sampled vec_ids. `frame` is the
+    * sampled Spark frame, for a trainer that still runs in Spark (the
+    * MLlib init of [[compactStore]]'s retrain). */
+  private[graft] final class TrainingSample(
+      val frame: DataFrame, val keepMod: Long,
+      val seeds: Array[Array[Float]], val points: Array[Array[Long]],
+      val collectMs: Long)
+
   /** Deterministic bounded training sample of any (vec_id, embedding)
-    * frame; identity when the frame is under the cap. One count job (for
-    * parquet sources a metadata read) sizes the modulus. */
-  private def trainingSample(emb: DataFrame, maxTrain: Int): DataFrame = {
+    * frame, identity when the frame is under the cap, collected to the
+    * driver: one count (for parquet sources a metadata read) sizes the
+    * modulus, then one collect. Rows without an embedding carry no vector
+    * and are left out. */
+  private[graft] def trainingSample(
+      embIn: DataFrame, maxTrain: Int): TrainingSample = {
+    val t0 = System.nanoTime()
+    val emb = embIn.select(col("vec_id"), col("embedding"))
     val keepMod = sampleKeepMod(emb.count(), maxTrain)
-    if (keepMod == 1L) emb else emb.where(samplePredicate(keepMod))
+    val frame = if (keepMod == 1L) emb else emb.where(samplePredicate(keepMod))
+    val vecs = frame.select(col("vec_id").cast("long"), col("embedding"))
+      .collect().filterNot(_.isNullAt(1)).sortBy(_.getLong(0))
+      .map(_.getSeq[Float](1).toArray)
+    new TrainingSample(frame, keepMod, vecs.take(K),
+      vecs.map(IndexOps.quantizeVec), (System.nanoTime() - t0) / 1000000)
   }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Run one trainer over a held sample and log it at INFO: the model,
+    * the sample's rows and keepMod, its collect ms and the driver ms. */
+  private def logTrained[T](what: String, s: TrainingSample)(
+      train: => T): T = {
+    val t0 = System.nanoTime()
+    val out = train
+    log.info(s"trained $what from ${s.points.length} sample rows " +
+      s"(keepMod ${s.keepMod}): collect ${s.collectMs} ms, " +
+      s"driver ${(System.nanoTime() - t0) / 1000000} ms")
+    out
+  }
+
+  private def centroidsEntry(sfDir: String)(
+      s: => TrainingSample): Array[Array[Float]] =
+    SessionState.getOrBuild(key("centroids", sfDir))(lloydOn(s))
 
   /** Deterministic k-means: init = embeddings of the k smallest vec_ids,
     * then `Iters` Lloyd iterations. Returns driver-side centroid matrix. */
   def trainCentroids(spark: SparkSession, sfDir: String): Array[Array[Float]] =
-    SessionState.getOrBuild(key("centroids", sfDir))(
-      trainLloyd(Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"))))
+    centroidsEntry(sfDir)(
+      trainingSample(Tables.embeddings(spark, sfDir), MaxTrain))
 
-  /** The Lloyd loop over any (vec_id, embedding) frame — shared by the
-    * sfDir-keyed trainer above and [[compactStore]]'s retrain path (which
-    * trains on the store's own live rows).
+  /** The Lloyd trainer over any (vec_id, embedding) frame — shared by the
+    * sfDir-keyed trainer above, [[writeVectorStore]] and (through the same
+    * sample and loop) [[compactStore]]'s retrain. Its Spark work is the
+    * [[trainingSample]]'s count and collect, whatever `Iters` is: the
+    * iterations run on the driver over the held sample.
     *
     * The arithmetic is fixed-point over [[IndexOps.QScale]] Longs:
     * assignment compares integer squared distances (exact, tie to the
@@ -97,151 +139,60 @@ object VectorIndex {
     * IVF query family from rows-only checks to hash-matching SQL oracles.
     *
     * Training input is the deterministic [[trainingSample]] slice (seeds
-    * included — the K smallest SAMPLED vec_ids), so the cached working set
-    * is bounded by [[MaxTrain]] rows regardless of corpus size; the
-    * oracle replays the sample predicate, and the fixed-point determinism
-    * story is unchanged because the sample itself is engine-independent. */
+    * included — the K smallest SAMPLED vec_ids), so the driver holds at
+    * most about [[MaxTrain]] rows regardless of corpus size; the oracle
+    * replays the sample predicate, and the fixed-point determinism story
+    * is unchanged because the sample itself is engine-independent. */
   private[graft] def trainLloyd(
-      embIn: DataFrame, maxTrain: Int = MaxTrain): Array[Array[Float]] = {
-    val emb = trainingSample(
-      embIn.select(col("vec_id"), col("embedding")), maxTrain)
-    val seeds: Array[Array[Float]] = emb
-      .orderBy(col("vec_id"))
-      .limit(K)
-      .collect()
-      .map(_.getSeq[Float](1).toArray)
-    lloydIterate(emb, seeds)
-  }
+      embIn: DataFrame, maxTrain: Int = MaxTrain): Array[Array[Float]] =
+    lloydOn(trainingSample(embIn, maxTrain))
 
-  /** The Lloyd iteration loop from an EXPLICIT init over an
-    * already-sampled (vec_id, embedding) frame — the body [[trainLloyd]]
-    * always had, extracted (r18) so [[compactStore]]'s retrain can
-    * REFINE the k-means|| seeding: the storeHealth drift study measured
-    * MLlib's un-refined centers serving recall 0.56 on a corpus whose
-    * rotation-symmetry proves an 0.88-recall clustering exists — the
-    * distance-weighted init finds the right REGIONS (what retrain needs
-    * for out-of-distribution mass), and these fixed-point iterations
-    * then do the local convergence MLlib's own iterations left on the
-    * table at this seed. */
+  private def lloydOn(s: TrainingSample): Array[Array[Float]] =
+    logTrained("IVF centroids", s)(lloydIterate(s.points, 0, s.seeds))
+
+  /** The Lloyd iteration loop on the driver from an EXPLICIT init, over
+    * the coordinates `[off, off + width)` of held quantized points, where
+    * `width` is the init's: the whole vector for IVF, one subspace for PQ.
+    * Each iteration assigns every point with the shared
+    * [[IndexOps.argmin]] kernel (the one the assignment expression runs)
+    * and moves each centroid with members to the half-up integer mean; a
+    * centroid with no members keeps its value. [[compactStore]]'s retrain
+    * also runs it from the MLlib k-means|| init (r18): the storeHealth
+    * drift study measured MLlib's un-refined centers serving recall 0.56
+    * on a corpus whose rotation-symmetry proves an 0.88-recall clustering
+    * exists — the distance-weighted init finds the right REGIONS (what
+    * retrain needs for out-of-distribution mass), and these fixed-point
+    * iterations then do the local convergence MLlib's own iterations left
+    * on the table at this seed. */
   private[graft] def lloydIterate(
-      emb: DataFrame, init: Array[Array[Float]]): Array[Array[Float]] = {
+      points: Array[Array[Long]], off: Int,
+      init: Array[Array[Float]]): Array[Array[Float]] = {
+    val width = if (init.isEmpty) 0 else init(0).length
     var centroids = init
-    emb.cache()
-    try {
-      for (_ <- 1 to Iters) {
-        // one codegen'd scan assigns; partial sums shuffle only
-        // (cluster, dim) keys — k·dim rows total to the driver
-        val sums = emb
-          .select(IndexFunctions.nearestCentroid(col("embedding"), centroids)
-            .getField("centroid_id").as("cid"), col("embedding"))
-          .select(col("cid"), posexplode(col("embedding")).as(Seq("dim", "v")))
-          .groupBy(col("cid"), col("dim"))
-          .agg(sum(floor(col("v").cast("double") * IndexOps.QScale + 0.5)
-            .cast("long")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = centroids.map(_.clone())
-        sums.foreach { r =>
-          val cq = Math.floorDiv(2L * r.getLong(2) + r.getLong(3),
-            2L * r.getLong(3))
-          next(r.getInt(0))(r.getInt(1)) = (cq.toDouble / IndexOps.QScale).toFloat
-        }
-        centroids = next
+    for (_ <- 1 to Iters) {
+      val prev = centroids
+      val cq = IndexOps.quantizeMatrix(prev)
+      val sums = Array.ofDim[Long](cq.length, width)
+      val n = new Array[Long](cq.length)
+      points.foreach { p =>
+        val c = IndexOps.argmin(p, off, width, cq)
+        n(c) += 1
+        var d = 0
+        while (d < width) { sums(c)(d) += p(off + d); d += 1 }
       }
-    } finally emb.unpersist()
+      centroids = Array.tabulate(cq.length)(c =>
+        if (n(c) == 0) prev(c)
+        else Array.tabulate(width)(d =>
+          deQuantize(Math.floorDiv(2L * sums(c)(d) + n(c), 2L * n(c)))))
+    }
     centroids
   }
 
-  /** Fused corpus-model trainer: ONE sampled cache, ONE seed collect, and
-    * ONE scan per iteration train BOTH the IVF centroids and all [[PqM]]
-    * PQ codebooks. [[trainLloyd]] and [[trainPq]] each run `count + seed
-    * collect + Iters` sequential driver-blocking jobs over the same
-    * sample — on this host's ~0.5 s job floor that tower, not data
-    * volume, was the measured bulk of `ivf_build`'s lifecycle cost
-    * (VERDICT r7 item 5). The fused per-iteration aggregate groups by the
-    * joint (ivf_cid, sub, pq_cid, dim) key (≤ K·PqM·K·PqSubDim = 16k
-    * partial rows) and the driver marginalizes: the IVF sums ignore
-    * (sub, pq_cid), the PQ sums ignore ivf_cid. Integer sums re-associate
-    * freely over a partition of the same rows, so the trained models are
-    * BIT-IDENTICAL to the separate trainers' (LloydDeterminismSpec pins
-    * it) and every IVF/PQ oracle replay is untouched. */
-  private[graft] def trainLloydPqFused(
-      embIn: DataFrame, maxTrain: Int = MaxTrain)
-      : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val emb = trainingSample(
-      embIn.select(col("vec_id"), col("embedding")), maxTrain)
-    emb.cache()
-    try {
-      val seedRows = emb.orderBy(col("vec_id")).limit(K).collect()
-        .map(_.getSeq[Float](1).toArray)
-      var centroids: Array[Array[Float]] = seedRows
-      var cb: Array[Array[Array[Long]]] = Array.tabulate(PqM)(s =>
-        seedRows.map(r => Array.tabulate(PqSubDim)(d =>
-          IndexOps.quantize(r(s * PqSubDim + d).toDouble))))
-      val dims = centroids(0).length
-      for (_ <- 1 to Iters) {
-        val sums = emb
-          .select(
-            IndexFunctions.nearestCentroid(col("embedding"), centroids)
-              .getField("centroid_id").as("ivf_cid"),
-            pqCodesCol(deQuantize(cb)).as("codes"),
-            posexplode(col("embedding")).as(Seq("dim", "v")))
-          .select(col("ivf_cid"),
-            expr(s"cast(dim div $PqSubDim as int)").as("sub"),
-            element_at(col("codes"),
-              expr(s"cast(dim div $PqSubDim as int) + 1")).as("pq_cid"),
-            col("dim"),
-            floor(col("v").cast("double") * IndexOps.QScale + 0.5)
-              .cast("long").as("q"))
-          .groupBy(col("ivf_cid"), col("sub"), col("pq_cid"), col("dim"))
-          .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val ivfS = Array.ofDim[Long](centroids.length, dims)
-        val ivfN = Array.ofDim[Long](centroids.length, dims)
-        val pqS = Array.ofDim[Long](PqM, K, PqSubDim)
-        val pqN = Array.ofDim[Long](PqM, K, PqSubDim)
-        sums.foreach { r =>
-          val (ivfCid, sub, pqCid, dim) =
-            (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-          val (s, n) = (r.getLong(4), r.getLong(5))
-          ivfS(ivfCid)(dim) += s; ivfN(ivfCid)(dim) += n
-          val d = dim - sub * PqSubDim
-          pqS(sub)(pqCid)(d) += s; pqN(sub)(pqCid)(d) += n
-        }
-        val nextC = centroids.map(_.clone())
-        for (c <- ivfS.indices; d <- 0 until dims if ivfN(c)(d) > 0) {
-          val cq = Math.floorDiv(2L * ivfS(c)(d) + ivfN(c)(d), 2L * ivfN(c)(d))
-          nextC(c)(d) = (cq.toDouble / IndexOps.QScale).toFloat
-        }
-        centroids = nextC
-        val nextCb = cb.map(_.map(_.clone()))
-        for (s <- 0 until PqM; c <- cb(s).indices; d <- 0 until PqSubDim
-             if pqN(s)(c)(d) > 0)
-          nextCb(s)(c)(d) =
-            Math.floorDiv(2L * pqS(s)(c)(d) + pqN(s)(c)(d), 2L * pqN(s)(c)(d))
-        cb = nextCb
-      }
-      (centroids, deQuantize(cb))
-    } finally emb.unpersist()
-  }
-
-  /** Build BOTH corpus model entries from one fused trainer run when
-    * neither is built — the store-build path trains centroids AND
-    * codebooks, and paying two separate job towers for one build is the
-    * measured `ivf_build` floor. Otherwise the cached getters serve;
-    * with exactly ONE model already cached the separate tower for the
-    * other is cost-neutral vs re-running the fused trainer (one tower of
-    * jobs either way), so no special case is needed. */
-  private def trainedCorpusModels(
-      spark: SparkSession, sfDir: String)
-      : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val (ck, pk) = (key("centroids", sfDir), key("pqcodebooks", sfDir))
-    if (SessionState.get(ck).isEmpty && SessionState.get(pk).isEmpty) {
-      lazy val fused = trainLloydPqFused(Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding")))
-      (SessionState.getOrBuild(ck)(fused._1),
-        SessionState.getOrBuild(pk)(fused._2))
-    } else (trainCentroids(spark, sfDir), trainPqCodebooks(spark, sfDir))
-  }
+  /** |cq| < 2^24 so the de-scaled float is exact and re-quantizes to the
+    * same integer — model coordinates round-trip between the integer
+    * trainer and the float-typed assignment expression losslessly. */
+  private def deQuantize(q: Long): Float =
+    (q.toDouble / IndexOps.QScale).toFloat
 
   /** MLlib trainer for the same IVF geometry — "MLlib for batch indexing":
     * `ml.clustering.KMeans` (k-means||, fixed seed) trains the centroid
@@ -952,15 +903,23 @@ object VectorIndex {
     * Lloyd centroids on the frame itself, the LSH layout draws
     * [[StorePlanes]] hyperplanes of the frame's embedding dim. The
     * text-ingestion path ([[TextStore]]) builds its chunk store through
-    * this. */
+    * this.
+    *
+    * The frame is persisted (MEMORY_AND_DISK) for the build unless the
+    * caller already cached it, so the sample's count, its collect and the
+    * partitioned write share ONE computation of the vectors — for a
+    * computed frame such as the featurized chunks, each would otherwise
+    * recompute them. */
   def writeVectorStore(
       spark: SparkSession, vectors: DataFrame, path: String,
       layout: StoreLayout = IvfLayout): Unit = {
-    val model =
-      if (layout == IvfLayout)
-        trainLloyd(vectors.select(col("vec_id"), col("embedding")))
-      else lshPlanes(vectors)
-    writeVectorsAt(spark, vectors, path, layout, model, pqCb = None)
+    val persist = vectors.storageLevel == StorageLevel.NONE
+    if (persist) vectors.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val model =
+        if (layout == IvfLayout) trainLloyd(vectors) else lshPlanes(vectors)
+      writeVectorsAt(spark, vectors, path, layout, model, pqCb = None)
+    } finally if (persist) vectors.unpersist()
   }
 
   /** The LSH layout's data-independent model: [[StorePlanes]] hyperplanes
@@ -983,26 +942,24 @@ object VectorIndex {
       spark: SparkSession, sfDir: String, path: String,
       trained: Option[Array[Array[Float]]] = None,
       layout: StoreLayout = IvfLayout): Unit = {
-    val model =
-      if (layout == IvfLayout) {
-        // the IVF build needs centroids AND PQ codebooks (the write
-        // persists codes): warm both caches through the fused single-tower
-        // trainer instead of paying two sequential job towers
-        if (trained.isEmpty) trainedCorpusModels(spark, sfDir): Unit
-        trained.getOrElse(trainCentroids(spark, sfDir))
-      } else {
+    // the IVF layout also persists PQ codes per vector (IVF-PQ): trained
+    // once per corpus, assigned in the same codegen'd write pass, so the
+    // ADC search can scan the 8-byte code column instead of the embedding.
+    // Whichever corpus model is not yet a session entry trains from ONE
+    // collect of the corpus sample.
+    lazy val sample = trainingSample(Tables.embeddings(spark, sfDir), MaxTrain)
+    val (model, pqCb) =
+      if (layout == IvfLayout)
+        (trained.getOrElse(centroidsEntry(sfDir)(sample)),
+          Some(pqEntry(sfDir)(sample)))
+      else {
         require(trained.isEmpty,
           "writeStore: `trained` centroids apply to the IVF layout only — " +
             "the LSH layout's hyperplanes are data-independent")
-        lshPlanes(Tables.embeddings(spark, sfDir))
+        (lshPlanes(Tables.embeddings(spark, sfDir)), None)
       }
     val metadata = Tables.documents(spark, sfDir)
       .select(col("doc_id"), KnnSearch.metadataJson.as("metadata"))
-    // the IVF layout also persists PQ codes per vector (IVF-PQ): trained
-    // once per corpus, assigned in the same codegen'd write pass, so the
-    // ADC search can scan the 8-byte code column instead of the embedding
-    val pqCb =
-      if (layout == IvfLayout) Some(trainPqCodebooks(spark, sfDir)) else None
     val vectors = Tables.embeddings(spark, sfDir)
       .join(metadata, col("vec_id") === col("doc_id"), "left")
       .select(col("vec_id"), col("label"), col("embedding"), col("metadata"))
@@ -1151,33 +1108,34 @@ object VectorIndex {
     // once instead of per query)
     val live = resolvedRead(spark, path, Seq("label", "embedding", "metadata"))
     if (retrain) {
-      // the resolved frame feeds both the trainer and the rewrite: cache
-      // it so the k-means iterations don't re-fold the generations per
-      // pass. Retrain is MULTI-INIT (r18): neither seeding wins
+      // the resolved frame feeds both the sample and the rewrite: cache
+      // it so they don't each re-fold the generations. Retrain is
+      // MULTI-INIT (r18): neither seeding wins
       // everywhere — k-means||'s distance-weighted init is what lets
       // appended out-of-distribution clusters claim their own centroids
       // (smallest-id seeds can't split mass they never saw), but the
       // storeHealth drift study measured it serving recall 0.56 on a
       // turned-over corpus whose rotation-symmetry proves the
       // deterministic seeding's 0.88 clustering exists. So retrain
-      // trains BOTH candidates over the same bounded sample — the
+      // trains BOTH candidates over one driver-held sample — the
       // deterministic Lloyd and the ML init refined by the same
       // fixed-point iterations — and keeps the lower quantized
       // distortion (an order-independent integer sum; ties prefer the
-      // deterministic candidate). Cost: two bounded trainer towers on a
-      // rare maintenance op.
-      live.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val emb = live.select(col("vec_id"), col("embedding"))
-      val sample = trainingSample(emb, MaxTrain)
-      val candDet = trainLloyd(sample)
-      val candMl = lloydIterate(sample,
-        trainMLFrame(sample.select(col("embedding"))))
-      def distortion(cand: Array[Array[Float]]): Long = sample
-        .select(floor(pow(
-          IndexFunctions.nearestCentroid(col("embedding"), cand)
-            .getField("dist") * IndexOps.QScale, 2) + 0.5)
-          .cast("long").as("d2"))
-        .agg(sum(col("d2"))).collect().head.getLong(0)
+      // deterministic candidate). The PQ re-fit below trains on the same
+      // sample; only its count, its collect and MLlib's k-means|| init
+      // run in Spark.
+      live.persist(StorageLevel.MEMORY_AND_DISK)
+      val sample = trainingSample(live, MaxTrain)
+      val candDet = lloydOn(sample)
+      val mlInit = trainMLFrame(sample.frame)
+      val candMl = logTrained("IVF centroids from the k-means|| init", sample)(
+        lloydIterate(sample.points, 0, mlInit))
+      // per point, floor((dist · QScale)² + 0.5) of its nearest centroid
+      def distortion(cand: Array[Array[Float]]): Long = {
+        val cq = IndexOps.quantizeMatrix(cand)
+        sample.points.iterator.map(p => math.floor(StrictMath.pow(
+          IndexOps.nearest(p, cq)._2 * IndexOps.QScale, 2) + 0.5).toLong).sum
+      }
       val c = if (distortion(candDet) <= distortion(candMl)) candDet
               else candMl
       writeModelTable(spark, s"$path/centroids_retrain", IvfLayout, c)
@@ -1191,7 +1149,7 @@ object VectorIndex {
       // centroids (pq_retrain) and swapped only with the matching
       // vectors layout, so new codes never serve old codebooks.
       val pqRetrained =
-        if (hasPqModel(spark, path)) Some(trainPq(emb)) else None
+        if (hasPqModel(spark, path)) Some(pqOn(sample)) else None
       pqRetrained.foreach(cb =>
         writePqModelTableAt(spark, s"$path/pq_retrain", cb))
       rewriteAndSwap(spark, path, layout, live, c, stagedModel = true,
@@ -2113,12 +2071,15 @@ object VectorIndex {
   final val PqM = 8 // subspaces
   final val PqSubDim = 8 // dims per subspace (embedding dim 64 / PqM)
 
+  private def pqEntry(sfDir: String)(
+      s: => TrainingSample): Array[Array[Array[Float]]] =
+    SessionState.getOrBuild(key("pqcodebooks", sfDir))(pqOn(s))
+
   /** Per-subspace codebooks `[sub][cid][dim]`, trained once per sfDir. */
   def trainPqCodebooks(
       spark: SparkSession, sfDir: String): Array[Array[Array[Float]]] =
-    SessionState.getOrBuild(key("pqcodebooks", sfDir))(
-      trainPq(Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"))))
+    pqEntry(sfDir)(
+      trainingSample(Tables.embeddings(spark, sfDir), MaxTrain))
 
   /** Product-quantizer trainer: independent K-code Lloyd per subspace,
     * run over the SAME fixed-point integer arithmetic as [[trainLloyd]]
@@ -2127,61 +2088,22 @@ object VectorIndex {
     * bit-identical on any engine/partitioning and the PQ queries carry
     * full-replay SQL oracles like the IVF family.
     *
-    * Scale shape: all `PqM` subspaces train in ONE distributed pass per
-    * iteration — a single codegen'd scan assigns every subspace (the
-    * codebooks ride in the task closure), and the update shuffles only
-    * (sub, code, dim) partial sums: ≤ PqM·K·PqSubDim = 1024 rows to the
-    * driver. Per-iteration cost is identical to the single-space IVF
-    * trainer despite the 8 codebooks. */
+    * Like [[trainLloyd]], its Spark work is the [[trainingSample]]'s count
+    * and collect; each subspace's [[lloydIterate]] then runs on the driver
+    * over its slice of the held points. */
   private[graft] def trainPq(
       embIn: DataFrame,
-      maxTrain: Int = MaxTrain): Array[Array[Array[Float]]] = {
-    val emb = trainingSample(
-      embIn.select(col("vec_id"), col("embedding")), maxTrain)
-    emb.cache()
-    try {
-      // seeds: the K smallest vec_ids, sliced per subspace (same seed rule
-      // as trainLloyd, replayed by the oracle's `seeds` CTE)
-      var cb: Array[Array[Array[Long]]] = {
-        val rows = emb.orderBy(col("vec_id")).limit(K).collect()
-          .map(_.getSeq[Float](1).toArray)
-        Array.tabulate(PqM)(s => rows.map(r =>
-          Array.tabulate(PqSubDim)(d =>
-            IndexOps.quantize(r(s * PqSubDim + d).toDouble))))
-      }
-      for (_ <- 1 to Iters) {
-        val sums = emb
-          .select(pqCodesCol(deQuantize(cb)).as("codes"),
-            posexplode(col("embedding")).as(Seq("dim", "v")))
-          .select(
-            expr("cast(dim div 8 as int)").as("sub"),
-            element_at(col("codes"), expr("cast(dim div 8 as int) + 1"))
-              .as("cid"),
-            col("dim"),
-            floor(col("v").cast("double") * IndexOps.QScale + 0.5)
-              .cast("long").as("q"))
-          .groupBy(col("sub"), col("cid"), col("dim"))
-          .agg(sum(col("q")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = cb.map(_.map(_.clone()))
-        sums.foreach { r =>
-          val (sub, cid, dim) = (r.getInt(0), r.getInt(1), r.getInt(2))
-          val cq = Math.floorDiv(2L * r.getLong(3) + r.getLong(4),
-            2L * r.getLong(4))
-          next(sub)(cid)(dim - sub * PqSubDim) = cq
-        }
-        cb = next
-      }
-      deQuantize(cb)
-    } finally emb.unpersist()
-  }
+      maxTrain: Int = MaxTrain): Array[Array[Array[Float]]] =
+    pqOn(trainingSample(embIn, maxTrain))
 
-  /** |cq| < 2^24 so the de-scaled float is exact and re-quantizes to the
-    * same integer — the codebook round-trips between the integer trainer
-    * and the float-typed assignment expression losslessly. */
-  private def deQuantize(
-      cb: Array[Array[Array[Long]]]): Array[Array[Array[Float]]] =
-    cb.map(_.map(_.map(q => (q.toDouble / IndexOps.QScale).toFloat)))
+  /** Seeds: the K smallest sampled vec_ids, sliced per subspace and put on
+    * the quantized grid (same seed rule as trainLloyd, replayed by the
+    * oracle's `seeds` CTE). */
+  private def pqOn(s: TrainingSample): Array[Array[Array[Float]]] =
+    logTrained("PQ codebooks", s)(Array.tabulate(PqM)(sub =>
+      lloydIterate(s.points, sub * PqSubDim, s.seeds.map(r =>
+        Array.tabulate(PqSubDim)(d =>
+          deQuantize(IndexOps.quantize(r(sub * PqSubDim + d).toDouble)))))))
 
   /** The PQ code vector as ONE map-only column: per subspace, the
     * fixed-point nearest-code assignment over the sliced embedding (the

@@ -27,20 +27,79 @@ class LloydDeterminismSpec extends SparkSpec {
     assert(flat(base) == flat(single))
   }
 
-  test("fused IVF+PQ training is bit-identical to the separate trainers") {
-    // the r9 ivf_build fusion: one scan per iteration computes the joint
-    // (ivf_cid, sub, pq_cid, dim) partial sums and the driver
-    // marginalizes — integer sums re-associated over a partition of the
-    // same rows MUST reproduce both models exactly, or every IVF/PQ
-    // oracle replay would silently break
-    val (fusedC, fusedCb) = VectorIndex.trainLloydPqFused(emb)
-    val sepC = VectorIndex.trainLloyd(emb)
-    val sepCb = VectorIndex.trainPq(emb)
-    assert(flat(fusedC) == flat(sepC),
-      "fused centroids diverged from trainLloyd")
-    assert(fusedCb.map(_.map(_.toSeq).toSeq).toSeq ==
-      sepCb.map(_.map(_.toSeq).toSeq).toSeq,
-      "fused PQ codebooks diverged from trainPq")
+  /** The Spark aggregate loop the trainers ran before they moved to the
+    * driver, kept as the comparison: sample and seeds in Spark, then per
+    * iteration one assignment scan and a (cluster, dim)-keyed integer-sum
+    * aggregate collected to the driver — for IVF over the whole vector,
+    * for PQ over each subspace's slice. */
+  private object SparkLoop {
+    import VectorIndex.{Iters, K, PqM, PqSubDim}
+    import graft.functions.IndexFunctions
+    import org.apache.spark.sql.{Column, DataFrame}
+
+    private def sample(emb: DataFrame, maxTrain: Int): DataFrame = {
+      val keepMod = VectorIndex.sampleKeepMod(emb.count(), maxTrain)
+      if (keepMod == 1L) emb else emb.where(VectorIndex.samplePredicate(keepMod))
+    }
+    private def deQ(q: Long): Float = (q.toDouble / IndexOps.QScale).toFloat
+    private def qCol(v: Column): Column =
+      floor(v.cast("double") * IndexOps.QScale + 0.5).cast("long")
+
+    /** Lloyd over `width` dims from `off` of every row, from `init`. */
+    private def loop(s: DataFrame, off: Int,
+        init: Array[Array[Float]]): Array[Array[Float]] = {
+      val width = init(0).length
+      var cs = init
+      for (_ <- 1 to Iters) {
+        val sums = s
+          .select(IndexFunctions.nearestCentroid(
+              slice(col("embedding"), off + 1, width), cs)
+            .getField("centroid_id").as("cid"),
+            posexplode(slice(col("embedding"), off + 1, width))
+              .as(Seq("dim", "v")))
+          .groupBy(col("cid"), col("dim"))
+          .agg(sum(qCol(col("v"))).as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = cs.map(_.clone())
+        sums.foreach { r =>
+          next(r.getInt(0))(r.getInt(1)) = deQ(Math.floorDiv(
+            2L * r.getLong(2) + r.getLong(3), 2L * r.getLong(3)))
+        }
+        cs = next
+      }
+      cs
+    }
+
+    def train(emb: DataFrame, maxTrain: Int)
+        : (Array[Array[Float]], Array[Array[Array[Float]]]) = {
+      val s = sample(emb, maxTrain).cache()
+      try {
+        val seeds = s.orderBy(col("vec_id")).limit(K).collect()
+          .map(_.getSeq[Float](1).toArray)
+        val pqSeeds = (sub: Int) => seeds.map(r => Array.tabulate(PqSubDim)(d =>
+          deQ(IndexOps.quantize(r(sub * PqSubDim + d).toDouble))))
+        (loop(s, 0, seeds),
+          Array.tabulate(PqM)(sub => loop(s, sub * PqSubDim, pqSeeds(sub))))
+      } finally s.unpersist()
+    }
+  }
+
+  private def nested(cb: Array[Array[Array[Float]]]) =
+    cb.map(_.map(_.toSeq).toSeq).toSeq
+
+  test("driver trainers are bit-identical to the Spark aggregate loop") {
+    // the trained models are the oracle-replayed contract: moving the
+    // iterations from Spark aggregates to the driver must reproduce the
+    // centroids and all 8 codebooks exactly, with the sample at the
+    // identity (default cap) and with hash sampling engaged (cap 100)
+    for (cap <- Seq(VectorIndex.MaxTrain, 100)) {
+      val (refC, refCb) = SparkLoop.train(emb, cap)
+      assert(refCb.length == VectorIndex.PqM)
+      assert(flat(VectorIndex.trainLloyd(emb, maxTrain = cap)) == flat(refC),
+        s"driver centroids diverged from the Spark loop at cap $cap")
+      assert(nested(VectorIndex.trainPq(emb, maxTrain = cap)) == nested(refCb),
+        s"driver PQ codebooks diverged from the Spark loop at cap $cap")
+    }
   }
 
   test("sampled training equals training on the explicit sample slice") {
