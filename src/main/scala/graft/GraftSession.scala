@@ -28,18 +28,13 @@ object GraftSession {
     // bench/r12_spill_sf100.json). Small-SF queries do not pay for the
     // 3× start because coalescing (parallelismFirst, the default) merges
     // post-shuffle partitions down to core count. shuffle.partitions
-    // remains the non-adaptive fallback floor at one-per-core;
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS pins BOTH knobs for A/B probes.
-    val shufflePartitions = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString)
-    val initialPartitions = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", (3 * cores).toString)
+    // remains the non-adaptive fallback floor at one-per-core.
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitions)
+        (3 * cores).toString)
       // Floor on scan parallelism for small-but-dense inputs. The dup-heavy
       // corpora compress ~100:1, so a CPU-heavy scan stage (featurize,
       // simhash, quality) can arrive as 1-2 byte-range splits and serialize
@@ -105,10 +100,7 @@ object GraftSession {
       // at-scale configuration already uses (its in-memory partition-id
       // sort is the cost, paid only while a shuffle's data is small
       // enough that the buffer never spills).
-      // (env override SPARK_GRAFT_BYPASS_THRESHOLD exists for A/B probes
-      // only — the default is the shipped configuration)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
       // AQE coalescing floor (r19, re-validated r20 with the sf10 A/B
       // the r19 log lacked): with parallelismFirst (default) AQE merges
       // post-shuffle partitions down to minPartitionSize (1 MB) — a
@@ -126,10 +118,7 @@ object GraftSession {
       // enough that partitions exceed the floor are untouched — at true
       // production volumes the knob stays inert and partitioning is
       // AQE-derived.
-      // (env override SPARK_GRAFT_AQE_MIN_PARTITION exists for A/B
-      // probes only — the default is the shipped configuration)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
       // InferFiltersFromGenerate is excluded (r20): the rule synthesizes
       // a `size(generatorInput) > 0` pre-filter, INLINING the generator
       // input expression — for the ingest gates that input is the full

@@ -170,5 +170,16 @@ object Tables {
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
+  /** The text of document `docId`, the query stand-in of the text-search
+    * and prompt paths: one filtered scan. */
+  def documentText(s: SparkSession, d: String, docId: Long): String = {
+    import org.apache.spark.sql.functions.col
+    val row = documents(s, d).where(col("doc_id") === docId)
+      .select(col("text")).collect().headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"document $docId not found in $d"))
+    require(!row.isNullAt(0), s"document $docId has NULL text")
+    row.getString(0)
+  }
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

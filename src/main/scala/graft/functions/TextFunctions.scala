@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, functions => F}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -31,9 +31,14 @@ object Mersenne61 {
     * HUGEINT list_reduce fold exactly. */
   def polyHash(s: UTF8String): Long = {
     val str = s.toString
+    polyHash(str, 0, str.length)
+  }
+
+  /** [[polyHash]] of `str.substring(from, until)`, without the copy. */
+  def polyHash(str: String, from: Int, until: Int): Long = {
     var h = 0L
-    var i = 0
-    while (i < str.length) {
+    var i = from
+    while (i < until) {
       val cp = str.codePointAt(i)
       h = mulmod(h, B) + cp
       if (h >= P) h -= P
@@ -61,30 +66,77 @@ case class PolyFingerprint(child: Expression)
 }
 
 object TextOps {
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+  import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
   import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.internal.SQLConf
 
-  /** Dense hashing-trick accumulator: one O(tokens) imperative pass over
-    * the token hashes into `dim` (signed-count, touched-count) slots. The
-    * SQL-HOF formulation of this fold is O(tokens·dim) with a fresh
-    * dim-array allocation per token — this is the textbook case for a
-    * native expression on the hot path. */
+  /** The word tokenizer: ASCII letter/digit runs of the LOWERCASED text
+    * ([[TextFunctions.words]]); the DuckDB oracle spells the same. */
+  final val WordPattern = "[a-z0-9]+"
+  private val WordRegex = java.util.regex.Pattern.compile(WordPattern)
+
+  /** Whether `lower` case-maps through ICU, read the way Spark's `Lower`
+    * reads it. */
+  def icuCaseMappings: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  /** The hashed-text kernel, the engine's stand-in for an embedding
+    * model: text → `dim` (signed count, touched count) slots in one pass.
+    * It lowercases with the call Spark's `lower` makes, matches
+    * [[WordPattern]] as `regexp_extract_all` does, and accumulates each
+    * match's [[Mersenne61.polyHash]] like [[hashingFeaturize]] — equal to
+    * `hashing_featurize(transform(words(text), poly_fingerprint), dim)`
+    * without the token array, the per-token strings or the lambda. The
+    * corpus scan ([[HashedWeights]]), the query featurizer and the
+    * default embedder all run it. */
+  def hashedWeights(text: UTF8String, dim: Int, useICU: Boolean): ArrayData = {
+    val s = CollationSupport.Lower.exec(
+      text, CollationFactory.UTF8_BINARY_COLLATION_ID, useICU).toString
+    val w = new Array[Long](dim)
+    val n = new Array[Long](dim)
+    val m = WordRegex.matcher(s)
+    while (m.find()) addHash(w, n, Mersenne61.polyHash(s, m.start, m.end))
+    slots(w, n)
+  }
+
+  /** The kernel's accumulation over precomputed token hashes: one
+    * O(tokens) pass into `dim` (signed-count, touched-count) slots. */
   def hashingFeaturize(hs: ArrayData, dim: Int): ArrayData = {
     val w = new Array[Long](dim)
     val n = new Array[Long](dim)
     var i = 0
     val m = hs.numElements()
-    while (i < m) {
-      val h = hs.getLong(i)
-      val d = (h % dim).toInt // poly hashes are nonnegative
-      if (((h / dim) & 1L) == 0L) w(d) += 1 else w(d) -= 1
-      n(d) += 1
-      i += 1
-    }
-    val out = new Array[Any](dim)
+    while (i < m) { addHash(w, n, hs.getLong(i)); i += 1 }
+    slots(w, n)
+  }
+
+  /** The one bucket/sign rule: bucket `h mod dim`, sign from bit
+    * `(h / dim) & 1`. */
+  private def addHash(w: Array[Long], n: Array[Long], h: Long): Unit = {
+    val dim = w.length
+    val d = (h % dim).toInt // poly hashes are nonnegative
+    if (((h / dim) & 1L) == 0L) w(d) += 1 else w(d) -= 1
+    n(d) += 1
+  }
+
+  private def slots(w: Array[Long], n: Array[Long]): ArrayData = {
+    val out = new Array[Any](w.length)
     var j = 0
-    while (j < dim) { out(j) = InternalRow(w(j), n(j)); j += 1 }
+    while (j < w.length) { out(j) = InternalRow(w(j), n(j)); j += 1 }
     new GenericArrayData(out)
+  }
+
+  private def weight(ws: ArrayData, i: Int): Long = ws.getStruct(i, 2).getLong(0)
+
+  /** Squared L2 norm of the signed counts: exact, in integers. */
+  def norm2(ws: ArrayData): Long =
+    (0 until ws.numElements()).foldLeft(0L)((s, i) => s + weight(ws, i) * weight(ws, i))
+
+  /** The float unit vector of the signed counts, `(w / sqrt(norm2))
+    * .toFloat` per slot. Callers drop `norm2 = 0` first: a zero vector
+    * has no direction. */
+  def unitVector(ws: ArrayData): Array[Float] = {
+    val s = Math.sqrt(norm2(ws).toDouble)
+    Array.tabulate(ws.numElements())(i => (weight(ws, i).toDouble / s).toFloat)
   }
 }
 
@@ -190,15 +242,20 @@ case class ApplyBpeMerges(
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** array<struct<w: signed count, n: touched count>>, the slot layout. */
+private object WeightSlots {
+  val dataType: DataType = ArrayType(StructType(Seq(
+    StructField("w", LongType, nullable = false),
+    StructField("n", LongType, nullable = false))), containsNull = false)
+}
+
 /** hashing_featurize(hashes): dense array of (signed bucket count, touched
   * count) pairs — the feature-hashing trick as a single codegen'd pass. */
 case class HashingFeaturize(child: Expression, dim: Int)
     extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "hashing_featurize"
   override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w", LongType, nullable = false),
-    StructField("n", LongType, nullable = false))), containsNull = false)
+  override def dataType: DataType = WeightSlots.dataType
   override def nullSafeEval(a: Any): Any =
     TextOps.hashingFeaturize(
       a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], dim)
@@ -208,11 +265,51 @@ case class HashingFeaturize(child: Expression, dim: Int)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** hashed_weights(text): the hashed-text kernel ([[TextOps.hashedWeights]])
+  * as one codegen'd expression. Like `Lower`, it reads the case-mapping
+  * mode once per instance. */
+case class HashedWeights(child: Expression, dim: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  private lazy val useICU = TextOps.icuCaseMappings
+  override def prettyName: String = "hashed_weights"
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = WeightSlots.dataType
+  override def nullSafeEval(a: Any): Any =
+    TextOps.hashedWeights(a.asInstanceOf[UTF8String], dim, useICU)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextOps.hashedWeights($c, $dim, $useICU)")
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** unit_vector(ws): [[TextOps.unitVector]] over the slot layout. */
+case class UnitVector(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def prettyName: String = "unit_vector"
+  override def inputTypes = Seq(WeightSlots.dataType)
+  // nullable elements, as the per-slot SQL division this replaced typed
+  // them: the store's parquet schema stays byte-for-byte what it was
+  override def dataType: DataType = ArrayType(FloatType, containsNull = true)
+  override def nullSafeEval(a: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(TextOps.unitVector(
+      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+        s".fromPrimitiveArray(graft.functions.TextOps.unitVector($c))")
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
 object TextFunctions {
   import Bridge.{col, expr}
   def polyFingerprint(x: Column): Column = col(PolyFingerprint(expr(x)))
-  def hashingFeaturize(x: Column, dim: Int): Column =
-    col(HashingFeaturize(expr(x), dim))
+  def hashedWeights(text: Column, dim: Int): Column =
+    col(HashedWeights(expr(text), dim))
+  def unitVector(ws: Column): Column = col(UnitVector(expr(ws)))
+  /** The word tokens of a text column: `regexp_extract_all(lower(text),
+    * WordPattern, 0)`. */
+  def words(text: Column): Column =
+    F.regexp_extract_all(F.lower(text), F.lit(TextOps.WordPattern), F.lit(0))
   def applyBpeMerges(
       x: Column, pats: Array[String], reps: Array[String]): Column =
     col(ApplyBpeMerges(expr(x), pats, reps))

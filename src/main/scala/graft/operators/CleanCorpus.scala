@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.{TextFunctions, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,9 +45,9 @@ object CleanCorpus {
     // variables are evaluated once however many times the body reads
     // them, and the bound form survives any pushdown intact.
     val keep = exists(
-      array(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")),
+      array(TextFunctions.words(col("text"))),
       t => exists(
-        array(graft.functions.TextFunctions.markerCounts(t, sets)),
+        array(TextFunctions.markerCounts(t, sets)),
         m => {
           val quality = TextAnalysis.round4(
             lit(0.5) * least(lit(1.0), size(t) / lit(60.0)) +
@@ -58,9 +59,9 @@ object CleanCorpus {
               (2 until sets.length).map(i => m.getItem(i)): _*)
         }))
     df
-      .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+      .withColumn("toks", TextFunctions.words(col("text")))
       .withColumn("mc",
-        graft.functions.TextFunctions.markerCounts(col("toks"), sets))
+        TextFunctions.markerCounts(col("toks"), sets))
       .withColumn("n_stop", col("mc").getItem(0))
       .withColumn("quality",
         TextAnalysis.round4(
@@ -163,7 +164,7 @@ object CleanCorpus {
   // `toks` reads when the filter is pushed below the projection
   private[graft] def scoredKeepFull(df: DataFrame, minQuality: Double): DataFrame =
     scoredKeep(df, minQuality).where(expr(
-      s"""exists(array(regexp_extract_all(lower(text), '[a-z0-9]+', 0)),
+      s"""exists(array(regexp_extract_all(lower(text), '${TextOps.WordPattern}', 0)),
          |  toks -> $repetitionKeepBody)""".stripMargin))
 
   /** The map-only scrub tail over a kept (doc_id, quality, text) frame:

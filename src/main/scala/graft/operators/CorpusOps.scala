@@ -17,7 +17,7 @@ import org.apache.spark.sql.expressions.Window
   */
 object CorpusOps {
 
-  private def toks = expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+  private def toks = TextFunctions.words(col("text"))
 
   // ONE definition of the BPE pre-tokenization contract: the trainer and
   // the tokenizer must pre-tokenize byte-identically or learned merges

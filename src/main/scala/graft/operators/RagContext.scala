@@ -42,14 +42,7 @@ object RagContext {
       sfDir: String,
       k: Int = 3,
       queryDocId: Long = 0L): DataFrame = {
-    val queryRow = Tables.documents(spark, sfDir)
-      .where(col("doc_id") === queryDocId)
-      .select(col("text")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"prompt: queryDocId $queryDocId not found in $sfDir documents"))
-    require(!queryRow.isNullAt(0),
-      s"prompt: document $queryDocId has NULL text")
-    val query = queryRow.getString(0)
+    val query = Tables.documentText(spark, sfDir, queryDocId)
     context(spark, sfDir, k)
       .select(col("query_id"), col("n_docs"),
         concat(
@@ -143,9 +136,7 @@ object RagContext {
       math.round((System.nanoTime() - t0) / 1e3) / 1000.0
     // the query text is request INPUT (the reference receives it in the
     // POST body) — fetched outside the timed stages
-    val query = Tables.documents(spark, sfDir)
-      .where(col("doc_id") === queryDocId)
-      .select(col("text")).head().getString(0)
+    val query = Tables.documentText(spark, sfDir, queryDocId)
     val t1 = System.nanoTime()
     val (qDense, qNorm2) =
       TextAnalysis.queryWeights(spark, sfDir, queryDocId, 64)

@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.{SessionState, Tables}
 import graft.SessionState.key
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for the training-data pipeline over `documents`
   * (the corpus the reference's vector store indexes; /root/reference/app.py
@@ -73,10 +74,10 @@ object TextAnalysis {
     // per-unique row expands to members by one id join.
     val u = CorpusOps.exactUniqueDocs(spark, sfDir)
       .select(col("uid"), col("text"))
-      .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+      .withColumn("toks", TextFunctions.words(col("text")))
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("n_stop",
-        graft.functions.TextFunctions.markerCounts(
+        TextFunctions.markerCounts(
           col("toks"), Seq(stopwords)).getItem(0))
       .select(
         col("uid"),
@@ -111,14 +112,14 @@ object TextAnalysis {
     // same table quality uses), expand to members by id last
     val base = CorpusOps.exactUniqueDocs(spark, sfDir)
       .select(col("uid"), col("text"))
-      .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+      .withColumn("toks", TextFunctions.words(col("text")))
     // all five marker sets count in ONE codegen'd token pass (native
     // MarkerCounts expression) — the previous per-language
     // filter/array_contains formulation ran 5 interpreted HOF passes and
     // measured 12× the single-pass quality scan at sf100
     val scored = base
       .withColumn("mc",
-        graft.functions.TextFunctions.markerCounts(
+        TextFunctions.markerCounts(
           col("toks"), langMarkers.map(_._2)))
       .select(
         col("uid") +: langMarkers.zipWithIndex.map {
@@ -146,40 +147,22 @@ object TextAnalysis {
       col("doc_id"),
       TextFunctions.polyFingerprint(col("text")).as("fingerprint"))
 
+  /** The exact squared norm of the `ws` slot-array column. */
+  private[graft] val norm2Col: Column =
+    expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)")
+
   /** Hashing-trick text featurizer — the deterministic stand-in for the
     * reference's query-embedding stage (app.py:118 embeds the query text
     * before searching; an LLM featurizer is out of engine scope, a
-    * feature-hashing one is not). Each token's 61-bit polynomial hash
-    * picks a bucket (`hash mod dim`) and a ±1 sign (bit 6), signed counts
-    * sum per bucket, and the per-document L2 normalization makes the
-    * output directly consumable by the cosine search operators — closing
-    * the text → vector → search path inside the pipeline. Output is the
-    * sparse (doc_id, dim, weight, unit_weight) layout; integer weights
-    * keep the oracle comparison exact, and the normalized column uses the
-    * explicit-floor 4-dp rounding shared with the oracle.
+    * feature-hashing one is not): the [[TextOps.hashedWeights]] kernel
+    * per document, L2-normalized so the cosine search operators consume
+    * it directly. Output is the sparse (doc_id, dim, weight, unit_weight)
+    * layout; integer weights keep the oracle comparison exact, and the
+    * normalized column uses the explicit-floor 4-dp rounding shared with
+    * the oracle.
     *
-    * Scale shape: one codegen'd scan + explode, one partial-aggregated
-    * shuffle keyed by (doc_id, dim), and a doc-keyed window for the norm —
-    * the same key prefix, so no extra exchange. */
-  /** Per-document dense weight vector: each slot holds (signed count,
-    * touched-token count) accumulated by the native [[graft.functions
-    * .HashingFeaturize]] expression in one O(tokens) imperative pass —
-    * one codegen'd MAP-ONLY scan, no explode, no shuffle. This replaces
-    * the "explode tokens → groupBy (doc, dim)" formulation: the per-doc
-    * vector is bounded (dim slots), so accumulating it inside the row
-    * beats shuffling every token. (A SQL higher-order fold expresses the
-    * same thing but is O(tokens·dim) with an allocation per token —
-    * measured 2.5× slower than the shuffle it replaced, which is what
-    * justified the custom expression.) */
-  private def denseWeights(spark: SparkSession, sfDir: String, dim: Int): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        transform(
-          expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"),
-          t => TextFunctions.polyFingerprint(t)).as("hs"))
-      .select(col("doc_id"),
-        TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
-
+    * Scale shape: one map-only scan + explode per distinct text, then
+    * one id join to the members. */
   def featurize(spark: SparkSession, sfDir: String, dim: Int = 64): DataFrame = {
     // UNIQUE-FIRST (r12): the dense weight vector, its norm, and the
     // per-dimension explosion are all functions of the
@@ -191,12 +174,9 @@ object TextAnalysis {
     // per-dim weights and the norm ride the join verbatim).
     val uw = Dedup.uniqueDocs(spark, sfDir)
       .select(col("doc_id").as("uid"),
-        transform(
-          expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"),
-          t => TextFunctions.polyFingerprint(t)).as("hs"))
-      .select(col("uid"), TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
+        TextFunctions.hashedWeights(col("text"), dim).as("ws"))
       .select(col("uid"),
-        expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)").as("norm2"),
+        norm2Col.as("norm2"),
         posexplode(col("ws")).as(Seq("dim", "s")))
       .where(col("s.n") > 0)
       .select(col("uid"), col("dim").cast("int").as("dim"),
@@ -245,13 +225,13 @@ object TextAnalysis {
     // cached per (corpus, query doc, dim) like the kNN query vector
     // (r20): the vector is a query PARAMETER — one dim-length array —
     // and every text_search / chunk_search / search_metrics / rag_* call
-    // re-paid a one-row Spark job to re-derive it
+    // re-paid a one-row Spark job to fetch the query text, which the
+    // driver-side kernel then hashes as [[TextStore.featurizeText]] does
     SessionState.getOrBuild(key("queryweights", sfDir, queryDocId, dim)) {
-      val qDense: Array[Long] = denseWeights(spark, sfDir, dim)
-        .where(col("doc_id") === queryDocId)
-        .select(expr("transform(ws, x -> x.w)")).head()
-        .getSeq[Long](0).toArray
-      (qDense, qDense.map(v => v * v).sum)
+      val ws = TextOps.hashedWeights(
+        UTF8String.fromString(Tables.documentText(spark, sfDir, queryDocId)),
+        dim, TextOps.icuCaseMappings)
+      (Array.tabulate(dim)(i => ws.getStruct(i, 2).getLong(0)), TextOps.norm2(ws))
     }
   }
 
@@ -280,15 +260,12 @@ object TextAnalysis {
     // over the same scan.
     val uscored = graft.operators.Dedup.uniqueDocs(spark, sfDir)
       .select(col("doc_id").as("uid"),
-        transform(
-          expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"),
-          t => TextFunctions.polyFingerprint(t)).as("hs"))
-      .select(col("uid"), TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
+        TextFunctions.hashedWeights(col("text"), dim).as("ws"))
       .withColumn("qv", qv)
       .select(col("uid"),
         expr("aggregate(zip_with(ws, qv, (x, q) -> x.w * q), 0L, (s, v) -> s + v)")
           .as("dot"),
-        expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)").as("norm2"))
+        norm2Col.as("norm2"))
       .where(col("norm2") > 0)
     graft.operators.Dedup.uniqueMembers(spark, sfDir)
       .where(col("doc_id") =!= excludeDocId)
@@ -338,17 +315,8 @@ object TextAnalysis {
     // as the doc-level scan had them.
     val featsKey = key("chunkfeats", sfDir, size, overlap, dim)
     val chunkFeats = Dedup.materialized(
-      TextAnalysis.chunkDocs(
-        CorpusOps.exactUniqueDocs(spark, sfDir)
-          .select(col("uid"), col("text")), size, overlap)
-        .select(col("uid"), col("chunk_id"),
-          transform(
-            expr("regexp_extract_all(lower(chunk), '[a-z0-9]+', 0)"),
-            t => TextFunctions.polyFingerprint(t)).as("hs"))
-        .select(col("uid"), col("chunk_id"),
-          TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
-        .select(col("uid"), col("chunk_id"), col("ws"),
-          expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)").as("norm2")),
+      chunkWeights(CorpusOps.exactUniqueDocs(spark, sfDir)
+        .select(col("uid"), col("text")), size, overlap, dim),
       featsKey)
     val uscored = Dedup.spreadSigTable(chunkFeats, featsKey)
       .withColumn("qv", qv)
@@ -356,7 +324,6 @@ object TextAnalysis {
         expr("aggregate(zip_with(ws, qv, (x, q) -> x.w * q), 0L, (s, v) -> s + v)")
           .as("dot"),
         col("norm2"))
-      .where(col("norm2") > 0)
     CorpusOps.exactUniqueMembers(spark, sfDir)
       .where(col("doc_id") =!= queryDocId)
       .join(uscored, "uid")
@@ -412,12 +379,12 @@ object TextAnalysis {
     val uniq = Dedup.uniqueDocs(spark, sfDir)
     val utoks = uniq
       .select(col("doc_id").as("uid"), col("w"),
-        explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+        explode(TextFunctions.words(col("text")))
           .as("token"))
     // one extra map-only pass over the unique texts (counts token-array
     // sizes without exploding), w-weighted to the doc-level total
     val nTotal = uniq
-      .select((size(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+      .select((size(TextFunctions.words(col("text")))
         .cast("long") * col("w")).as("nt"))
       .agg(sum(col("nt")).as("n_total"))
     // the unigram table is per-corpus MODEL state (like the trained
@@ -502,6 +469,22 @@ object TextAnalysis {
       .withColumn("c_len", length(col("chunk")).cast("long"))
   }
 
+  /** Hashed weights per chunk of any frame with a `text` column: its
+    * other columns, then chunk_id, the slot array `ws` and its `norm2`.
+    * Zero-signal chunks (no tokens, or all signs cancelled) are dropped:
+    * a zero vector is unsearchable under cosine and untrainable under
+    * Lloyd. The one chunk → weights chain of [[chunkSearch]] and of the
+    * chunk store's build and ingest paths ([[TextStore.chunkVectors]]). */
+  private[graft] def chunkWeights(
+      docs: DataFrame, size: Int, overlap: Int, dim: Int): DataFrame = {
+    val pass = docs.columns.filterNot(_ == "text").map(col).toSeq
+    chunkDocs(docs, size, overlap)
+      .select(pass ++ Seq(col("chunk_id"),
+        TextFunctions.hashedWeights(col("chunk"), dim).as("ws")): _*)
+      .withColumn("norm2", norm2Col)
+      .where(col("norm2") > 0)
+  }
+
   /** BM25 keyword retrieval over `documents` — the lexical half of the
     * hybrid search surface (the reference's /search endpoint is
     * vector-only, app.py:124; production RAG pairs it with a keyword
@@ -541,7 +524,7 @@ object TextAnalysis {
     // Reverted; the posting table is the right structure only when
     // distinct content itself is too large to re-tokenize per query.)
     def tokTable(base: DataFrame): DataFrame = base
-      .withColumn("tk", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
+      .withColumn("tk", TextFunctions.words(col("text")))
       .select(
         (col("doc_id").as("uid") +: col("w") +:
           size(col("tk")).cast("long").as("dl") +:
@@ -587,7 +570,7 @@ object TextAnalysis {
     // filters the unique table directly (before the tf projection drops
     // `text`); Σ size(filter(tk, =t)) > 0 is the same truth as Σ tf_i > 0.
     val anyHit = exists(
-      array(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")),
+      array(TextFunctions.words(col("text"))),
       tk => terms.map(t => size(filter(tk, x => x === lit(t))))
         .reduce(_ + _) > 0)
     tokTable(Dedup.uniqueDocs(spark, sfDir).where(anyHit))
@@ -626,7 +609,7 @@ object TextAnalysis {
   def repetition(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = Dedup.uniqueDocs(spark, sfDir)
       .select(col("doc_id").as("uid"),
-        expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)").as("toks"))
+        TextFunctions.words(col("text")).as("toks"))
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("n_uniq", size(array_distinct(col("toks"))))
       .withColumn("top_bigram_cnt",
@@ -672,7 +655,7 @@ object TextAnalysis {
   def dupSpans(spark: SparkSession, sfDir: String, k: Int = 8): DataFrame = {
     val u = Dedup.uniqueDocs(spark, sfDir)
       .select(col("doc_id").as("uid"), col("w"),
-        expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)").as("toks"))
+        TextFunctions.words(col("text")).as("toks"))
     // the window key is xxhash64(window text), taken AT EXPLODE TIME: the
     // two aggregations and the corpus-totals join below carry the key per
     // exploded row, and an 8-byte long shuffles ~6× lighter than the

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The TEXT-facing store surface — the reference's actual ingestion
   * contract: langchain_ydb `add_texts(texts, metadatas)` takes raw texts,
@@ -14,8 +15,10 @@ import org.apache.spark.sql.functions._
   * reference's embedding model, same stance as [[TextAnalysis.featurize]])
   * → store-ready rows appended through the ONE layout-parameterized CRUD
   * implementation ([[VectorIndex.appendStore]]). Search goes the other
-  * way: a raw query text is featurized by the SAME expressions and probes
-  * the partition-pruned store.
+  * way: a raw query text is featurized on the driver and probes the
+  * partition-pruned store. Corpus, query and default embedder run ONE
+  * kernel ([[TextOps.hashedWeights]], [[TextOps.unitVector]]) — as
+  * expressions or plain calls — so they agree bit for bit.
   *
   * The chunk store this builds is the shape a production RAG index takes
   * at 100 TB: the index unit is the CHUNK (what retrieval actually
@@ -47,34 +50,17 @@ object TextStore {
   final val ChunkIdBits = 12
   private final val ChunkMod = 1L << ChunkIdBits
 
-  // ---- the shared text → feature-vector expressions -------------------
-  // ONE definition each, used by corpus-side chunk vectorization and the
-  // driver-side query featurization: the two sides must hash and
-  // normalize byte-identically or ingest and search silently live in
-  // different spaces.
-  private def tokenHashes(textCol: Column): Column =
-    transform(
-      regexp_extract_all(lower(textCol), lit("[a-z0-9]+"), lit(0)),
-      t => TextFunctions.polyFingerprint(t))
-  private val norm2Col: Column =
-    expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)")
-  private val unitVecCol: Column =
-    expr("transform(ws, x -> cast(x.w / sqrt(cast(norm2 as double)) as float))")
-
-  /** Per-chunk signed bucket weights for any (doc_id, text, lang) frame:
-    * (doc_id, chunk_id, lang, ws, norm2), zero-signal chunks (no tokens,
-    * or all signs cancelled) dropped — a zero vector is unsearchable
-    * under cosine and untrainable under Lloyd. */
-  private def chunkWeights(
-      docs: DataFrame, dim: Int, size: Int, overlap: Int): DataFrame =
-    TextAnalysis.chunkDocs(
-        docs.select(col("doc_id"), col("text"), col("lang")), size, overlap)
-      .select(col("doc_id"), col("chunk_id"), col("lang"),
-        tokenHashes(col("chunk")).as("hs"))
-      .select(col("doc_id"), col("chunk_id"), col("lang"),
-        TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
-      .withColumn("norm2", norm2Col)
-      .where(col("norm2") > 0)
+  /** A chunk frame's store-row columns: vec_id, label, `payload`, then
+    * metadata. ONE definition, so every ingest path fails identically on
+    * an overflowing chunk_id instead of colliding vec_ids silently. */
+  private def chunkRow(payload: Column*): Seq[Column] =
+    Seq(
+      expr(s"CASE WHEN chunk_id < $ChunkMod THEN doc_id * $ChunkMod + chunk_id " +
+        s"ELSE raise_error('chunk_id overflows the $ChunkIdBits-bit vec_id scheme') END")
+        .cast("long").as("vec_id"),
+      col("chunk_id").cast("int").as("label")) ++
+      payload :+
+      to_json(struct(col("doc_id"), col("chunk_id"), col("lang"))).as("metadata")
 
   /** The `add_texts` ingestion transform — texts in, store-ready vector
     * rows (vec_id, label, embedding, metadata) out. This ONE frame
@@ -91,56 +77,40 @@ object TextStore {
       dim: Int = Dim,
       size: Int = ChunkSize,
       overlap: Int = ChunkOverlap): DataFrame =
-    chunkWeights(docs, dim, size, overlap)
-      .select(
-        expr(s"CASE WHEN chunk_id < $ChunkMod THEN doc_id * $ChunkMod + chunk_id " +
-          s"ELSE raise_error('chunk_id overflows the $ChunkIdBits-bit vec_id scheme') END")
-          .cast("long").as("vec_id"),
-        col("chunk_id").cast("int").as("label"),
-        unitVecCol.as("embedding"),
-        to_json(struct(col("doc_id"), col("chunk_id"), col("lang")))
-          .as("metadata"))
+    TextAnalysis.chunkWeights(
+        docs.select(col("doc_id"), col("text"), col("lang")), size, overlap, dim)
+      .select(chunkRow(TextFunctions.unitVector(col("ws")).as("embedding")): _*)
 
   /** The graded ingestion batch: store-ready rows for the first
     * `nDocs` documents, weights exploded to (vec_id, label, metadata,
     * dim, weight) so the output is integer/string-exact end to end. */
   def ingestBatch(
       spark: SparkSession, sfDir: String, nDocs: Int = 5): DataFrame =
-    chunkWeights(Tables.documents(spark, sfDir).where(col("doc_id") < nDocs),
-        Dim, ChunkSize, ChunkOverlap)
-      .select(
-        // same overflow guard as chunkVectors: the graded transform and
-        // the production ingest path must fail identically, not diverge
-        // into silent vec_id collisions here
-        expr(s"CASE WHEN chunk_id < $ChunkMod THEN doc_id * $ChunkMod + chunk_id " +
-          s"ELSE raise_error('chunk_id overflows the $ChunkIdBits-bit vec_id scheme') END")
-          .cast("long").as("vec_id"),
-        col("chunk_id").cast("int").as("label"),
-        to_json(struct(col("doc_id"), col("chunk_id"), col("lang")))
-          .as("metadata"),
-        posexplode(col("ws")).as(Seq("dim", "s")))
+    TextAnalysis.chunkWeights(Tables.documents(spark, sfDir)
+        .where(col("doc_id") < nDocs).select(col("doc_id"), col("text"), col("lang")),
+        ChunkSize, ChunkOverlap, Dim)
+      .select(chunkRow(posexplode(col("ws")).as(Seq("dim", "s"))): _*)
       .where(col("s.n") > 0)
       .select(col("vec_id"), col("label"), col("metadata"),
         col("dim").cast("int").as("dim"), col("s.w").as("weight"))
 
   /** Featurize one raw text into the query vector — the driver-side step
-    * the reference pays an embedding-API call for (app.py:118). Runs the
-    * SAME column expressions as [[chunkVectors]] over a 1-row local
-    * relation (one tiny job, no scan), so parity with the corpus side is
-    * by construction, not by reimplementation. */
+    * the reference pays an embedding-API call for (app.py:118). A plain
+    * call of the kernel [[chunkVectors]]' expressions run, under the
+    * active session's case-mapping mode: no plan, no job, bit-identical
+    * to the corpus side by construction. */
   def featurizeText(
       spark: SparkSession, text: String, dim: Int = Dim): Array[Float] = {
-    import spark.implicits._
-    val rows = Seq(text).toDF("t")
-      .select(tokenHashes(col("t")).as("hs"))
-      .select(TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
-      .withColumn("norm2", norm2Col)
-      .where(col("norm2") > 0)
-      .select(unitVecCol)
-      .collect()
-    require(rows.nonEmpty,
+    val v = embed(text, dim, TextOps.icuCaseMappings)
+    require(v != null,
       "featurizeText: query text has no hashable tokens (or all signs cancelled)")
-    rows(0).getSeq[Float](0).toArray
+    v
+  }
+
+  /** One text's unit vector; null when it has no tokens or they cancel. */
+  private def embed(text: String, dim: Int, useICU: Boolean): Array[Float] = {
+    val ws = TextOps.hashedWeights(UTF8String.fromString(text), dim, useICU)
+    if (TextOps.norm2(ws) == 0L) null else TextOps.unitVector(ws)
   }
 
   // ---- chunk store build + search -------------------------------------
@@ -162,29 +132,18 @@ object TextStore {
     * unique table and its duplicate factor is ~1. */
   private def corpusChunkVectors(
       spark: SparkSession, sfDir: String, dim: Int = Dim): DataFrame = {
-    val uchunks = TextAnalysis.chunkDocs(
-        CorpusOps.exactUniqueDocs(spark, sfDir)
-          .select(col("uid"), col("text")), ChunkSize, ChunkOverlap)
-      .select(col("uid"), col("chunk_id"), tokenHashes(col("chunk")).as("hs"))
+    val uchunks = TextAnalysis.chunkWeights(
+        CorpusOps.exactUniqueDocs(spark, sfDir).select(col("uid"), col("text")),
+        ChunkSize, ChunkOverlap, dim)
       .select(col("uid"), col("chunk_id"),
-        TextFunctions.hashingFeaturize(col("hs"), dim).as("ws"))
-      .withColumn("norm2", norm2Col)
-      .where(col("norm2") > 0)
-      .select(col("uid"), col("chunk_id"), unitVecCol.as("embedding"))
+        TextFunctions.unitVector(col("ws")).as("embedding"))
     // lang is per-DOC state (two byte-identical texts may carry different
     // tags), so it rides the member side of the expansion, like metadata
     CorpusOps.exactUniqueMembers(spark, sfDir)
       .join(Tables.documents(spark, sfDir).select(col("doc_id"), col("lang")),
         "doc_id")
       .join(uchunks, "uid")
-      .select(
-        expr(s"CASE WHEN chunk_id < $ChunkMod THEN doc_id * $ChunkMod + chunk_id " +
-          s"ELSE raise_error('chunk_id overflows the $ChunkIdBits-bit vec_id scheme') END")
-          .cast("long").as("vec_id"),
-        col("chunk_id").cast("int").as("label"),
-        col("embedding"),
-        to_json(struct(col("doc_id"), col("chunk_id"), col("lang")))
-          .as("metadata"))
+      .select(chunkRow(col("embedding")): _*)
   }
 
   /** Build the materialized chunk store: every document chunked,
@@ -209,7 +168,7 @@ object TextStore {
 
   /** Search the chunk store with a RAW TEXT query — the reference's
     * /search contract (text in, ranked hits out) through the pruned
-    * index: featurize the query with the shared expressions, probe
+    * index: featurize the query with the shared kernel, probe
     * `nprobe` partitions of the store's layout, exact cosine top-k over
     * the pruned rows. */
   def searchByText(
@@ -219,12 +178,13 @@ object TextStore {
       k: Int = 10,
       nprobe: Int = 4,
       filter: Option[Column] = None): DataFrame =
-    VectorIndex.searchStore(spark, path,
-        featurizeText(spark, queryText), k, nprobe, filter)
-      .select(
-        expr(s"vec_id div $ChunkMod").as("doc_id"),
-        expr(s"vec_id % $ChunkMod").as("chunk_id"),
-        col("score"))
+    chunkHits(VectorIndex.searchStore(spark, path,
+      featurizeText(spark, queryText), k, nprobe, filter))
+
+  /** Store hits as (doc_id, chunk_id, score). */
+  private def chunkHits(hits: DataFrame): DataFrame =
+    hits.select(expr(s"vec_id div $ChunkMod").as("doc_id"),
+      expr(s"vec_id % $ChunkMod").as("chunk_id"), col("score"))
 
   /** The graded chunk-granular index search: chunk store built once
     * (session cache — persistent state in production), query = document
@@ -238,14 +198,7 @@ object TextStore {
       nprobe: Int = 4,
       queryDocId: Long = 0L): DataFrame = {
     val path = ensureChunkStore(spark, sfDir)
-    val qRow = Tables.documents(spark, sfDir)
-      .where(col("doc_id") === queryDocId)
-      .select(col("text")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"chunkSearchIvf: queryDocId $queryDocId not found in $sfDir"))
-    require(!qRow.isNullAt(0),
-      s"chunkSearchIvf: document $queryDocId has NULL text")
-    searchByText(spark, path, qRow.getString(0), k, nprobe,
+    searchByText(spark, path, Tables.documentText(spark, sfDir, queryDocId), k, nprobe,
       filter = Some(expr(s"vec_id div $ChunkMod <> $queryDocId")))
   }
 
@@ -298,14 +251,7 @@ object TextStore {
     import docs.sparkSession.implicits._
     TextAnalysis.chunkDocs(
         docs.select(col("doc_id"), col("text"), col("lang")), size, overlap)
-      .select(
-        expr(s"CASE WHEN chunk_id < $ChunkMod THEN doc_id * $ChunkMod + chunk_id " +
-          s"ELSE raise_error('chunk_id overflows the $ChunkIdBits-bit vec_id scheme') END")
-          .cast("long").as("vec_id"),
-        col("chunk_id").cast("int").as("label"),
-        col("chunk"),
-        to_json(struct(col("doc_id"), col("chunk_id"), col("lang")))
-          .as("metadata"))
+      .select(chunkRow(col("chunk")): _*)
       .as[ChunkText]
   }
 
@@ -339,34 +285,15 @@ object TextStore {
     }
   }
 
-  /** The deterministic DEFAULT embedder: the hashing-trick featurizer as
-    * a plain JVM batch function — the same Mersenne-61 token hashes
-    * (`[a-z0-9]+` over lowercased text), signed-count slots, and
-    * float-cast L2 normalization as the [[chunkVectors]] column pipeline,
-    * so the seam's default output is BIT-IDENTICAL to the expression path
-    * (spec-pinned). Returns null for zero-signal texts, which
-    * [[embedSeam]] drops exactly as the column path drops norm2 = 0
-    * rows. */
+  /** The deterministic DEFAULT embedder: a map of the kernel the
+    * [[chunkVectors]] expressions run, so the seam's default output is
+    * BIT-IDENTICAL to the expression path (spec-pinned), under the
+    * case-mapping mode active when it is built. Returns null for
+    * zero-signal texts, which [[embedSeam]] drops as the column path
+    * drops norm2 = 0 rows. */
   def hashingEmbedder(dim: Int = Dim): Array[String] => Array[Array[Float]] = {
-    val pattern = java.util.regex.Pattern.compile("[a-z0-9]+")
-    texts => texts.map { t =>
-      val w = new Array[Long](dim)
-      val m = pattern.matcher(t.toLowerCase(java.util.Locale.ROOT))
-      while (m.find()) {
-        val h = graft.functions.Mersenne61.polyHash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(m.group()))
-        val d = (h % dim).toInt // poly hashes are nonnegative
-        if (((h / dim) & 1L) == 0L) w(d) += 1 else w(d) -= 1
-      }
-      var norm2 = 0L
-      var i = 0
-      while (i < dim) { norm2 += w(i) * w(i); i += 1 }
-      if (norm2 == 0L) null
-      else {
-        val s = math.sqrt(norm2.toDouble)
-        w.map(v => (v / s).toFloat)
-      }
-    }
+    val useICU = TextOps.icuCaseMappings
+    texts => texts.map(embed(_, dim, useICU))
   }
 
   /** [[addTexts]] through the embedder seam: chunk, embed via the
@@ -397,10 +324,6 @@ object TextStore {
     val v = embedder(Array(queryText))(0)
     require(v != null && v.nonEmpty,
       "searchByTextEmbedded: embedder returned no vector for the query")
-    VectorIndex.searchStore(spark, path, v, k, nprobe, filter)
-      .select(
-        expr(s"vec_id div $ChunkMod").as("doc_id"),
-        expr(s"vec_id % $ChunkMod").as("chunk_id"),
-        col("score"))
+    chunkHits(VectorIndex.searchStore(spark, path, v, k, nprobe, filter))
   }
 }

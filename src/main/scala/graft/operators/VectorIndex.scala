@@ -887,12 +887,14 @@ object VectorIndex {
     * within-task sort puts `partCol` in ascending runs inside each file,
     * so grouped layouts keep partition-id skipping at the row-group/page
     * level (sort keys prefix-match the writer's required dir-col
-    * ordering, so no second sort is inserted). */
+    * ordering, so no second sort is inserted). The last key, `vec_id`,
+    * makes a file's bytes a function of its rows, not of how the input
+    * happened to be partitioned. */
   private def writePartitioned(
       rows: DataFrame, layout: StoreLayout, dir: String): Unit =
     layout.withDir(rows)
       .hint("rebalance", col(layout.dirCol))
-      .sortWithinPartitions(col(layout.dirCol), col(layout.partCol))
+      .sortWithinPartitions(col(layout.dirCol), col(layout.partCol), col("vec_id"))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", 4 * 1000 * 1000)
       .partitionBy(layout.dirCol)
@@ -1013,8 +1015,10 @@ object VectorIndex {
      else appended)
       // ONE file per micro-batch append, whatever the layout's partition
       // count (the delta contract above). Appends are micro-batches by
-      // contract — bulk backfill goes through build/compact.
+      // contract — bulk backfill goes through build/compact. Sorted like
+      // the base files, for the same partitioning-independent bytes.
       .repartition(1)
+      .sortWithinPartitions(col(layout.partCol), col("vec_id"))
       .write.mode("append").parquet(deltaPath(path))
   }
 
