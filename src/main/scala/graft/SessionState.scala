@@ -88,6 +88,21 @@ object SessionState {
     if (got != null) got else slowPath(k, build)
   }
 
+  /** The entry for `k` while `fresh` accepts it; otherwise one built by
+    * `build` REPLACES it. For state whose source changes under one key
+    * (an append delta's file listing): a key per version would grow the
+    * registry with every change. A thread that races a replacement may
+    * get the other thread's entry. */
+  def getOrReplace[V](k: Key)(fresh: V => Boolean)(build: => V): V = {
+    val hit = cells.get(k)
+    val v = if (hit == null) null else hit.value
+    if (v != null && fresh(v.asInstanceOf[V])) v.asInstanceOf[V]
+    else {
+      if (v != null) cells.remove(k, hit)
+      getOrBuild(k)(build)
+    }
+  }
+
   /** The built entry for `k`, if any — never builds. */
   def get[V](k: Key): Option[V] =
     Option(cells.get(k)).flatMap(c => Option(c.value)).map(_.asInstanceOf[V])

@@ -109,8 +109,8 @@ object RagContext {
     * debugs slow queries). Each stage executes EAGERLY — its outputs are
     * query-parameter-sized (one weight vector, k hits, one context row),
     * never corpus data — and reports wall-clock millis + output rows:
-    *   1 `embed_query`   — hashing-featurize the query text
-    *                       ([[TextAnalysis.queryWeights]], the
+    *   1 `embed_query`   — hash the query text in hand with the kernel
+    *                       ([[TextAnalysis.textWeights]], the
     *                       external-embedder stand-in, timed exactly like
     *                       app.py times `embed_query`)
     *   2 `search`        — top-k cosine over the hashed feature space
@@ -138,8 +138,7 @@ object RagContext {
     // POST body) — fetched outside the timed stages
     val query = Tables.documentText(spark, sfDir, queryDocId)
     val t1 = System.nanoTime()
-    val (qDense, qNorm2) =
-      TextAnalysis.queryWeights(spark, sfDir, queryDocId, 64)
+    val (qDense, qNorm2) = TextAnalysis.textWeights(query, 64)
     val embedMs = ms(t1)
     val t2 = System.nanoTime()
     val hits = TextAnalysis

@@ -147,9 +147,12 @@ object TextAnalysis {
       col("doc_id"),
       TextFunctions.polyFingerprint(col("text")).as("fingerprint"))
 
+  /** The exact squared norm of a slot array. */
+  private def norm2Of(ws: Column): Column =
+    aggregate(ws, lit(0L), (s, x) => s + x.getField("w") * x.getField("w"))
+
   /** The exact squared norm of the `ws` slot-array column. */
-  private[graft] val norm2Col: Column =
-    expr("aggregate(ws, 0L, (s, x) -> s + x.w * x.w)")
+  private[graft] val norm2Col: Column = norm2Of(col("ws"))
 
   /** Hashing-trick text featurizer — the deterministic stand-in for the
     * reference's query-embedding stage (app.py:118 embeds the query text
@@ -227,12 +230,16 @@ object TextAnalysis {
     // and every text_search / chunk_search / search_metrics / rag_* call
     // re-paid a one-row Spark job to fetch the query text, which the
     // driver-side kernel then hashes as [[TextStore.featurizeText]] does
-    SessionState.getOrBuild(key("queryweights", sfDir, queryDocId, dim)) {
-      val ws = TextOps.hashedWeights(
-        UTF8String.fromString(Tables.documentText(spark, sfDir, queryDocId)),
-        dim, TextOps.icuCaseMappings)
-      (Array.tabulate(dim)(i => ws.getStruct(i, 2).getLong(0)), TextOps.norm2(ws))
-    }
+    SessionState.getOrBuild(key("queryweights", sfDir, queryDocId, dim))(
+      textWeights(Tables.documentText(spark, sfDir, queryDocId), dim))
+  }
+
+  /** One text's dense weights and squared norm, hashed on the driver by
+    * the kernel — the embed step of [[queryWeights]] on a text in hand. */
+  private[graft] def textWeights(text: String, dim: Int): (Array[Long], Long) = {
+    val ws = TextOps.hashedWeights(
+      UTF8String.fromString(text), dim, TextOps.icuCaseMappings)
+    (Array.tabulate(dim)(i => ws.getStruct(i, 2).getLong(0)), TextOps.norm2(ws))
   }
 
   /** [[textSearch]] from an already-built query vector — the reference's
@@ -478,11 +485,16 @@ object TextAnalysis {
   private[graft] def chunkWeights(
       docs: DataFrame, size: Int, overlap: Int, dim: Int): DataFrame = {
     val pass = docs.columns.filterNot(_ == "text").map(col).toSeq
+    // The zero-signal drop is bound to the weights through a single-element
+    // array the generator expands: a `norm2 > 0` filter over the `ws`
+    // alias is pushed below the projection with the kernel call inlined,
+    // hashing every chunk twice (the hazard CleanCorpus.scoredKeep binds
+    // its token array against). Generate is no pushdown target.
     chunkDocs(docs, size, overlap)
       .select(pass ++ Seq(col("chunk_id"),
-        TextFunctions.hashedWeights(col("chunk"), dim).as("ws")): _*)
+        explode(filter(array(TextFunctions.hashedWeights(col("chunk"), dim)),
+          ws => norm2Of(ws) > 0)).as("ws")): _*)
       .withColumn("norm2", norm2Col)
-      .where(col("norm2") > 0)
   }
 
   /** BM25 keyword retrieval over `documents` — the lexical half of the

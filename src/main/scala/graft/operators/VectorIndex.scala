@@ -3,8 +3,9 @@ package graft.operators
 import graft.{SessionState, Tables}
 import graft.SessionState.key
 import graft.functions.{IndexFunctions, IndexOps, VectorFunctions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** ANN index structures — the `index_enabled=True` path of the reference's
@@ -285,11 +286,11 @@ object VectorIndex {
 
   // ---- single-generation manifest -----------------------------------
   // A marker file records whether the store is known to hold exactly one
-  // live version per id (fresh build or just-compacted). When set,
-  // [[resolvedRead]] skips the max_by generation resolution entirely — the
-  // probe becomes a pruned scan + TakeOrdered with NO exchange. Appends
-  // and deletes clear the flag; compaction restores it. The check is one
-  // driver-side file-existence call per query.
+  // live version per id (fresh build or just-compacted). When set, the
+  // generation fold ([[resolvedRead]]: id lookups, compaction, the
+  // newest-generation scan) is skipped — a pruned scan with NO exchange.
+  // Appends and deletes clear the flag; compaction restores it. Probes do
+  // not read it: they list the delta instead ([[probedRead]]).
   private def singleGenPath(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/_single_gen")
   private def fs(spark: SparkSession) =
@@ -609,6 +610,19 @@ object VectorIndex {
   private def deltaPath(path: String) = s"$path/vectors_delta"
   private def hasDelta(spark: SparkSession, path: String): Boolean =
     fs(spark).exists(new org.apache.hadoop.fs.Path(deltaPath(path)))
+
+  /** The delta's visible files as (name, length), sorted by name: its
+    * parquet part files, without the `_`/`.` entries (`_temporary`,
+    * `_SUCCESS`, checksums) a directory read skips too. Empty when there
+    * is no delta. One `listStatus`. */
+  private def deltaListing(
+      spark: SparkSession, path: String): Seq[(String, Long)] =
+    try fs(spark).listStatus(new org.apache.hadoop.fs.Path(deltaPath(path)))
+      .toSeq.map(s => (s.getPath.getName, s.getLen, s.isFile))
+      .collect { case (n, len, true) if !n.startsWith("_") && !n.startsWith(".") =>
+        n -> len }
+      .sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Drop a crashed append's leftover `_temporary` before writing a new
     * one. The crash window this closes: FileOutputCommitter task commit
@@ -1110,7 +1124,8 @@ object VectorIndex {
     // latest version of every id, tombstoned ids dropped: one shuffle
     // keyed by vec_id (the same work a read-side resolution pays, paid
     // once instead of per query)
-    val live = resolvedRead(spark, path, Seq("label", "embedding", "metadata"))
+    val live = resolvedRead(spark, path, Seq("label", "embedding", "metadata"),
+      "compaction")
     if (retrain) {
       // the resolved frame feeds both the sample and the rewrite: cache
       // it so they don't each re-fold the generations. Retrain is
@@ -1224,6 +1239,7 @@ object VectorIndex {
     // resolve to content identical to their folded copies) and the next
     // compaction folds them away.
     if (hasDelta(spark, path)) deleteOrFail("vectors_delta")
+    SessionState.invalidatePath(deltaPath(path))
     if (stagedModel) {
       // model swap only after the matching vectors layout is live — and
       // staged the same way, so recovery can always finish it
@@ -1330,14 +1346,13 @@ object VectorIndex {
       path
     }
 
-  /** The ONE generation-resolution read of a store: base scan pruned by
-    * `dirPred` (partition directories, base only — delta rows carry no
-    * dir column) and `rowPred`, the delta filtered by the same `rowPred`
-    * (the partition id and every other column ride as data columns
-    * there, so a read sees exactly the delta rows it would have seen in
-    * the fan-out layout), the optional `asOfGen` snapshot cut, then the
-    * newest version of each id with tombstoned ids dropped, as
-    * (vec_id +: cols).
+  /** The generation fold of a store: base scan pruned by `dirPred`
+    * (partition directories, base only — delta rows carry no dir column)
+    * and `rowPred`, the delta filtered by the same `rowPred` (the
+    * partition id and every other column ride as data columns there, so
+    * a read sees exactly the delta rows it would have seen in the fan-out
+    * layout), the optional `asOfGen` snapshot cut, then the newest
+    * version of each id with tombstoned ids dropped, as (vec_id +: cols).
     *
     * Snapshot reads drop every generation newer than the requested one
     * BEFORE resolution — the generational layout already is a full
@@ -1345,11 +1360,13 @@ object VectorIndex {
     * row-group-prunable filter, not a different storage format (after
     * compaction everything is gen 0: compaction is the declared horizon).
     * On a fresh or compacted store (single-gen manifest, no snapshot) the
-    * resolution and its Exchange are skipped entirely — a probe plan is
-    * scan → filter → TakeOrdered. Otherwise one max_by fold keyed by
-    * vec_id over just `cols` resolves the versions. */
+    * fold and its Exchange are skipped — a scan → filter. Otherwise one
+    * max_by aggregate keyed by vec_id over just `cols` resolves the
+    * versions; it is logged at INFO with `why` it ran. Probes of
+    * partitions go through [[probedRead]], which takes this fold only for
+    * snapshots and the deltas its overlay does not cover. */
   private def resolvedRead(
-      spark: SparkSession, path: String, cols: Seq[String],
+      spark: SparkSession, path: String, cols: Seq[String], why: String,
       rowPred: Option[Column] = None, dirPred: Option[Column] = None,
       asOfGen: Option[Long] = None): DataFrame = {
     def rows(df: DataFrame) = rowPred.fold(df)(df.where)
@@ -1362,7 +1379,8 @@ object VectorIndex {
     val cut = asOfGen.fold(all)(g => all.where(col("gen") <= g))
     if (asOfGen.isEmpty && isSingleGen(spark, path))
       cut.where(!col("deleted")).select(("vec_id" +: cols).map(col): _*)
-    else
+    else {
+      log.info(s"store $path: generation fold ($why)")
       cut
         .groupBy(col("vec_id"))
         .agg(max_by(struct((cols :+ "deleted").map(col): _*),
@@ -1370,22 +1388,135 @@ object VectorIndex {
           struct(col("gen"), !col("deleted"))).as("v"))
         .where(!col("v.deleted"))
         .select(col("vec_id") +: cols.map(c => col(s"v.$c").as(c)): _*)
+    }
+  }
+
+  // ---- resolved delta overlay -----------------------------------------
+  // A probe of a multi-generation store resolves the delta on the driver
+  // instead of folding base + delta per request: the delta is small by
+  // contract, so every row of it is read once into a session entry and
+  // reused until its file listing changes.
+
+  /** Deltas above this many on-disk bytes are not held on the driver;
+    * probes of such a store take the fold. */
+  private final val OverlayMaxBytes = 64L << 20
+
+  /** Every row of the append delta, read with the base `schema` from
+    * exactly the `files` of one listing. */
+  private final class DeltaOverlay(
+      val files: Seq[(String, Long)], val schema: StructType, rows: Array[Row]) {
+    private val idI = schema.fieldIndex("vec_id")
+    private val genI = schema.fieldIndex("gen")
+    private val delI = schema.fieldIndex("deleted")
+    /** A row of gen ≤ 0, or without a gen or deleted flag: the base ties
+      * or beats it, which only the fold resolves. */
+    val foldOnly: Boolean = rows.exists(r =>
+      r.isNullAt(genI) || r.isNullAt(delI) || r.getLong(genI) <= 0)
+
+    /** The fold over the delta rows of `parts` alone: the ids that have a
+      * row there, and each live id's newest row as (vec_id +: cols). */
+    def resolve(partCol: String, parts: Seq[Int], cols: Seq[String])
+        : (Seq[Long], Seq[Row]) = {
+      val p = schema.fieldIndex(partCol)
+      val want = parts.toSet
+      val hit = rows.filter(r => !r.isNullAt(p) && want(r.getInt(p)))
+      val out = ("vec_id" +: cols).map(schema.fieldIndex)
+      // the fold's order: newest gen, then a live row over a tombstone
+      val live = hit.groupBy(_.getLong(idI)).values
+        .map(_.maxBy(r => (r.getLong(genI), !r.getBoolean(delI))))
+        .filterNot(_.getBoolean(delI)).toSeq.sortBy(_.getLong(idI))
+        .map(r => Row.fromSeq(out.map(r.get)))
+      (hit.map(_.getLong(idI)).distinct.toSeq, live)
+    }
+  }
+
+  /** The store's overlay for delta listing `files`: its session entry
+    * while it was built from this listing and base schema, else a new one
+    * replacing it (one collect, logged at INFO). */
+  private def deltaOverlay(
+      spark: SparkSession, path: String, files: Seq[(String, Long)],
+      schema: StructType): DeltaOverlay =
+    SessionState.getOrReplace[DeltaOverlay](key("deltaoverlay", deltaPath(path)))(
+        o => o.files == files && o.schema == schema) {
+      val t0 = System.nanoTime()
+      val rows = spark.read.schema(schema)
+        .parquet(files.map(f => s"${deltaPath(path)}/${f._1}"): _*).collect()
+      log.info(s"delta overlay of store $path: ${files.size} files, " +
+        s"${rows.length} rows, collect ${(System.nanoTime() - t0) / 1000000} ms")
+      new DeltaOverlay(files, schema, rows)
+    }
+
+  /** Snapshot generation every read planned in [[readAsOf]]'s body takes. */
+  private val snapshotOverride = new scala.util.DynamicVariable[Option[Long]](None)
+
+  /** Plan the store reads inside `body` (on this thread) as snapshot reads
+    * at `gen`, through the generation fold — the reference a parity check
+    * compares overlay reads with, for calls without an `asOfGen`. */
+  private[graft] def readAsOf[A](gen: Long)(body: => A): A =
+    snapshotOverride.withValue(Some(gen))(body)
+
+  /** The read of the probed partitions `parts` of a store, generations
+    * resolved, as (vec_id +: cols): the pruned base scan alone when the
+    * delta is absent or empty; otherwise the base scan without the ids
+    * that have a delta row in `parts`, unioned with those ids' live
+    * newest rows as a local relation from the [[DeltaOverlay]]. No
+    * Exchange, and no job beyond the scan's once the overlay is held.
+    *
+    * It equals the fold row for row: the fold sees only `parts`' rows
+    * too, and every base row is gen 0, so a delta row of gen ≥ 1 always
+    * wins over its id's base copy — also where an id's base copy moved
+    * partition under a compaction that crashed before deleting the delta.
+    * The fold stays (logged with its reason) for snapshot reads, a delta
+    * holding a gen ≤ 0 row (whose tie with the base the fold breaks
+    * differently) and a delta over [[OverlayMaxBytes]]. */
+  private def probedRead(
+      spark: SparkSession, path: String, layout: StoreLayout,
+      cols: Seq[String], parts: Seq[Int], asOfGen: Option[Long]): DataFrame = {
+    val rowPred = col(layout.partCol).isin(parts: _*)
+    val snapshot = asOfGen.orElse(snapshotOverride.value)
+    def fold(why: String) = resolvedRead(spark, path, cols, why,
+      Some(rowPred), layout.dirPred(parts), snapshot)
+    val baseAll = readBase(spark, path)
+    def base(skip: Seq[Long]) = {
+      val b = layout.dirPred(parts).fold(baseAll)(baseAll.where)
+        .where(rowPred && !col("deleted"))
+      (if (skip.isEmpty) b else b.where(!col("vec_id").isin(skip: _*)))
+        .select(("vec_id" +: cols).map(col): _*)
+    }
+    lazy val files = deltaListing(spark, path)
+    lazy val bytes = files.map(_._2).sum
+    if (snapshot.isDefined) fold(s"snapshot read at gen ${snapshot.get}")
+    else if (files.isEmpty) base(Nil)
+    else if (bytes > OverlayMaxBytes)
+      fold(s"delta of $bytes bytes exceeds the $OverlayMaxBytes-byte overlay cap")
+    else {
+      val o = deltaOverlay(spark, path, files, baseAll.schema)
+      if (o.foldOnly) fold("delta holds a row of gen <= 0 or with nulls")
+      else {
+        val (ids, live) = o.resolve(layout.partCol, parts, cols)
+        if (ids.isEmpty) base(Nil)
+        else base(ids).unionByName(spark.createDataFrame(
+          java.util.Arrays.asList(live: _*),
+          StructType(("vec_id" +: cols).map(o.schema(_))))
+          // one task: a local scan splits its rows over defaultParallelism
+          .coalesce(1))
+      }
+    }
   }
 
   /** The pruned + version-resolved probe frame every store search shares:
-    * the [[resolvedRead]] of the probed partitions `parts`. The metadata
+    * the [[probedRead]] of the probed partitions `parts`. The metadata
     * `filter` applies AFTER resolution so a superseded generation can
-    * never satisfy the predicate on stale attributes; on the single-gen
-    * path there is nothing stale and Catalyst pushes it into the pruned
-    * scan. */
+    * never satisfy the predicate on stale attributes; over the overlay's
+    * union there is nothing stale left, and Catalyst pushes it into the
+    * pruned scan. */
   private def resolvedPartitions(
       spark: SparkSession, path: String, layout: StoreLayout,
       parts: Seq[Int], filter: Option[Column],
       asOfGen: Option[Long] = None): DataFrame =
-    resolvedRead(spark, path,
-      Seq("label", "metadata", layout.partCol, "embedding"),
-      Some(col(layout.partCol).isin(parts: _*)), layout.dirPred(parts),
-      asOfGen).where(filter.getOrElse(lit(true)))
+    probedRead(spark, path, layout,
+      Seq("label", "metadata", layout.partCol, "embedding"), parts, asOfGen)
+      .where(filter.getOrElse(lit(true)))
 
   /** The probe frame of one query: the store's own layout picks the
     * `nprobe` partitions from its cached model state (driver-side), then
@@ -1410,9 +1541,10 @@ object VectorIndex {
     * partitions probed: the nearest centroids on an IVF store, the
     * cheapest buckets in flip-cost order on an LSH store ([[LshProbes]]
     * is the graded count there). Ids touched by [[appendStore]] resolve
-    * to their highest generation before scoring — a shuffle of only the
-    * pruned subset, skipped outright on a fresh or compacted store
-    * (single-gen manifest) and eliminated again by [[compactStore]].
+    * to their highest generation before scoring, through the driver-held
+    * delta overlay ([[probedRead]]): the plan is the pruned scan unioned
+    * with the resolved delta rows, with no shuffle on any store; an
+    * `asOfGen` snapshot resolves through the fold's one shuffle.
     * `scoreThreshold` switches the tail from top-k to the reference's
     * score-threshold search mode — similarity keeps ≥, distance keeps ≤,
     * and `k` is DELIBERATELY ignored: the contract matches
@@ -1465,7 +1597,8 @@ object VectorIndex {
       asOfGen: Option[Long] = None): DataFrame = {
     require(ids.nonEmpty, "getByIds needs at least one id")
     resolvedRead(spark, path, Seq("label", "metadata", "embedding"),
-      rowPred = Some(col("vec_id").isin(ids: _*)), asOfGen = asOfGen)
+      "id lookup", rowPred = Some(col("vec_id").isin(ids: _*)),
+      asOfGen = asOfGen)
   }
 
   /** The graded `store_get` query: a fixed deterministic id set fetched
@@ -1728,7 +1861,7 @@ object VectorIndex {
     * nothing to measure). */
   private[graft] def newestGenIds(
       spark: SparkSession, path: String, n: Int): Seq[Long] = {
-    val resolved = resolvedRead(spark, path, Seq("gen"))
+    val resolved = resolvedRead(spark, path, Seq("gen"), "newest-generation scan")
     val maxLive = resolved.agg(max(col("gen"))).collect().head
     if (maxLive.isNullAt(0)) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1888,8 +2021,8 @@ object VectorIndex {
     * partition cut). Phase 1 ranks the probed subset by the exact integer
     * ADC LUT and keeps fetchK; phase 2 re-ranks the survivors exactly
     * through the shared resolved probe + a broadcast candidate join.
-    * Generation resolution (multi-gen stores) runs over the pruned
-    * (vec_id, codes) projection only. */
+    * Phase 1 resolves generations through the same delta overlay, over
+    * the pruned (vec_id, codes) projection only. */
   def ivfPqSearchStore(
       spark: SparkSession,
       sfDir: String,
@@ -1923,8 +2056,7 @@ object VectorIndex {
     val probes = layout.probe(centroids, qv, nprobe)
     // phase 1 over the codes projection only — the embedding column is
     // never read here (spec-pinned via ReadSchema)
-    val phase1 = resolvedRead(spark, path, Seq("codes"),
-      Some(col("centroid_id").isin(probes: _*)))
+    val phase1 = probedRead(spark, path, layout, Seq("codes"), probes, None)
     val excl = excludeId.map(id => col("vec_id") =!= id)
     val cand = phase1
       .where(excl.getOrElse(lit(true)))
@@ -2324,8 +2456,8 @@ object VectorIndex {
     val probeDf = probePairs.toDF("query_id", "p_cid", "lut")
     // phase 1: pruned scan of the codes projection — the embedding column
     // is never read here (ReadSchema pin in PqSpec)
-    val phase1 = resolvedRead(spark, path, Seq("centroid_id", "codes"),
-      Some(col("centroid_id").isin(allProbes: _*)))
+    val phase1 = probedRead(spark, path, layout, Seq("centroid_id", "codes"),
+      allProbes, None)
     val adc = (0 until PqM).map(s =>
       element_at(col("lut"),
         lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))

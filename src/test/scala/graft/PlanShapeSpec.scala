@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{KnnSearch, TextAnalysis, VectorIndex}
+import graft.operators.{KnnSearch, TextAnalysis, TextStore, VectorIndex}
 
 /** Pins the executed-plan shape of the scan-dominated queries: these must
   * stay shuffle-free (per-partition top-k heaps + driver merge), because a
@@ -55,6 +55,18 @@ class PlanShapeSpec extends SparkSpec {
   test("chunk search is unique-first: fused chunk+featurize+score, one member join") {
     assertUniqueFirstTopK("chunk_search",
       executedPlan(TextAnalysis.chunkSearch(spark, sfDir)))
+  }
+
+  test("chunk-vector plans hash each chunk once: the kernel is not inlined into a filter") {
+    // the zero-signal drop over the bound weights must not be pushed
+    // below the projection with `hashed_weights(...)` substituted in
+    val docs = Tables.documents(spark, sfDir).where(org.apache.spark.sql.functions.col("doc_id") < 20)
+    Seq("chunkVectors" -> TextStore.chunkVectors(docs),
+        "add_texts" -> TextStore.ingestBatch(spark, sfDir)).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert("hashed_weights\\(".r.findAllIn(plan).size == 1,
+        s"$name must evaluate the hashed-text kernel once per chunk:\n$plan")
+    }
   }
 
   test("bm25 scoring is unique-first: in-row tf over literal terms, one member join") {

@@ -66,7 +66,7 @@ class StoreSearchSpec extends SparkSpec {
     assert(storedFull == exact)
   }
 
-  test("single-gen fast path: no exchange on fresh store, resolution returns after append, compaction restores it") {
+  test("store probes never shuffle: fresh, appended (its id found), compacted") {
     import spark.implicits._
     val path = Files.createTempDirectory("store_singlegen").toString
     VectorIndex.writeStore(spark, sfDir, path)
@@ -84,14 +84,18 @@ class StoreSearchSpec extends SparkSpec {
       s"fresh store probe should skip generation resolution:\n${plan()}")
     val fresh = result()
 
-    // an append flips the store to merge-on-read: resolution (and its
-    // exchange) must come back, and the appended id must win
-    val batch = Seq((9999L, 7, Array.fill(64)(0.01f).toSeq))
+    // an append flips the store to merge-on-read: the probe resolves the
+    // delta through the driver-held overlay, still with no exchange, and a
+    // probe aimed at the appended vector finds it
+    val appended = Array.fill(64)(0.01f)
+    val batch = Seq((9999L, 7, appended.toSeq))
       .toDF("vec_id", "label", "embedding")
     VectorIndex.appendStore(spark, path, batch, gen = 1L)
     assert(!VectorIndex.isSingleGen(spark, path))
-    assert(plan().contains("Exchange"),
-      "merge-on-read store must resolve generations")
+    assert(!plan().contains("Exchange"),
+      s"merge-on-read probe should resolve the delta without a shuffle:\n${plan()}")
+    assert(VectorIndex.searchStore(spark, path, appended, k = 1, nprobe = 4)
+      .collect().map(_.getLong(0)).toSeq == Seq(9999L))
 
     // compaction folds back to single-gen: fast path again, same results
     VectorIndex.compactStore(spark, path)
