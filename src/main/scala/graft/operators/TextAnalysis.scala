@@ -264,16 +264,17 @@ object TextAnalysis {
     // and the norm2 > 0 eligibility applied where they belong (member /
     // unique level respectively). Scoring work falls by the corpus
     // duplicate factor; a fully diverse corpus pays one id-only join
-    // over the same scan.
+    // over the same scan. The norm2 > 0 drop is bound to the weights the
+    // way [[chunkWeights]] binds it, so each unique text is hashed once.
     val uscored = graft.operators.Dedup.uniqueDocs(spark, sfDir)
       .select(col("doc_id").as("uid"),
-        TextFunctions.hashedWeights(col("text"), dim).as("ws"))
+        explode(filter(array(TextFunctions.hashedWeights(col("text"), dim)),
+          ws => norm2Of(ws) > 0)).as("ws"))
       .withColumn("qv", qv)
       .select(col("uid"),
         expr("aggregate(zip_with(ws, qv, (x, q) -> x.w * q), 0L, (s, v) -> s + v)")
           .as("dot"),
         norm2Col.as("norm2"))
-      .where(col("norm2") > 0)
     graft.operators.Dedup.uniqueMembers(spark, sfDir)
       .where(col("doc_id") =!= excludeDocId)
       .join(uscored, "uid")

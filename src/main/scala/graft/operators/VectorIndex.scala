@@ -26,8 +26,9 @@ import org.apache.spark.storage.StorageLevel
   * search surface, langchain_ydb 0.0.8) is index-type-independent, so it
   * is implemented ONCE over a [[StoreLayout]] — the IVF store partitions
   * by nearest centroid, the LSH store by hyperplane-sign bucket, and both
-  * share metadata-in-layout, generational upsert, tombstone delete, the
-  * single-gen manifest, and staged crash-safe compaction. As in the
+  * share metadata-in-layout, generational upsert into an append delta,
+  * tombstone delete, one read path that resolves generations from the
+  * delta's file listing, and staged crash-safe compaction. As in the
   * reference, the index is chosen once, when the store is written; every
   * later call on the store's path reads the layout back from the store.
   */
@@ -284,22 +285,8 @@ object VectorIndex {
       .take(nprobe).map(_._1).toSeq
   }
 
-  // ---- single-generation manifest -----------------------------------
-  // A marker file records whether the store is known to hold exactly one
-  // live version per id (fresh build or just-compacted). When set, the
-  // generation fold ([[resolvedRead]]: id lookups, compaction, the
-  // newest-generation scan) is skipped — a pruned scan with NO exchange.
-  // Appends and deletes clear the flag; compaction restores it. Probes do
-  // not read it: they list the delta instead ([[probedRead]]).
-  private def singleGenPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_single_gen")
   private def fs(spark: SparkSession) =
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-  private def setSingleGen(spark: SparkSession, path: String, v: Boolean): Unit =
-    if (v) fs(spark).create(singleGenPath(path), true).close()
-    else fs(spark).delete(singleGenPath(path), false): Unit
-  private[graft] def isSingleGen(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(singleGenPath(path))
 
   // ---- single-writer lease (r17, VERDICT r16 item 2) ------------------
   // The gen-presence receipt ([[genExists]]) and the stale-_temporary
@@ -607,14 +594,15 @@ object VectorIndex {
   // and deletes it, restoring pure partition-pruned reads. The delta is
   // small by contract (appends between compactions), so scanning its few
   // files per probe costs less than the directory fan-out it replaces.
+  // The delta's file listing is the store's one generation state: an empty
+  // listing means one version per id, all in the base.
   private def deltaPath(path: String) = s"$path/vectors_delta"
-  private def hasDelta(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(new org.apache.hadoop.fs.Path(deltaPath(path)))
 
   /** The delta's visible files as (name, length), sorted by name: its
     * parquet part files, without the `_`/`.` entries (`_temporary`,
     * `_SUCCESS`, checksums) a directory read skips too. Empty when there
-    * is no delta. One `listStatus`. */
+    * is no delta, or only a crashed append's `_temporary`. One
+    * `listStatus`. */
   private def deltaListing(
       spark: SparkSession, path: String): Seq[(String, Long)] =
     try fs(spark).listStatus(new org.apache.hadoop.fs.Path(deltaPath(path)))
@@ -683,7 +671,7 @@ object VectorIndex {
     * stale `_temporary` before writing (sound under the same
     * single-writer contract). */
   def genExists(spark: SparkSession, path: String, gen: Long): Boolean =
-    hasDelta(spark, path) && !spark.read
+    deltaListing(spark, path).nonEmpty && !spark.read
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(
           "gen", org.apache.spark.sql.types.LongType),
@@ -705,7 +693,7 @@ object VectorIndex {
     * stats make it a metadata-weight scan), paid once per stream start. */
   def nextGen(spark: SparkSession, path: String): Long = {
     val deltaMax =
-      if (hasDelta(spark, path))
+      if (deltaListing(spark, path).nonEmpty)
         spark.read
           .schema(org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField(
@@ -732,7 +720,7 @@ object VectorIndex {
   /** The store's full logical content: partitioned base + append delta. */
   private def storeVectors(spark: SparkSession, path: String): DataFrame = {
     val base = readBase(spark, path)
-    if (hasDelta(spark, path))
+    if (deltaListing(spark, path).nonEmpty)
       base.unionByName(deltaFrame(spark, path, base.schema))
     else base
   }
@@ -886,7 +874,6 @@ object VectorIndex {
     SessionState.invalidatePath(s"$path/vectors")
     SessionState.put(modelKey(path), StoreModel(layout, model))
     pqCb.foreach(cb => writePqModelTable(spark, path, cb))
-    setSingleGen(spark, path, v = true)
   }
 
   /** The one physical write of a partitioned store layout. Rows are
@@ -987,7 +974,7 @@ object VectorIndex {
     * index geometry is model state) and appended as ONE delta file at
     * generation `gen`; nothing already written moves. Readers resolve an
     * id to its highest generation across base + delta; compaction folds
-    * everything back to a read-optimal single-gen partitioned layout. */
+    * everything back to a read-optimal delta-less partitioned layout. */
   private def appendAt(
       spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit = {
     val StoreModel(layout, model) = storeModel(spark, path)
@@ -1006,10 +993,6 @@ object VectorIndex {
       .join(batch.select(col("vec_id")).distinct(), Seq("vec_id"), "left_semi")
       .groupBy(col("vec_id"))
       .agg(max(col(layout.partCol)).as("sticky_pid"))
-    // clear the single-gen flag BEFORE the append commits: a crash between
-    // the two then costs one redundant resolution exchange, never a fast
-    // path over a store that silently became multi-generation
-    setSingleGen(spark, path, v = false)
     dropStaleTemporary(spark, path)
     val withMeta =
       if (batch.columns.contains("metadata")) batch
@@ -1064,9 +1047,6 @@ object VectorIndex {
   private def deleteAt(
       spark: SparkSession, path: String, ids: Seq[Long], gen: Long): Unit = {
     val layout = storeModel(spark, path).layout
-    // flag cleared before the write commits — same crash-safety order as
-    // appendAt
-    setSingleGen(spark, path, v = false)
     dropStaleTemporary(spark, path)
     val existing = storeVectors(spark, path)
     val cols = Seq(col("vec_id"), col("label"), col("embedding"),
@@ -1121,11 +1101,10 @@ object VectorIndex {
       s"compactStore(retrain = true): $path has the LSH layout, whose " +
         "hyperplanes are data-independent — there is no trained model to " +
         "re-fit; compact without retrain")
-    // latest version of every id, tombstoned ids dropped: one shuffle
-    // keyed by vec_id (the same work a read-side resolution pays, paid
-    // once instead of per query)
-    val live = resolvedRead(spark, path, Seq("label", "embedding", "metadata"),
-      "compaction")
+    // latest version of every id, tombstoned ids dropped: over a delta,
+    // one shuffle keyed by vec_id
+    val live = storeRead(spark, path, Seq("label", "embedding", "metadata"),
+      None, None, "compaction")
     if (retrain) {
       // the resolved frame feeds both the sample and the rewrite: cache
       // it so they don't each re-fold the generations. Retrain is
@@ -1210,9 +1189,9 @@ object VectorIndex {
     val f = fs(spark)
     def P(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
     // Hadoop FileSystem signals most rename/delete failures by RETURNING
-    // false, not throwing — an unchecked swap step could leave the old
-    // multi-gen layout live while the code below still marks the store
-    // single-gen. Every step must either succeed or abort the swap.
+    // false, not throwing — an unchecked swap step would carry on over a
+    // store still serving the old layout or the folded delta. Every step
+    // must either succeed or abort the swap.
     def renameOrFail(src: String, dst: String): Unit =
       if (!f.rename(P(src), P(dst)))
         throw new java.io.IOException(
@@ -1237,8 +1216,9 @@ object VectorIndex {
     // delta, because post-crash writers may have refilled it. A crash
     // before this delete leaves correct reads (leftover delta rows
     // resolve to content identical to their folded copies) and the next
-    // compaction folds them away.
-    if (hasDelta(spark, path)) deleteOrFail("vectors_delta")
+    // compaction folds them away. With the delta gone its listing is
+    // empty, and every read is the base scan alone.
+    if (deltaListing(spark, path).nonEmpty) deleteOrFail("vectors_delta")
     SessionState.invalidatePath(deltaPath(path))
     if (stagedModel) {
       // model swap only after the matching vectors layout is live — and
@@ -1260,7 +1240,6 @@ object VectorIndex {
     }
     deleteOrFail("vectors_old")
     SessionState.invalidatePath(s"$path/vectors")
-    setSingleGen(spark, path, v = true)
   }
 
   /** Crash recovery for an interrupted compaction swap. Decision rule:
@@ -1268,15 +1247,9 @@ object VectorIndex {
     * swap had begun — roll FORWARD (finish the renames, drop the old
     * layout); otherwise the live store was never touched — roll BACK by
     * discarding staging output. Idempotent: safe to call at any time,
-    * including after a mid-recovery crash.
-    *
-    * Recovery NEVER sets the single-gen flag: writers may have appended
-    * or deleted between the crash and this call (the store is readable
-    * once the new `vectors` is in place), legitimately clearing the
-    * flag — re-asserting it here would let the fast path skip the
-    * generation resolution those mutations require. Leaving the flag as
-    * found is always safe (off merely costs one resolution exchange;
-    * the next clean compaction restores it). */
+    * including after a mid-recovery crash. It never touches the delta
+    * (see below), so reads resolve whatever writers added after the
+    * crash. */
   def recoverStore(spark: SparkSession, path: String): Unit =
     withWriterLease(spark, path, newWriterOwner("recover")) {
       recoverBody(spark, path)
@@ -1346,60 +1319,28 @@ object VectorIndex {
       path
     }
 
-  /** The generation fold of a store: base scan pruned by `dirPred`
-    * (partition directories, base only — delta rows carry no dir column)
-    * and `rowPred`, the delta filtered by the same `rowPred` (the
-    * partition id and every other column ride as data columns there, so
-    * a read sees exactly the delta rows it would have seen in the fan-out
-    * layout), the optional `asOfGen` snapshot cut, then the newest
-    * version of each id with tombstoned ids dropped, as (vec_id +: cols).
-    *
-    * Snapshot reads drop every generation newer than the requested one
-    * BEFORE resolution — the generational layout already is a full
-    * version history until compaction folds it, so time travel is a
-    * row-group-prunable filter, not a different storage format (after
-    * compaction everything is gen 0: compaction is the declared horizon).
-    * On a fresh or compacted store (single-gen manifest, no snapshot) the
-    * fold and its Exchange are skipped — a scan → filter. Otherwise one
-    * max_by aggregate keyed by vec_id over just `cols` resolves the
-    * versions; it is logged at INFO with `why` it ran. Probes of
-    * partitions go through [[probedRead]], which takes this fold only for
-    * snapshots and the deltas its overlay does not cover. */
-  private def resolvedRead(
-      spark: SparkSession, path: String, cols: Seq[String], why: String,
-      rowPred: Option[Column] = None, dirPred: Option[Column] = None,
-      asOfGen: Option[Long] = None): DataFrame = {
-    def rows(df: DataFrame) = rowPred.fold(df)(df.where)
-    val baseAll = readBase(spark, path)
-    val base = rows(dirPred.fold(baseAll)(baseAll.where))
-    val all =
-      if (hasDelta(spark, path))
-        base.unionByName(rows(deltaFrame(spark, path, baseAll.schema)))
-      else base
-    val cut = asOfGen.fold(all)(g => all.where(col("gen") <= g))
-    if (asOfGen.isEmpty && isSingleGen(spark, path))
-      cut.where(!col("deleted")).select(("vec_id" +: cols).map(col): _*)
-    else {
-      log.info(s"store $path: generation fold ($why)")
-      cut
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct((cols :+ "deleted").map(col): _*),
-          // tie-break: same generation prefers the live row to a tombstone
-          struct(col("gen"), !col("deleted"))).as("v"))
-        .where(!col("v.deleted"))
-        .select(col("vec_id") +: cols.map(c => col(s"v.$c").as(c)): _*)
-    }
-  }
-
-  // ---- resolved delta overlay -----------------------------------------
-  // A probe of a multi-generation store resolves the delta on the driver
-  // instead of folding base + delta per request: the delta is small by
-  // contract, so every row of it is read once into a session entry and
+  // ---- generation resolution -------------------------------------------
+  // A read of a multi-generation store resolves the append delta on the
+  // driver instead of folding base + delta per request: the delta is small
+  // by contract, so every row of it is read once into a session entry and
   // reused until its file listing changes.
 
   /** Deltas above this many on-disk bytes are not held on the driver;
-    * probes of such a store take the fold. */
+    * reads of such a store take the fold. */
   private final val OverlayMaxBytes = 64L << 20
+
+  /** The rows of a store a read covers: those whose `column` holds one of
+    * `values` (the probed partition ids, or the requested vec_ids), with
+    * `dirPred` pruning the base's partition directories (base only — delta
+    * rows carry no dir column). */
+  private final case class Selection(
+      column: String, values: Seq[Any], dirPred: Option[Column] = None) {
+    def rowPred: Column = col(column).isin(values: _*)
+  }
+
+  /** The probed partitions `parts` of a `layout` store. */
+  private def probed(layout: StoreLayout, parts: Seq[Int]): Selection =
+    Selection(layout.partCol, parts, layout.dirPred(parts))
 
   /** Every row of the append delta, read with the base `schema` from
     * exactly the `files` of one listing. */
@@ -1413,13 +1354,12 @@ object VectorIndex {
     val foldOnly: Boolean = rows.exists(r =>
       r.isNullAt(genI) || r.isNullAt(delI) || r.getLong(genI) <= 0)
 
-    /** The fold over the delta rows of `parts` alone: the ids that have a
-      * row there, and each live id's newest row as (vec_id +: cols). */
-    def resolve(partCol: String, parts: Seq[Int], cols: Seq[String])
-        : (Seq[Long], Seq[Row]) = {
-      val p = schema.fieldIndex(partCol)
-      val want = parts.toSet
-      val hit = rows.filter(r => !r.isNullAt(p) && want(r.getInt(p)))
+    /** The fold over the delta rows `sel` covers: the ids that have a row
+      * there, and each live id's newest row as (vec_id +: cols). */
+    def resolve(sel: Selection, cols: Seq[String]): (Seq[Long], Seq[Row]) = {
+      val c = schema.fieldIndex(sel.column)
+      val want = sel.values.toSet
+      val hit = rows.filter(r => !r.isNullAt(c) && want(r.get(c)))
       val out = ("vec_id" +: cols).map(schema.fieldIndex)
       // the fold's order: newest gen, then a live row over a tombstone
       val live = hit.groupBy(_.getLong(idI)).values
@@ -1455,57 +1395,87 @@ object VectorIndex {
   private[graft] def readAsOf[A](gen: Long)(body: => A): A =
     snapshotOverride.withValue(Some(gen))(body)
 
-  /** The read of the probed partitions `parts` of a store, generations
-    * resolved, as (vec_id +: cols): the pruned base scan alone when the
-    * delta is absent or empty; otherwise the base scan without the ids
-    * that have a delta row in `parts`, unioned with those ids' live
-    * newest rows as a local relation from the [[DeltaOverlay]]. No
-    * Exchange, and no job beyond the scan's once the overlay is held.
+  /** Every store read, generations resolved, as (vec_id +: cols) over the
+    * rows `sel` covers (the whole store when None). One delta listing
+    * decides how:
+    *   1. a snapshot read (`asOfGen`, or [[readAsOf]]) takes the fold;
+    *   2. an empty listing means one version per id: the base scan alone,
+    *      with no fold and no Exchange;
+    *   3. a whole-store read over a delta (compaction, [[newestGenIds]]),
+    *      a delta over [[OverlayMaxBytes]], or one holding a gen ≤ 0 row
+    *      (whose tie with the base the fold breaks differently) takes the
+    *      fold;
+    *   4. otherwise the base scan without the ids that have a delta row in
+    *      `sel`, unioned with those ids' live newest rows as a local
+    *      relation from the [[DeltaOverlay]]. No Exchange, and no job
+    *      beyond the scan's once the overlay is held.
     *
-    * It equals the fold row for row: the fold sees only `parts`' rows
-    * too, and every base row is gen 0, so a delta row of gen ≥ 1 always
-    * wins over its id's base copy — also where an id's base copy moved
-    * partition under a compaction that crashed before deleting the delta.
-    * The fold stays (logged with its reason) for snapshot reads, a delta
-    * holding a gen ≤ 0 row (whose tie with the base the fold breaks
-    * differently) and a delta over [[OverlayMaxBytes]]. */
-  private def probedRead(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      cols: Seq[String], parts: Seq[Int], asOfGen: Option[Long]): DataFrame = {
-    val rowPred = col(layout.partCol).isin(parts: _*)
+    * The overlay equals the fold row for row: the fold sees only `sel`'s
+    * rows too, and every base row is gen 0, so a delta row of gen ≥ 1
+    * always wins over its id's base copy — also where an id's base copy
+    * moved partition under a compaction that crashed before deleting the
+    * delta.
+    *
+    * The fold unions the pruned base with the delta filtered by the same
+    * row predicate (the partition id rides as a data column there, so a
+    * read sees exactly the delta rows it would have seen in the fan-out
+    * layout), cuts it at the snapshot, and keeps the newest version of
+    * each id with tombstoned ids dropped: one max_by aggregate keyed by
+    * vec_id, logged at INFO with `why` the read ran and the reason it
+    * folds. Time travel is that cut: the generational layout already is a
+    * full version history until compaction folds it, so a snapshot is a
+    * row-group-prunable filter, not a different storage format (after
+    * compaction everything is gen 0: compaction is the declared horizon). */
+  private def storeRead(
+      spark: SparkSession, path: String, cols: Seq[String],
+      sel: Option[Selection], asOfGen: Option[Long], why: String): DataFrame = {
     val snapshot = asOfGen.orElse(snapshotOverride.value)
-    def fold(why: String) = resolvedRead(spark, path, cols, why,
-      Some(rowPred), layout.dirPred(parts), snapshot)
+    val files = deltaListing(spark, path)
+    val bytes = files.map(_._2).sum
     val baseAll = readBase(spark, path)
-    def base(skip: Seq[Long]) = {
-      val b = layout.dirPred(parts).fold(baseAll)(baseAll.where)
-        .where(rowPred && !col("deleted"))
-      (if (skip.isEmpty) b else b.where(!col("vec_id").isin(skip: _*)))
+    def rows(df: DataFrame) = sel.fold(df)(s => df.where(s.rowPred))
+    val base = rows(sel.flatMap(_.dirPred).fold(baseAll)(baseAll.where))
+    def scan(skip: Seq[Long]) = {
+      val live = base.where(!col("deleted"))
+      (if (skip.isEmpty) live else live.where(!col("vec_id").isin(skip: _*)))
         .select(("vec_id" +: cols).map(col): _*)
     }
-    lazy val files = deltaListing(spark, path)
-    lazy val bytes = files.map(_._2).sum
-    if (snapshot.isDefined) fold(s"snapshot read at gen ${snapshot.get}")
-    else if (files.isEmpty) base(Nil)
-    else if (bytes > OverlayMaxBytes)
-      fold(s"delta of $bytes bytes exceeds the $OverlayMaxBytes-byte overlay cap")
-    else {
-      val o = deltaOverlay(spark, path, files, baseAll.schema)
-      if (o.foldOnly) fold("delta holds a row of gen <= 0 or with nulls")
-      else {
-        val (ids, live) = o.resolve(layout.partCol, parts, cols)
-        if (ids.isEmpty) base(Nil)
-        else base(ids).unionByName(spark.createDataFrame(
-          java.util.Arrays.asList(live: _*),
-          StructType(("vec_id" +: cols).map(o.schema(_))))
-          // one task: a local scan splits its rows over defaultParallelism
-          .coalesce(1))
-      }
+    def fold(reason: String) = {
+      log.info(s"store $path: $why takes the generation fold ($reason)")
+      val all =
+        if (files.isEmpty) base
+        else base.unionByName(rows(deltaFrame(spark, path, baseAll.schema)))
+      snapshot.fold(all)(g => all.where(col("gen") <= g))
+        .groupBy(col("vec_id"))
+        .agg(max_by(struct((cols :+ "deleted").map(col): _*),
+          // tie-break: same generation prefers the live row to a tombstone
+          struct(col("gen"), !col("deleted"))).as("v"))
+        .where(!col("v.deleted"))
+        .select(col("vec_id") +: cols.map(c => col(s"v.$c").as(c)): _*)
+    }
+    (snapshot, sel) match {
+      case (Some(g), _) => fold(s"snapshot read at gen $g")
+      case _ if files.isEmpty => scan(Nil)
+      case (_, None) => fold("whole-store read over a delta")
+      case _ if bytes > OverlayMaxBytes =>
+        fold(s"delta of $bytes bytes exceeds the $OverlayMaxBytes-byte overlay cap")
+      case (_, Some(s)) =>
+        val o = deltaOverlay(spark, path, files, baseAll.schema)
+        if (o.foldOnly) fold("delta holds a row of gen <= 0 or with nulls")
+        else {
+          val (ids, live) = o.resolve(s, cols)
+          if (ids.isEmpty) scan(Nil)
+          else scan(ids).unionByName(spark.createDataFrame(
+            java.util.Arrays.asList(live: _*),
+            StructType(("vec_id" +: cols).map(o.schema(_))))
+            // one task: a local scan splits its rows over defaultParallelism
+            .coalesce(1))
+        }
     }
   }
 
   /** The pruned + version-resolved probe frame every store search shares:
-    * the [[probedRead]] of the probed partitions `parts`. The metadata
+    * the [[storeRead]] of the probed partitions `parts`. The metadata
     * `filter` applies AFTER resolution so a superseded generation can
     * never satisfy the predicate on stale attributes; over the overlay's
     * union there is nothing stale left, and Catalyst pushes it into the
@@ -1514,8 +1484,8 @@ object VectorIndex {
       spark: SparkSession, path: String, layout: StoreLayout,
       parts: Seq[Int], filter: Option[Column],
       asOfGen: Option[Long] = None): DataFrame =
-    probedRead(spark, path, layout,
-      Seq("label", "metadata", layout.partCol, "embedding"), parts, asOfGen)
+    storeRead(spark, path, Seq("label", "metadata", layout.partCol, "embedding"),
+      Some(probed(layout, parts)), asOfGen, "probe")
       .where(filter.getOrElse(lit(true)))
 
   /** The probe frame of one query: the store's own layout picks the
@@ -1542,7 +1512,7 @@ object VectorIndex {
     * cheapest buckets in flip-cost order on an LSH store ([[LshProbes]]
     * is the graded count there). Ids touched by [[appendStore]] resolve
     * to their highest generation before scoring, through the driver-held
-    * delta overlay ([[probedRead]]): the plan is the pruned scan unioned
+    * delta overlay ([[storeRead]]): the plan is the pruned scan unioned
     * with the resolved delta rows, with no shuffle on any store; an
     * `asOfGen` snapshot resolves through the fold's one shuffle.
     * `scoreThreshold` switches the tail from top-k to the reference's
@@ -1588,17 +1558,18 @@ object VectorIndex {
     * (ids spread across centroid partitions by construction), so the
     * read pays file footers plus the row groups whose id range covers a
     * requested id — the honest point-lookup cost of a store laid out
-    * for search, and why the resolution below runs over at most the few
-    * surviving physical copies rather than the store. */
+    * for search. Generations resolve like a probe's ([[storeRead]]): over
+    * a delta, the base scan drops the requested ids that have a delta row
+    * and the overlay supplies their newest live rows — one job and no
+    * Exchange; an `asOfGen` snapshot takes the fold. */
   def getByIds(
       spark: SparkSession,
       path: String,
       ids: Seq[Long],
       asOfGen: Option[Long] = None): DataFrame = {
     require(ids.nonEmpty, "getByIds needs at least one id")
-    resolvedRead(spark, path, Seq("label", "metadata", "embedding"),
-      "id lookup", rowPred = Some(col("vec_id").isin(ids: _*)),
-      asOfGen = asOfGen)
+    storeRead(spark, path, Seq("label", "metadata", "embedding"),
+      Some(Selection("vec_id", ids)), asOfGen, "id lookup")
   }
 
   /** The graded `store_get` query: a fixed deterministic id set fetched
@@ -1847,11 +1818,12 @@ object VectorIndex {
   /** Lowest `n` live vec_ids of the store's FRESHEST surviving
     * generation — the default drift probes for [[storeHealth]] callers
     * (the freshest appends are the rows whose retrieval degrades under
-    * drift; see the report doc). On a compacted (single-gen) store this
-    * is simply the lowest-id live rows.
+    * drift; see the report doc). On a store without a delta this is
+    * simply the lowest-id live rows.
     *
-    * Ids resolve through the same newest-version-wins fold the serving
-    * reads use (r19, ADVICE r18): a raw `gen === max(gen)` pick returned
+    * Ids resolve through the same newest-version-wins rule the serving
+    * reads use (a whole-store [[storeRead]], which folds over a delta;
+    * r19, ADVICE r18): a raw `gen === max(gen)` pick returned
     * EMPTY when the newest generation was tombstone-only (a delete was
     * the last operation) — precisely the churn/delete state whose fresh
     * rows the drift probes exist to sample — silently degrading callers
@@ -1861,7 +1833,8 @@ object VectorIndex {
     * nothing to measure). */
   private[graft] def newestGenIds(
       spark: SparkSession, path: String, n: Int): Seq[Long] = {
-    val resolved = resolvedRead(spark, path, Seq("gen"), "newest-generation scan")
+    val resolved = storeRead(spark, path, Seq("gen"), None, None,
+      "newest-generation scan")
     val maxLive = resolved.agg(max(col("gen"))).collect().head
     if (maxLive.isNullAt(0)) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -2056,7 +2029,8 @@ object VectorIndex {
     val probes = layout.probe(centroids, qv, nprobe)
     // phase 1 over the codes projection only — the embedding column is
     // never read here (spec-pinned via ReadSchema)
-    val phase1 = probedRead(spark, path, layout, Seq("codes"), probes, None)
+    val phase1 = storeRead(spark, path, Seq("codes"), Some(probed(layout, probes)),
+      None, "probe")
     val excl = excludeId.map(id => col("vec_id") =!= id)
     val cand = phase1
       .where(excl.getOrElse(lit(true)))
@@ -2456,8 +2430,8 @@ object VectorIndex {
     val probeDf = probePairs.toDF("query_id", "p_cid", "lut")
     // phase 1: pruned scan of the codes projection — the embedding column
     // is never read here (ReadSchema pin in PqSpec)
-    val phase1 = probedRead(spark, path, layout, Seq("centroid_id", "codes"),
-      allProbes, None)
+    val phase1 = storeRead(spark, path, Seq("centroid_id", "codes"),
+      Some(probed(layout, allProbes)), None, "probe")
     val adc = (0 until PqM).map(s =>
       element_at(col("lut"),
         lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))

@@ -9,15 +9,17 @@ import java.nio.file.{Files, Paths}
 /** Forced-branch oracle verification (r18, VERDICT r17 item 1) — the
   * CapVerify pattern applied to every store-serving conditional that no
   * graded configuration fires. The graded `*_ivf`/`*_lsh`/store queries
-  * all run against FRESH single-generation stores, so three whole
+  * all run against FRESH stores with no append delta, so three whole
   * serving branches had green gates without ever executing under them:
   *
-  *   1. multi-generation resolution (the `max_by(gen)` fold in
-  *      `resolvedPartitions`/`getByIds`) — engaged only after appends;
-  *   2. the merge-on-read delta union (`hasDelta` → base ∪ delta, with
-  *      the partition id as a DATA column on the delta side — for the
-  *      LSH store this is also the grouped-dir layout's row-group
-  *      pruning composed with delta rows and metadata filters);
+  *   1. multi-generation resolution (`VectorIndex.storeRead`'s delta
+  *      overlay for probes and `getByIds`, its `max_by(gen)` fold for
+  *      whole-store reads) — engaged only after appends;
+  *   2. the merge-on-read delta (a non-empty delta listing → base scan
+  *      without the delta's ids ∪ the delta's newest rows, with the
+  *      partition id as a DATA column on the delta side — for the LSH
+  *      store this is also the grouped-dir layout's row-group pruning
+  *      composed with delta rows and metadata filters);
   *   3. recovery mid-states (roll-back and roll-forward shapes of an
   *      interrupted compaction swap) composed with searches.
   *
@@ -39,12 +41,13 @@ import java.nio.file.{Files, Paths}
   *                 mid-swap crash, vectors renamed aside and a staged
   *                 layout + staged model left behind (roll-forward)
   *   compacted/    after real compaction folds the churn away
-  *                 (single-gen fast path restored — the loop closes)
+  *                 (no delta left: the base scan alone — the loop
+  *                 closes)
   *
   * Run: BranchVerify <sfDir> <outDir> (env: SPARK_GRAFT_CPUS), then
   * `python3 tools/check_oracle.py <sfDir> <outDir>/<phase>` per phase.
   * The tool prints one JSON line with the forced-state evidence (delta
-  * file counts, generation counts, single-gen flags) so the artifact
+  * file counts, generation counts, tombstone counts) so the artifact
   * shows the branches were actually ENGAGED, not just re-run. */
 object BranchVerify {
 
@@ -72,7 +75,7 @@ object BranchVerify {
   private def allQueries = ivfQueries ++ lshQueries ++ chunkQueries
 
   /** Tombstone and byte-identically re-append every live row of a fresh
-    * single-gen store, in chunks of `chunk` ids — each chunk a
+    * delta-less store, in chunks of `chunk` ids — each chunk a
     * (delete, append) generation pair. Content-preserving by
     * construction; returns the number of generations written. */
   /** Chunk size: ids per (delete, append) generation pair. Smaller →
@@ -147,23 +150,21 @@ object BranchVerify {
       throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
-  /** Forced-state evidence for one store: delta present, file and
-    * generation counts, single-gen flag. */
+  /** Forced-state evidence for one store: delta present, file,
+    * generation and tombstone counts. */
   private def evidence(spark: SparkSession, path: String): String = {
-    val f = hadoopFs(spark, path)
-    val deltaP = new org.apache.hadoop.fs.Path(s"$path/vectors_delta")
-    val hasDelta = f.exists(deltaP)
-    val (files, gens, tombs) =
-      if (hasDelta) {
-        val d = spark.read.parquet(s"$path/vectors_delta")
-        val r = d.agg(countDistinct(col("gen")),
-          sum(when(col("deleted"), 1L).otherwise(0L))).collect().head
-        (f.listStatus(deltaP).count(_.getPath.getName.endsWith(".parquet")),
-          r.getLong(0), r.getLong(1))
-      } else (0, 0L, 0L)
-    s"""{"delta":$hasDelta,"delta_files":$files,"delta_gens":$gens""" +
-      s""","tombstones":$tombs""" +
-      s""","single_gen":${VectorIndex.isSingleGen(spark, path)}}"""
+    val files = Option(hadoopFs(spark, path).globStatus(
+      new org.apache.hadoop.fs.Path(s"$path/vectors_delta/*.parquet")))
+      .fold(0)(_.length)
+    val (gens, tombs) =
+      if (files > 0) {
+        val r = spark.read.parquet(s"$path/vectors_delta")
+          .agg(countDistinct(col("gen")),
+            sum(when(col("deleted"), 1L).otherwise(0L))).collect().head
+        (r.getLong(0), r.getLong(1))
+      } else (0L, 0L)
+    s"""{"delta":${files > 0},"delta_files":$files,"delta_gens":$gens""" +
+      s""","tombstones":$tombs}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -219,7 +220,7 @@ object BranchVerify {
     VectorIndex.recoverStore(spark, lshPath)
     dump(spark, sfDir, s"$outDir/recover_fwd", ivfQueries ++ lshQueries)
 
-    // real compaction folds the churn away: single-gen fast path again
+    // real compaction folds the churn away: no delta, the base scan alone
     Seq(ivfPath, lshPath, chunkPath).foreach(VectorIndex.compactStore(spark, _))
     val evCompact = Seq("ivf" -> ivfPath, "lsh" -> lshPath,
       "chunk" -> chunkPath)

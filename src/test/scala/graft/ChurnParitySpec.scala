@@ -42,19 +42,28 @@ class ChurnParitySpec extends SparkSpec {
         .sortBy(_._1).toSeq)
   }
 
+  /** An id lookup plans no Exchange, with or without a delta. */
+  private def assertLookupUnshuffled(path: String): Unit = {
+    val plan = VectorIndex.getByIds(spark, path, Seq(3L, 7L, 11L))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"id lookup shuffles:\n$plan")
+  }
+
   test("content-preserving churn leaves every IVF store read identical") {
     val path = Files.createTempDirectory("churn_ivf").toString
     VectorIndex.writeStore(spark, sfDir, path)
     val before = ivfReads(path)
     val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2, "churn must write at least one generation pair")
-    assert(!VectorIndex.isSingleGen(spark, path),
+    assert(deltaFiles(path) > 0,
       "churn must force the multi-gen resolution branch")
     assert(ivfReads(path) == before,
       "churned store reads diverged from the un-churned store")
-    // and compaction folds it back to the same answers on the fast path
+    assertLookupUnshuffled(path)
+    // and compaction folds it back to the same answers from the base alone
     VectorIndex.compactStore(spark, path)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
+    assertLookupUnshuffled(path)
     assert(ivfReads(path) == before)
   }
 
@@ -64,11 +73,13 @@ class ChurnParitySpec extends SparkSpec {
     val before = lshReads(path)
     val gens = BranchVerify.churn(spark, path)
     assert(gens >= 2)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) > 0)
     assert(lshReads(path) == before,
       "churned LSH store reads diverged from the un-churned store")
+    assertLookupUnshuffled(path)
     VectorIndex.compactStore(spark, path)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
+    assertLookupUnshuffled(path)
     assert(lshReads(path) == before)
   }
 }

@@ -56,13 +56,12 @@ class CompactRecoverySpec extends SparkSpec {
     assert(hfs.exists(new Path(s"$path/vectors")))
     assert(!hfs.exists(new Path(s"$path/vectors_old")))
     assert(!hfs.exists(new Path(s"$path/vectors_compact")))
-    // recovery leaves the flag as found (here: still set by writeStore —
-    // nothing cleared it); it never asserts it itself
-    assert(VectorIndex.isSingleGen(spark, path))
+    // recovery leaves the delta as found: here there is none
+    assert(deltaFiles(path) == 0)
     assert(search(path) == before)
   }
 
-  test("recovery never re-asserts single-gen over post-crash mutations") {
+  test("recovery keeps post-crash mutations: id 1's newest generation wins") {
     import spark.implicits._
     val path = Files.createTempDirectory("recover_mut").toString
     VectorIndex.writeStore(spark, sfDir, path)
@@ -74,17 +73,17 @@ class CompactRecoverySpec extends SparkSpec {
       .write.partitionBy("centroid_id").parquet(s"$path/vectors_old_stage")
     hfs.rename(new Path(s"$path/vectors_old_stage"), new Path(s"$path/vectors_old"))
 
-    // a writer updates an id before anyone runs recovery: the flag is
-    // legitimately cleared and a gen-1 row exists
+    // a writer updates an id before anyone runs recovery: a gen-1 row
+    // lands in the delta
     VectorIndex.appendStore(spark, path,
       Seq((1L, 7, qv.toSeq)).toDF("vec_id", "label", "embedding"), gen = 1L)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) > 0)
 
     VectorIndex.recoverStore(spark, path)
     assert(!hfs.exists(new Path(s"$path/vectors_old")))
-    // the flag must STAY off: the fast path would skip the resolution the
-    // append requires (stale gen-0 copy of id 1 would come back)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    // the delta must survive recovery: without it the stale gen-0 copy
+    // of id 1 would come back
+    assert(deltaFiles(path) > 0)
     val res = search(path)
     val v1 = res.find(_._1 == 1L).get
     assert(v1._2 == 1.0, s"latest generation of id 1 must win: $res")
@@ -122,7 +121,7 @@ class CompactRecoverySpec extends SparkSpec {
     assert(!hfs.exists(new Path(s"$path/centroids_old")))
     assert(!hfs.exists(new Path(s"$path/vectors_old")))
     assert(hfs.exists(new Path(s"$path/centroids")))
-    assert(VectorIndex.isSingleGen(spark, path)) // as found, untouched
+    assert(deltaFiles(path) == 0) // as found, untouched
     assert(search(path) == before)
   }
 

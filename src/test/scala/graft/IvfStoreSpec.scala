@@ -80,7 +80,7 @@ class IvfStoreSpec extends SparkSpec {
     import spark.implicits._
     val path = Files.createTempDirectory("ivf_get_by_ids").toString
     VectorIndex.writeStore(spark, sfDir, path)
-    // single-gen fast path: the In filter reaches the scan
+    // a store without a delta: the In filter reaches the scan
     val fresh = VectorIndex.getByIds(spark, path, Seq(1L, 5L, 9L))
     val plan = fresh.queryExecution.executedPlan.toString
     assert(plan.contains("In(vec_id") && plan.contains("PushedFilters"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-5 LSH store parity (VERDICT r3 item 3): the bucket-partitioned
   * store shares the IVF store's CRUD machinery — metadata-in-layout,
-  * generational upsert, tombstone delete, single-gen manifest, compaction
+  * generational upsert, tombstone delete, delta-listing reads, compaction
   * — through the same layout-parameterized code path, and the same public
   * calls: the layout is chosen once at write time and read back from the
   * store by every later call on its path. */
@@ -124,7 +124,7 @@ class LshStoreSpec extends SparkSpec {
       VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = graded)
         .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq
 
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
     assert(!plan().contains("Exchange"),
       s"fresh lsh store probe should skip generation resolution:\n${plan()}")
     val fresh = result()
@@ -135,14 +135,14 @@ class LshStoreSpec extends SparkSpec {
     val batch = Seq((9999L, 7, appended.toSeq))
       .toDF("vec_id", "label", "embedding")
     VectorIndex.appendStore(spark, path, batch, gen = 1L)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) > 0)
     assert(!plan().contains("Exchange"),
       s"merge-on-read lsh store probe should not shuffle:\n${plan()}")
     assert(VectorIndex.searchStore(spark, path, appended, k = 1, nprobe = graded)
       .collect().map(_.getLong(0)).toSeq == Seq(9999L))
 
     VectorIndex.compactStore(spark, path)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
     assert(!plan().contains("Exchange"),
       s"compacted lsh store probe should skip generation resolution:\n${plan()}")
     // the appended vector is near-zero, far from the query: top-10 unchanged
@@ -275,12 +275,12 @@ class LshStoreSpec extends SparkSpec {
       VectorIndex.compactStore(spark, path, retrain = true))
     assert(retrain.getMessage.contains("LSH layout") &&
       retrain.getMessage.contains("data-independent"), retrain.getMessage)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) > 0)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$path/_writer_lease")))
 
     VectorIndex.compactStore(spark, path)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
     val compacted = ids(VectorIndex.searchStore(spark, path, qv,
       nprobe = graded, filter = noSelf))
     assert(!compacted.contains(newId) && compacted.length == 10)

@@ -6,14 +6,14 @@ import graft.operators.VectorIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** A probe of a multi-generation store resolves the append delta through
-  * the driver-held overlay. Every overlay read must equal the generation
-  * fold of the same call, read as a snapshot at `Long.MaxValue`, on every
-  * layout and in every delta state: sticky updates and new ids,
-  * tombstones (also as an id's newest generation), several generations,
-  * a delta file that arrives from outside the session, the leftover delta
-  * of a compaction that crashed before deleting it, and a gen-0 delta row
-  * (which takes the fold). */
+/** A probe or id lookup of a multi-generation store resolves the append
+  * delta through the driver-held overlay. Every overlay read must equal
+  * the generation fold of the same call, read as a snapshot at
+  * `Long.MaxValue`, on every layout and in every delta state: sticky
+  * updates and new ids, tombstones (also as an id's newest generation),
+  * several generations, a delta file that arrives from outside the
+  * session, the leftover delta of a compaction that crashed before
+  * deleting it, and a gen-0 delta row (which takes the fold). */
 class OverlayParitySpec extends SparkSpec {
 
   // a private corpus copy: its session store is mutated here and must
@@ -41,7 +41,13 @@ class OverlayParitySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
   }
 
-  /** Every probe-path read of the store, for the query vectors `qs`:
+  /** Ids the lookups read, over the states [[run]] builds: updated (7,
+    * 13), new (900001–900004), tombstoned (11, 900002, then 900001 and 13)
+    * and untouched (0, 3, 42). */
+  private val lookupIds =
+    Seq(0L, 3L, 7L, 11L, 13L, 42L, 900001L, 900002L, 900003L, 900004L)
+
+  /** Every overlay-path read of the store, for the query vectors `qs`:
     * through the overlay, or (`fold`) through the generation fold. */
   private def reads(
       layout: VectorIndex.StoreLayout, qs: Seq[Array[Float]],
@@ -71,6 +77,9 @@ class OverlayParitySpec extends SparkSpec {
           spark, path, q, k = 10, nprobe = 4, fetchK = 30)))
        else Nil)
     } ++ Seq(
+      // getByIds carries no ordering contract
+      "get by ids" -> rows(VectorIndex.getByIds(spark, path, lookupIds))
+        .sortBy(_.head.asInstanceOf[Long]),
       "batch" -> rows(VectorIndex.corpusBatchSearch(spark, dir, layout,
         nQueries = 4, k = 5, nprobe = probes(1)))) ++
       (if (ivf) Seq("batch pq" -> rows(VectorIndex.batchIvfPqSearchStoreAt(
@@ -124,6 +133,11 @@ class OverlayParitySpec extends SparkSpec {
     assert(jobsOf(warm.collect(): Unit) == 1)
     val plan = warm.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"overlay probe shuffles:\n$plan")
+    // and a warm id lookup: one job, no shuffle
+    val lookup = VectorIndex.getByIds(spark, path, lookupIds)
+    assert(jobsOf(lookup.collect(): Unit) == 1)
+    val lookupPlan = lookup.queryExecution.executedPlan.toString
+    assert(!lookupPlan.contains("Exchange"), s"overlay id lookup shuffles:\n$lookupPlan")
 
     // tombstones
     VectorIndex.deleteFromStore(spark, path, Seq(11L, 900002L), gen = 2L)
@@ -145,10 +159,7 @@ class OverlayParitySpec extends SparkSpec {
     VectorIndex.writeStore(spark, dir, other, layout = layout)
     VectorIndex.appendStore(spark, other, batch(Seq(
       (900004L, emb(4L), "en"))), gen = 5L)
-    Files.list(Paths.get(s"$other/vectors_delta"))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .forEach(f => Files.copy(f,
-        Paths.get(s"$path/vectors_delta/copied-${f.getFileName}")))
+    copyDelta(other, path)
     assert(ids(search(emb(4L))).contains(900004L))
     assertParity(layout, qs :+ emb(4L), "a copied-in delta file")
 
@@ -160,8 +171,6 @@ class OverlayParitySpec extends SparkSpec {
     VectorIndex.compactStore(spark, path)
     assert(partOf(path, layout)(u1) != part(u1), "u1's base copy must move")
     copyTree(saved, Paths.get(s"$path/vectors_delta"))
-    // the crash came before the single-gen marker was written
-    Files.delete(Paths.get(s"$path/_single_gen"))
     assertParity(layout, qs :+ emb(4L), "a leftover delta after a crashed compaction")
 
     // a gen-0 tombstone ties with its base copy: the fold keeps the live
@@ -173,6 +182,34 @@ class OverlayParitySpec extends SparkSpec {
     assert(gen0.queryExecution.executedPlan.toString.contains("Exchange"),
       "a gen-0 delta row must take the generation fold")
     assertParity(layout, qs, "a gen-0 delta row")
+  }
+
+  /** Copy the delta files of the store at `from` into the store at `to`. */
+  private def copyDelta(from: String, to: String): Unit = {
+    Files.createDirectories(Paths.get(s"$to/vectors_delta"))
+    Files.list(Paths.get(s"$from/vectors_delta"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .forEach(f => Files.copy(f,
+        Paths.get(s"$to/vectors_delta/copied-${f.getFileName}")))
+  }
+
+  test("a delta copied into a fresh store resolves in id lookups") {
+    // the fresh store never appended: only its delta listing says it now
+    // holds a newer version of id 5 and a tombstone of id 9
+    val path = Files.createTempDirectory("overlay_fresh").toString
+    VectorIndex.writeStore(spark, dir, path)
+    val other = Files.createTempDirectory("overlay_fresh_src").toString
+    VectorIndex.writeStore(spark, dir, other)
+    VectorIndex.appendStore(spark, other, batch(Seq((5L, emb(6L), "de"))), gen = 1L)
+    VectorIndex.deleteFromStore(spark, other, Seq(9L), gen = 2L)
+    copyDelta(other, path)
+    def lookup(df: => DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(2))).sortBy(_._1).toSeq
+    val got = lookup(VectorIndex.getByIds(spark, path, Seq(5L, 6L, 9L)))
+    assert(got.map(_._1) == Seq(5L, 6L), s"one version per live id: $got")
+    assert(got.head._2 == """{"lang":"de"}""", s"id 5 must be its newest version: $got")
+    assert(got == lookup(VectorIndex.readAsOf(Long.MaxValue)(
+      VectorIndex.getByIds(spark, path, Seq(5L, 6L, 9L)))))
   }
 
   test("overlay reads equal the generation fold on an IVF-PQ store") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{KnnSearch, TextAnalysis, TextStore, VectorIndex}
+import graft.operators.{KnnSearch, RagContext, TextAnalysis, TextStore, VectorIndex}
 
 /** Pins the executed-plan shape of the scan-dominated queries: these must
   * stay shuffle-free (per-partition top-k heaps + driver merge), because a
@@ -62,10 +62,13 @@ class PlanShapeSpec extends SparkSpec {
     // below the projection with `hashed_weights(...)` substituted in
     val docs = Tables.documents(spark, sfDir).where(org.apache.spark.sql.functions.col("doc_id") < 20)
     Seq("chunkVectors" -> TextStore.chunkVectors(docs),
-        "add_texts" -> TextStore.ingestBatch(spark, sfDir)).foreach { case (name, df) =>
+        "add_texts" -> TextStore.ingestBatch(spark, sfDir),
+        // unique-text scoring binds its zero-signal drop the same way
+        "text_search" -> TextAnalysis.textSearch(spark, sfDir),
+        "hybrid_rrf" -> RagContext.hybridRrf(spark, sfDir)).foreach { case (name, df) =>
       val plan = df.queryExecution.optimizedPlan.toString
       assert("hashed_weights\\(".r.findAllIn(plan).size == 1,
-        s"$name must evaluate the hashed-text kernel once per chunk:\n$plan")
+        s"$name must evaluate the hashed-text kernel once per text:\n$plan")
     }
   }
 

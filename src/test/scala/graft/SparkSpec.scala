@@ -46,6 +46,18 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Parquet files in the append delta of the store at `path`: 0 when it
+    * has none, the state in which every read is the base scan alone. */
+  def deltaFiles(path: String): Int = {
+    val d = java.nio.file.Paths.get(s"$path/vectors_delta")
+    if (!java.nio.file.Files.isDirectory(d)) 0
+    else {
+      val files = java.nio.file.Files.list(d)
+      try files.filter(_.getFileName.toString.endsWith(".parquet")).count().toInt
+      finally files.close()
+    }
+  }
 }
 
 object SparkSpec {

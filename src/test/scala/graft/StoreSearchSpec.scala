@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Round-3 store-search surface: threshold / MMR / JSON-metadata search
-  * through the materialized IVF store, the single-generation fast path,
+  * through the materialized IVF store, shuffle-free probes with and
+  * without an append delta,
   * and retrain-on-compact. */
 class StoreSearchSpec extends SparkSpec {
 
@@ -79,7 +80,7 @@ class StoreSearchSpec extends SparkSpec {
       VectorIndex.searchStore(spark, path, qv, k = 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(3))).toSeq
 
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
     assert(!plan().contains("Exchange"),
       s"fresh store probe should skip generation resolution:\n${plan()}")
     val fresh = result()
@@ -91,15 +92,15 @@ class StoreSearchSpec extends SparkSpec {
     val batch = Seq((9999L, 7, appended.toSeq))
       .toDF("vec_id", "label", "embedding")
     VectorIndex.appendStore(spark, path, batch, gen = 1L)
-    assert(!VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) > 0)
     assert(!plan().contains("Exchange"),
       s"merge-on-read probe should resolve the delta without a shuffle:\n${plan()}")
     assert(VectorIndex.searchStore(spark, path, appended, k = 1, nprobe = 4)
       .collect().map(_.getLong(0)).toSeq == Seq(9999L))
 
-    // compaction folds back to single-gen: fast path again, same results
+    // compaction folds the delta away: the base scan alone, same results
     VectorIndex.compactStore(spark, path)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
     assert(!plan().contains("Exchange"),
       s"compacted store probe should skip generation resolution:\n${plan()}")
     val compacted = result()
@@ -124,7 +125,7 @@ class StoreSearchSpec extends SparkSpec {
     VectorIndex.appendStore(spark, path, shifted(20f, 30000L), gen = 3L)
 
     VectorIndex.compactStore(spark, path, retrain = true)
-    assert(VectorIndex.isSingleGen(spark, path))
+    assert(deltaFiles(path) == 0)
 
     val byPartition = spark.read.parquet(s"$path/vectors")
       .groupBy(col("centroid_id")).count()
