@@ -318,11 +318,9 @@ object Bench {
     * signature, and the only reading that separates "the engine got
     * slower" from "this JVM aged" is the same query in a JVM with
     * virgin profiles. The child runs this same Bench main restricted to
-    * the one query (SPARK_GRAFT_ONLY), retries and the bucketed arm
-    * disabled (the aging victims are plain-table plans; the bucketed
-    * warehouse is also parent-session state a child must not rebuild),
-    * writing its line to a private temp file (SPARK_GRAFT_OUT) that is
-    * parsed with the same refTimes reader the artifacts already use. */
+    * the one query (SPARK_GRAFT_ONLY) with retries disabled, writing its
+    * line to a private temp file (SPARK_GRAFT_OUT) that is parsed with
+    * the same refTimes reader the artifacts already use. */
   /** Classpath the forked child can actually resolve graft.Bench from
     * (r19, ADVICE r18): under sbt's layered classloaders
     * `java.class.path` is the sbt launcher alone — a child started on it
@@ -381,7 +379,6 @@ object Bench {
     extraEnv.foreach { case (k, v) => env.put(k, v) }
     env.remove("SPARK_GRAFT_REF")
     env.remove("SPARK_GRAFT_FRESH_JVM")
-    env.remove("SPARK_GRAFT_BUCKETED_BUCKETS")
     env.remove("SPARK_GRAFT_EMIT_SAMPLES")
     pb.redirectErrorStream(true)
     pb.redirectOutput(log)
@@ -447,30 +444,6 @@ object Bench {
       (refTimes(refPath),
         sys.env.getOrElse("SPARK_GRAFT_REF_FACTOR", "2.0").toDouble,
         refFloor(sfDir, Some(refPath)))
-    }
-
-    // full-sweep bucketed-layout arm (r17, VERDICT r16 item 5):
-    // SPARK_GRAFT_BUCKETED_BUCKETS=N builds the lineitem/orders
-    // `bucketBy(N, orderkey).sortBy(orderkey)` replica (timed — the
-    // layout's one-time price, reported but excluded from the sweep
-    // total) and arms the Tables redirect for the WHOLE sweep, so the
-    // join family's isolated A/B win is re-priced under full-sweep page
-    // cache and AQE context, and every non-join query double-checks as
-    // unaffected (unregistered tables fall through byte-identically).
-    val bucketed = sys.env.get("SPARK_GRAFT_BUCKETED_BUCKETS").map { bStr =>
-      val buckets = bStr.toInt
-      val db = "graft_bench_bucketed"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      val t0 = System.nanoTime()
-      for ((t, key) <- Seq("lineitem" -> "l_orderkey",
-          "orders" -> "o_orderkey")) {
-        spark.sql(s"DROP TABLE IF EXISTS $db.$t")
-        spark.read.parquet(s"$sfDir/$t.parquet")
-          .write.bucketBy(buckets, key).sortBy(key)
-          .mode("overwrite").saveAsTable(s"$db.$t")
-      }
-      spark.conf.set("spark.graft.bucketed.db", db)
-      (buckets, (System.nanoTime() - t0) / 1e9)
     }
 
     // per-sample JVM aging record, keyed (query -> samples in order):
@@ -645,16 +618,13 @@ object Bench {
           .mkString("{", ",", "}")
         s""","jvm_trips":$body"""
       }
-    val bucketedJson = bucketed.map { case (buckets, buildSec) =>
-      s""","bucketed":{"buckets":$buckets,"build_sec":${s4(buildSec)}}"""
-    }.getOrElse("")
     val freshJvmJson =
       if (freshJvm.isEmpty) ""
       else freshJvm.toSeq.sortBy(_._1)
         .map { case (n, t) => "\"" + n + "\":" + t.map(s4).getOrElse("null") }
         .mkString(""","fresh_jvm":{""", ",", "}")
     val line =
-      s"""{"metric":"total","value":${s4(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"skipped":$skippedJson$samplesJson$refRetriedJson$jvmTripsJson$freshJvmJson$bucketedJson,"calibration":$calibJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${s4(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"skipped":$skippedJson$samplesJson$refRetriedJson$jvmTripsJson$freshJvmJson,"calibration":$calibJson,"sf":"$sfDir"}"""
     println(line)
     // belt-and-braces copy for log-capture truncation: the same line, as
     // a file next to the run; SPARK_GRAFT_OUT redirects it (the forked

@@ -70,56 +70,25 @@ object Tables {
     * and session-temp signature table at bench scale is ONE row group).
     * The guide's remedy for unsplittable small inputs is a repartition
     * immediately after the read; this applies it ONLY when the path's
-    * on-disk bytes (driver-side listing, cached) sit under
-    * `spark.graft.denseScan.maxBytes` (default 64 MB — the one-to-few-
-    * split regime). Larger inputs pass through untouched: their scans
-    * already split into ≥ core-count tasks at maxPartitionBytes, so at
-    * production scale this is a cached `File.length` sum and nothing
-    * else. Derives the decision from measured input size, never from a
-    * constant tuned to either environment. */
+    * on-disk bytes (driver-side listing, cached) sit under 64 MiB (the
+    * one-to-few-split regime). Larger inputs pass through untouched:
+    * their scans already split into ≥ core-count tasks at
+    * maxPartitionBytes, so at production scale this is a cached listing
+    * sum and nothing else. */
   private[graft] def spreadSmall(
       spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val maxBytes = spark.conf
-      .getOption("spark.graft.denseScan.maxBytes").map(_.toLong)
-      .getOrElse(64L << 20)
     val p = spark.sparkContext.defaultParallelism
     val (bytes, files) = pathStats(spark, path)
     // a multi-file path is already scan-parallel (parquet assigns ≥ one
     // task per file) — the repartition would be a pure extra exchange
     // there (measured +27% on the sf10 replica's 400-file documents dir)
-    if (bytes < maxBytes && files < p / 2)
+    if (bytes < (64L << 20) && files < p / 2)
       df.repartition(p)
     else df
   }
 
-  /** Opt-in storage-aligned layout redirect (r16, VERDICT r15 item 3):
-    * when the session conf `spark.graft.bucketed.db` names a catalog
-    * database, any table registered there SHADOWS its parquet file —
-    * tables not registered fall through unchanged. The intended use is
-    * fact tables written `bucketBy(N, joinKey).sortBy(joinKey)` once
-    * (lineitem/orders on the order key): every fact-to-fact join and
-    * orderkey-keyed aggregate over them then consumes the layout with NO
-    * exchange on the bucketed key, which at 100 TB converts the
-    * engine's largest shuffles into storage-aligned local work.
-    * Unset (the default everywhere), this is a pure parquet read and
-    * Catalyst owns pushdown exactly as before. graft.tools.LayoutBench
-    * builds the replica and A/Bs the join family both ways. */
-  /** Whether `name` is currently shadowed by the bucketed-catalog
-    * redirect below — spread callers check this before probing the
-    * parquet path ([[spreadSmall]] keys on on-disk bytes, which say
-    * nothing about a catalog table's layout; r20, ADVICE r19). */
-  private[graft] def isRedirected(spark: SparkSession, name: String): Boolean =
-    spark.conf.getOption("spark.graft.bucketed.db")
-      .filter(_.nonEmpty)
-      .exists(db => spark.catalog.tableExists(s"$db.$name"))
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val redirected = spark.conf.getOption("spark.graft.bucketed.db")
-      .filter(_.nonEmpty)
-      .filter(db => spark.catalog.tableExists(s"$db.$name"))
-      .map(db => spark.table(s"$db.$name"))
-    redirected.getOrElse(readCached(spark, s"$sfDir/$name.parquet"))
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    readCached(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -92,11 +92,8 @@ object Dedup {
     * static corpus tables (signatures, band rows, member maps) were
     * re-shuffled per call — at 100 TB that is an O(corpus) shuffle per
     * ingest batch for data whose layout never changes; here it becomes a
-    * storage-aligned local read (the same trade the opt-in
-    * `spark.graft.bucketed.db` redirect makes for the TPC-H facts).
-    * Bucket count: `spark.graft.buckets`, default = defaultParallelism
-    * at build time (a real deployment sizes it to data / target
-    * partition size). The pre-write repartition aligns tasks to buckets
+    * storage-aligned local read. Bucket count: defaultParallelism at
+    * build time. The pre-write repartition aligns tasks to buckets
     * (one file per bucket) so the sorted-bucket metadata lets SMJ skip
     * the per-partition sort too. */
   private[operators] def materializedBucketed(
@@ -105,8 +102,7 @@ object Dedup {
     // the value names a table in THIS session's catalog: keyed by session
     val name = SessionState.getOrBuild(
         key.copy(params = key.params :+ Bridge.sessionId(spark))) {
-      val n = spark.conf.getOption("spark.graft.buckets").map(_.toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism)
+      val n = spark.sparkContext.defaultParallelism
       val t = "graft_bkt_" + java.lang.Integer.toHexString(key.hashCode) +
         "_" + java.util.UUID.randomUUID.toString.replace("-", "")
       df.repartition(n, bucketCols.map(col): _*)

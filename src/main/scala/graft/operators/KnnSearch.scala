@@ -47,7 +47,9 @@ object KnnSearch {
       Tables.embeddings(spark, sfDir)
         .where(col("vec_id") === vecId)
         .select("embedding")
-        .head()
+        .head(1).headOption
+        .getOrElse(throw new IllegalArgumentException(
+          s"embedding $vecId not found in $sfDir"))
         .getSeq[Float](0)
         .toArray
     }

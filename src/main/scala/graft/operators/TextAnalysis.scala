@@ -778,13 +778,9 @@ object TextAnalysis {
   def piiScrub(spark: SparkSession, sfDir: String): DataFrame = {
     val redacted = piiRedacted(col("injected"))
     // four multi-alternative regexes per row off a dense one-row-group
-    // scan: spread when small so the regex work is cluster-wide (r19).
-    // Skipped when the documents table is shadowed by the bucketed
-    // catalog redirect (r20, ADVICE r19): the parquet-path size probe
-    // says nothing about the catalog table's layout.
-    val docs = Tables.documents(spark, sfDir)
-    (if (Tables.isRedirected(spark, "documents")) docs
-     else Tables.spreadSmall(spark, docs, s"$sfDir/documents.parquet"))
+    // scan: spread when small so the regex work is cluster-wide (r19)
+    Tables.spreadSmall(spark, Tables.documents(spark, sfDir),
+        s"$sfDir/documents.parquet")
       .select(col("doc_id"), piiInjected.as("injected"))
       .select(
         col("doc_id"),

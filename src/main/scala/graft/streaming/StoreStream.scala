@@ -308,21 +308,16 @@ object StoreStream {
       } finally src.unpersist()
     }
 
-  /** Texts twin of [[ingestVecBatch]] — same receipt and `owner`, append
-    * through [[graft.operators.TextStore.addTexts]] (chunk + featurize +
-    * upsert). */
+  /** Texts twin of [[ingestVecBatch]]: the batch's chunk vectors
+    * ([[graft.operators.TextStore.chunkVectors]]) through the same
+    * receipt, so a batch whose texts yield no chunk (empty or
+    * punctuation-only) appends nothing, as an empty vector batch does. */
   private[graft] def ingestTextBatch(
       spark: SparkSession, storePath: String, batch: DataFrame,
       gen: Long,
       owner: String = VectorIndex.newWriterOwner("append")): Unit =
-    if (!VectorIndex.genExists(spark, storePath, gen)) {
-      val src = batch.persist()
-      try {
-        if (!src.isEmpty)
-          graft.operators.TextStore.addTextsAs(spark, storePath, src, gen,
-            owner)
-      } finally src.unpersist()
-    }
+    ingestVecBatch(spark, storePath,
+      graft.operators.TextStore.chunkVectors(batch), gen, owner)
 
   /** `checkpointDir` is required for the idempotence claim above: without
     * a durable checkpoint a restarted stream re-lists the source from

@@ -70,4 +70,15 @@ class KnnSearchSpec extends SparkSpec {
     val perQuery = got.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
     assert(perQuery == Map(0L -> 4, 1L -> 4, 2L -> 4))
   }
+
+  test("queryVector on an absent id names the id and the corpus, and caches nothing") {
+    val absent = Long.MaxValue
+    val e = intercept[IllegalArgumentException](
+      KnnSearch.queryVector(spark, sfDir, absent))
+    assert(e.getMessage.contains(absent.toString) &&
+      e.getMessage.contains(sfDir), e.getMessage)
+    assert(!SessionState.entries.exists(en =>
+      en.family == "queryvector" && en.params == Seq(absent)),
+      "a failed query-vector lookup left a session entry")
+  }
 }

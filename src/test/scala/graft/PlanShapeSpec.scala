@@ -13,6 +13,22 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  test("spreadSmall spreads a small one-file scan and leaves a multi-file one alone") {
+    // the one-file sf0.001 documents table sits under the 64 MiB cutoff
+    // and under parallelism / 2 files: piiScrub's regex work is spread
+    val spread = executedPlan(TextAnalysis.piiScrub(spark, sfDir))
+    assert(spread.contains("RoundRobinPartitioning(4)"), spread)
+    // a two-file documents dir is already scan-parallel: no spread
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("spread_two_files")
+    val docs = Files.createDirectory(dir.resolve("documents.parquet"))
+    for (i <- 0 until 2)
+      Files.copy(Paths.get(s"$sfDir/documents.parquet"),
+        docs.resolve(s"part-$i.parquet"))
+    val plain = executedPlan(TextAnalysis.piiScrub(spark, dir.toString))
+    assert(!plain.contains("RoundRobinPartitioning"), plain)
+  }
+
   test("exact knn is a single scan + TakeOrdered: no exchange, no join") {
     val plan = executedPlan(KnnSearch.topK(spark, sfDir, KnnSearch.Cosine))
     assert(plan.contains("TakeOrderedAndProject"), plan)

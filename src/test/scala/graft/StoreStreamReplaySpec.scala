@@ -69,6 +69,24 @@ class StoreStreamReplaySpec extends SparkSpec {
       "replayed text micro-batch duplicated delta rows")
   }
 
+  test("a text batch with no chunk vectors writes no delta file, replayed or not") {
+    import spark.implicits._
+    val store = Files.createTempDirectory("replay_tokenless").toString
+    TextStore.writeChunkStore(spark, sfDir, store)
+    val before = deltaFiles(store)
+    val batch = Seq((4350000L, "", "en"), (4350001L, " ... !? -- ", "en"))
+      .toDF("doc_id", "text", "lang")
+    StoreStream.ingestTextBatch(spark, store, batch, gen = 2L)
+    assert(deltaFiles(store) == before,
+      "a token-less text batch wrote a delta file")
+    assert(!VectorIndex.genExists(spark, store, 2L))
+    // the replay sees the generation absent again and still writes nothing
+    StoreStream.ingestTextBatch(spark, store, batch, gen = 2L)
+    assert(deltaFiles(store) == before,
+      "a replayed token-less text batch wrote a delta file")
+    assert(!VectorIndex.genExists(spark, store, 2L))
+  }
+
   test("tombstones do not spoof the receipt: a delete at gen G must not drop an ingest at gen G") {
     val store = Files.createTempDirectory("replay_tomb").toString
     VectorIndex.writeStore(spark, sfDir, store)
