@@ -142,8 +142,9 @@ object Tables {
   /** The text of document `docId`, the query stand-in of the text-search
     * and prompt paths: one filtered scan. */
   def documentText(s: SparkSession, d: String, docId: Long): String = {
+    import graft.functions.param
     import org.apache.spark.sql.functions.col
-    val row = documents(s, d).where(col("doc_id") === docId)
+    val row = documents(s, d).where(col("doc_id") === param(docId))
       .select(col("text")).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         s"document $docId not found in $d"))

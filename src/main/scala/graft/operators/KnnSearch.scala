@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SessionState, Tables}
+import graft.functions.param
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,9 +17,12 @@ import org.apache.spark.sql.functions._
   * the corpus. At 100 TB / 1000 executors this is a single map-only pass with
   * k·numPartitions rows of traffic, which is the optimal exact-kNN plan.
   *
-  * The query vector is a *query parameter* (one 64-float array), so looking
-  * it up driver-side and embedding it as a literal is the distributed design:
-  * it is broadcast in the task closure, never joined.
+  * Request values are bound parameters, never inlined literals. The query
+  * vector (one 64-float array) is looked up driver-side and rides in the
+  * plan as a reference object, broadcast in the task closure, never
+  * joined; the query id and the threshold are [[graft.functions.param]]s.
+  * So the generated code is the same for every request, and a warm
+  * request compiles nothing.
   */
 object KnnSearch {
 
@@ -39,20 +43,27 @@ object KnnSearch {
 
   /** Fetch a stored embedding to use as the query vector (the reference
     * embeds the user's query string; the deterministic stand-in is a row of
-    * the `embeddings` table — same 64-dim space). Cached per (sfDir, vecId):
-    * the lookup is a query *parameter* (one row, pushed-down id filter), and
-    * caching it keeps repeated searches at one Spark job instead of two. */
-  def queryVector(spark: SparkSession, sfDir: String, vecId: Long): Array[Float] =
-    SessionState.getOrBuild(SessionState.key("queryvector", sfDir, vecId)) {
+    * the `embeddings` table — same 64-dim space): one row, pushed-down id
+    * filter. The last id asked is held per corpus, so a search that looks
+    * up the vector its caller just fetched ([[topK]] after
+    * `queryVector`) runs no second job, and the session holds one entry
+    * per corpus however many ids are asked. A racing thread may replace
+    * the entry between the lookup and its return; the vector is then
+    * fetched again, never taken from another id's entry. */
+  def queryVector(spark: SparkSession, sfDir: String, vecId: Long): Array[Float] = {
+    def fetch(): (Long, Array[Float]) = vecId ->
       Tables.embeddings(spark, sfDir)
-        .where(col("vec_id") === vecId)
+        .where(col("vec_id") === param(vecId))
         .select("embedding")
         .head(1).headOption
         .getOrElse(throw new IllegalArgumentException(
           s"embedding $vecId not found in $sfDir"))
         .getSeq[Float](0)
         .toArray
-    }
+    val (id, v) = SessionState.getOrReplace[(Long, Array[Float])](
+      SessionState.key("queryvector", sfDir))(_._1 == vecId)(fetch())
+    if (id == vecId) v else fetch()._2
+  }
 
   sealed trait Strategy {
     def score(emb: Column, q: Column): Column
@@ -87,7 +98,7 @@ object KnnSearch {
     val q = typedLit(queryVector(spark, sfDir, queryVecId))
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .where(filter.getOrElse(lit(true)))
       .select(
         col("vec_id"),
@@ -108,11 +119,11 @@ object KnnSearch {
       queryVecId: Long = 0L): DataFrame = {
     val q = typedLit(queryVector(spark, sfDir, queryVecId))
     Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .select(
         col("vec_id"),
         round(cosineSim(col("embedding"), q), 4).as("score"))
-      .where(col("score") >= threshold)
+      .where(col("score") >= param(threshold))
       .orderBy(col("score").desc, col("vec_id").asc)
   }
 
@@ -176,7 +187,7 @@ object KnnSearch {
     val qn = math.sqrt(qv.map(x => x * x).sum)
     val q = typedLit(qv.map(_ / qn))
     Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       // store-build step fused into one codegen'd expression: unit(e)·uq
       // with the norm computed once and the per-element division BEFORE
       // the multiply-accumulate — the same double-math order as the
@@ -223,7 +234,7 @@ object KnnSearch {
           .select(col("doc_id"), metadataJson.as("metadata")),
         col("vec_id") === col("doc_id"))
     store
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .where(get_json_object(col("metadata"), jsonPath) === value)
       .select(
         col("vec_id"), col("label"),
@@ -254,7 +265,7 @@ object KnnSearch {
     val qv = queryVector(spark, sfDir, queryVecId).map(_.toDouble)
     val q = typedLit(qv.map(_.toFloat))
     val cand = Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .select(col("vec_id"), col("label"), col("embedding"),
         round(cosineSim(col("embedding"), q), 4).as("score"))
       .orderBy(col("score").desc, col("vec_id").asc)

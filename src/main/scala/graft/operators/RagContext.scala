@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.param
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -179,7 +180,7 @@ object RagContext {
     val hits = top.select(col("doc_id"), col("score")).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val docs = Tables.documents(spark, sfDir)
-      .where(col("doc_id").isin(hits.map(_._1): _*))
+      .where(col("doc_id").isin(hits.map(h => param(h._1)): _*))
     broadcast(hits.toDF("doc_id", "score"))
       .join(docs, Seq("doc_id"))
       .select(col("doc_id"), col("score"), col("text"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{SessionState, Tables}
 import graft.SessionState.key
-import graft.functions.{TextFunctions, TextOps}
+import graft.functions.{TextFunctions, TextOps, param}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -276,11 +276,11 @@ object TextAnalysis {
           .as("dot"),
         norm2Col.as("norm2"))
     graft.operators.Dedup.uniqueMembers(spark, sfDir)
-      .where(col("doc_id") =!= excludeDocId)
+      .where(col("doc_id") =!= param(excludeDocId))
       .join(uscored, "uid")
       .select(col("doc_id"),
         round4(col("dot") /
-          sqrt(col("norm2").cast("double") * lit(qNorm2.toDouble)))
+          sqrt(col("norm2").cast("double") * param(qNorm2.toDouble)))
           .as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -333,11 +333,11 @@ object TextAnalysis {
           .as("dot"),
         col("norm2"))
     CorpusOps.exactUniqueMembers(spark, sfDir)
-      .where(col("doc_id") =!= queryDocId)
+      .where(col("doc_id") =!= param(queryDocId))
       .join(uscored, "uid")
       .select(col("doc_id"), col("chunk_id"),
         round4(col("dot") /
-          sqrt(col("norm2").cast("double") * lit(qNorm2.toDouble)))
+          sqrt(col("norm2").cast("double") * param(qNorm2.toDouble)))
           .as("score"))
       .orderBy(col("score").desc, col("doc_id"), col("chunk_id"))
       .limit(k)

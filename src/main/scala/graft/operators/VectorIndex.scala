@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{SessionState, Tables}
 import graft.SessionState.key
-import graft.functions.{IndexFunctions, IndexOps, VectorFunctions}
+import graft.functions.{IndexFunctions, IndexOps, VectorFunctions, param}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -256,7 +256,8 @@ object VectorIndex {
       .select(col("vec_id"), col("label"), col("embedding"),
         IndexFunctions.nearestCentroid(col("embedding"), centroids)
           .getField("centroid_id").as("centroid_id"))
-      .where(col("centroid_id").isin(probed: _*) && col("vec_id") =!= queryVecId)
+      .where(col("centroid_id").isin(probed.map(param): _*) &&
+        col("vec_id") =!= param(queryVecId))
       .select(col("vec_id"), col("label"), col("centroid_id"),
         round(VectorFunctions.cosineSim(col("embedding"), q), 4).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -773,7 +774,7 @@ object VectorIndex {
       * write sorts by partCol within dirs). Delta rows carry no dir
       * column, so this never applies to them. */
     private[VectorIndex] def dirPred(parts: Seq[Int]): Option[Column] =
-      if (grouped) Some(col(grpCol).isin(parts.map(_ >> grpShift).distinct: _*))
+      if (grouped) Some(col(grpCol).isin(parts.map(_ >> grpShift).distinct.map(param): _*))
       else None
   }
 
@@ -1335,7 +1336,7 @@ object VectorIndex {
     * rows carry no dir column). */
   private final case class Selection(
       column: String, values: Seq[Any], dirPred: Option[Column] = None) {
-    def rowPred: Column = col(column).isin(values: _*)
+    def rowPred: Column = col(column).isin(values.map(param): _*)
   }
 
   /** The probed partitions `parts` of a `layout` store. */
@@ -1437,7 +1438,7 @@ object VectorIndex {
     val base = rows(sel.flatMap(_.dirPred).fold(baseAll)(baseAll.where))
     def scan(skip: Seq[Long]) = {
       val live = base.where(!col("deleted"))
-      (if (skip.isEmpty) live else live.where(!col("vec_id").isin(skip: _*)))
+      (if (skip.isEmpty) live else live.where(!col("vec_id").isin(skip.map(param): _*)))
         .select(("vec_id" +: cols).map(col): _*)
     }
     def fold(reason: String) = {
@@ -1537,8 +1538,8 @@ object VectorIndex {
         round(strategy.score(col("embedding"), typedLit(queryVec)), 4)
           .as("score"))
     val thresholded = scoreThreshold.fold(scored) { t =>
-      if (strategy.descending) scored.where(col("score") >= t)
-      else scored.where(col("score") <= t)
+      if (strategy.descending) scored.where(col("score") >= param(t))
+      else scored.where(col("score") <= param(t))
     }
     val ordered =
       if (strategy.descending) thresholded.orderBy(col("score").desc, col("vec_id"))
@@ -1633,7 +1634,7 @@ object VectorIndex {
       filter: Option[Column] = None): DataFrame = {
     val path = ensureStore(spark, sfDir, layout)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val excl = col("vec_id") =!= queryVecId
+    val excl = col("vec_id") =!= param(queryVecId)
     searchStore(spark, path, qv, k, nprobe,
       Some(filter.fold(excl)(_ && excl)))
   }
@@ -1652,7 +1653,7 @@ object VectorIndex {
     val path = ensureStore(spark, sfDir, layout)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     searchStore(spark, path, qv, nprobe = nprobe,
-      filter = Some(col("vec_id") =!= queryVecId),
+      filter = Some(col("vec_id") =!= param(queryVecId)),
       scoreThreshold = Some(threshold))
   }
 
@@ -1671,7 +1672,7 @@ object VectorIndex {
     val path = ensureStore(spark, sfDir, layout)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     mmrSearchStore(spark, path, qv, k, fetchK, lambdaMult, nprobe,
-      filter = Some(col("vec_id") =!= queryVecId))
+      filter = Some(col("vec_id") =!= param(queryVecId)))
   }
 
   /** The scored union probe every batch store read shares: each query's
@@ -1916,7 +1917,7 @@ object VectorIndex {
       centroids.indices, None).persist()
     try {
       val qSrc =
-        if (queryIds.nonEmpty) live.where(col("vec_id").isin(queryIds: _*))
+        if (queryIds.nonEmpty) live.where(col("vec_id").isin(queryIds.map(param): _*))
         else live.orderBy(col("vec_id")).limit(nQueries)
       val queries = qSrc.select(col("vec_id"), col("embedding"))
         .collect()
@@ -2031,7 +2032,7 @@ object VectorIndex {
     // never read here (spec-pinned via ReadSchema)
     val phase1 = storeRead(spark, path, Seq("codes"), Some(probed(layout, probes)),
       None, "probe")
-    val excl = excludeId.map(id => col("vec_id") =!= id)
+    val excl = excludeId.map(id => col("vec_id") =!= param(id))
     val cand = phase1
       .where(excl.getOrElse(lit(true)))
       .select(col("vec_id"), adc.as("adc"))
@@ -2116,7 +2117,8 @@ object VectorIndex {
     Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), col("embedding"),
         IndexFunctions.hyperplaneLsh(col("embedding"), planes).as("bucket"))
-      .where(col("bucket").isin(probed: _*) && col("vec_id") =!= queryVecId)
+      .where(col("bucket").isin(probed.map(param): _*) &&
+        col("vec_id") =!= param(queryVecId))
       .select(col("vec_id"), col("label"), col("bucket"),
         round(VectorFunctions.cosineSim(col("embedding"), q), 4).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -2150,7 +2152,7 @@ object VectorIndex {
     // store build: codes + scale + norm (one codegen'd map pass; in a
     // materialized store these are the written columns)
     val quantized = Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .withColumn("max_abs", expr(
         "aggregate(embedding, CAST(0 AS DOUBLE), (m, x) -> greatest(m, abs(CAST(x AS DOUBLE))))"))
       .withColumn("codes", expr(
@@ -2161,7 +2163,7 @@ object VectorIndex {
       .withColumn("qc", q)
       .withColumn("approx_score",
         expr("aggregate(zip_with(codes, qc, (a, b) -> a * b), 0L, (s, v) -> s + CAST(v AS BIGINT))")
-          * col("max_abs") / lit(127.0) * lit(qScale) / (col("norm") * lit(qNorm)))
+          * col("max_abs") / lit(127.0) * param(qScale) / (col("norm") * param(qNorm)))
       .orderBy(col("approx_score").desc, col("vec_id"))
       .limit(fetchK)
     approx
@@ -2276,7 +2278,7 @@ object VectorIndex {
     val cb = trainPqCodebooks(spark, sfDir)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
     val cand = Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= queryVecId)
+      .where(col("vec_id") =!= param(queryVecId))
       .withColumn("codes", pqCodesCol(cb))
       .select(col("vec_id"), adcColumn(cb, qv).as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))

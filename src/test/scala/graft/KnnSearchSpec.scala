@@ -77,8 +77,22 @@ class KnnSearchSpec extends SparkSpec {
       KnnSearch.queryVector(spark, sfDir, absent))
     assert(e.getMessage.contains(absent.toString) &&
       e.getMessage.contains(sfDir), e.getMessage)
-    assert(!SessionState.entries.exists(en =>
-      en.family == "queryvector" && en.params == Seq(absent)),
+    assert(!SessionState.get[(Long, Array[Float])](
+        SessionState.key("queryvector", sfDir)).exists(_._1 == absent),
       "a failed query-vector lookup left a session entry")
+  }
+
+  test("50 distinct query ids leave one queryvector entry, holding the last id") {
+    (100L until 150L).foreach { id =>
+      val v = KnnSearch.queryVector(spark, sfDir, id)
+      val want = Tables.embeddings(spark, sfDir).where(col("vec_id") === id)
+        .select("embedding").head().getSeq[Float](0)
+      assert(v.toSeq == want, s"query vector of id $id")
+    }
+    val held = SessionState.entries.filter(en =>
+      en.family == "queryvector" && en.scope == sfDir)
+    assert(held.length == 1, held.mkString(", "))
+    assert(SessionState.get[(Long, Array[Float])](
+      SessionState.key("queryvector", sfDir)).map(_._1) == Some(149L))
   }
 }

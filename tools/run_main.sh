@@ -2,7 +2,7 @@
 # Run a graft main directly on the compiled classes (no sbt project lock):
 #   tools/run_main.sh <mainClass> [args...]
 # Mirrors build.sbt's javaOptions (JDK17 add-opens, UTC, no UI).
-# Env: SPARK_DRIVER_MEM (default 8g), plus the usual SPARK_GRAFT_* knobs.
+# Env: SPARK_DRIVER_MEM (default 8g).
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java -Xmx${SPARK_DRIVER_MEM:-8g} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
