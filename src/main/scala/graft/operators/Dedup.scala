@@ -417,7 +417,7 @@ object Dedup {
 
   /** The banding domain: band hashes are folded into [0, 2^20) so the
     * over-cap dead-bucket set is bounded by construction (≤ bands·2^20
-    * keys) and collects as query state — see [[minhashLsh]]. */
+    * keys) and collects as query state — see [[Banding]]. */
   private[graft] val MinhashHashSpace = 1 << 20
 
   /** (doc_id, bhs) — the per-doc band-hash vector over a signature frame:
@@ -429,9 +429,9 @@ object Dedup {
       sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigs.select(col("doc_id"), bandHashExpr(bands, rowsPerBand).as("bhs"))
 
-  /** The band-hash vector as a column over a `sig` column — shared by
-    * [[bandHashes]] and the gate's incoming side, which must keep `sig`
-    * riding the row (a stream cannot re-join its own signature table). */
+  /** The band-hash vector as a column over a `sig` column: the MinHash
+    * family's signing expression, for the corpus band rows, the gate's
+    * incoming rows and [[bandHashes]]. */
   private[graft] def bandHashExpr(bands: Int, rowsPerBand: Int) =
     expr(
       s"""transform(sequence(0, ${bands - 1}),
@@ -439,41 +439,149 @@ object Dedup {
          |                 0L, (acc, x) -> (acc * 31L + x) % 1000000007L)
          |            % $MinhashHashSpace as int))""".stripMargin)
 
-  /** One row per (doc, band) over a (doc_id, bhs) frame, carrying the
-    * STRICT PREFIX of the band-hash vector — bands 0..band-1, all the
-    * lowest-matching-band ownership test ever reads (avg bands/2 ints vs
-    * the full vector). Shared by [[minhashLsh]]'s banding and the
-    * [[nearDupGate]] corpus band table. */
-  private[graft] def bandedPrefixRows(bhs: DataFrame): DataFrame =
-    bhs
-      .select(col("doc_id"), col("bhs"),
-        posexplode(col("bhs")).as(Seq("band", "band_hash")))
-      .select(col("doc_id"), col("band"), col("band_hash"),
-        expr("slice(bhs, 1, band)").as("pre"))
+  /** THE banded-LSH core, shared by the MinHash and sign-LSH near-dup
+    * families: their pair builders ([[minhashLsh]], [[embeddingNearDupLsh]]
+    * and [[knnGraph]]) and their ingest gates ([[nearDupGate]],
+    * [[embeddingNearDupGate]] and both repr modes). A family signs each
+    * corpus unique, and each incoming row, into one key per band. A band
+    * row per (unique, band) carries that band's key and `pre`, the strict
+    * prefix of the key vector (bands 0..band-1). The rule, in one place:
+    *   - a candidate pair is emitted by its lowest matching band whose
+    *     bucket is within the cap (Σ copy weight ≤ `cap`);
+    *   - over-cap buckets drop from the corpus side.
+    * A bucket that survives the cap is alive at its own band, so the
+    * ownership test ([[owned]]) reads only the two prefixes: no earlier
+    * band both matches and is alive. Each pair is decided once from the
+    * rows in hand, so there is no pair-dedupe aggregate (a shuffle of the
+    * ~bands-fold candidate multiset on exactly the dup-heavy corpora
+    * these operators exist for) and no state in a streaming gate. A pair
+    * whose lowest matching band is over the cap is claimed by its next
+    * live matching band. The over-cap set holds at most bands·`space`
+    * packed keys, so it collects as query state (typically empty).
+    *
+    * A family supplies: its bucketed unique table `corpus` (`id`, w =
+    * copy count, `payload`); its signing expression `keys`, the band-key
+    * array over `payload`; the band-key column `key` and its key `space`;
+    * the cache keys of its band-row table and of its over-cap set
+    * (`deadKey` includes the cap); its verify `score` over two payloads;
+    * and, for an incoming frame, the `raw` column, the exact-copy
+    * `collapseKey` and `sign`, which turns (id, raw) into (id, payload).
+    * Copies share keys and payload, so the weighted unique-level counts,
+    * pairs and scores are those of the doc-level formulation. */
+  private[graft] case class Banding(
+      id: String, corpus: DataFrame, payload: String,
+      keys: Column, key: String, space: Long,
+      rowsKey: Key, deadKey: Key, cap: Int,
+      score: String, verify: (Column, Column) => Column,
+      raw: String, collapseKey: Column, sign: DataFrame => DataFrame) {
 
-  /** The over-cap dead-bucket key set of a banding — packed band·2^20+hash
-    * longs, SORTED (consumers probe it via the binary-search
-    * [[graft.functions.InSortedLongSet]] expression), collected from a
-    * count-only aggregate bounded by the folded domain. Cached per
-    * (corpus, params); [[minhashLsh]] and [[nearDupGate]] share entries
-    * when their parameters coincide (identical banding ⇒ identical
-    * counts). */
-  private def deadBandSet(
-      banded: DataFrame, cacheKey: Key, maxDf: Int,
-      df: org.apache.spark.sql.Column = count(lit(1))): Array[Long] =
-    if (maxDf == Int.MaxValue) Array.emptyLongArray
-    else SessionState.getOrBuild(cacheKey) {
-      val a = banded
-        .groupBy(col("band"), col("band_hash"))
-        .agg(df.as("df"))
-        .where(col("df") > maxDf)
-        .select((col("band").cast("long") * MinhashHashSpace
-          + col("band_hash")).as("k"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect()
-      java.util.Arrays.sort(a)
-      a
-    }
+    /** (id, w, band, key, pre), bucketed and bucket-sorted on
+      * (band, key): the pair builder's bucket aggregate, the over-cap
+      * count and the gate's candidate join all read the persisted layout
+      * with no exchange — per ingest batch, a shuffle here would be
+      * O(corpus) for data whose layout never changes. */
+    lazy val rows: DataFrame = materializedBucketed(
+      bandRows(corpus.select(col(id), col("w"), keys.as("keys")), key),
+      rowsKey, Seq("band", key))
+
+    /** The sorted packed keys of the over-cap buckets, probed through the
+      * binary-search [[graft.functions.InSortedLongSet]] reference object:
+      * a degenerate corpus can have thousands, which as an inlined array
+      * literal would blow plan parsing and Janino's method-size limit.
+      * Cached per `deadKey`: the count is a full pass over the band rows. */
+    lazy val dead: Array[Long] =
+      if (cap == Int.MaxValue) Array.emptyLongArray
+      else SessionState.getOrBuild(deadKey) {
+        val a = rows
+          .groupBy(col("band"), col(key))
+          .agg(sum(col("w")).as("df"))
+          .where(col("df") > cap)
+          .select(packedKey(col("band"), col(key), space))
+          .as[Long](org.apache.spark.sql.Encoders.scalaLong)
+          .collect()
+        java.util.Arrays.sort(a)
+        a
+      }
+  }
+
+  /** band·space + key, multiplied in Long: at sign-LSH's widest layouts
+    * the product passes Int range, which ANSI mode raises as an error. */
+  private def packedKey(band: Column, key: Column, space: Long): Column =
+    band.cast("long") * lit(space) + key
+
+  /** One row per (input row, band) over a frame whose `keys` column is
+    * the band-key vector: the other columns ride along, plus `band`, its
+    * `key` and the strict prefix (named `pre`) — all the ownership test
+    * reads, avg bands/2 keys rather than the full vector. */
+  private def bandRows(
+      df: DataFrame, key: String, pre: String = "pre"): DataFrame = {
+    val keep = df.columns.filterNot(_ == "keys").toSeq.map(col)
+    df.select(keep ++ Seq(col("keys"),
+        posexplode(col("keys")).as(Seq("band", key))): _*)
+      .select(keep ++ Seq(col("band"), col(key),
+        expr("slice(keys, 1, band)").as(pre)): _*)
+  }
+
+  /** `f`'s band rows minus the over-cap buckets, plus the per-prefix
+    * `alive` mask the ownership test ANDs in (computed once per band row,
+    * never per pair). Unchanged, schema included, when no bucket is over
+    * the cap. */
+  private def liveBands(f: Banding): DataFrame =
+    if (f.dead.isEmpty) f.rows
+    else f.rows
+      .where(not(HashFunctions.inSortedLongSet(
+        packedKey(col("band"), col(f.key), f.space), f.dead)))
+      .withColumn("alive", transform(col("pre"), (v, b) =>
+        not(HashFunctions.inSortedLongSet(packedKey(b, v, f.space), f.dead))))
+
+  /** The ownership test at the current band: no earlier band of the two
+    * prefixes both matches and is alive. `alive` is the corpus side's
+    * mask, read only when some bucket of `f` is over the cap. */
+  private def owned(
+      f: Banding, mine: Column, theirs: Column, alive: => Column): Column = {
+    val matched = zip_with(mine, theirs, (a, b) => a === b)
+    not(array_contains(
+      if (f.dead.isEmpty) matched
+      else zip_with(matched, alive, (m, l) => m && l),
+      true))
+  }
+
+  /** Verified unique-level candidate pairs of a banding — (a, b, score)
+    * with a < b, plus a copy group's SELF pair a == b. Pairs form inside
+    * each live bucket from its sorted member list, so the cap also bounds
+    * that list and the d²/2 pairs exploded from it. The verify joins
+    * carry only the candidate list, ≪ the corpus, so AQE broadcasts it
+    * from its measured size; unlike a static hint, the plan stays safe if
+    * a pathological corpus yields a huge list. Both sides of a self pair
+    * join the representative, so its score is bit-identical to any copy
+    * pair's. */
+  private def bandedPairs(f: Banding, a: String, b: String): DataFrame = {
+    val ds = col("ds")
+    val live = liveBands(f)
+    // (id, w, pre[, alive]): sorted by id, so x < y in the upper triangle
+    val member = live.columns.filterNot(Set("band", f.key)).toSeq.map(col)
+    val pairs = live
+      .groupBy(col("band"), col(f.key))
+      .agg(sort_array(collect_list(struct(member: _*))).as("ds"))
+      // a lone unique with w ≥ 2 copies still pairs with itself
+      .where(aggregate(ds, lit(0L), (acc, m) => acc + m("w")) > 1)
+      .select(explode(flatten(transform(ds, (x, i) => {
+        // the self pair matches in every band: it is owned by the
+        // unique's first live band
+        def pair(y: Column, emit: Column) =
+          struct(x(f.id).as("a"), y(f.id).as("b"),
+            (emit && owned(f, x("pre"), y("pre"), x("alive"))).as("own"))
+        filter(
+          concat(array(pair(x, x("w") >= 2)),
+            transform(slice(ds, i + 2, size(ds)), y => pair(y, lit(true)))),
+          p => p("own"))
+      }))).as("p"))
+      .select(col("p.a").as(a), col("p.b").as(b))
+    pairs
+      .join(f.corpus.select(col(f.id).as(a), col(f.payload).as("__pa")), a)
+      .join(f.corpus.select(col(f.id).as(b), col(f.payload).as("__pb")), b)
+      .select(col(a), col(b), f.verify(col("__pa"), col("__pb")).as(f.score))
+  }
 
   /** The doc-level signature table — the spec hook for [[bandHashes]]
     * (production paths run unique-first via [[minhashUniqueSigs]]). */
@@ -485,13 +593,11 @@ object Dedup {
       key("minhash", sfDir, n))
 
   /** UNIQUE-level MinHash signature table (doc_id = unique representative
-    * id, w = copy count) — shared by [[minhashLsh]] and [[nearDupGate]]'s
-    * corpus side. BUCKETED on `doc_id` (r20): every consumer JOINS it on
-    * the id (candidate verification ×2, the gate's verify, the repr
-    * w-join), so the persisted layout removes the signature-side
-    * exchange — per gate call that was an O(corpus) shuffle of 1 KiB
-    * signatures whose layout never changes. `w` rides from the build so
-    * weighted-df consumers stop re-joining the unique table per call. */
+    * id, w = copy count) — the MinHash [[Banding]]'s corpus table.
+    * BUCKETED on `doc_id`: every consumer joins it on the id (candidate
+    * verification ×2, the gate's verify, the repr w-join), so the
+    * persisted layout removes the signature-side exchange, which per gate
+    * call would be an O(corpus) shuffle of 1 KiB signatures. */
   private def minhashUniqueSigs(
       spark: SparkSession, sfDir: String, n: Int): DataFrame =
     materializedBucketed(
@@ -501,62 +607,39 @@ object Dedup {
         .join(uniqueDocs(spark, sfDir).select(col("doc_id"), col("w")), "doc_id"),
       key("minhashu", sfDir, n), Seq("doc_id"))
 
-  /** The session's bucketed minhash BAND-ROW table —
-    * (doc_id, w, band, band_hash, pre), one row per (unique doc, band),
-    * bucketed AND bucket-sorted on (band, band_hash) (r20). Both band-row
-    * consumers are keyed exactly so: [[minhashLshUniquePairs]]'s bucket
-    * aggregate (groupBy band, band_hash) and [[nearDupGate]]'s candidate
-    * equi-join — each previously re-derived the explode from the compact
-    * (doc_id, bhs) table and SHUFFLED it per call (~16× the compact
-    * bytes, O(corpus) per ingest batch at scale); both now consume the
-    * persisted layout with no exchange. The dead-bucket count aggregate
-    * rides the same layout for free. */
-  private def minhashBandRows(
+  /** The MinHash [[Banding]] over a corpus's unique texts: 128-permutation
+    * signatures, `bands` × `rowsPerBand` band hashes folded into the 2^20
+    * domain, verified by the signature-agreement Jaccard estimate. The
+    * folded domain's collision tax (~bands/2^21 chance co-bucketings per
+    * doc pair) only adds candidates, and every candidate is verified.
+    * Package-visible for the spec that pins the gate's band table. */
+  private[graft] def minhashBanding(
       spark: SparkSession, sfDir: String, n: Int,
-      bands: Int, rowsPerBand: Int): DataFrame =
-    materializedBucketed(
-      bandedPrefixRowsWeighted(
-        minhashUniqueSigs(spark, sfDir, n)
-          .select(col("doc_id"), col("w"),
-            bandHashExpr(bands, rowsPerBand).as("bhs"))),
-      key("minhashbandsu", sfDir, n, bands, rowsPerBand),
-      Seq("band", "band_hash"))
-
-  /** [[bandedPrefixRows]] with the copy-count `w` riding each band row,
-    * for the weighted df aggregates of the unique-first paths. */
-  private def bandedPrefixRowsWeighted(bhs: DataFrame): DataFrame =
-    bhs
-      .select(col("doc_id"), col("w"), col("bhs"),
-        posexplode(col("bhs")).as(Seq("band", "band_hash")))
-      .select(col("doc_id"), col("w"), col("band"), col("band_hash"),
-        expr("slice(bhs, 1, band)").as("pre"))
+      bands: Int, rowsPerBand: Int, maxDf: Int): Banding =
+    Banding(
+      id = "doc_id", corpus = minhashUniqueSigs(spark, sfDir, n),
+      payload = "sig",
+      keys = bandHashExpr(bands, rowsPerBand), key = "band_hash",
+      space = MinhashHashSpace,
+      rowsKey = key("minhashbandsu", sfDir, n, bands, rowsPerBand),
+      deadKey = key("minhashdead", sfDir, n, bands, rowsPerBand, maxDf),
+      cap = maxDf,
+      score = "est_jaccard",
+      // floor(x·1e4+0.5) rather than round(): k/128 hits an exact .00005
+      // tie whenever k ≡ 4 (mod 8), where HALF_UP and DuckDB's HALF_EVEN
+      // disagree — the explicit form is identical in both engines. The
+      // agreement count is the native codegen'd expression.
+      verify = (a, b) => floor(HashFunctions.sigAgreement(a, b) / lit(128.0)
+        * lit(10000) + lit(0.5)) / lit(10000.0),
+      raw = "text", collapseKey = md5(normText),
+      sign = in => shingledDocs(in, n).select(col("doc_id"),
+        HashFunctions.minhashSigHashes(col("shingles")).as("sig")))
 
   /** MinHash(128) + LSH banding: 32 bands × 4 rows. Signatures are one
-    * codegen'd scan; candidate pairs come from joining on (band, band_hash);
-    * the 1 KiB signatures never ride the banding shuffle. Pairs are
-    * scored by signature agreement (unbiased Jaccard estimate).
-    *
-    * Band-ownership emission (same construction as [[simhash]] and the
-    * sign-LSH [[scoredCandidatePairs]]): a pair matching in several bands
-    * — exact duplicates match in all 32 — is emitted ONLY by its lowest
-    * alive matching band, decided bucket-locally, so emitted pairs are
-    * globally unique and the old pair-dedupe `distinct()` (a full shuffle
-    * of the ~bands-fold-duplicated candidate multiset on exactly the
-    * dup-heavy corpora this operator exists for) is gone. What unblocked
-    * it here (r7 had left minhash as the family's documented outlier):
-    *   - ownership at band b needs only the STRICT PREFIX of the band-hash
-    *     vector — bands 0..b-1 — so band rows carry `slice(bhs, 1, band)`
-    *     (20-bit ints, avg bands/2 elements) instead of the full 32-hash
-    *     vector that made ownership look too wide to ship per row;
-    *   - the band-hash domain is folded to 2^20, so the over-cap
-    *     dead-bucket set is bounded by construction (≤ bands·2^20 keys,
-    *     ~always empty) and collects as query state exactly like the
-    *     sign-LSH dead set — a pair whose lowest matching band was capped
-    *     is claimed by its first ALIVE matching band instead (the
-    *     cross-band redundancy the old distinct construction gave free).
-    *     The collision tax of the smaller domain — ~bands/2^21 chance
-    *     co-bucketings per doc pair — only adds candidates, and every
-    *     candidate is exact-verified against the full signatures below. */
+    * codegen'd scan; candidate pairs form inside the (band, band_hash)
+    * buckets of the [[Banding]] core, each emitted once by its owning
+    * band; the 1 KiB signatures never ride the banding. Pairs are scored
+    * by signature agreement (unbiased Jaccard estimate). */
   def minhashLsh(
       spark: SparkSession,
       sfDir: String,
@@ -606,130 +689,17 @@ object Dedup {
           expr("(w_a * (w_a - 1)) DIV 2"))
           .otherwise(col("w_a") * col("w_b")).as("n_pairs"))
 
-  private[operators] def minhashLshUniquePairs(
+  private def minhashLshUniquePairs(
       spark: SparkSession,
       sfDir: String,
-      n: Int = 5,
-      bands: Int = 32,
-      rowsPerBand: Int = 4,
-      minEstimate: Double = 0.5,
-      maxDf: Int = 1000): DataFrame = {
-    val hashSpace = MinhashHashSpace
-    // UNIQUE-FIRST (r10, see [[uniqueDocs]]): signatures, banding and
-    // verification run over distinct texts carrying copy counts; emitted
-    // unique-level pairs (including each group's self pair) expand to the
-    // bit-identical doc-level pair set at the very end. The doc-level
-    // oracle is unchanged — equivalence is exactly what it verifies.
-    // signatures are materialized (session-temp bucketed table) because
-    // three plan branches need them: banding and both sides of the
-    // candidate verification — one signature scan instead of three, with
-    // no block-manager residue after the call (see [[materialized]]).
-    val sigs = minhashUniqueSigs(spark, sfDir, n)
-    // band rows carry (doc_id, w, band, band_hash, prefix) — the prefix
-    // is the band-hashes of strictly earlier bands, all the ownership
-    // test needs (avg bands/2 ints ≈ 64 B vs the 24 B id-only rows of
-    // r7: ~3× the banding volume, which buys deleting the pair-dedupe
-    // exchange whose volume scales with the pair MULTISET, not the
-    // corpus). `w` rides so every df comparison below weighs a unique by
-    // its copy count — the doc-level cap semantics exactly. Bucketed on
-    // (band, band_hash) (r20): the bucket aggregate below consumes the
-    // layout with no exchange at all.
-    val banded = minhashBandRows(spark, sfDir, n, bands, rowsPerBand)
-    // over-cap buckets from a count-only partial aggregate, collected as
-    // packed band·2^20+hash keys — bounded query state (like the Lloyd
-    // centroids and the sign-LSH dead set), typically empty: maxDf-sized
-    // buckets are corpus boilerplate, and the synthetic df tops out far
-    // below the cap at test scale. Cached per (corpus, params) — the
-    // same keyed build-once pattern as the sig table above — because the
-    // aggregate is a full banding pass: without the cache it would hand
-    // every warm call a second scan that roughly cancels the deleted
-    // pair-dedupe exchange (measured at sf1).
-    // weighted df (Σ copy counts per bucket) — identical VALUES to the
-    // doc-level banding's row counts (all copies of a text share its
-    // band hashes), so the cache key is shared with [[nearDupGate]]'s
-    // doc-level computation unchanged
-    val dead: Array[Long] =
-      deadBandSet(banded, key("minhashdead", sfDir, n, bands, rowsPerBand, maxDf),
-        maxDf, sum(col("w")))
-    // common path: no bucket over the cap → "no earlier band matches" is
-    // the whole ownership test. Only when dead buckets exist does each
-    // member carry a per-prefix-entry alive mask (computed once per band
-    // row, never per pair) and the prior-match vector gets AND-ed with it.
-    // The dead keys ride as a binary-searched REFERENCE OBJECT
-    // (InSortedLongSet), not SQL source text: unlike the sign-LSH dead
-    // set (≤ bands·2^8 keys, safely inlinable), this domain admits
-    // degenerate corpora with thousands of over-cap buckets, where a
-    // multi-MB array literal in the plan string would blow plan parsing
-    // and Janino's method-size limit — and where the old typedLit +
-    // array_contains probe paid a linear scan per prefix element.
-    val member =
-      if (dead.isEmpty) struct(col("doc_id"), col("w"), col("pre"))
-      else
-        struct(col("doc_id"), col("w"), col("pre"),
-          transform(col("pre"), (v, b) =>
-            not(HashFunctions.inSortedLongSet(
-              b.cast("long") * lit(hashSpace.toLong) + v, dead))).as("alive"))
-    val priorMatch =
-      if (dead.isEmpty) "zip_with(x.pre, y.pre, (a, b) -> a = b)"
-      else
-        """zip_with(
-          |  zip_with(x.pre, y.pre, (a, b) -> a = b),
-          |  x.alive, (m, al) -> m AND al)""".stripMargin
-    // a group's SELF pair (copies pairing with each other, w ≥ 2): every
-    // band trivially "matches" itself, so the self pair belongs to the
-    // unique's first ALIVE band — with no dead buckets that is band 0
-    // (empty prefix)
-    val priorSelf =
-      if (dead.isEmpty) "size(x.pre) > 0" else "array_contains(x.alive, true)"
-    // pairs from within each alive (band, band_hash) bucket; a pair meets
-    // at most once per band (one hash per doc per band) and once in the
-    // sorted upper triangle, and only its lowest alive matching band emits
-    // — globally unique by construction, no downstream dedupe. maxDf
-    // bounds the collect_list row and the d²/2 pair structs the explode
-    // materializes from it (same cap rationale as [[ngramJaccardPairs]]);
-    // the bucket-size comparisons weigh each unique by its copy count, so
-    // capping decisions are bit-compatible with the doc-level
-    // formulation.
-    val pairs = banded
-      .groupBy(col("band"), col("band_hash"))
-      .agg(sort_array(collect_list(member)).as("ds"))
-      .withColumn("tw", expr("aggregate(ds, 0L, (acc, m) -> acc + m.w)"))
-      .where(col("tw") > 1 && col("tw") <= maxDf)
-      .select(explode(expr(
-        s"""flatten(transform(ds, (x, i) ->
-          |  filter(
-          |    concat(
-          |      IF(x.w >= 2,
-          |         array(struct(x.doc_id AS doc_a, x.doc_id AS doc_b,
-          |           ($priorSelf) AS prior)),
-          |         array()),
-          |      transform(slice(ds, i + 2, size(ds)), y ->
-          |        struct(x.doc_id AS doc_a, y.doc_id AS doc_b,
-          |          array_contains($priorMatch, true) AS prior))),
-          |    p -> NOT p.prior)))""".stripMargin)).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-    // verification: the candidate list is ≪ the corpus (the point of LSH),
-    // so AQE turns these joins into map-side broadcasts from the measured
-    // runtime size — the signatures never shuffle, and unlike a static
-    // broadcast() hint the plan stays safe if a pathological corpus ever
-    // produces a huge candidate list.
-    val withA = pairs
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-    val scored = withA
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      // floor(x·1e4+0.5) rather than round(): k/128 hits an exact .00005
-      // tie whenever k ≡ 4 (mod 8), where HALF_UP and DuckDB's HALF_EVEN
-      // disagree — the explicit form is identical in both engines. The
-      // agreement count is the native codegen'd expression (r9): the
-      // interpreted 128-element zip_with/filter lambda pair ran once per
-      // candidate pair outside whole-stage codegen.
-      .withColumn("est_jaccard", floor(
-        HashFunctions.sigAgreement(col("sig_a"), col("sig_b")) / lit(128.0)
-          * lit(10000) + lit(0.5)) / lit(10000.0))
+      n: Int,
+      bands: Int,
+      rowsPerBand: Int,
+      minEstimate: Double,
+      maxDf: Int): DataFrame =
+    bandedPairs(minhashBanding(spark, sfDir, n, bands, rowsPerBand, maxDf),
+      "doc_a", "doc_b")
       .where(col("est_jaccard") >= minEstimate)
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
-    scored
-  }
 
   /** 64-bit SimHash near-dup candidates: 4 bands × 16 bits block the pairs
     * (pigeonhole: any pair within hamming distance 3 shares at least one
@@ -1232,20 +1202,14 @@ object Dedup {
       "cos_sim", "id_a", "id_b")
   }
 
-  /** The banded-LSH candidate generation + exact scoring shared by
-    * [[embeddingNearDupLsh]] (threshold tail) and [[knnGraph]] (per-vector
-    * top-k tail): band rows carry ids only, pairs generate bucket-locally
-    * (capped), and the cosine verify re-joins the embeddings via
-    * AQE-chosen broadcast.
-    *
-    * The SCORED pair frame itself is materialized per (corpus, plane-set,
-    * cap) — the same keyed session-temp pattern as the signature tables —
-    * because its two consumers are independent queries that each used to
-    * re-derive the whole banding + pair-gen + verify pipeline from
-    * scratch (r7's two slowest sf1 queries, 8.8 + 6.5 s, were exactly
-    * these two rebuilds). The candidate structure is a function of the
-    * corpus and the plane set only — thresholds and k are downstream
-    * filters — so one build feeds both. */
+  /** The sign-LSH candidate pairs with their exact cosine, (id_a, id_b,
+    * cos_sim), shared by [[embeddingNearDupLsh]] (threshold tail) and
+    * [[knnGraph]] (per-vector top-k tail): [[bandedPairs]] over
+    * [[signLshBanding]]. Materialized per (corpus, plane-set, cap)
+    * because its consumers are independent queries that would each
+    * re-derive the banding, pair emission and verify; the candidate
+    * structure is a function of the corpus and the plane set only —
+    * thresholds and k are downstream filters — so one build feeds both. */
   private def scoredCandidatePairs(
       spark: SparkSession,
       sfDir: String,
@@ -1253,7 +1217,8 @@ object Dedup {
       bitsPerBand: Int,
       maxBucket: Int): DataFrame =
     materialized(
-      buildScoredCandidatePairs(spark, sfDir, bands, bitsPerBand, maxBucket),
+      bandedPairs(signLshBanding(spark, sfDir, bands, bitsPerBand, maxBucket),
+        "id_a", "id_b"),
       key("lshpairsu", sfDir, bands, bitsPerBand, maxBucket))
 
   /** Sign-LSH band signatures over an `embedding` column: band b's sig
@@ -1398,167 +1363,25 @@ object Dedup {
         .select(col("uid"), col("vec_id").as("doc_id")),
       key("uniqvecmembers", sfDir), Seq("uid"))
 
-  /** The materialized (vec_id, w, sigs) sign-LSH signature table over the
-    * UNIQUE vectors of a corpus — one scan per session, shared by
-    * [[buildScoredCandidatePairs]] (three consumers) and
-    * [[embeddingNearDupGate]] (static corpus side). */
-  private def signLshSigs(
+  /** The sign-LSH [[Banding]] over a corpus's unique vectors: the keys are
+    * the [[signLshSigExpr]] band sigs (2^bitsPerBand per band), verified
+    * by the exact cosine rounded to 4 places. Shared by
+    * [[scoredCandidatePairs]] and the embedding gates; its band-row table
+    * is signed straight off the bucketed [[uniqueVecs]] scan. */
+  private def signLshBanding(
       spark: SparkSession, sfDir: String,
-      bands: Int, bitsPerBand: Int): DataFrame =
-    materialized(uniqueVecs(spark, sfDir).select(
-      col("vec_id"), col("w"),
-      signLshSigExpr(bands, bitsPerBand, embeddingDim(spark, sfDir))
-        .as("sigs")).toDF("vec_id", "w", "sigs"),
-      key("lshsigsu", sfDir, bands, bitsPerBand))
+      bands: Int, bitsPerBand: Int, maxBucket: Int): Banding =
+    Banding(
+      id = "vec_id", corpus = uniqueVecs(spark, sfDir), payload = "embedding",
+      keys = signLshSigExpr(bands, bitsPerBand, embeddingDim(spark, sfDir)),
+      key = "sig", space = 1L << bitsPerBand,
+      rowsKey = key("lshbandsu", sfDir, bands, bitsPerBand),
+      deadKey = key("lshdead", sfDir, bands, bitsPerBand, maxBucket),
+      cap = maxBucket,
+      score = "cos_sim",
+      verify = (a, b) => round(VectorFunctions.cosineSim(a, b), 4),
+      raw = "embedding", collapseKey = col("embedding"), sign = identity)
 
-  /** The session's bucketed sign-LSH BAND-ROW table —
-    * (vec_id, w, band, sig, pre), one row per (unique vector, band),
-    * bucketed AND bucket-sorted on (band, sig) (r20) — the embedding
-    * gates' static corpus side. The per-call explode of the compact sig
-    * table shuffled these rows on every ingest batch; the persisted
-    * layout feeds the (band, sig) candidate join and the dead-bucket
-    * count aggregate with no exchange. */
-  private def signLshBandRows(
-      spark: SparkSession, sfDir: String,
-      bands: Int, bitsPerBand: Int): DataFrame =
-    materializedBucketed(
-      signLshSigs(spark, sfDir, bands, bitsPerBand)
-        .select(col("vec_id"), col("w"), col("sigs"),
-          posexplode(col("sigs")).as(Seq("band", "sig")))
-        .select(col("vec_id"), col("w"), col("band"), col("sig"),
-          expr("slice(sigs, 1, band)").as("pre")),
-      key("lshbandsu", sfDir, bands, bitsPerBand), Seq("band", "sig"))
-
-  private def buildScoredCandidatePairs(
-      spark: SparkSession,
-      sfDir: String,
-      bands: Int,
-      bitsPerBand: Int,
-      maxBucket: Int): DataFrame = {
-    // UNIQUE-level input (see [[uniqueVecs]]): band rows carry (vec_id,
-    // w, sigs, band, sig) — ids plus the bands-sized sig vector, never
-    // the embedding; the vectors are re-read from the unique table for
-    // the (much smaller) candidate verification instead of riding every
-    // band row. Carrying ALL band sigs on each row is what lets pair
-    // emission dedupe locally (below).
-    // materialized (session-temp parquet, same pattern as minhashLsh's
-    // signature table): the sig table feeds THREE consumers — the
-    // dead-bucket aggregate below, the banding explode, and (twice, via
-    // knnGraph's unionAll) the pair transform — one embedding scan
-    // instead of re-deriving the sigs per branch
-    val e = uniqueVecs(spark, sfDir)
-    val withSigs = signLshSigs(spark, sfDir, bands, bitsPerBand)
-    val banded = withSigs.select(
-      col("vec_id"), col("w"), col("sigs"),
-      posexplode(col("sigs")).as(Seq("band", "sig")))
-    // band-ownership dedup (same construction as [[simhash]]): a pair
-    // sharing sigs in several bands — identical vectors share all of them,
-    // the common case on the dup-heavy corpora this exists for — is
-    // emitted ONLY by the lowest matching band, decided bucket-locally
-    // from the sig vectors in hand. Within a band a pair meets in at most
-    // one bucket (one sig per vec per band) and once in the sorted upper
-    // triangle, so emitted pairs are globally unique: the old
-    // `.distinct()` — a full shuffle of the ~bands-fold-duplicated
-    // candidate multiset — is gone.
-    //
-    // Ownership must skip CAPPED bands: a pair whose lowest matching
-    // band's bucket was dropped by maxBucket still has to surface through
-    // a higher surviving band (the cross-band redundancy the old distinct
-    // construction gave for free). The dead-bucket set is bounded by
-    // construction — at most bands·2^bitsPerBand keys regardless of corpus
-    // size — so it collects as query state (typically empty) and rides
-    // into the pair expression as a literal array of packed band·2^bits+sig
-    // keys: owner = first band whose sigs match AND whose bucket survived.
-    val sigSpace = 1 << bitsPerBand
-    // dead buckets from a count-only partial aggregate (never the members);
-    // collected as a packed band·2^bits+sig key array — query state, like
-    // the Lloyd centroids, not data
-    val dead: Array[Long] = banded
-      .groupBy(col("band"), col("sig"))
-      .agg(sum(col("w")).as("df"))
-      .where(col("df") > maxBucket)
-      .select((col("band") * sigSpace + col("sig")).cast("long"))
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect()
-    // common path: no bucket is over the cap, so "first matching band" is
-    // the whole ownership test — one zip_with + array_position per
-    // candidate pair. Only when dead buckets exist does each member carry
-    // an 8-boolean alive mask (computed ONCE per vector, never per pair)
-    // and the match vector gets AND-ed with it.
-    val member =
-      if (dead.isEmpty) struct(col("vec_id"), col("w"), col("sigs"))
-      else {
-        // binary-searched reference object (InSortedLongSet), same as the
-        // minhash dead set: O(log n) per probe instead of array_contains'
-        // linear scan over an inlined literal, and the keys stay out of
-        // the plan text (constant plan size even at the bands·2^bits
-        // worst case)
-        val sortedDead = dead.sorted
-        struct(col("vec_id"), col("w"), col("sigs"),
-          transform(col("sigs"), (v, b) =>
-            not(HashFunctions.inSortedLongSet(
-              b.cast("long") * lit(sigSpace.toLong) + v, sortedDead)))
-            .as("alive"))
-      }
-    val matchVec =
-      if (dead.isEmpty) "zip_with(x.sigs, y.sigs, (a, b) -> a = b)"
-      else
-        """zip_with(
-          |  zip_with(x.sigs, y.sigs, (a, b) -> a = b),
-          |  x.alive, (m, al) -> m AND al)""".stripMargin
-    // a group's SELF pair owner: every band matches itself, so it
-    // belongs to the unique's first ALIVE band
-    val selfMatchVec =
-      if (dead.isEmpty) "transform(x.sigs, s -> true)" else "x.alive"
-    // bucket-size comparisons weigh each unique by its copy count — the
-    // doc-level cap semantics exactly
-    val pairs = banded
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(member)).as("ds"))
-      .withColumn("tw", expr("aggregate(ds, 0L, (acc, m) -> acc + m.w)"))
-      .where(col("tw") > 1 && col("tw") <= maxBucket)
-      .select(explode(expr(
-        s"""flatten(transform(ds, (x, i) ->
-          |  filter(
-          |    concat(
-          |      IF(x.w >= 2,
-          |         array(struct(x.vec_id AS id_a, x.vec_id AS id_b,
-          |           array_position($selfMatchVec, true) AS owner)),
-          |         array()),
-          |      transform(slice(ds, i + 2, size(ds)), y ->
-          |        struct(x.vec_id AS id_a, y.vec_id AS id_b,
-          |          array_position($matchVec, true) AS owner))),
-          |    p -> p.owner = band + 1)))""".stripMargin))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
-    // exact verify over candidates only: AQE broadcasts the (tiny) pair
-    // list into two map-side joins against the store from its measured
-    // runtime size — the corpus never shuffles. Self pairs score through
-    // the SAME cosine expression (both sides join the representative), so
-    // their value is bit-identical to what any copy pair computed.
-    val withA = pairs
-      .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), "id_a")
-    withA
-      .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), "id_b")
-      .withColumn("cos_sim",
-        round(VectorFunctions.cosineSim(col("emb_a"), col("emb_b")), 4))
-      .select(col("id_a"), col("id_b"), col("cos_sim"))
-  }
-
-  /** Approximate kNN-GRAPH construction — every vector's top-`k` nearest
-    * neighbors among its banded-LSH candidates: the substrate primitive
-    * for graph-based dedup, clustering, and kNN-graph ANN methods at
-    * corpus scale (an exact kNN graph is Θ(n²); the banding bounds
-    * candidate generation to shared sign-buckets exactly as
-    * [[embeddingNearDupLsh]] does).
-    *
-    * Scale shape: candidate pairs score once (undirected), mirror into
-    * both directions as (src, dst, score) ID rows, and the per-source
-    * top-k runs as the [[graft.functions.TopKAgg]] k-slot-heap PARTIAL
-    * aggregate — the shuffle after scoring carries ≤ k rows per source,
-    * never a window sort over the full candidate multiset. Vectors whose
-    * buckets hold no other member have no edges, honestly absent from
-    * the approximate graph. */
   /** Near-dup gate against an EXISTING corpus — "is this incoming
     * document a near-copy of something we already have": every row of
     * `incoming` whose MinHash signature agrees ≥ `minEstimate` with some
@@ -1567,43 +1390,16 @@ object Dedup {
     * verbatim by the batch API and [[graft.streaming.CorpusStream]]'s
     * streaming gate — one implementation, parity by construction.
     *
-    * Scale/streaming shape — every stage is STATELESS:
-    *   - the corpus side is two materialized static tables (signatures +
-    *     band-hash vectors), built once per session like every model
-    *     table here; the per-band join rows derive from the compact
-    *     (doc_id, bhs) table and carry ONLY (corpus_doc_id, band,
-    *     band_hash, pre) — the strict band-hash PREFIX (avg bands/2
-    *     ints), never the full 32-int vector the r10 rework removed
-    *     (r9 shipped `corpus_bhs` on every exploded row: 32× redundant
-    *     vector payload on the table every micro-batch joins), and never
-    *     a signature (that join stays post-ownership);
-    *   - incoming docs shingle → sign → band map-only, carrying `sig`
-    *     plus the same strict prefix per band row. The signature must
-    *     ride the stream rows — a stream cannot re-join its own
-    *     signature table post-ownership without a stateful stream-stream
-    *     self-join — but it rides batch-sized micro-batch rows, not the
-    *     corpus-sized static table, and the full `bhs` no longer rides
-    *     at all;
-    *   - candidate hits come from a (band, band_hash) equi-join — for a
-    *     stream that is a stream-static join, no watermark, no state;
-    *   - a pair matching in several bands dedupes by BAND OWNERSHIP (the
-    *     r9 construction): the join hit at band b survives only if no
-    *     earlier band of the two PREFIXES also matches — exactly-once
-    *     emission WITHOUT the stateful `distinct()` a streaming
-    *     aggregation would need;
-    *   - verification is one more static join (corpus signatures) + the
-    *     codegen'd [[HashFunctions.sigAgreement]] count.
-    *
-    * `maxDf` caps corpus band buckets (mirroring [[minhashLsh]]): a
-    * degenerate constant bucket would fan every incoming doc out to
-    * O(bucket) candidate rows on the production ingest path. Over-cap
-    * buckets drop from the corpus band table, and ownership skips them
-    * via the same dead-set alive mask as [[minhashLsh]] — a pair whose
-    * lowest matching band is dead is claimed by its first ALIVE matching
-    * band, so flags survive unless a pair co-buckets ONLY in dead bands
-    * (exact copies share all 32). The graded query runs the default cap;
-    * its uncapped-replay oracle stays exact because no sf0.01 bucket
-    * approaches the cap (empty dead set ⇒ capped ≡ uncapped).
+    * Candidates, ownership and the cap follow the [[Banding]] core
+    * ([[gateMatches]]): every stage is stateless, so a stream runs as
+    * stream-static joins with no watermark. The corpus side is the
+    * session's bucketed band-row and signature tables, shared with
+    * [[minhashLsh]]. `maxDf` caps corpus band buckets: a degenerate
+    * constant bucket would fan every incoming doc out to O(bucket)
+    * candidate rows on the production ingest path. A flag survives unless
+    * a pair co-buckets ONLY in over-cap bands (exact copies share all
+    * 32). The graded query runs the default cap; its uncapped-replay
+    * oracle stays exact because no sf0.01 bucket approaches the cap.
     * `maxDf = Int.MaxValue` disables capping (and skips the counting
     * pass entirely).
     *
@@ -1618,24 +1414,8 @@ object Dedup {
       rowsPerBand: Int = 4,
       minEstimate: Double = 0.5,
       maxDf: Int = 1000): DataFrame = {
-    val flagged = nearDupGateUnique(incoming, spark, sfDir, n, bands,
-      rowsPerBand, minEstimate, maxDf)
-    // batch: pin the corpus-member fan-out width like the incoming one
-    // (see [[collapseIncomingBy]]); a streaming frame stays stateless
-    val pinned =
-      if (flagged.isStreaming) flagged
-      else flagged.repartition(
-        spark.sparkContext.defaultParallelism, col("corpus_doc_id"))
-    pinned
-      // expansion last (one more stateless static join): a matched corpus
-      // UNIQUE fans out to all its member docs — copies share the
-      // signature, so the doc-level gate flagged every one of them with
-      // the same estimate
-      .join(uniqueMembers(spark, sfDir)
-        .select(col("uid").as("corpus_doc_id"), col("doc_id").as("member_id")),
-        "corpus_doc_id")
-      .select(col("doc_id"), col("member_id").as("corpus_doc_id"),
-        col("est_jaccard"))
+    val f = minhashBanding(spark, sfDir, n, bands, rowsPerBand, maxDf)
+    gatePairs(f, gateMatches(f, incoming, minEstimate), uniqueMembers(spark, sfDir))
   }
 
   /** REPRESENTATIVE-level output mode of [[nearDupGate]] — the 100 TB
@@ -1663,24 +1443,18 @@ object Dedup {
       rowsPerBand: Int = 4,
       minEstimate: Double = 0.5,
       maxDf: Int = 1000,
-      stateTtl: Option[String] = None): DataFrame =
-    reprAgg(
-      nearDupGateUnique(incoming, spark, sfDir, n, bands, rowsPerBand,
-        minEstimate, maxDf)
-        // w from the BUCKETED sig table, not the unique table (r20):
-        // every flagged corpus id has a signature by construction (it
-        // came from a band row), so the inner join is row-identical —
-        // and the bucketed side joins with no exchange
-        .join(minhashUniqueSigs(spark, sfDir, n)
-          .select(col("doc_id").as("corpus_doc_id"), col("w")),
-          "corpus_doc_id"),
-      key = "doc_id", corpusKey = "corpus_doc_id", score = "est_jaccard",
-      stateTtl = stateTtl)
+      stateTtl: Option[String] = None): DataFrame = {
+    val f = minhashBanding(spark, sfDir, n, bands, rowsPerBand, maxDf)
+    reprAgg(f, gateMatches(f, incoming, minEstimate), stateTtl)
+  }
 
   /** The per-incoming-key aggregation tail shared by [[nearDupGateRepr]]
     * and [[embeddingNearDupGateRepr]]: best match (max score, ties to the
     * smallest corpus representative) + Σ copy-weight corpus member count,
-    * one output row per flagged incoming key.
+    * one output row per flagged incoming key. `w` comes from the
+    * family's bucketed corpus table: every matched corpus id is in it (it
+    * came from a band row), so the inner join is row-identical and joins
+    * with no exchange on the corpus side.
     *
     * `stateTtl` is the STREAMING state-retention bound (e.g.
     * "30 minutes"): when set, the aggregation groups additionally by a
@@ -1701,22 +1475,42 @@ object Dedup {
     * None (a window over the constant batch timestamp would be a no-op
     * group key anyway). */
   private def reprAgg(
-      matched: DataFrame, key: String, corpusKey: String, score: String,
-      stateTtl: Option[String]): DataFrame = {
+      f: Banding, matches: DataFrame, stateTtl: Option[String]): DataFrame = {
+    val cid = "corpus_" + f.id
+    val matched = matches
+      .join(f.corpus.select(col(f.id).as(cid), col("w")), cid)
     val grouped = stateTtl match {
       case Some(ttl) => matched
         .withColumn("arrival_ts", current_timestamp())
         .withWatermark("arrival_ts", ttl)
-        .groupBy(window(col("arrival_ts"), ttl), col(key))
-      case None => matched.groupBy(col(key))
+        .groupBy(window(col("arrival_ts"), ttl), col(f.id))
+      case None => matched.groupBy(col(f.id))
     }
     grouped
       .agg(
-        min(struct((-col(score)).as("neg_score"),
-          col(corpusKey).as("rep"))).as("best"),
+        min(struct((-col(f.score)).as("neg_score"),
+          col(cid).as("rep"))).as("best"),
         sum(col("w")).as("n_corpus_matches"))
-      .select(col(key), col("best.rep").as("corpus_rep"),
-        col("n_corpus_matches"), (-col("best.neg_score")).as(score))
+      .select(col(f.id), col("best.rep").as("corpus_rep"),
+        col("n_corpus_matches"), (-col("best.neg_score")).as(f.score))
+  }
+
+  /** Pair mode of a gate: a matched corpus UNIQUE fans out to all its
+    * member ids; copies share the payload, so the doc-level gate flagged
+    * each of them with the same score. A batch pins the fan-out width
+    * like the incoming one (see [[collapseIncomingBy]]); a streaming frame
+    * stays stateless. */
+  private def gatePairs(
+      f: Banding, matches: DataFrame, members: DataFrame): DataFrame = {
+    val cid = "corpus_" + f.id
+    val pinned =
+      if (matches.isStreaming) matches
+      else matches.repartition(
+        matches.sparkSession.sparkContext.defaultParallelism, col(cid))
+    pinned
+      .join(members.select(col("uid").as(cid), col("doc_id").as("member_id")),
+        cid)
+      .select(col(f.id), col("member_id").as(cid), col(f.score))
   }
 
   /** Batch-only INCOMING-side unique-first for the ingest gates (r13): a
@@ -1788,102 +1582,39 @@ object Dedup {
       (collapsed, expand)
     }
 
-  /** The shared unique-level core of [[nearDupGate]] (member-pair mode)
-    * and [[nearDupGateRepr]] (one-row-per-flagged-doc mode): one row per
-    * (incoming doc, matched corpus UNIQUE) surviving banding, ownership,
-    * and the signature-agreement estimate filter. */
-  private def nearDupGateUnique(
-      incoming: DataFrame,
-      spark: SparkSession,
-      sfDir: String,
-      n: Int,
-      bands: Int,
-      rowsPerBand: Int,
-      minEstimate: Double,
-      maxDf: Int): DataFrame = {
-    val hashSpace = MinhashHashSpace
-    // UNIQUE-FIRST corpus side (r10, see [[uniqueDocs]]): signatures and
-    // band rows per distinct corpus text (the sig table is shared with
-    // [[minhashLsh]]); matched corpus uniques expand to their member
-    // docs after the est filter. The static band table every micro-batch
-    // joins shrinks by the corpus copy factor.
-    val corpusSigs = minhashUniqueSigs(spark, sfDir, n)
-    // the bucketed band-row table shared with [[minhashLsh]] (r20): the
-    // (band, band_hash) equi-join below — the static side every
-    // micro-batch joins — consumes the persisted layout with no exchange
-    val corpusBandRows = minhashBandRows(spark, sfDir, n, bands, rowsPerBand)
-    // shared cache key with minhashLsh: identical banding ⇒ identical df
-    // (weighted unique counts == doc-level row counts); the count
-    // aggregate rides the bucketed layout, also exchange-free
-    val dead = deadBandSet(corpusBandRows,
-      key("minhashdead", sfDir, n, bands, rowsPerBand, maxDf), maxDf,
-      sum(col("w")))
-    val corpusBands = deadMasked(
-      corpusBandRows.drop("w").withColumnRenamed("doc_id", "corpus_doc_id"),
-      dead, hashSpace)
-    // batch incoming collapses to distinct texts before the signing scan
-    // (r13, see [[collapseIncomingBy]]); streaming passes through
-    val (inDocs, inExpand) = collapseIncomingBy(
-      incoming, "doc_id", Seq("text"),
-      md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")))
-    val inBanded = shingledDocs(inDocs, n)
-      .select(col("doc_id"),
-        HashFunctions.minhashSigHashes(col("shingles")).as("sig"))
-      .withColumn("bhs", bandHashExpr(bands, rowsPerBand))
-      .select(col("doc_id"), col("sig"), col("bhs"),
-        posexplode(col("bhs")).as(Seq("band", "band_hash")))
-      .select(col("doc_id"), col("sig"), col("band"), col("band_hash"),
-        expr("slice(bhs, 1, band)").as("in_pre"))
-    val joined = inBanded.join(corpusBands, Seq("band", "band_hash"))
-    // lowest-matching-band ownership: drop the hit if any earlier (alive)
-    // band of the two prefixes also matches — stateless exactly-once
-    val priorMatch =
-      if (dead.isEmpty) zip_with(col("in_pre"), col("pre"), (a, b) => a === b)
-      else zip_with(
-        zip_with(col("in_pre"), col("pre"), (a, b) => a === b),
-        col("alive"), (m, al) => m && al)
-    inExpand(joined
-      .where(not(array_contains(priorMatch, lit(true))))
-      .join(corpusSigs.select(col("doc_id").as("corpus_doc_id"),
-        col("sig").as("corpus_sig")), "corpus_doc_id")
-      .withColumn("est_jaccard", floor(
-        HashFunctions.sigAgreement(col("sig"), col("corpus_sig")) / lit(128.0)
-          * lit(10000) + lit(0.5)) / lit(10000.0))
-      .where(col("est_jaccard") >= minEstimate)
-      .select(col("doc_id"), col("corpus_doc_id"), col("est_jaccard")))
+  /** The corpus side of the gate's candidate join: one narrow row per
+    * (corpus unique, live band) — (corpus_<id>, band, key, pre[, alive]),
+    * never the key vector and never the payload (the verify join stays
+    * after ownership). Package-visible so the spec pins its columns. */
+  private[graft] def gateBands(f: Banding): DataFrame =
+    liveBands(f).drop("w").withColumnRenamed(f.id, "corpus_" + f.id)
+
+  /** The unique-level core of both gates and their repr modes: one row
+    * per (incoming row, matched corpus unique) that survives banding,
+    * ownership and the verify threshold — (id, corpus_<id>, score).
+    * Every stage is stateless: incoming rows sign map-only and carry
+    * their payload (a stream cannot re-join its own signature table),
+    * meet the corpus band rows in a (band, key) equi-join — for a stream,
+    * a stream-static join — and keep a hit only at its owning band, so
+    * each (incoming, corpus) pair is emitted once without a `distinct()`.
+    * Verification is one more static join against the corpus payload. */
+  private def gateMatches(
+      f: Banding, incoming: DataFrame, threshold: Double): DataFrame = {
+    val cid = "corpus_" + f.id
+    val (in, inExpand) =
+      collapseIncomingBy(incoming, f.id, Seq(f.raw), f.collapseKey)
+    val inBands = bandRows(
+      f.sign(in).select(col(f.id), col(f.payload), f.keys.as("keys")),
+      f.key, "in_pre")
+    inExpand(inBands
+      .join(gateBands(f), Seq("band", f.key))
+      .where(owned(f, col("in_pre"), col("pre"), col("alive")))
+      .join(f.corpus.select(col(f.id).as(cid), col(f.payload).as("__corpus")),
+        cid)
+      .withColumn(f.score, f.verify(col(f.payload), col("__corpus")))
+      .where(col(f.score) >= threshold)
+      .select(col(f.id), col(cid), col(f.score)))
   }
-
-  /** The static corpus band table the gate joins against: one narrow row
-    * per (corpus doc, band) — (corpus_doc_id, band, band_hash, pre), plus
-    * a per-prefix-element `alive` mask only when over-cap dead buckets
-    * exist. Derived lazily from the compact materialized (doc_id, bhs)
-    * table — the explode and prefix slice are map-only work re-run per
-    * micro-batch against a 32-ints-per-doc parquet scan, cheaper than
-    * materializing the ~16× larger exploded form. Package-visible so the
-    * spec pins its schema (the r9 width regression rode exactly here). */
-  private[graft] def corpusBandTable(
-      corpusBhs: DataFrame, dead: Array[Long], hashSpace: Int): DataFrame =
-    deadMasked(
-      bandedPrefixRows(corpusBhs)
-        .withColumnRenamed("doc_id", "corpus_doc_id"),
-      dead, hashSpace)
-
-  /** Apply an over-cap dead-bucket set to a band-row frame: drop rows
-    * whose own bucket is dead, and attach the per-prefix-element `alive`
-    * mask the ownership test ANDs in. No-op (schema included) when the
-    * dead set is empty — the common case. Shared by [[corpusBandTable]]
-    * (per-call explode, the spec hook) and the bucketed band-row path in
-    * [[nearDupGateUnique]]. */
-  private def deadMasked(
-      base: DataFrame, dead: Array[Long], hashSpace: Int): DataFrame =
-    if (dead.isEmpty) base
-    else base
-      .where(not(HashFunctions.inSortedLongSet(
-        col("band").cast("long") * lit(hashSpace.toLong) + col("band_hash"),
-        dead)))
-      .withColumn("alive", transform(col("pre"), (v, b) =>
-        not(HashFunctions.inSortedLongSet(
-          b.cast("long") * lit(hashSpace.toLong) + v, dead))))
 
   /** EMBEDDING-family ingest gate — [[nearDupGate]]'s contract for
     * vectors: flag every incoming (vec_id, embedding) row whose exact
@@ -1891,23 +1622,12 @@ object Dedup {
     * generated by the same sign-LSH banding as [[embeddingNearDupLsh]]
     * (media/embedding near-dups caught at ingest, not after a full
     * corpus re-dedup). One shared implementation behind the batch API
-    * and [[graft.streaming.CorpusStream.embeddingNearDupGate]].
-    *
-    * Identical stateless scale shape as the text gate:
-    *   - the corpus side derives narrow band rows (corpus_vec_id, band,
-    *     sig, pre[, alive]) from the materialized signature table that
-    *     [[buildScoredCandidatePairs]] already shares — the strict
-    *     prefix is all the ownership test reads, the embedding never
-    *     rides a band row;
-    *   - incoming vectors sign map-only, carrying their embedding (the
-    *     verify input a stream cannot re-join) plus the strict prefix;
-    *   - (band, sig) equi-join → lowest-alive-matching-band ownership →
-    *     exactly-once without state → exact cosine verify against the
-    *     corpus embeddings (static join, AQE-sized).
-    * `maxBucket` caps corpus band buckets exactly like the text gate's
-    * `maxDf` (dead buckets skip via the alive mask; the sign-LSH dead
-    * domain is ≤ bands·2^bits keys, inlinable but probed via the same
-    * binary-search expression). */
+    * and [[graft.streaming.CorpusStream.embeddingNearDupGate]], on the
+    * same [[Banding]] core as the text gate ([[gateMatches]]): incoming
+    * vectors sign map-only and carry their embedding, the embedding
+    * never rides a corpus band row, and the exact cosine verify joins the
+    * bucketed unique-vector table. `maxBucket` caps corpus band buckets
+    * exactly like the text gate's `maxDf`. */
   def embeddingNearDupGate(
       incoming: DataFrame,
       spark: SparkSession,
@@ -1917,24 +1637,9 @@ object Dedup {
       bitsPerBand: Int = -1,
       maxBucket: Int = 1000): DataFrame = {
     val (bn, bits) = resolveLsh(spark, sfDir, bands, bitsPerBand)
-    val flagged = embeddingNearDupGateResolved(incoming, spark, sfDir,
-      threshold, bn, bits, maxBucket)
-    // batch: pin the corpus-member fan-out width like the incoming one
-    // (see [[collapseIncomingBy]]); a streaming frame stays stateless
-    val pinned =
-      if (flagged.isStreaming) flagged
-      else flagged.repartition(
-        spark.sparkContext.defaultParallelism, col("corpus_vec_id"))
-    pinned
-      // expansion last (one more stateless static join): a matched corpus
-      // UNIQUE fans out to all its member vectors — copies share the
-      // embedding bit for bit, so the doc-level gate flagged each with
-      // the identical cosine
-      .join(uniqueVecMembers(spark, sfDir)
-        .select(col("uid").as("corpus_vec_id"), col("doc_id").as("member_id")),
-        "corpus_vec_id")
-      .select(col("vec_id"), col("member_id").as("corpus_vec_id"),
-        col("cos_sim"))
+    val f = signLshBanding(spark, sfDir, bn, bits, maxBucket)
+    gatePairs(f, gateMatches(f, incoming, threshold),
+      uniqueVecMembers(spark, sfDir))
   }
 
   /** REPRESENTATIVE-level output mode of [[embeddingNearDupGate]] —
@@ -1955,89 +1660,24 @@ object Dedup {
       maxBucket: Int = 1000,
       stateTtl: Option[String] = None): DataFrame = {
     val (bn, bits) = resolveLsh(spark, sfDir, bands, bitsPerBand)
-    reprAgg(
-      embeddingNearDupGateResolved(incoming, spark, sfDir, threshold,
-        bn, bits, maxBucket)
-        .join(uniqueVecs(spark, sfDir)
-          .select(col("vec_id").as("corpus_vec_id"), col("w")),
-          "corpus_vec_id"),
-      key = "vec_id", corpusKey = "corpus_vec_id", score = "cos_sim",
-      stateTtl = stateTtl)
+    val f = signLshBanding(spark, sfDir, bn, bits, maxBucket)
+    reprAgg(f, gateMatches(f, incoming, threshold), stateTtl)
   }
 
-  /** The shared unique-level core of [[embeddingNearDupGate]] and
-    * [[embeddingNearDupGateRepr]]: one row per (incoming vector, matched
-    * corpus UNIQUE) surviving banding, ownership, and the exact cosine
-    * verify. */
-  private def embeddingNearDupGateResolved(
-      incoming: DataFrame,
-      spark: SparkSession,
-      sfDir: String,
-      threshold: Double,
-      bands: Int,
-      bitsPerBand: Int,
-      maxBucket: Int): DataFrame = {
-    val sigSpace = 1 << bitsPerBand
-    // UNIQUE-level corpus side (see [[uniqueVecs]]): the sig/band tables
-    // are per distinct embedding with copy weights; matched corpus
-    // uniques expand to members after the threshold. df is w-weighted —
-    // identical values to the doc-level banding's row counts.
-    val e = uniqueVecs(spark, sfDir)
-    // the bucketed band-row table (r20): the (band, sig) candidate join
-    // and the dead-bucket count both consume the persisted layout — the
-    // per-call explode+shuffle of the compact sig table is gone
-    val corpusBandRows = signLshBandRows(spark, sfDir, bands, bitsPerBand)
-    val dead: Array[Long] = SessionState.getOrBuild(
-      key("lshdead", sfDir, bands, bitsPerBand, maxBucket)) {
-        val a = corpusBandRows
-          .groupBy(col("band"), col("sig"))
-          .agg(sum(col("w")).as("df"))
-          .where(col("df") > maxBucket)
-          .select((col("band") * sigSpace + col("sig")).cast("long"))
-          .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-          .collect()
-        java.util.Arrays.sort(a)
-        a
-      }
-    val corpusBands = {
-      val base = corpusBandRows.drop("w")
-        .withColumnRenamed("vec_id", "corpus_vec_id")
-      if (dead.isEmpty) base
-      else base
-        .where(not(HashFunctions.inSortedLongSet(
-          (col("band") * sigSpace + col("sig")).cast("long"), dead)))
-        .withColumn("alive", transform(col("pre"), (v, b) =>
-          not(HashFunctions.inSortedLongSet(
-            (b * sigSpace + v).cast("long"), dead))))
-    }
-    // batch incoming collapses to distinct embeddings before signing
-    // (r13, see [[collapseIncomingBy]]; value-keyed like [[uniqueVecs]]);
-    // streaming passes through
-    val (inVecs, inExpand) = collapseIncomingBy(
-      incoming, "vec_id", Seq("embedding"), col("embedding"))
-    val inBanded = inVecs
-      .select(col("vec_id"), col("embedding"),
-        signLshSigExpr(bands, bitsPerBand, embeddingDim(spark, sfDir))
-          .as("sigs"))
-      .select(col("vec_id"), col("embedding"), col("sigs"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-      .select(col("vec_id"), col("embedding"), col("band"), col("sig"),
-        expr("slice(sigs, 1, band)").as("in_pre"))
-    val joined = inBanded.join(corpusBands, Seq("band", "sig"))
-    val priorMatch =
-      if (dead.isEmpty) zip_with(col("in_pre"), col("pre"), (a, b) => a === b)
-      else zip_with(
-        zip_with(col("in_pre"), col("pre"), (a, b) => a === b),
-        col("alive"), (m, al) => m && al)
-    inExpand(joined
-      .where(not(array_contains(priorMatch, lit(true))))
-      .join(e.select(col("vec_id").as("corpus_vec_id"),
-        col("embedding").as("corpus_embedding")), "corpus_vec_id")
-      .withColumn("cos_sim", round(
-        VectorFunctions.cosineSim(col("embedding"), col("corpus_embedding")), 4))
-      .where(col("cos_sim") >= threshold)
-      .select(col("vec_id"), col("corpus_vec_id"), col("cos_sim")))
-  }
+  /** Approximate kNN-GRAPH construction — every vector's top-`k` nearest
+    * neighbors among its banded-LSH candidates: the substrate primitive
+    * for graph-based dedup, clustering, and kNN-graph ANN methods at
+    * corpus scale (an exact kNN graph is Θ(n²); the banding bounds
+    * candidate generation to shared sign-buckets exactly as
+    * [[embeddingNearDupLsh]] does).
+    *
+    * Scale shape: candidate pairs score once (undirected), mirror into
+    * both directions as (src, dst, score) ID rows, and the per-source
+    * top-k runs as the [[graft.functions.TopKAgg]] k-slot-heap PARTIAL
+    * aggregate — the shuffle after scoring carries ≤ k rows per source,
+    * never a window sort over the full candidate multiset. Vectors whose
+    * buckets hold no other member have no edges, honestly absent from
+    * the approximate graph. */
 
   def knnGraph(
       spark: SparkSession,

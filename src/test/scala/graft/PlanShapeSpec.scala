@@ -204,6 +204,73 @@ class PlanShapeSpec extends SparkSpec {
       s"pair-dedupe aggregate reappeared:\n$plan")
   }
 
+  test("ingest gates read the bucketed corpus tables with no corpus-side exchange") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.functions.col
+    // the corpus tables are bucketed on the keys the gates join them on,
+    // so a batch's plan must never shuffle them: that would be an
+    // O(corpus) exchange per ingest batch. Broadcasts are switched off,
+    // as at a corpus scale where no corpus table fits under AQE's size
+    // threshold (sf0.001 tables do, and AQE would broadcast them). A
+    // corpus scan's leg is the chain of single-input operators from the
+    // scan up to the operator where it meets another input (the join).
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    def legs(p: SparkPlan, leg: List[SparkPlan]): Seq[(FileSourceScanExec, List[SparkPlan])] =
+      p match {
+        case s: FileSourceScanExec
+            if s.tableIdentifier.exists(_.table.startsWith("graft_bkt_")) =>
+          Seq(s -> leg)
+        case _ => kids(p) match {
+          case Seq(only) => legs(only, p :: leg)
+          case many => many.flatMap(legs(_, Nil))
+        }
+      }
+    def check(name: String, df: org.apache.spark.sql.DataFrame,
+        tables: Seq[String]): Unit = {
+      df.collect() // finalize AQE
+      val plan = df.queryExecution.executedPlan
+      val found = legs(plan, Nil)
+      val cols = found.map(_._1.relation.schema.fieldNames.toSet)
+      tables.foreach(c => assert(cols.exists(_.contains(c)),
+        s"$name reads no corpus table with column $c:\n$plan"))
+      found.foreach { case (scan, leg) =>
+        val ex = leg.collect { case e: ShuffleExchangeLike => e.nodeName }
+        assert(ex.isEmpty, s"$name shuffles corpus table " +
+          s"${scan.tableIdentifier.get.table} ($ex):\n$plan")
+      }
+    }
+    val conf = spark.conf
+    val saved = Seq(
+      "spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      .map(k => k -> conf.getOption(k))
+    try {
+      saved.foreach { case (k, _) => conf.set(k, "-1") }
+      val docs = Tables.documents(spark, sfDir)
+        .where(col("doc_id") % 50 === 3)
+        .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
+      check("nearDupGateRepr",
+        graft.operators.Dedup.nearDupGateRepr(docs, spark, sfDir),
+        Seq("band_hash", "sig"))
+      val vecs = Tables.embeddings(spark, sfDir)
+        .where(col("vec_id") % 50 === 3)
+        .select((col("vec_id") + 900000L).as("vec_id"), col("embedding"))
+      check("embeddingNearDupGateRepr",
+        graft.operators.Dedup.embeddingNearDupGateRepr(vecs, spark, sfDir),
+        Seq("pre", "embedding"))
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   test("simhashRepr never materializes the member expansion (r13)") {
     // the repr mode's whole point is stopping BEFORE the w_a·w_b doc-level
     // fan-out (the 400+ s term of the pair mode at dup factor 1000). The

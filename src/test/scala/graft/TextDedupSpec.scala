@@ -437,16 +437,17 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("gate corpus band table is narrow: (corpus_doc_id, band, band_hash, pre)") {
-    // the r9 gate shipped the full 32-int band-hash vector on every
-    // exploded corpus row (32× redundant payload on the static table every
-    // micro-batch joins); this pins the r10 narrow layout — prefix only,
-    // never `bhs`, never a signature — and the alive mask only under caps
-    val bhs = Dedup.bandHashes(Dedup.minhashSigs(spark, sfDir), 32, 4)
-    val uncapped = Dedup.corpusBandTable(bhs, Array.emptyLongArray, 1 << 20)
+    // the band table the gate joins: the full 32-int band-hash vector on
+    // every corpus row would be 32x redundant payload on the static table
+    // every micro-batch joins. Pin the narrow layout — prefix only, never
+    // `bhs`, never a signature — and the alive mask only under caps
+    // (no sf0.001 bucket reaches the default cap; at cap 1 every bucket
+    // holding two copies is over it)
+    val uncapped = Dedup.gateBands(Dedup.minhashBanding(spark, sfDir, 5, 32, 4, 1000))
     assert(uncapped.columns.toSeq ==
       Seq("corpus_doc_id", "band", "band_hash", "pre"),
       s"band table widened: ${uncapped.columns.toSeq}")
-    val capped = Dedup.corpusBandTable(bhs, Array(0L), 1 << 20)
+    val capped = Dedup.gateBands(Dedup.minhashBanding(spark, sfDir, 5, 32, 4, 1))
     assert(capped.columns.toSeq ==
       Seq("corpus_doc_id", "band", "band_hash", "pre", "alive"),
       s"capped band table layout: ${capped.columns.toSeq}")
@@ -564,6 +565,72 @@ class TextDedupSpec extends SparkSpec {
     val uncapped = Dedup.embeddingNearDupLsh(
       spark, dir.toString, threshold = 0.99, maxBucket = 1000).collect()
     assert(uncapped.length == 10)
+  }
+
+  test("embedding gate flags survive a capped lowest band, exactly once") {
+    import spark.implicits._
+    // the corpus of the LSH capped test above: 5 identical all-positive
+    // vectors match in all 8 bands, and 3 extras share ONLY band 0's sig,
+    // so band 0's bucket holds 8 > maxBucket = 6. An incoming copy of the
+    // identical vector matches the group in every band, but its lowest
+    // matching band is dead: the gate must fall through to band 1 and
+    // flag each of the 5 members exactly once at cosine 1.0. The extras
+    // meet the incoming vector only in the dead bucket.
+    val dim = 64
+    val ones = Array.fill(dim)(1.0f).toSeq
+    val identical = (0L until 5L).map(i => (i, ones))
+    val extras = (0 until 3).map { j =>
+      val v = Array.fill(dim)(-1.0f)
+      java.util.Arrays.fill(v, 0, 8, 1.0f)
+      v(8 + j) = 1.0f
+      (100L + j, v.toSeq)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_egate_capped_")
+    (identical ++ extras).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val incoming = Seq((900000L, ones)).toDF("vec_id", "embedding")
+    val expected = (0L until 5L).map(i => (900000L, i, 1.0)).toSet
+    for (cap <- Seq(6, Int.MaxValue)) {
+      val flags = Dedup.embeddingNearDupGate(incoming, spark, dir.toString,
+        threshold = 0.99, maxBucket = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(flags.length == flags.distinct.length,
+        s"cap $cap: duplicate gate emission: ${flags.diff(flags.distinct)}")
+      assert(flags.toSet == expected, s"cap $cap: gate flags: ${flags.sorted}")
+      val repr = Dedup.embeddingNearDupGateRepr(incoming, spark, dir.toString,
+        threshold = 0.99, maxBucket = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      assert(repr.toSeq == Seq((900000L, 0L, 5L, 1.0)),
+        s"cap $cap: repr rows: ${repr.toSeq}")
+    }
+  }
+
+  test("sign-LSH dead keys do not overflow: 9 bands x 28 bits with an over-cap group") {
+    import spark.implicits._
+    // band 8's packed dead key is 8 * 2^28 + sig, past Int range. Five
+    // copies of `a` put every one of a's buckets over maxBucket = 4, so
+    // the dead set is non-empty and holds band-8 keys. The copy pair of
+    // `b` stays alive: it is the only pair, and the only thing an
+    // incoming copy of b may flag. An incoming copy of `a` meets only
+    // dead buckets, which drop from the corpus side.
+    val dim = 64
+    def vec(seed: Int) =
+      Array.tabulate(dim)(i => math.sin(seed * 31.0 + i).toFloat).toSeq
+    val (a, b) = (vec(1), vec(2))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_wide_")
+    ((0L until 5L).map(i => (i, a)) ++ Seq((10L, b), (11L, b)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val pairs = Dedup.embeddingNearDupLsh(spark, dir.toString,
+      threshold = 0.99, bands = 9, bitsPerBand = 28, maxBucket = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(pairs == Seq((10L, 11L, 1.0)), s"pairs: ${pairs.sorted}")
+    val incoming = Seq((900000L, b), (900001L, a)).toDF("vec_id", "embedding")
+    val flags = Dedup.embeddingNearDupGate(incoming, spark, dir.toString,
+      threshold = 0.99, bands = 9, bitsPerBand = 28, maxBucket = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(flags.sorted == Seq((900000L, 10L, 1.0), (900000L, 11L, 1.0)),
+      s"gate flags: ${flags.sorted}")
   }
 
   test("duplicateDocIds equals the distinct doc_b of the expanded pair set") {
