@@ -792,26 +792,40 @@ object VectorIndex {
     grpShift = 4)
   private val Layouts = Seq(IvfLayout, LshLayout)
 
-  // Serving model state (centroids / planes) cached per store path, with
-  // the layout the store was written under: probe selection must not pay
-  // a parquet-read Spark job per query, and no call after the first asks
-  // the filesystem which layout the store has. Writers and the
+  /** PQ codebooks `[sub][cid][dim]`. */
+  private type Codebooks = Array[Array[Array[Float]]]
+
+  // A store's model state, one session entry per store path: the layout
+  // it was written under, its model (centroids / planes) and, on stores
+  // written with them, its PQ codebooks (`pq/`, the IVF-PQ pairing: coarse
+  // centroids prune IO, per-subspace codes compress the payload the ADC
+  // scan reads). Probe selection must not pay a parquet-read Spark job per
+  // query, and no call after the first asks the filesystem which layout
+  // the store has or whether it carries codebooks. Writers and the
   // compaction swap refresh the entry; [[recoverStore]] invalidates.
   private final case class StoreModel(
-      layout: StoreLayout, model: Array[Array[Float]])
+      layout: StoreLayout, model: Array[Array[Float]], pq: Option[Codebooks])
   private def modelKey(path: String) = key("storemodel", path)
   private def storeModel(spark: SparkSession, path: String): StoreModel =
     SessionState.getOrBuild(modelKey(path)) {
-      val found = Layouts.filter(l =>
-        fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/${l.modelDir}")))
+      def exists(dir: String) =
+        fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/$dir"))
+      val found = Layouts.filter(l => exists(l.modelDir))
       require(found.size == 1,
         s"$path is not a vector store: it needs exactly one of the model " +
           s"directories ${Layouts.map(_.modelDir).mkString(", ")}, found " +
           s"${found.map(_.modelDir).mkString("[", ", ", "]")}")
       val layout = found.head
+      val pq = if (!exists("pq")) None else {
+        val rows = spark.read.parquet(s"$path/pq")
+          .orderBy(col("sub"), col("cid")).collect()
+          .map(r => (r.getInt(0), r.getSeq[Float](2).toArray))
+        Some(Array.tabulate(rows.map(_._1).max + 1)(s =>
+          rows.filter(_._1 == s).map(_._2)))
+      }
       StoreModel(layout, spark.read.parquet(s"$path/${layout.modelDir}")
         .orderBy(layout.modelIdCol).collect()
-        .map(_.getSeq[Float](1).toArray))
+        .map(_.getSeq[Float](1).toArray), pq)
     }
   private def writeModelTable(
       spark: SparkSession, dir: String, layout: StoreLayout,
@@ -822,39 +836,30 @@ object VectorIndex {
       .toDF(layout.modelIdCol, layout.modelVecCol)
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
-
-  // PQ codebooks are a second model side-table of the IVF store (the
-  // IVF-PQ pairing: coarse centroids prune IO, per-subspace codes
-  // compress the payload the ADC scan reads). Cached per store path like
-  // the centroids/planes.
-  private def pqModelKey(path: String) = key("storepq", s"$path/pq")
-  private def readPqModel(
-      spark: SparkSession, path: String): Array[Array[Array[Float]]] =
-    SessionState.getOrBuild(pqModelKey(path)) {
-      val rows = spark.read.parquet(s"$path/pq")
-        .orderBy(col("sub"), col("cid")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      val m = rows.map(_._1).max + 1
-      Array.tabulate(m)(s => rows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    }
-  private def writePqModelTableAt(
-      spark: SparkSession, dir: String,
-      cb: Array[Array[Array[Float]]]): Unit = {
+  private def writePqTable(
+      spark: SparkSession, dir: String, cb: Codebooks): Unit = {
     import spark.implicits._
     (for { s <- cb.indices; c <- cb(s).indices }
       yield (s, c, cb(s)(c).toSeq))
       .toDF("sub", "cid", "vec")
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
-  private def writePqModelTable(
-      spark: SparkSession, path: String,
-      cb: Array[Array[Array[Float]]]): Unit = {
-    writePqModelTableAt(spark, s"$path/pq", cb)
-    SessionState.put(pqModelKey(path), cb)
-  }
-  private def hasPqModel(spark: SparkSession, path: String): Boolean =
-    SessionState.get(pqModelKey(path)).isDefined ||
-      fs(spark).exists(new org.apache.hadoop.fs.Path(s"$path/pq"))
+
+  /** The one `codes` rule of every store write: a store with codebooks
+    * carries each row's PQ codes, computed from the row's own embedding,
+    * so the ADC scan never sees a schema hole. */
+  private def withCodes(rows: DataFrame, pq: Option[Codebooks]): DataFrame =
+    pq.fold(rows)(cb => rows.withColumn("codes", pqCodesCol(cb)))
+
+  /** Gen-0 store rows of (vec_id, label, embedding, metadata) `vectors`,
+    * placed by `model` — a build's rows and a compaction's. */
+  private def baseRows(
+      vectors: DataFrame, layout: StoreLayout, model: Array[Array[Float]],
+      pq: Option[Codebooks]): DataFrame =
+    withCodes(vectors
+      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"),
+        lit(false).as("deleted"), lit(0L).as("gen"),
+        layout.assign(model, col("embedding")).as(layout.partCol)), pq)
 
   /** The layout write over ANY store-ready (vec_id, label, embedding,
     * metadata) frame — shared by the corpus build ([[writeStore]]) and the
@@ -863,18 +868,13 @@ object VectorIndex {
   private def writeVectorsAt(
       spark: SparkSession, vectors: DataFrame, path: String,
       layout: StoreLayout, model: Array[Array[Float]],
-      pqCb: Option[Array[Array[Array[Float]]]]): Unit = {
-    val base = vectors
-      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"),
-        lit(false).as("deleted"), lit(0L).as("gen"),
-        layout.assign(model, col("embedding")).as(layout.partCol))
-    writePartitioned(
-      pqCb.fold(base)(cb => base.withColumn("codes", pqCodesCol(cb))),
-      layout, s"$path/vectors")
+      pq: Option[Codebooks]): Unit = {
+    writePartitioned(baseRows(vectors, layout, model, pq), layout,
+      s"$path/vectors")
     writeModelTable(spark, s"$path/${layout.modelDir}", layout, model)
+    pq.foreach(writePqTable(spark, s"$path/pq", _))
     SessionState.invalidatePath(s"$path/vectors")
-    SessionState.put(modelKey(path), StoreModel(layout, model))
-    pqCb.foreach(cb => writePqModelTable(spark, path, cb))
+    SessionState.put(modelKey(path), StoreModel(layout, model, pq))
   }
 
   /** The one physical write of a partitioned store layout. Rows are
@@ -903,7 +903,7 @@ object VectorIndex {
       .parquet(dir)
 
   /** Materialize a store from any store-ready vectors frame (no PQ
-    * side-model) under `layout`: the IVF layout trains the deterministic
+    * codebooks) under `layout`: the IVF layout trains the deterministic
     * Lloyd centroids on the frame itself, the LSH layout draws
     * [[StorePlanes]] hyperplanes of the frame's embedding dim. The
     * text-ingestion path ([[TextStore]]) builds its chunk store through
@@ -922,7 +922,7 @@ object VectorIndex {
     try {
       val model =
         if (layout == IvfLayout) trainLloyd(vectors) else lshPlanes(vectors)
-      writeVectorsAt(spark, vectors, path, layout, model, pqCb = None)
+      writeVectorsAt(spark, vectors, path, layout, model, pq = None)
     } finally if (persist) vectors.unpersist()
   }
 
@@ -952,7 +952,7 @@ object VectorIndex {
     // Whichever corpus model is not yet a session entry trains from ONE
     // collect of the corpus sample.
     lazy val sample = trainingSample(Tables.embeddings(spark, sfDir), MaxTrain)
-    val (model, pqCb) =
+    val (model, pq) =
       if (layout == IvfLayout)
         (trained.getOrElse(centroidsEntry(sfDir)(sample)),
           Some(pqEntry(sfDir)(sample)))
@@ -967,7 +967,7 @@ object VectorIndex {
     val vectors = Tables.embeddings(spark, sfDir)
       .join(metadata, col("vec_id") === col("doc_id"), "left")
       .select(col("vec_id"), col("label"), col("embedding"), col("metadata"))
-    writeVectorsAt(spark, vectors, path, layout, model, pqCb)
+    writeVectorsAt(spark, vectors, path, layout, model, pq)
   }
 
   /** Shared incremental upsert (the reference's `add_texts` growth path):
@@ -978,7 +978,7 @@ object VectorIndex {
     * everything back to a read-optimal delta-less partitioned layout. */
   private def appendAt(
       spark: SparkSession, path: String, batch: DataFrame, gen: Long): Unit = {
-    val StoreModel(layout, model) = storeModel(spark, path)
+    val StoreModel(layout, model, pq) = storeModel(spark, path)
     // STICKY placement for existing ids: an update lands in the partition
     // its previous versions live in, so a pruned read that sees any copy
     // of an id sees its newest copy — re-assigning a moved embedding to a
@@ -1005,12 +1005,8 @@ object VectorIndex {
         coalesce(
           col("sticky_pid"),
           layout.assign(model, col("embedding"))).as(layout.partCol))
-    // codes derive from the embedding itself (no sticky rule needed):
-    // recompute for every appended row so the ADC scan never sees a
-    // schema hole
-    (if (hasPqModel(spark, path))
-       appended.withColumn("codes", pqCodesCol(readPqModel(spark, path)))
-     else appended)
+    // codes derive from the embedding itself (no sticky rule needed)
+    withCodes(appended, pq)
       // ONE file per micro-batch append, whatever the layout's partition
       // count (the delta contract above). Appends are micro-batches by
       // contract — bulk backfill goes through build/compact. Sorted like
@@ -1097,7 +1093,8 @@ object VectorIndex {
   private def compactBody(
       spark: SparkSession, path: String, retrain: Boolean): Unit = {
     recoverBody(spark, path) // clear any debris from an interrupted swap
-    val StoreModel(layout, model) = storeModel(spark, path)
+    val current = storeModel(spark, path)
+    val layout = current.layout
     require(!retrain || layout == IvfLayout,
       s"compactStore(retrain = true): $path has the LSH layout, whose " +
         "hyperplanes are data-independent — there is no trained model to " +
@@ -1147,14 +1144,12 @@ object VectorIndex {
       // degraded after the recommended remedy ran. Staged like the
       // centroids (pq_retrain) and swapped only with the matching
       // vectors layout, so new codes never serve old codebooks.
-      val pqRetrained =
-        if (hasPqModel(spark, path)) Some(pqOn(sample)) else None
-      pqRetrained.foreach(cb =>
-        writePqModelTableAt(spark, s"$path/pq_retrain", cb))
-      rewriteAndSwap(spark, path, layout, live, c, stagedModel = true,
-        stagedPq = pqRetrained)
+      val pqRetrained = current.pq.map(_ => pqOn(sample))
+      pqRetrained.foreach(writePqTable(spark, s"$path/pq_retrain", _))
+      rewriteAndSwap(spark, path, live, StoreModel(layout, c, pqRetrained),
+        staged = true)
     } else
-      rewriteAndSwap(spark, path, layout, live, model, stagedModel = false)
+      rewriteAndSwap(spark, path, live, current, staged = false)
   }
 
   /** The compaction rewrite + crash-safe swap (VERDICT r3 item 5): the old
@@ -1163,29 +1158,19 @@ object VectorIndex {
     * can finish (the presence of `vectors_old` proves the staged layout
     * was complete before the swap began). */
   private def rewriteAndSwap(
-      spark: SparkSession, path: String, layout: StoreLayout,
-      live: DataFrame, model: Array[Array[Float]], stagedModel: Boolean,
-      stagedPq: Option[Array[Array[Array[Float]]]] = None): Unit = {
-    // re-assign to the CURRENT model partition: appendAt keeps updated ids
-    // sticky in their old partition for pruned-read correctness;
+      spark: SparkSession, path: String, live: DataFrame, next: StoreModel,
+      staged: Boolean): Unit = {
+    val layout = next.layout
+    // re-assign to the `next` model's partition: appendAt keeps updated
+    // ids sticky in their old partition for pruned-read correctness;
     // compaction is where placement catches up with the embedding (the
-    // old copies are folded away here, so moving is safe)
-    val folded = live
-      .select(col("vec_id"), col("label"), col("embedding"), col("metadata"),
-        lit(false).as("deleted"), lit(0L).as("gen"),
-        layout.assign(model, col("embedding")).as(layout.partCol))
-    // PQ codes recompute from the surviving embeddings — against the
-    // STAGED retrained codebooks when the caller re-fit them (retrain
-    // covers the quantization half of drift decay since r19), else the
-    // frozen ones (a plain compaction changes no model state)
-    val latest = stagedPq match {
-      case Some(cb) => folded.withColumn("codes", pqCodesCol(cb))
-      case None if hasPqModel(spark, path) =>
-        folded.withColumn("codes", pqCodesCol(readPqModel(spark, path)))
-      case None => folded
-    }
+    // old copies are folded away here, so moving is safe). PQ codes
+    // recompute from the surviving embeddings against `next`'s codebooks:
+    // the STAGED re-fit ones after a retrain, else the frozen ones (a
+    // plain compaction changes no model state).
     // two-phase rewrite: parquet cannot overwrite a path it is reading
-    writePartitioned(latest, layout, s"$path/vectors_compact")
+    writePartitioned(baseRows(live, layout, next.model, next.pq), layout,
+      s"$path/vectors_compact")
     live.unpersist()
     val f = fs(spark)
     def P(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
@@ -1221,23 +1206,24 @@ object VectorIndex {
     // empty, and every read is the base scan alone.
     if (deltaListing(spark, path).nonEmpty) deleteOrFail("vectors_delta")
     SessionState.invalidatePath(deltaPath(path))
-    if (stagedModel) {
+    if (staged) {
       // model swap only after the matching vectors layout is live — and
-      // staged the same way, so recovery can always finish it
+      // staged the same way, so recovery can always finish it. The entry
+      // takes `next` whole: the live layout's codes were computed from its
+      // codebooks, whatever the disk swap below still has to rename
       renameOrFail(layout.modelDir, s"${layout.modelDir}_old")
       renameOrFail(s"${layout.modelDir}_retrain", layout.modelDir)
       deleteOrFail(s"${layout.modelDir}_old")
-      SessionState.put(modelKey(path), StoreModel(layout, model))
-    }
-    stagedPq.foreach { cb =>
-      // the PQ codebook swap mirrors the centroid swap: the new layout's
-      // codes were computed from the staged codebooks, so once `vectors`
-      // is live the staged codebooks MUST become the served model
-      // (recovery finishes this from `pq_retrain` after any crash here)
-      renameOrFail("pq", "pq_old")
-      renameOrFail("pq_retrain", "pq")
-      deleteOrFail("pq_old")
-      SessionState.put(pqModelKey(path), cb)
+      SessionState.put(modelKey(path), next)
+      if (next.pq.isDefined) {
+        // the PQ codebook swap mirrors the centroid swap: the new layout's
+        // codes were computed from the staged codebooks, so once `vectors`
+        // is live the staged codebooks MUST become the served model
+        // (recovery finishes this from `pq_retrain` after any crash here)
+        renameOrFail("pq", "pq_old")
+        renameOrFail("pq_retrain", "pq")
+        deleteOrFail("pq_old")
+      }
     }
     deleteOrFail("vectors_old")
     SessionState.invalidatePath(s"$path/vectors")
@@ -1499,7 +1485,7 @@ object VectorIndex {
       nprobe: Int,
       filter: Option[Column],
       asOfGen: Option[Long] = None): DataFrame = {
-    val StoreModel(layout, model) = storeModel(spark, path)
+    val StoreModel(layout, model, _) = storeModel(spark, path)
     resolvedPartitions(spark, path, layout,
       layout.probe(model, queryVec, nprobe), filter, asOfGen)
   }
@@ -1689,7 +1675,7 @@ object VectorIndex {
       nprobe: Int,
       filter: Option[Column]): DataFrame = {
     import spark.implicits._
-    val StoreModel(layout, model) = storeModel(spark, path)
+    val StoreModel(layout, model, _) = storeModel(spark, path)
     val probePairs = queries.flatMap { case (qid, qv) =>
       layout.probe(model, qv, nprobe).map(p => (qid, p, qv.toSeq))
     }
@@ -1722,33 +1708,41 @@ object VectorIndex {
       k).orderBy(col("query_id"), col("rank"))
   }
 
-  /** The recall@k summary shared by every index family's eval query:
-    * per-query overlap of the approximate top-k with the exact top-k
-    * (a query with ZERO overlap still contributes 0 to the mean — the
-    * left join back to the query list, not a vanish), then one
-    * (n_queries, k, mean_recall, min_recall) row. */
+  /** The one recall@k definition, shared by every index family's eval
+    * query and [[storeHealth]]: `hits` holds one (query_id, hit) per exact
+    * top-k row, hit when the approximate top-k holds that row too, so a
+    * query with ZERO overlap still contributes 0. Per query, recall =
+    * hits / k; the summary is (n_queries, mean recall, min recall), both
+    * rounded to 4 dp by the explicit-floor rule. It runs on the driver: its
+    * input is bounded query state (k rows per query). */
   private def recallSummary(
-      exact: DataFrame, approx: DataFrame, k: Int): DataFrame = {
-    // one LEFT join + one aggregate (r20): the former inner-join → hits
-    // aggregate → distinct query list → left-join tower re-derived the
-    // query set a fourth operator already carried — the exact side holds
-    // every query's k ground-truth rows BY CONSTRUCTION, so marking each
-    // exact row hit/miss against the approx set and summing per query is
-    // the same per-query overlap in half the exchanges (each exchange is
-    // an AQE stage job; this summary runs in every ann_eval* family
-    // member). The approx side is a top-k output — k·nQueries rows by
-    // construction — so the broadcast hint is the engine's bounded-set
-    // policy, not an estimate.
-    val perQuery = exact
-      .join(broadcast(approx.withColumn("m", lit(1L))),
-        Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg((sum(coalesce(col("m"), lit(0L))) / lit(k.toDouble)).as("recall"))
-    perQuery.agg(
-      count(lit(1)).as("n_queries"),
-      lit(k).as("k"),
-      TextAnalysis.round4(avg(col("recall"))).as("mean_recall"),
-      TextAnalysis.round4(min(col("recall"))).as("min_recall"))
+      hits: Seq[(Long, Boolean)], k: Int): (Long, Double, Double) = {
+    require(hits.nonEmpty, "recall@k needs at least one query")
+    val recalls = hits.groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.count(_._2).toDouble / k)
+    def round4(x: Double) = math.floor(x * 10000 + 0.5) / 10000.0
+    (recalls.length.toLong, round4(recalls.sum / recalls.length),
+      round4(recalls.min))
+  }
+
+  /** An eval query's summary row (n_queries, k, mean_recall, min_recall)
+    * of `approx` against `exact`, both (query_id, vec_id) top-k frames,
+    * computed when the frame is built: one collect of the exact rows, each
+    * marked against a broadcast of the approximate ones (k·nQueries rows
+    * by construction, so the hint is the engine's bounded-set policy, not
+    * an estimate; the join also drops both inputs' final sorts). */
+  private def recallEval(
+      spark: SparkSession, exact: DataFrame, approx: DataFrame,
+      k: Int): DataFrame = {
+    import spark.implicits._
+    val hits = exact.select(col("query_id"), col("vec_id"))
+      .join(broadcast(approx.select(col("query_id"), col("vec_id"),
+        lit(true).as("hit"))), Seq("query_id", "vec_id"), "left")
+      .select(col("query_id"), col("hit").isNotNull)
+      .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
+    val (n, mean, least) = recallSummary(hits, k)
+    Seq((n, k, mean, least))
+      .toDF("n_queries", "k", "mean_recall", "min_recall")
   }
 
   /** Retrieval-quality evaluation as a first-class query: recall@k of the
@@ -1766,12 +1760,8 @@ object VectorIndex {
       nQueries: Int = 5,
       k: Int = 5,
       nprobe: Int = 4): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      corpusBatchSearch(spark, sfDir, layout, nQueries, k, nprobe)
-        .select(col("query_id"), col("vec_id")),
-      k)
+    recallEval(spark, KnnSearch.batchTopK(spark, sfDir, nQueries, k),
+      corpusBatchSearch(spark, sfDir, layout, nQueries, k, nprobe), k)
 
   /** Index-health eval for the PQ family — [[annEval]]'s measurement for
     * the third index kind: recall@k of the ADC-ranked batch probe
@@ -1786,12 +1776,8 @@ object VectorIndex {
       nQueries: Int = 5,
       k: Int = 5,
       fetchK: Int = 100): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchPqSearch(spark, sfDir, nQueries, k, fetchK)
-        .select(col("query_id"), col("vec_id")),
-      k)
+    recallEval(spark, KnnSearch.batchTopK(spark, sfDir, nQueries, k),
+      batchPqSearch(spark, sfDir, nQueries, k, fetchK), k)
 
   /** Index-health eval for the COMPOSED IVF-PQ family (r14, completing
     * the eval surface across all four index configurations): recall@k of
@@ -1809,12 +1795,8 @@ object VectorIndex {
       k: Int = 5,
       nprobe: Int = 4,
       fetchK: Int = 50): DataFrame =
-    recallSummary(
-      KnnSearch.batchTopK(spark, sfDir, nQueries, k)
-        .select(col("query_id"), col("vec_id")),
-      batchIvfPqSearchStore(spark, sfDir, nQueries, k, nprobe, fetchK)
-        .select(col("query_id"), col("vec_id")),
-      k)
+    recallEval(spark, KnnSearch.batchTopK(spark, sfDir, nQueries, k),
+      batchIvfPqSearchStore(spark, sfDir, nQueries, k, nprobe, fetchK), k)
 
   /** Lowest `n` live vec_ids of the store's FRESHEST surviving
     * generation — the default drift probes for [[storeHealth]] callers
@@ -1874,7 +1856,7 @@ object VectorIndex {
     * min_recall, mean_recall_pq, min_recall_pq, recall_floor, healthy,
     * recommendation) — the `_pq` pair judges the quantized serving
     * config (the IVF-PQ probe vs the same exact top-k), null on stores
-    * without a PQ side-model; `healthy` requires BOTH probes at or
+    * without PQ codebooks; `healthy` requires BOTH probes at or
     * above the floor, covering both drift-decay mechanisms (partition
     * layout AND codebook fit).
     *
@@ -1907,7 +1889,7 @@ object VectorIndex {
       nprobe: Int = 4,
       recallFloor: Double = 0.8): DataFrame = {
     import spark.implicits._
-    val StoreModel(layout, centroids) = storeModel(spark, path)
+    val StoreModel(layout, centroids, pq) = storeModel(spark, path)
     require(layout == IvfLayout,
       s"storeHealth: $path has the LSH layout, whose hyperplanes are " +
         "data-independent — there is no trained model to drift and " +
@@ -1929,7 +1911,7 @@ object VectorIndex {
       // the exact side is the ground truth for BOTH verdicts (plain IVF
       // and IVF-PQ): materialize its k·nQueries id rows ONCE and reuse —
       // as a lazy plan it re-executed the full-store cross-join top-k
-      // inside the PQ recallSummary as well, i.e. the report paid the
+      // inside the PQ summary as well, i.e. the report paid the
       // one-full-scan cost twice per call (r19)
       val exactPairs = KnnSearch.perQueryTopK(
         live.crossJoin(broadcast(queryDf))
@@ -1938,46 +1920,32 @@ object VectorIndex {
               col("embedding"), col("query_vec")), 4).as("score")),
         k).select(col("query_id"), col("vec_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-      // both recall summaries compute DRIVER-SIDE over the collected id
-      // pairs (≤ k·nQueries rows each — bounded query state): as
-      // distributed plans each summary was another join + aggregate
-      // execution per call, re-reading the probe scans. Arithmetic is
-      // the exact recallSummary contract: recall = n_hit/k per exact
-      // query id, mean/min rounded by the shared explicit-floor 4dp.
-      def summarize(approxPairs: Array[(Long, Long)]): (Long, Double, Double) = {
-        val exactSet = exactPairs.toSet
-        val hits = approxPairs.filter(exactSet.contains)
-          .groupBy(_._1).map { case (q, ps) => q -> ps.length }
-        val qids = exactPairs.map(_._1).distinct.sorted
-        val recalls = qids.map(q => hits.getOrElse(q, 0).toDouble / k)
-        def round4(x: Double) = math.floor(x * 10000 + 0.5) / 10000.0
-        (qids.length.toLong, round4(recalls.sum / recalls.length),
-          round4(recalls.min))
+      // both recall summaries run on the driver over the collected id
+      // pairs (≤ k·nQueries rows each — bounded query state), so neither
+      // adds a join or an aggregate execution re-reading the probe scans
+      def summarize(approx: DataFrame): (Long, Double, Double) = {
+        val found = approx.select(col("query_id"), col("vec_id"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        recallSummary(exactPairs.toSeq.map(p => (p._1, found(p))), k)
       }
-      val approx = KnnSearch.perQueryTopK(
-        batchProbe(spark, path, queries.toSeq, nprobe, None), k)
-        .select(col("query_id"), col("vec_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val (nQ, meanRecall, minRecall) = summarize(approx)
+      val (nQ, meanRecall, minRecall) = summarize(KnnSearch.perQueryTopK(
+        batchProbe(spark, path, queries.toSeq, nprobe, None), k))
       // the quantized serving config is judged too (r19, VERDICT r18
       // item 1): the same floor against the IVF-PQ probe's recall — ADC
       // ranking decays under corpus turnover through a SECOND mechanism
       // (codebook fit), invisible to the plain-IVF probe, and since r19
       // the recommended remedy re-fits the codebooks as well. Stores
-      // without a PQ side-model (text-chunk stores) report null.
-      val pq: Option[(Double, Double)] =
-        if (hasPqModel(spark, path)) {
-          val approxPq = batchIvfPqSearchStoreAt(spark, path,
-            queries.toSeq, k, nprobe, fetchK = 50, excludeBelow = None)
-            .select(col("query_id"), col("vec_id"))
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-          val (_, mp, np) = summarize(approxPq)
+      // without codebooks (text-chunk stores) report null.
+      val pqRecall: Option[(Double, Double)] =
+        if (pq.isDefined) {
+          val (_, mp, np) = summarize(batchIvfPqSearchStoreAt(spark, path,
+            queries.toSeq, k, nprobe, fetchK = 50, excludeBelow = None))
           Some((mp, np))
         } else None
       val healthy = meanRecall >= recallFloor &&
-        pq.forall(_._1 >= recallFloor)
+        pqRecall.forall(_._1 >= recallFloor)
       Seq((nQ, k, nprobe, meanRecall, minRecall,
-        pq.map(_._1), pq.map(_._2), recallFloor, healthy,
+        pqRecall.map(_._1), pqRecall.map(_._2), recallFloor, healthy,
         if (healthy) "none" else "compactStore(retrain = true)"))
         .toDF("n_queries", "k", "nprobe", "mean_recall", "min_recall",
           "mean_recall_pq", "min_recall_pq",
@@ -2014,7 +1982,8 @@ object VectorIndex {
       "with the LSH layout) — rebuild it with writeStore under the IVF " +
       "layout, or search it with searchStore"
 
-  /** Path-based IVF-PQ search core (see [[ivfPqSearchStore]]). */
+  /** Path-based IVF-PQ search (see [[ivfPqSearchStore]]): the
+    * [[pqTopK]] core over the probed partitions' `codes` and rows. */
   def ivfPqSearchStoreAt(
       spark: SparkSession,
       path: String,
@@ -2023,28 +1992,17 @@ object VectorIndex {
       nprobe: Int = 4,
       fetchK: Int = 50,
       excludeId: Option[Long] = None): DataFrame = {
-    require(hasPqModel(spark, path), noPqCodes(path))
-    val cb = readPqModel(spark, path)
-    val adc = adcColumn(cb, qv)
-    val StoreModel(layout, centroids) = storeModel(spark, path)
+    val StoreModel(layout, centroids, pq) = storeModel(spark, path)
+    require(pq.isDefined, noPqCodes(path))
     val probes = layout.probe(centroids, qv, nprobe)
-    // phase 1 over the codes projection only — the embedding column is
-    // never read here (spec-pinned via ReadSchema)
-    val phase1 = storeRead(spark, path, Seq("codes"), Some(probed(layout, probes)),
-      None, "probe")
     val excl = excludeId.map(id => col("vec_id") =!= param(id))
-    val cand = phase1
-      .where(excl.getOrElse(lit(true)))
-      .select(col("vec_id"), adc.as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(fetchK)
-    resolvedProbe(spark, path, qv, nprobe, excl)
-      .join(broadcast(cand), "vec_id")
-      .select(col("vec_id"), col("label"), col("adc"),
-        round(graft.functions.VectorFunctions.cosineSim(
-          col("embedding"), typedLit(qv)), 4).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    // phase 1 over the codes projection only — the embedding column is
+    // never read there (spec-pinned via ReadSchema)
+    pqTopK(
+      storeRead(spark, path, Seq("codes"), Some(probed(layout, probes)),
+        None, "probe").where(excl.getOrElse(lit(true))),
+      resolvedPartitions(spark, path, layout, probes, excl),
+      pq.get, qv, k, fetchK)
   }
 
   /** Margin-aware multi-probe bucket selection (multi-probe LSH, Lv et
@@ -2179,12 +2137,19 @@ object VectorIndex {
   // coarse IVF quantizer and the int8 scalar quantizer — the classic
   // IVF-PQ pairing of the quantized-index family the reference's store
   // exposes via index_enabled; Jégou et al., TPAMI'11).
+  //
+  // Four search paths — inline and store-backed, single query and batch —
+  // run one ADC definition: [[pqLut]] builds a query's flat table of exact
+  // fixed-point inner products and [[adc]] sums a row's 8 lookups in it.
+  // The single-query paths share the [[pqTopK]] core and the batch paths
+  // the [[batchPqTopK]] core; inline and store paths differ only in the
+  // frames they hand in (codes recomputed from the corpus's embeddings, or
+  // the store's persisted `codes` column under partition pruning).
   // ---------------------------------------------------------------------
   final val PqM = 8 // subspaces
   final val PqSubDim = 8 // dims per subspace (embedding dim 64 / PqM)
 
-  private def pqEntry(sfDir: String)(
-      s: => TrainingSample): Array[Array[Array[Float]]] =
+  private def pqEntry(sfDir: String)(s: => TrainingSample): Codebooks =
     SessionState.getOrBuild(key("pqcodebooks", sfDir))(pqOn(s))
 
   /** Per-subspace codebooks `[sub][cid][dim]`, trained once per sfDir. */
@@ -2211,7 +2176,7 @@ object VectorIndex {
   /** Seeds: the K smallest sampled vec_ids, sliced per subspace and put on
     * the quantized grid (same seed rule as trainLloyd, replayed by the
     * oracle's `seeds` CTE). */
-  private def pqOn(s: TrainingSample): Array[Array[Array[Float]]] =
+  private def pqOn(s: TrainingSample): Codebooks =
     logTrained("PQ codebooks", s)(Array.tabulate(PqM)(sub =>
       lloydIterate(s.points, sub * PqSubDim, s.seeds.map(r =>
         Array.tabulate(PqSubDim)(d =>
@@ -2221,30 +2186,42 @@ object VectorIndex {
     * fixed-point nearest-code assignment over the sliced embedding (the
     * same codegen'd [[IndexFunctions.nearestCentroid]] the IVF family
     * uses — dimension-agnostic, exact integer argmin). */
-  private def pqCodesCol(cb: Array[Array[Array[Float]]]): Column =
+  private def pqCodesCol(cb: Codebooks): Column =
     array((0 until PqM).map(s =>
       IndexFunctions.nearestCentroid(
         slice(col("embedding"), s * PqSubDim + 1, PqSubDim), cb(s))
         .getField("centroid_id")): _*)
 
-  /** The integer ADC score column for a query against PQ codebooks: the
-    * per-subspace LUT of exact fixed-point inner products rides as array
-    * literals, the row side sums 8 `element_at` lookups over its `codes`
-    * column. Sized by `cb(s).length`, not K — codebooks are smaller than
-    * K on corpora with fewer than K vectors. Shared by [[pqSearch]] and
-    * [[ivfPqSearchStoreAt]] so the quantization scale and lookup
-    * arithmetic can never diverge between the inline and store paths. */
-  private def adcColumn(
-      cb: Array[Array[Array[Float]]], qv: Array[Float]): Column = {
+  /** A query's flat ADC table against codebooks `cb`: `lut(sub · width +
+    * code)` is the exact fixed-point inner product of the query's `sub`
+    * slice with codeword `code`, `width` the widest codebook's size
+    * ([[pqWidth]]): K, or the sample size on a corpus of fewer than K
+    * vectors. A slot past a narrower codebook's end holds 0, and no code
+    * points at it. Integer arithmetic, so ADC ranking is
+    * engine-independent. */
+  private def pqLut(cb: Codebooks, qv: Array[Float]): Array[Long] = {
     val qq = qv.map(x => IndexOps.quantize(x.toDouble))
-    val lut: Array[Array[Long]] = Array.tabulate(PqM)(s =>
-      Array.tabulate(cb(s).length)(c =>
+    val width = pqWidth(cb)
+    Array.tabulate(PqM * width) { i =>
+      val (s, c) = (i / width, i % width)
+      if (c < cb(s).length)
         (0 until PqSubDim).map(d =>
-          qq(s * PqSubDim + d) * IndexOps.quantize(cb(s)(c)(d).toDouble)).sum))
-    (0 until PqM).map(s =>
-      element_at(typedLit(lut(s)),
-        element_at(col("codes"), lit(s + 1)) + lit(1))).reduce(_ + _)
+          qq(s * PqSubDim + d) * IndexOps.quantize(cb(s)(c)(d).toDouble)).sum
+      else 0L
+    }
   }
+
+  private def pqWidth(cb: Codebooks): Int = cb.map(_.length).max
+
+  /** The integer ADC score of a row's `codes` against `lut`, a [[pqLut]]
+    * table column of codebooks `width` wide: the sum of 8 lookups. A
+    * single query's table is one `typedLit` (generated code reads it by
+    * reference, so a new query compiles nothing); a batch's is the probe
+    * table's `lut` column. */
+  private def adc(lut: Column, width: Int): Column =
+    (0 until PqM).map(s => element_at(lut,
+      lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))
+      .reduce(_ + _)
 
   /** PQ build: every vector's 8 sub-codes — 64× compression of the float
     * payload (256 B → 8 nibble-sized codes) for the ADC scan. One
@@ -2255,13 +2232,11 @@ object VectorIndex {
       .select(col("vec_id"), posexplode(pqCodesCol(cb)).as(Seq("sub", "code")))
   }
 
-  /** Two-phase PQ search (asymmetric distance computation): the query
-    * builds an integer LUT of per-subspace inner products against every
-    * code (PqM·K = 128 Longs, exact fixed-point arithmetic — ADC ranking
-    * is engine-independent by construction), the corpus scan sums 8 LUT
-    * lookups per vector (map-only, no shuffle) → top-fetchK by (adc,
-    * vec_id) → exact cosine re-rank of the survivors via a broadcast
-    * candidate join.
+  /** Two-phase PQ search (asymmetric distance computation) through the
+    * [[pqTopK]] core: the query's [[pqLut]] table (PqM·K = 128 Longs), 8
+    * lookups per vector in a map-only scan → top-fetchK by (adc, vec_id)
+    * → exact cosine re-rank of the survivors via a broadcast candidate
+    * join.
     *
     * This is the labeled INLINE variant: codes are recomputed from the
     * embedding column at query time, so phase 1 here still reads the full
@@ -2277,13 +2252,25 @@ object VectorIndex {
       queryVecId: Long = 0L): DataFrame = {
     val cb = trainPqCodebooks(spark, sfDir)
     val qv = KnnSearch.queryVector(spark, sfDir, queryVecId)
-    val cand = Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") =!= param(queryVecId))
-      .withColumn("codes", pqCodesCol(cb))
-      .select(col("vec_id"), adcColumn(cb, qv).as("adc"))
+    val emb = Tables.embeddings(spark, sfDir)
+    pqTopK(
+      emb.where(col("vec_id") =!= param(queryVecId))
+        .select(col("vec_id"), pqCodesCol(cb).as("codes")),
+      emb, cb, qv, k, fetchK)
+  }
+
+  /** The single-query PQ core: the top-fetchK of `codes`' (vec_id, codes)
+    * rows by (adc desc, vec_id), broadcast-joined into `rows` (vec_id,
+    * label, embedding), then the exact cosine top-k by (score desc,
+    * vec_id). Rows: (vec_id, label, adc, score). */
+  private def pqTopK(
+      codes: DataFrame, rows: DataFrame, cb: Codebooks, qv: Array[Float],
+      k: Int, fetchK: Int): DataFrame = {
+    val cand = codes
+      .select(col("vec_id"), adc(typedLit(pqLut(cb, qv)), pqWidth(cb)).as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(fetchK)
-    Tables.embeddings(spark, sfDir)
+    rows
       .join(broadcast(cand), "vec_id")
       .select(col("vec_id"), col("label"), col("adc"),
         round(VectorFunctions.cosineSim(col("embedding"), typedLit(qv)), 4)
@@ -2295,14 +2282,10 @@ object VectorIndex {
   /** Batch kNN through the PQ codes — [[corpusBatchSearch]]'s contract
     * for the third index family, completing the batch surface (IVF and
     * LSH have it; a production reranker sends queries in batches to every
-    * index kind). ONE codes scan serves every query: each query's integer
-    * ADC LUT (PqM · codebook-width fixed-point inner products, computed
-    * driver-side like the single-query path) rides a broadcast probe
-    * table, the per-query top-fetchK ADC candidates come from the TopKAgg
-    * k-slot-heap partial — fetchK rows per query cross the wire, never
-    * the corpus — and only the survivors pay the exact cosine re-rank.
-    * The work per corpus row is nQueries · 8 array lookups — no per-query
-    * rescan.
+    * index kind). ONE codes scan serves every query through the
+    * [[batchPqTopK]] core, each query's [[pqLut]] table riding a broadcast
+    * probe table. The work per corpus row is nQueries · 8 array lookups —
+    * no per-query rescan.
     *
     * Like [[pqSearch]], this is the labeled INLINE variant: codes are
     * recomputed from the embedding column inside the scan, so its
@@ -2316,45 +2299,42 @@ object VectorIndex {
       k: Int = 5,
       fetchK: Int = 100): DataFrame = {
     import spark.implicits._
-    import graft.functions.TopKAgg.topkAgg
     val cb = trainPqCodebooks(spark, sfDir)
-    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries)
-    // per-query LUT flattened to lut[sub * width + code] so the row side
-    // is 8 element_at lookups regardless of query count; max ADC
-    // magnitude ~6e9 ≪ 2^53, so the double-typed heap ordinal is exact
-    val width = cb.map(_.length).max
-    val luts = queries.map { case (qid, qv) =>
-      val qq = qv.map(x => IndexOps.quantize(x.toDouble))
-      val flat = Array.tabulate(PqM * width) { i =>
-        val s = i / width
-        val c = i % width
-        if (c < cb(s).length)
-          (0 until PqSubDim).map(d =>
-            qq(s * PqSubDim + d) * IndexOps.quantize(cb(s)(c)(d).toDouble)).sum
-        else 0L
-      }
-      (qid, flat.toSeq, qv.toSeq)
-    }.toSeq
-    val probeDf = luts.toDF("query_id", "lut", "query_vec")
-    val adc = (0 until PqM).map(s =>
-      element_at(col("lut"),
-        lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))
-      .reduce(_ + _)
-    val cand = Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") >= nQueries)
-      .select(col("vec_id"), pqCodesCol(cb).as("codes"))
-      .join(broadcast(probeDf.select(col("query_id"), col("lut"))))
-      .select(col("query_id"), col("vec_id"), adc.as("adc"))
-      .groupBy(col("query_id"))
-      .agg(topkAgg(-col("adc").cast("double"), col("vec_id"), fetchK).as("top"))
-      .select(col("query_id"), explode(col("top")).as("p"))
-      .select(col("query_id"), col("p.id").as("vec_id"))
-    val scored = Tables.embeddings(spark, sfDir)
+    val queries = KnnSearch.queryVectors(spark, sfDir, nQueries).toSeq
+    val luts = queries.map { case (qid, qv) => (qid, pqLut(cb, qv).toSeq) }
+      .toDF("query_id", "lut")
+    val emb = Tables.embeddings(spark, sfDir)
+    batchPqTopK(spark,
+      emb.where(col("vec_id") >= nQueries)
+        .select(col("vec_id"), pqCodesCol(cb).as("codes"))
+        .join(broadcast(luts)),
+      emb, queries, cb, k, fetchK)
+  }
+
+  /** The batch PQ core. `pairs` holds the (query_id, vec_id, codes, lut)
+    * rows to score: each candidate row beside the [[pqLut]] table of every
+    * query that reaches it. Per query, the top-fetchK by ADC come from
+    * [[KnnSearch.perQueryTopK]] over the adc as a double (exact: |adc| ~
+    * 6e9 ≪ 2^53) — fetchK rows per query cross the wire, never the corpus
+    * — and only those survivors, broadcast-joined into `rows` (vec_id,
+    * embedding), pay the exact cosine re-rank to k.
+    * Rows: (query_id, vec_id, score, rank), ordered. */
+  private def batchPqTopK(
+      spark: SparkSession, pairs: DataFrame, rows: DataFrame,
+      queries: Seq[(Long, Array[Float])], cb: Codebooks,
+      k: Int, fetchK: Int): DataFrame = {
+    import spark.implicits._
+    val cand = KnnSearch.perQueryTopK(
+      pairs.select(col("query_id"), col("vec_id"),
+        adc(col("lut"), pqWidth(cb)).cast("double").as("score")), fetchK)
+      .select(col("query_id"), col("vec_id"))
+    val qvDf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
+      .toDF("query_id", "query_vec")
+    val scored = rows
       .join(broadcast(cand), "vec_id")
-      .join(broadcast(probeDf.select(col("query_id"), col("query_vec"))),
-        "query_id")
+      .join(broadcast(qvDf), "query_id")
       .select(col("query_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosineSim(
+        round(VectorFunctions.cosineSim(
           col("embedding"), col("query_vec")), 4).as("score"))
     KnnSearch.perQueryTopK(scored, k)
       .orderBy(col("query_id"), col("rank"))
@@ -2373,11 +2353,9 @@ object VectorIndex {
     * (spec-pinned via ReadSchema). At 100 TB that is the partition cut ×
     * the ~32× payload cut that is PQ's reason to exist. Each pruned row
     * joins only the queries probing its partition via a broadcast
-    * (query_id, centroid, flat-LUT) probe table, per-query top-fetchK ADC
-    * candidates via the TopKAgg k-slot-heap partial; phase 2 re-ranks the
-    * survivors exactly through the shared resolved probe + a broadcast
-    * candidate join — fetchK rows per query cross the wire, the corpus
-    * never shuffles. */
+    * (query_id, centroid, lut) probe table into the [[batchPqTopK]] core,
+    * whose re-rank reads the same resolved probed partitions — fetchK
+    * rows per query cross the wire, the corpus never shuffles. */
   def batchIvfPqSearchStore(
       spark: SparkSession,
       sfDir: String,
@@ -2391,8 +2369,8 @@ object VectorIndex {
       excludeBelow = Some(nQueries.toLong))
   }
 
-  /** Path-based batch IVF-PQ core (see [[batchIvfPqSearchStore]]) over an
-    * explicit query set. `excludeBelow` keeps the graded batch contract
+  /** Path-based batch IVF-PQ search (see [[batchIvfPqSearchStore]]) over
+    * an explicit query set. `excludeBelow` keeps the graded batch contract
     * (candidates with vec_id below the bound are the queries themselves
     * and excluded on both phases); [[storeHealth]]'s PQ probe passes None
     * — the health contract is self-inclusive. */
@@ -2405,61 +2383,24 @@ object VectorIndex {
       fetchK: Int,
       excludeBelow: Option[Long]): DataFrame = {
     import spark.implicits._
-    import graft.functions.TopKAgg.topkAgg
-    require(hasPqModel(spark, path), noPqCodes(path))
-    val cb = readPqModel(spark, path)
-    val StoreModel(layout, centroids) = storeModel(spark, path)
-    // flat per-query LUT (lut[sub * width + code]), same shape as
-    // batchPqSearch: 8 element_at lookups per row regardless of query
-    // count; integer fixed-point, so ADC ranking is engine-independent
-    val width = cb.map(_.length).max
-    def flatLut(qv: Array[Float]): Seq[Long] = {
-      val qq = qv.map(x => IndexOps.quantize(x.toDouble))
-      Array.tabulate(PqM * width) { i =>
-        val s = i / width
-        val c = i % width
-        if (c < cb(s).length)
-          (0 until PqSubDim).map(d =>
-            qq(s * PqSubDim + d) * IndexOps.quantize(cb(s)(c)(d).toDouble)).sum
-        else 0L
-      }.toSeq
-    }
+    val StoreModel(layout, centroids, pq) = storeModel(spark, path)
+    require(pq.isDefined, noPqCodes(path))
     val probePairs = queries.flatMap { case (qid, qv) =>
-      val lutF = flatLut(qv)
-      layout.probe(centroids, qv, nprobe).map(cid => (qid, cid, lutF))
-    }.toSeq
+      val lut = pqLut(pq.get, qv).toSeq
+      layout.probe(centroids, qv, nprobe).map(cid => (qid, cid, lut))
+    }
     val allProbes = probePairs.map(_._2).distinct
     val probeDf = probePairs.toDF("query_id", "p_cid", "lut")
+    val excl = excludeBelow.map(b => col("vec_id") >= b)
     // phase 1: pruned scan of the codes projection — the embedding column
-    // is never read here (ReadSchema pin in PqSpec)
-    val phase1 = storeRead(spark, path, Seq("centroid_id", "codes"),
-      Some(probed(layout, allProbes)), None, "probe")
-    val adc = (0 until PqM).map(s =>
-      element_at(col("lut"),
-        lit(s * width) + element_at(col("codes"), lit(s + 1)) + lit(1)))
-      .reduce(_ + _)
-    val cand = phase1
-      .where(excludeBelow.fold(lit(true))(b => col("vec_id") >= b))
-      .join(broadcast(probeDf), col("centroid_id") === col("p_cid"))
-      .select(col("query_id"), col("vec_id"), adc.as("adc"))
-      .groupBy(col("query_id"))
-      .agg(topkAgg(-col("adc").cast("double"), col("vec_id"), fetchK).as("top"))
-      .select(col("query_id"), explode(col("top")).as("p"))
-      .select(col("query_id"), col("p.id").as("vec_id"))
-    // phase 2: exact cosine re-rank of the survivors only, over the same
-    // resolved probed partitions (this scan legitimately reads embeddings
-    // — of the pruned subset, joined down to fetchK rows per query)
-    val qvDf = queries.map { case (qid, qv) => (qid, qv.toSeq) }
-      .toSeq.toDF("query_id", "query_vec")
-    val scored = resolvedPartitions(spark, path, layout, allProbes,
-      excludeBelow.map(b => col("vec_id") >= b))
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(qvDf), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.VectorFunctions.cosineSim(
-          col("embedding"), col("query_vec")), 4).as("score"))
-    KnnSearch.perQueryTopK(scored, k)
-      .orderBy(col("query_id"), col("rank"))
+    // is never read there (ReadSchema pin in PqSpec)
+    batchPqTopK(spark,
+      storeRead(spark, path, Seq("centroid_id", "codes"),
+        Some(probed(layout, allProbes)), None, "probe")
+        .where(excl.getOrElse(lit(true)))
+        .join(broadcast(probeDf), col("centroid_id") === col("p_cid")),
+      resolvedPartitions(spark, path, layout, allProbes, excl),
+      queries, pq.get, k, fetchK)
   }
 
   /** Random-hyperplane LSH bucketing: 16-bit signatures → bucket histogram

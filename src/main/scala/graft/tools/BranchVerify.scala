@@ -44,7 +44,8 @@ import java.nio.file.{Files, Paths}
   *                 (no delta left: the base scan alone — the loop
   *                 closes)
   *
-  * Run: BranchVerify <sfDir> <outDir> (env: SPARK_GRAFT_CPUS), then
+  * Run: BranchVerify <sfDir> <outDir> [churnChunk] (default 2000 ids per
+  * generation pair; env: SPARK_GRAFT_CPUS), then
   * `python3 tools/check_oracle.py <sfDir> <outDir>/<phase>` per phase.
   * The tool prints one JSON line with the forced-state evidence (delta
   * file counts, generation counts, tombstone counts) so the artifact
@@ -76,16 +77,12 @@ object BranchVerify {
 
   /** Tombstone and byte-identically re-append every live row of a fresh
     * delta-less store, in chunks of `chunk` ids — each chunk a
-    * (delete, append) generation pair. Content-preserving by
-    * construction; returns the number of generations written. */
-  /** Chunk size: ids per (delete, append) generation pair. Smaller →
-    * deeper generation stacks and more delta files per probe (a harder
-    * resolution state); SPARK_GRAFT_CHURN_CHUNK overrides. */
-  private def churnChunk: Int =
-    sys.env.getOrElse("SPARK_GRAFT_CHURN_CHUNK", "2000").toInt
-
-  private[graft] def churn(spark: SparkSession, path: String): Long = {
-    val chunk = churnChunk
+    * (delete, append) generation pair. Smaller chunks make deeper
+    * generation stacks and more delta files per probe (a harder
+    * resolution state). Content-preserving by construction; returns the
+    * number of generations written. */
+  private[graft] def churn(
+      spark: SparkSession, path: String, chunk: Int = 2000): Long = {
     val live = spark.read.parquet(s"$path/vectors")
       .where(!col("deleted"))
       .select(col("vec_id"), col("label"), col("embedding"), col("metadata"))
@@ -168,8 +165,9 @@ object BranchVerify {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: BranchVerify <sfDir> <outDir>")
+    require(args.length >= 2, "usage: BranchVerify <sfDir> <outDir> [churnChunk]")
     val (sfDir, outDir) = (args(0), args(1))
+    val chunk = if (args.length > 2) args(2).toInt else 2000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val spark = GraftSession.local(cpus)
 
@@ -178,9 +176,9 @@ object BranchVerify {
     val ivfPath = VectorIndex.ensureStore(spark, sfDir)
     val lshPath = VectorIndex.ensureStore(spark, sfDir, VectorIndex.LshLayout)
     val chunkPath = TextStore.ensureChunkStore(spark, sfDir)
-    val gensIvf = churn(spark, ivfPath)
-    val gensLsh = churn(spark, lshPath)
-    val gensChunk = churn(spark, chunkPath)
+    val gensIvf = churn(spark, ivfPath, chunk)
+    val gensLsh = churn(spark, lshPath, chunk)
+    val gensChunk = churn(spark, chunkPath, chunk)
     val evDelta = Seq("ivf" -> ivfPath, "lsh" -> lshPath,
       "chunk" -> chunkPath)
       .map { case (n, p) => s""""$n":${evidence(spark, p)}""" }

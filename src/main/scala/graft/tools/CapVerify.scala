@@ -24,7 +24,7 @@ import java.nio.file.{Files, Paths}
   * an unweighted Spark side would keep those 197 buckets, emit their
   * pairs, and mismatch.
   *
-  * Usage: CapVerify <sfDir> <outDir>   (env: SPARK_GRAFT_CAP,
+  * Usage: CapVerify <sfDir> <outDir> [cap]   (default cap 2; env:
   * SPARK_GRAFT_CPUS), then
   * `python3 tools/check_oracle.py <sfDir> <outDir>`. */
 object CapVerify {
@@ -42,8 +42,9 @@ object CapVerify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cap = sys.env.getOrElse("SPARK_GRAFT_CAP", "2").toInt
+    require(args.length >= 2, "usage: CapVerify <sfDir> <outDir> [cap]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val cap = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()

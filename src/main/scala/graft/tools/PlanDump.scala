@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Measurement harness for the optimization rounds: for each named query
   * (default: all), write its `explain("formatted")` plan to
@@ -12,7 +13,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * that runs 6 jobs cannot beat 3 s at any SF however fast its operators
   * are).
   *
-  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> [--run] [q1 q2 ...]
+  * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> [--run] [--jobs]
+  *   [--stages] [--final] [q1 q2 ...]
+  * `--stages` prints one line per completed stage (tasks, wall, run and
+  * CPU time, shuffle bytes read and written, bytes spilled from memory
+  * and to disk); `--final` dumps the plan after executing it.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -67,7 +72,9 @@ object PlanDump {
             f"cpu=${m.executorCpuTime / 1000000}%6dms " +
             f"deser=${m.executorDeserializeTime}%5dms " +
             f"sr=${m.shuffleReadMetrics.totalBytesRead}%9d " +
-            f"sw=${m.shuffleWriteMetrics.bytesWritten}%9d  " +
+            f"sw=${m.shuffleWriteMetrics.bytesWritten}%9d " +
+            f"spill_mem=${m.memoryBytesSpilled}%9d " +
+            f"spill_disk=${m.diskBytesSpilled}%9d  " +
             i.name.take(80))
         }
       }
@@ -112,11 +119,16 @@ object PlanDump {
         spark.sparkContext.setJobDescription(null)
       }
       val df = SparkEntry.queries(name)(spark, sfDir)
-      // --final: execute THIS frame first so the dumped AdaptiveSparkPlan
-      // is the post-AQE final plan (isFinalPlan=true) — runtime join
-      // strategies, AQEShuffleReads and reused exchanges included
-      if (args.contains("--final"))
-        df.write.format("noop").mode("overwrite").save()
+      // --final: execute THIS frame's own plan first, so the dumped
+      // AdaptiveSparkPlan is the post-AQE final plan (isFinalPlan=true) —
+      // runtime join strategies, AQEShuffleReads and reused exchanges
+      // included. A noop write would plan and run a QueryExecution of its
+      // own and leave this one unexecuted.
+      if (args.contains("--final")) {
+        val qe = df.queryExecution
+        SQLExecution.withNewExecutionId(qe, Some("plandump --final"))(
+          qe.executedPlan.execute().foreach(_ => ()))
+      }
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(

@@ -16,19 +16,20 @@ import graft.operators.VectorIndex
   * silently degrades (in-distribution rows keep well-probed partitions),
   * so the health probe samples where the risk is.
   *
-  * Usage: StoreHealth <storePath> [recallFloor]
-  * (env: SPARK_GRAFT_CPUS, SPARK_GRAFT_NPROBE, SPARK_GRAFT_K)
+  * Usage: StoreHealth <storePath> [recallFloor] [nprobe] [k]
+  * (defaults 0.8, 4 and 5; env: SPARK_GRAFT_CPUS)
   *
   * End-to-end behavior (degrade → recommend → retrain → recover) is
   * pinned by the storeHealth case in StoreSearchSpec. */
 object StoreHealth {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: StoreHealth <storePath> [recallFloor]")
+    require(args.nonEmpty,
+      "usage: StoreHealth <storePath> [recallFloor] [nprobe] [k]")
     val path = args(0)
     val floor = if (args.length > 1) args(1).toDouble else 0.8
+    val nprobe = if (args.length > 2) args(2).toInt else 4
+    val k = if (args.length > 3) args(3).toInt else 5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val nprobe = sys.env.getOrElse("SPARK_GRAFT_NPROBE", "4").toInt
-    val k = sys.env.getOrElse("SPARK_GRAFT_K", "5").toInt
     val spark = GraftSession.local(cpus)
     try {
       val ids = VectorIndex.newestGenIds(spark, path, 5)

@@ -1,7 +1,9 @@
 package graft
 
 import graft.functions.IndexOps
-import graft.operators.{KnnSearch, VectorIndex}
+import java.nio.file.Files
+
+import graft.operators.{KnnSearch, TextStore, VectorIndex}
 import org.apache.spark.sql.functions._
 
 /** Product-quantization specs: the trained codebooks are fixed-point
@@ -12,6 +14,15 @@ class PqSpec extends SparkSpec {
 
   private def emb = Tables.embeddings(spark, sfDir)
     .select(col("vec_id"), col("embedding"))
+
+  /** A corpus of sf0.001's first 10 vectors: under K = 16 vectors, so
+    * its codebooks hold fewer than K codes. */
+  private lazy val narrowDir: String = {
+    val dir = Files.createTempDirectory("graft_pq_narrow_").toString
+    Tables.embeddings(spark, sfDir).orderBy(col("vec_id")).limit(10)
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
 
   test("pq training is bit-identical under arbitrary repartitioning") {
     val a = VectorIndex.trainPq(emb)
@@ -89,15 +100,18 @@ class PqSpec extends SparkSpec {
     // nQueries=1 makes the two corpus exclusions identical (vec_id >= 1
     // vs vec_id != 0), so batch-through-LUT-table must reproduce the
     // single-query pipeline's rows exactly, in rank order
-    val batch = VectorIndex.batchPqSearch(spark, sfDir, nQueries = 1,
-      k = 5, fetchK = 100).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val single = VectorIndex.pqSearch(spark, sfDir, k = 5, fetchK = 100,
-      queryVecId = 0L).collect()
-      .zipWithIndex
-      .map { case (r, i) => (0L, r.getLong(0), r.getDouble(3), i + 1) }
-    assert(batch.toSeq == single.toSeq,
-      s"batch=${batch.toSeq} single=${single.toSeq}")
+    for (dir <- Seq(sfDir, narrowDir)) {
+      val batch = VectorIndex.batchPqSearch(spark, dir, nQueries = 1,
+        k = 5, fetchK = 100).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      val single = VectorIndex.pqSearch(spark, dir, k = 5, fetchK = 100,
+        queryVecId = 0L).collect()
+        .zipWithIndex
+        .map { case (r, i) => (0L, r.getLong(0), r.getDouble(3), i + 1) }
+      assert(batch.nonEmpty, dir)
+      assert(batch.toSeq == single.toSeq,
+        s"$dir: batch=${batch.toSeq} single=${single.toSeq}")
+    }
   }
 
   test("batch ivf-pq: phase-1 reads codes not embeddings, prunes partitions") {
@@ -157,21 +171,70 @@ class PqSpec extends SparkSpec {
   }
 
   test("ADC equals the integer dot against the quantized reconstruction") {
-    val cb = VectorIndex.trainPqCodebooks(spark, sfDir)
-    val cbQ = cb.map(_.map(_.map(f => IndexOps.quantize(f.toDouble))))
-    val qv = KnnSearch.queryVector(spark, sfDir, 0L)
-    val qq = qv.map(x => IndexOps.quantize(x.toDouble))
-    val codes = VectorIndex.pqBuild(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val got = VectorIndex.pqSearch(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    got.foreach { case (id, adc) =>
-      val expected = (0 until VectorIndex.PqM).map { s =>
-        val ctr = cbQ(s)(codes((id, s)))
-        (0 until VectorIndex.PqSubDim)
-          .map(d => qq(s * VectorIndex.PqSubDim + d) * ctr(d)).sum
-      }.sum
-      assert(adc == expected, s"vec $id adc")
+    for (dir <- Seq(sfDir, narrowDir)) {
+      val cb = VectorIndex.trainPqCodebooks(spark, dir)
+      if (dir == narrowDir)
+        assert(cb.forall(_.length < VectorIndex.K), "narrow codebooks")
+      val cbQ = cb.map(_.map(_.map(f => IndexOps.quantize(f.toDouble))))
+      val qv = KnnSearch.queryVector(spark, dir, 0L)
+      val qq = qv.map(x => IndexOps.quantize(x.toDouble))
+      val codes = VectorIndex.pqBuild(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
+      val got = VectorIndex.pqSearch(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      assert(got.nonEmpty, dir)
+      got.foreach { case (id, adc) =>
+        val expected = (0 until VectorIndex.PqM).map { s =>
+          val ctr = cbQ(s)(codes((id, s)))
+          (0 until VectorIndex.PqSubDim)
+            .map(d => qq(s * VectorIndex.PqSubDim + d) * ctr(d)).sum
+        }.sum
+        assert(adc == expected, s"$dir: vec $id adc")
+      }
     }
+  }
+
+  test("PQ-less stores append no codes; a retrained store serves what a cold read serves") {
+    import spark.implicits._
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    def hasCodes(dir: String) =
+      spark.read.parquet(dir).columns.contains("codes")
+    val qv = KnnSearch.queryVector(spark, sfDir, 0L)
+
+    // an LSH store and a chunk store carry no codebooks: neither their
+    // base nor an append's delta has a `codes` column
+    val lsh = tmp("graft_pq_lsh_")
+    VectorIndex.writeStore(spark, sfDir, lsh, layout = VectorIndex.LshLayout)
+    VectorIndex.appendStore(spark, lsh,
+      Seq((9001L, 7, qv.toSeq)).toDF("vec_id", "label", "embedding"), gen = 1L)
+    val chunks = tmp("graft_pq_chunk_")
+    TextStore.writeChunkStore(spark, sfDir, chunks)
+    TextStore.addTexts(spark, chunks,
+      Seq((900001L, "zyqfluor baztringle quopamid " * 8, "en"))
+        .toDF("doc_id", "text", "lang"), gen = 1L)
+    for (p <- Seq(lsh, chunks)) {
+      assert(!hasCodes(s"$p/vectors"), s"$p base")
+      assert(deltaFiles(p) == 1 && !hasCodes(s"$p/vectors_delta"), s"$p delta")
+    }
+
+    // after a retrain the warm session's model entry (new centroids and
+    // codebooks) must serve exactly what a read from disk serves
+    val ivf = tmp("graft_pq_retrain_")
+    VectorIndex.writeStore(spark, sfDir, ivf)
+    VectorIndex.appendStore(spark, ivf,
+      Seq((9001L, 7, qv.map(_ * 0.5f).toSeq)).toDF("vec_id", "label", "embedding"),
+      gen = 1L)
+    VectorIndex.compactStore(spark, ivf, retrain = true)
+    assert(hasCodes(s"$ivf/vectors"))
+    val queries = KnnSearch.queryVectors(spark, sfDir, 3).toSeq
+    def answers = (
+      VectorIndex.ivfPqSearchStoreAt(spark, ivf, qv, k = 10).collect().toSeq,
+      VectorIndex.batchIvfPqSearchStoreAt(spark, ivf, queries, k = 5,
+        nprobe = 4, fetchK = 50, excludeBelow = None).collect().toSeq)
+    val warm = answers
+    SessionState.invalidatePath(ivf)
+    val cold = answers
+    assert(warm._1.nonEmpty && warm._2.nonEmpty)
+    assert(warm == cold, s"warm=$warm\ncold=$cold")
   }
 }
